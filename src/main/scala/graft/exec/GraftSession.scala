@@ -17,10 +17,12 @@ import graft.types.BqlType
   * Storage model (vs the reference's mmap CoPa part store,
   * crates/meta/src/store/parts.rs:17-46): managed parquet tables in the
   * Spark warehouse. `PARTITION BY expr` (bql.pest:49-51) becomes a generated
-  * `__ptk` column written through `partitionBy` — Catalyst codegen computes
-  * the expression (the reference needs a cranelift JIT for this,
-  * mgmt.rs:408-469; Spark gets it for free) and the parquet directory layout
-  * gives partition pruning. Declared column order is preserved on SELECT *
+  * `__ptk` column — written through `partitionBy` by Spark write jobs, or
+  * into `__ptk=<v>` directories by the direct part writer for
+  * driver-resident rows; Catalyst codegen computes the expression either
+  * way (the reference needs a cranelift JIT for this, mgmt.rs:408-469;
+  * Spark gets it for free) and the parquet directory layout gives
+  * partition pruning. Declared column order is preserved on SELECT *
   * because `__ptk` is appended last.
   *
   * At 100 TB this layout is the standard Spark warehouse shape: writes are
@@ -265,14 +267,20 @@ class GraftSession(val spark: SparkSession,
           // Warm-JVM adopt for TO-form views (their name never backs a
           // table, so the tableExists gate above can't skip them): when
           // the wrapper temp view is still registered from this exact
-          // script and the target still carries this view's subscription
-          // props, the replay would be a byte-identical no-op — skip the
-          // per-construction SELECT re-analysis + catalog prop write.
+          // script, the target still carries this view's subscription
+          // props and the SELECT's source table still resolves, the
+          // replay would be a byte-identical no-op — skip the
+          // per-construction SELECT re-analysis + catalog prop write. A
+          // vanished source replays, and the replay's failure surfaces.
           val adoptedTo = mv.to.exists { case (_, target) =>
             Option(GraftSession.viewMemos.get(sessionKey(mv.name)))
               .contains(text) &&
               spark.sessionState.catalog.getTempView(mv.name).isDefined &&
-              tableProp(Some(db), target, "graft.mv.via").contains(mv.name)
+              scala.util.Try(tableProp(Some(db), target, "graft.mv.via")
+                .contains(mv.name) &&
+                tableProp(Some(db), target, "graft.mv.src").exists(src =>
+                  relationResolves(src.split("\\.", 2).toSeq, db)))
+                .getOrElse(false)
           }
           if (adoptedTo) {
             val target = mv.to.get._2
@@ -310,8 +318,12 @@ class GraftSession(val spark: SparkSession,
           // lookup UDF) is still live — re-collecting the source per
           // construction was a full Spark job each time. CH dictionaries
           // are server-global and stale-until-reload; this IS that model.
+          // The source must still resolve: a vanished one replays, and
+          // the replay's failure surfaces in system.restore_errors.
           Option(GraftSession.dictMemos.get(sessionKey(nm)))
-            .filter(_.script == text) match {
+            .filter(m => m.script == text && scala.util.Try(relationResolves(
+              spark.sessionState.sqlParser
+                .parseMultipartIdentifier(m.cd.source), db)).getOrElse(false)) match {
             case Some(m) =>
               dictDefs(nm) = m.cd
               if (m.joinMode) dictJoinMode += nm
@@ -326,13 +338,15 @@ class GraftSession(val spark: SparkSession,
       }
     }
     // Warm-JVM adopt for plain views: the temp view is still registered
-    // from this exact script text — repopulate the instance registry
-    // without the per-view re-analysis (refreshReferencedViews re-resolves
-    // it before any read regardless).
+    // from this exact script text and every table it reads still
+    // resolves — repopulate the instance registry without the per-view
+    // re-analysis (refreshReferencedViews re-resolves it before any read
+    // regardless). A view whose source vanished replays, and the replay's
+    // failure surfaces in system.restore_errors.
     val (adopted, toReplay) = pendingViews.partition {
-      case (_, name, _, text) =>
+      case (db, name, _, text) =>
         Option(GraftSession.viewMemos.get(sessionKey(name))).contains(text) &&
-          spark.sessionState.catalog.getTempView(name).isDefined
+          tempViewSourcesResolve(name, db)
     }
     adopted.foreach { case (db, name, cv, _) =>
       viewDefs(name) = (db, cv.selectSql, cv.createScript)
@@ -355,6 +369,48 @@ class GraftSession(val spark: SparkSession,
       scala.util.Try(createView(cv.copy(db = Some(db), orReplace = true,
           ifNotExists = false)))
         .failed.foreach(e => recordRestoreError(db, table, "view", e))
+    }
+  }
+
+  /** True when the registered temp view `name` exists and every relation
+    * its definition reads resolves (a table of the catalog, another temp
+    * view, or one of its own CTEs). Parses the stored view text; never
+    * analyzes it.
+    */
+  private def tempViewSourcesResolve(name: String, db: String): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical
+    spark.sessionState.catalog.getTempView(name).exists { v =>
+      scala.util.Try {
+        val plan = v.child
+        val ctes = plan.collectWithSubqueries {
+          case w: logical.UnresolvedWith => w.cteRelations.map(_._1)
+        }.flatten.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+        plan.collectWithSubqueries {
+          case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
+            (u.multipartIdentifier.length == 1 && ctes.contains(
+              u.multipartIdentifier.head.toLowerCase(java.util.Locale.ROOT))) ||
+              relationResolves(u.multipartIdentifier, db)
+          case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            lr.catalogTable.forall(ct => spark.sessionState.catalog
+              .tableExists(ct.identifier))
+        }.forall(identity)
+      }.getOrElse(false)
+    }
+  }
+
+  /** True when a (possibly qualified) relation name resolves: a temp view
+    * or a catalog table, unqualified names in `db` or the current
+    * database.
+    */
+  private def relationResolves(parts: Seq[String], db: String): Boolean = {
+    val cat = spark.sessionState.catalog
+    def table(t: String, d: Option[String]) =
+      cat.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(t, d))
+    parts match {
+      case Seq(t) => cat.getTempView(t).isDefined || table(t, Some(db)) ||
+        table(t, None)
+      case Seq(d, t) => table(t, Some(d))
+      case _ => false
     }
   }
 
@@ -404,6 +460,7 @@ class GraftSession(val spark: SparkSession,
         ChParser.parse(part) match {
           case Left(err) => throw new IllegalArgumentException(s"parse error: $err")
           case Right(stmt) =>
+            catchUpWrites()
             // CH plain-view semantics: reads substitute the stored query at
             // query time — re-resolve any mentioned view before running
             // (no-op when no views are defined; CreateView refreshes its own
@@ -414,17 +471,26 @@ class GraftSession(val spark: SparkSession,
             }
             // any statement that can change a table's shape, engine,
             // constraints, partitioning, temp status or MV subscriptions
-            // invalidates the cached wire-ingest fast-path verdicts
-            // (reads and plain inserts change none of those facts)
-            stmt match {
-              case _: Select | _: InsertValues | _: InsertSelect |
-                   _: InsertFormat | _: InsertFile | _: InsertRemote => ()
-              case _ =>
-                GraftSession.directRecipes.clear()
-                GraftSession.mvSubs.clear()
+            // invalidates the cached direct-write recipes, and once it has
+            // run, every session's cached relations. Reads, SHOW/DESC/USE
+            // and KILL change none of those facts; inserts publish through
+            // underWriteLock, which moves only the target's generation.
+            val ddl = stmt match {
+              case _: Select | _: Explain | _: DescSelect | _: DescTable |
+                   _: ShowCreateTable | _: ShowTables | _: ShowColumns |
+                   _: ExistsTable | _: UseDb | _: KillQuery | ShowDatabases |
+                   ShowDictionaries | ShowProcesslist => false
+              case _: InsertValues | _: InsertSelect | _: InsertFormat |
+                   _: InsertFile | _: InsertRemote => false
+              case _ => true
+            }
+            if (ddl) {
+              GraftSession.directRecipes.clear()
+              GraftSession.mvSubs.clear()
             }
             anySelect ||= stmt.isInstanceOf[Select]
-            run(stmt, payload)
+            try run(stmt, payload)
+            finally if (ddl) GraftSession.bumpDdlGen()
         }
       }.last
       // everything but a SELECT executed eagerly — retire it now. A
@@ -451,6 +517,41 @@ class GraftSession(val spark: SparkSession,
           GraftSession.queryLog.pollLast()
       }
     spark.sparkContext.clearJobGroup()
+  }
+
+  /** The JVM write generation this session's relation cache reflects. */
+  @volatile private var seenWriteGen = 0L
+
+  /** Drop this session's cached relations for every table written (or
+    * any DDL run) by any session since the last call. Each wire
+    * connection runs on its own SparkSession, whose relation cache pins a
+    * file listing: without this, a connection that has read a table never
+    * sees the parts other connections publish into it. Costs one volatile
+    * read when nothing was written.
+    */
+  private def catchUpWrites(): Unit = {
+    val now = GraftSession.writeGen.get
+    val seen = seenWriteGen
+    if (now != seen) {
+      val cat = spark.sessionState.catalog
+      if (GraftSession.ddlGen > seen) cat.invalidateAllCachedTables()
+      else GraftSession.tableGens.forEach { (t, g) =>
+        if (g > seen) cat.invalidateCachedTable(
+          org.apache.spark.sql.catalyst.TableIdentifier(t._2, Some(t._1)))
+      }
+      seenWriteGen = now
+    }
+  }
+
+  /** Run `body` under the table's JVM-wide write lock (every path that
+    * changes a table's files takes it), then publish a new write
+    * generation for the table so other sessions re-resolve it.
+    */
+  private def underWriteLock[T](rdb: String, name: String)(body: => T): T = {
+    val lock = GraftSession.tableWriteLocks
+      .computeIfAbsent(s"$rdb.$name", _ => new Object)
+    try lock.synchronized(body)
+    finally GraftSession.bumpWriteGen(rdb, name)
   }
 
   /** Run a blank-line-separated script (sql_test_runner.rs:50-95 analog),
@@ -2358,9 +2459,7 @@ class GraftSession(val spark: SparkSession,
       mutateTable(AlterMutate(db, name, Nil, s"($ttl) <= now()", partition))
     }
     val loc = tableLocation(rdb, name)
-    val lock = GraftSession.tableWriteLocks
-      .computeIfAbsent(s"$rdb.$name", _ => new Object)
-    lock.synchronized {
+    underWriteLock(rdb, name) {
       val target = spark.conf.getOption("graft.optimize.targetFileBytes")
         .map(_.toLong).getOrElse(128L * 1024 * 1024)
       import scala.jdk.CollectionConverters._
@@ -2562,9 +2661,7 @@ class GraftSession(val spark: SparkSession,
     val live = loc.resolve(dirName)
     val detachedRoot = loc.resolve("_graft_detached")
     val detached = detachedRoot.resolve(dirName)
-    val lock = GraftSession.tableWriteLocks
-      .computeIfAbsent(s"$rdb.${a.name}", _ => new Object)
-    lock.synchronized {
+    underWriteLock(rdb, a.name) {
       java.nio.file.Files.deleteIfExists(loc.resolve("_graft_intent.tmp"))
       val intent = loc.resolve("_graft_intent")
       if (java.nio.file.Files.exists(intent)) replayIntent(loc, intent, full)
@@ -2868,9 +2965,7 @@ class GraftSession(val spark: SparkSession,
     val schema = spark.table(full).schema
     val partitioned = schema.fieldNames.contains(PtkCol)
     val loc = tableLocation(rdb, name)
-    val lock = GraftSession.tableWriteLocks
-      .computeIfAbsent(s"$rdb.$name", _ => new Object)
-    lock.synchronized {
+    underWriteLock(rdb, name) {
       java.nio.file.Files.deleteIfExists(loc.resolve("_graft_intent.tmp"))
       val intent = loc.resolve("_graft_intent")
       if (java.nio.file.Files.exists(intent)) replayIntent(loc, intent, full)
@@ -3027,9 +3122,7 @@ class GraftSession(val spark: SparkSession,
           "on it and rows cannot move between partitions")
     }
     val loc = tableLocation(rdb, m.name)
-    val lock = GraftSession.tableWriteLocks
-      .computeIfAbsent(s"$rdb.${m.name}", _ => new Object)
-    lock.synchronized {
+    underWriteLock(rdb, m.name) {
       java.nio.file.Files.deleteIfExists(loc.resolve("_graft_intent.tmp"))
       val intent = loc.resolve("_graft_intent")
       if (java.nio.file.Files.exists(intent)) replayIntent(loc, intent, full)
@@ -3154,6 +3247,9 @@ class GraftSession(val spark: SparkSession,
   /** Test-only fault injection: setting `graft.optimize.failpoint` to a
     * site name makes that site throw, simulating a mid-compaction
     * failure (disk full, interrupted job) without killing the process.
+    * Sites: `write` and `retire` (compaction and mutation rewrites),
+    * `publish` (a direct part write, after each part is renamed into
+    * view).
     */
   private def failpoint(site: String): Unit =
     if (spark.conf.getOption("graft.optimize.failpoint").contains(site))
@@ -3935,7 +4031,7 @@ class GraftSession(val spark: SparkSession,
   }
 
   private def createMaterializedView(mv: CreateMaterializedView): DataFrame = {
-    // a new subscription changes the wire fast-path facts even when the
+    // a new subscription changes the cached insert facts even when the
     // CREATE arrives outside sql() — restoreCatalog replays and the spec
     // surface construct MVs directly (ADVICE r19 #2: a warm JVM's stale
     // NEGATIVE mvSubs entry would make inserts skip a replayed MV)
@@ -4375,28 +4471,53 @@ class GraftSession(val spark: SparkSession,
 
   /** Push one inserted block through every materialized view on the
     * table: substitute a temp view of the block for the SELECT's source
-    * reference, run it, and append the result to the view's storage —
-    * recursively, so chained views work, with a cycle guard.
+    * reference, run it, and land the result in the view's storage —
+    * recursively, so chained views work, with a cycle guard. A
+    * `folded` block (rows already on the driver) collects each view's
+    * result, which is bounded by the block's row count, and lands it
+    * through the direct part writer; any other block appends the result
+    * through [[appendToTable]].
     */
   private def propagateToMvs(rdb: String, table: String, block: DataFrame,
-                             depth: Int): Unit = {
+                             depth: Int, folded: Boolean): Unit = {
     val mvs = mvsFor(rdb, table)
     if (mvs.isEmpty) return
     require(depth <= 8,
       s"materialized-view chain deeper than 8 at $rdb.$table — cycle?")
     mvs.foreach { case (mvName, sel) =>
-      val viewName = s"__graft_mv_block_${math.abs(sel.hashCode).toString}"
+      // unique per insert: concurrent inserts on one SparkSession must
+      // not read each other's blocks
+      val viewName = s"__graft_mv_block_${GraftSession.blockViews.incrementAndGet()}"
       block.createOrReplaceTempView(viewName)
-      val substituted = ChParser.firstFromTable(sel) match {
-        case Some((_, from, to)) =>
-          sel.substring(0, from) + viewName + " " + sel.substring(to)
-        case None => throw new IllegalStateException(
-          s"materialized view $mvName lost its FROM reference")
-      }
-      val result = spark.sql(rewriteSelect(substituted))
-      appendToTable(Some(rdb), mvName, result, srcIsRaw = false, depth + 1)
-      spark.catalog.dropTempView(viewName): Unit
+      try {
+        val substituted = ChParser.firstFromTable(sel) match {
+          case Some((_, from, to)) =>
+            sel.substring(0, from) + viewName + " " + sel.substring(to)
+          case None => throw new IllegalStateException(
+            s"materialized view $mvName lost its FROM reference")
+        }
+        val result = spark.sql(rewriteSelect(substituted))
+        val recipe = if (folded) directRecipeFor(rdb, mvName) else None
+        recipe match {
+          case Some(r) =>
+            val rows = org.apache.spark.sql.GraftSqlBridge.collectInternal(
+              castTo(result, r.dataSchema))
+            if (!directAppend(rdb, mvName, rows, r.dataSchema, depth + 1))
+              appendToTable(Some(rdb), mvName, org.apache.spark.sql.GraftSqlBridge
+                .internalLocalDf(spark, r.dataSchema, rows), srcIsRaw = false, depth + 1)
+          case None =>
+            appendToTable(Some(rdb), mvName, result, srcIsRaw = false, depth + 1)
+        }
+      } finally spark.catalog.dropTempView(viewName): Unit
     }
+  }
+
+  /** `df` renamed and cast column by column onto `schema`. */
+  private def castTo(df: DataFrame, schema: StructType): DataFrame = {
+    require(df.columns.length == schema.length,
+      s"INSERT column count ${df.columns.length} != table arity ${schema.length}")
+    df.toDF(schema.fieldNames.toIndexedSeq: _*).select(schema.fields.toIndexedSeq
+      .map(f => col(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)
   }
 
   private def tempSchema(ct: CreateTable): StructType =
@@ -4464,10 +4585,36 @@ class GraftSession(val spark: SparkSession,
       }
       coerced.as(f.name)
     }: _*)
-    // CHECK constraints ride inside the write projection via assert_true
-    // (zero extra pass over the source; the write job itself fails on the
-    // first violating row — ClickHouse's INSERT-time CHECK semantics, with
-    // SQL NULL-passes handling)
+    val rdbName = db.getOrElse(spark.sessionState.catalog.getCurrentDatabase)
+    // Driver-resident blocks (INSERT ... VALUES / FORMAT payloads: the
+    // optimizer folds the typed projection into the LocalRelation) take
+    // the direct part writer, whatever the table's partitioning, CHECKs,
+    // engine or MV subscriptions: the rows are already materialized on
+    // this thread, so a write job buys no parallelism and pays task
+    // scheduling plus the Hadoop commit. Only the OPTIMIZED plan shows
+    // the fold (a full Catalyst pass), so it is consulted only when every
+    // leaf of the logical plan is driver-resident; distributed sources
+    // never fold. A folded block the writer declines (a bucketed target)
+    // is still driver-resident, so its views are fed from the rows too;
+    // an unfolded one (say a generator over OneRowRelation) may expand
+    // without bound and stays on the job path end to end.
+    val resident = typed.queryExecution.logical.collectLeaves().forall {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+      case _: org.apache.spark.sql.catalyst.plans.logical.OneRowRelation => true
+      case _ => false
+    }
+    val folded = resident && (typed.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        if (directAppend(rdbName, name, lr.data,
+            StructType(dataCols.toIndexedSeq), mvDepth)) return
+        true
+      case _ => false
+    })
+    // Everything else (INSERT ... SELECT, file() loads, bucketed or
+    // temporary targets) is a Spark write job. CHECK constraints ride
+    // inside the write projection via assert_true (zero extra pass over
+    // the source; the job fails on the first violating row, with SQL
+    // NULL-passes handling)
     val checks = checkConstraints(db, name)
     val checked = if (checks.isEmpty) typed else {
       val allOk = checks.map { case (_, ce) =>
@@ -4480,20 +4627,11 @@ class GraftSession(val spark: SparkSession,
         when(assert_true(allOk, lit(msg)).isNull, col(s"`$f`")))
     }
     // When a materialized view subscribes, the block handed to the views
-    // must be EXACTLY the rows the base append landed. Historically that
-    // was a localCheckpoint pin — but the pin costs a full extra
-    // materialization job per insert (measured 0.08-0.15 s/statement at
-    // sf0.1, 13% of the MV-insert wall) and pins the whole block in
-    // executor storage, which at 100 TB block sizes is itself a memory
-    // hazard (guide §5). When re-executing the block's plan provably
-    // yields the same rows — every leaf a file-based relation or
-    // driver-resident rows, no nondeterministic expression anywhere, and
-    // no leaf reading the TARGET table (an `INSERT INTO t SELECT ... FROM
-    // t` would rescan its own just-landed rows; OTHER tables' file-index
-    // snapshots are pinned inside the analyzed plan) — the MV pass re-runs
-    // the plan instead: one fewer job, no storage pin, same rows.
-    // `graft.mv.rescan=off` restores the unconditional checkpoint.
-    val rdbName = db.getOrElse(spark.sessionState.catalog.getCurrentDatabase)
+    // must be EXACTLY the rows the base append landed: a localCheckpoint
+    // pin, unless re-executing the block's plan provably yields the same
+    // rows (see mvRescanSafe) — then the MV pass re-runs the plan: one
+    // fewer job, no storage pin. `graft.mv.rescan=off` restores the
+    // unconditional checkpoint.
     val hasMvs = mvsFor(rdbName, name).nonEmpty
     val mustPin = hasMvs && !mvRescanSafe(checked, rdbName, name)
     val block = if (mustPin) checked.localCheckpoint(eager = true) else checked
@@ -4506,40 +4644,6 @@ class GraftSession(val spark: SparkSession,
     // ingest-transform idiom (INSERT INTO null_table; MVs fan out)
     val isNull = tableProp(db, name, "graft.engine")
       .exists(_.equalsIgnoreCase("Null"))
-    // Driver-resident blocks (INSERT ... VALUES / FORMAT payloads — the
-    // optimizer folds the typed projection into the LocalRelation) take
-    // the same committer-free single-part write the wire path uses: the
-    // rows are ALREADY materialized on this thread, so an insertInto
-    // Spark job buys zero parallelism and pays task scheduling + the
-    // Hadoop _temporary+rename cycle (~0.5 s/statement measured, PERF.md
-    // r19-opt). directPartAppend re-checks the frozen facts (no MV, no
-    // __ptk, no CHECK, no buckets, not Null) and falls through here when
-    // the table needs full semantics. Scale posture unchanged:
-    // distributed sources never fold to LocalRelation.
-    // Cheap pre-gate: only consult the OPTIMIZED plan (a full Catalyst
-    // optimization pass, ~50-150 ms) when every leaf of the already-built
-    // logical plan is driver-resident — an INSERT...SELECT over real
-    // tables can never fold to LocalRelation, and paying the extra
-    // optimization pass per insert taxed the MV-heavy entries (~+0.2 s
-    // each, d11/d29 A/B).
-    def allLocalLeaves = withPtk.queryExecution.logical.collectLeaves().forall {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.OneRowRelation => true
-      case _ => false
-    }
-    if (!isNull && !hasMvs && ptkExpr.isEmpty && allLocalLeaves) {
-      withPtk.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          val tblSchema = StructType(dataCols.toIndexedSeq)
-          if (directPartAppend(rdbName, name, lr.data, tblSchema)) return
-        case _ => ()
-      }
-    }
-    // serialize appends per table: concurrent wire connections (or remote()
-    // shard streams) appending to one table would race in the Hadoop
-    // committer's shared _temporary dir — the reference takes a per-table
-    // CAS lock for exactly this (crates/meta/src/store/parts.rs:174-235;
-    // single-writer-per-table is all it supports)
     if (!isNull) {
       // MergeTree parts are SORTED by the sorting key — that is what the
       // ORDER BY/PRIMARY KEY clause physically MEANS in CH, and at 100 TB
@@ -4550,22 +4654,20 @@ class GraftSession(val spark: SparkSession,
       // bucketed tables skip this — their CLUSTERED/SORTED layout already
       // owns the ordering.
       val sortKeys = tableProp(db, name, "graft.pks")
-        .map(_.split("").filter(_.nonEmpty).toSeq).getOrElse(Nil)
+        .map(_.split("\u0001").filter(_.nonEmpty).toSeq).getOrElse(Nil)
         .filter(withPtk.columns.contains)
       val bucketed = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(name,
-          Some(db.getOrElse(spark.sessionState.catalog.getCurrentDatabase))))
+        org.apache.spark.sql.catalyst.TableIdentifier(name, Some(rdbName)))
         .bucketSpec.isDefined
       // Partitioned inserts hash-distribute by the partition key before
       // the write (guide §6 / Iceberg write.distribution-mode=hash): a
       // task holding every partition value writes one file PER value —
       // N tasks x P dirs files, the many-small-files problem — while the
       // clustered write lands P files and encodes partition values in
-      // parallel (a clumped single-task source serialized the whole
-      // encode: the sf0.1 ingest anchor measured 0.73 s single-task).
-      // Explicit width so AQE's byte-based coalescing cannot fold the
-      // tiny-byte exchange back to one task (the spreadHint lesson).
-      // `graft.insert.distribute=off` restores the straight-through plan.
+      // parallel. Explicit width so AQE's byte-based coalescing cannot
+      // fold the tiny-byte exchange back to one task (the spreadHint
+      // lesson). `graft.insert.distribute=off` restores the
+      // straight-through plan.
       val distributed =
         if (ptkExpr.isDefined && !bucketed &&
             spark.conf.getOption("graft.insert.distribute").forall(_ != "off"))
@@ -4580,11 +4682,11 @@ class GraftSession(val spark: SparkSession,
               sortKeys
           distributed.sortWithinPartitions(order.map(c => col(s"`$c`")): _*)
         }
-      val lockKey =
-        db.getOrElse(spark.sessionState.catalog.getCurrentDatabase) + "." + name
-      val lock = GraftSession.tableWriteLocks
-        .computeIfAbsent(lockKey, _ => new Object)
-      lock.synchronized {
+      // serialize appends per table: concurrent appenders would race in
+      // the Hadoop committer's shared _temporary dir — the reference takes
+      // a per-table CAS lock for exactly this
+      // (crates/meta/src/store/parts.rs:174-235)
+      underWriteLock(rdbName, name) {
         block2.write.mode("append").insertInto(fullName(db, name).replace("`", ""))
       }
     }
@@ -4595,17 +4697,24 @@ class GraftSession(val spark: SparkSession,
     // pinned is released: a rescan-safe block's leaves may include an
     // upstream consumer's own live checkpoint.
     if (hasMvs)
-      try propagateToMvs(rdbName, name, block, mvDepth)
+      try propagateToMvs(rdbName, name, block, mvDepth, folded)
       finally if (mustPin) releaseCheckpoint(block)
   }
 
   /** True when `df`'s plan can be re-executed for MV propagation in place
     * of a localCheckpoint pin and provably produce the identical block:
     * all expressions deterministic, every leaf either driver-resident
-    * rows or a file-based relation, and no leaf reading the insert's own
-    * target table (its file listing is the one thing the append itself
-    * changes). Anything else — RDD-backed leaves, streaming, remote(),
-    * nondeterministic generators — keeps the checkpoint.
+    * rows or a file relation whose listing the analyzed plan pins, and no
+    * leaf reading the insert's own target table or a table its views
+    * write into, transitively (the appends refresh those listings in
+    * place, so a rescan would see the new rows). A partitioned table's
+    * `CatalogFileIndex` pins nothing: each planning lists the catalog's
+    * partitions afresh, so parts published in between (by another
+    * connection, or by this insert's own views) would reach the rescan.
+    * Anything else — RDD-backed leaves, streaming, remote(),
+    * nondeterministic generators — keeps the checkpoint. Only
+    * `INSERT ... SELECT` and loads ask: driver-resident blocks feed their
+    * views from the rows themselves.
     */
   private def mvRescanSafe(df: DataFrame, rdb: String,
                            target: String): Boolean = {
@@ -4616,35 +4725,37 @@ class GraftSession(val spark: SparkSession,
       df.queryExecution.analyzed.subqueriesAll
     val deterministic =
       !plans.exists(_.exists(p => p.expressions.exists(!_.deterministic)))
+    val written = scala.collection.mutable.Set(target.toLowerCase(java.util.Locale.ROOT))
+    def feed(t: String, depth: Int): Unit = if (depth <= 8)
+      mvsFor(rdb, t).foreach { case (mv, _) =>
+        if (written.add(mv.toLowerCase(java.util.Locale.ROOT))) feed(mv, depth + 1)
+      }
+    feed(target, 0)
     deterministic && plans.flatMap(_.collectLeaves()).forall {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
       case _: org.apache.spark.sql.catalyst.plans.logical.OneRowRelation => true
       case _: org.apache.spark.sql.catalyst.plans.logical.Range => true
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation.isInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-          !lr.catalogTable.exists(ct =>
-            ct.identifier.table.equalsIgnoreCase(target) &&
-              ct.identifier.database.forall(_.equalsIgnoreCase(rdb)))
+        lr.relation match {
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            !fs.location.isInstanceOf[
+              org.apache.spark.sql.execution.datasources.CatalogFileIndex] &&
+              !lr.catalogTable.exists(ct =>
+                written(ct.identifier.table.toLowerCase(java.util.Locale.ROOT)) &&
+                  ct.identifier.database.forall(_.equalsIgnoreCase(rdb)))
+          case _ => false
+        }
       case _ => false
     }
   }
 
   /** Append an already-typed block of rows to a table — the wire-ingest
     * entry (client-streamed Data blocks over the CH native protocol; the
-    * reference's write-block path, write.rs:26-67).
-    *
-    * GROUP COMMIT: each append pays a fixed ~0.8 s Spark-job +
-    * Hadoop-committer cost regardless of block size (PERF.md r18), so
-    * concurrent flushes against one table MERGE — while a leader thread
-    * is writing, later flushes queue their rows and the leader lands the
-    * whole queue in its next single append (the reference batches
-    * concurrent connections into shared memtable parts the same way,
-    * write.rs:26-67). Every row still lands exactly once and a flush
-    * only returns after a commit that includes its rows; the one
-    * granularity change is error attribution — a rejected row (CHECK
-    * violation) fails every flush merged into its batch, not only the
-    * connection that sent it.
+    * reference's write-block path, write.rs:26-67). The block lands
+    * through the direct part writer ([[directAppend]]); only a bucketed
+    * table (or a block whose schema differs from the table's) takes the
+    * Spark-job path, serialized per table by [[appendToTable]]'s write
+    * lock.
     */
   def insertBlock(db: Option[String], name: String, rows: Seq[Row],
                   schema: StructType): Unit =
@@ -4661,117 +4772,180 @@ class GraftSession(val spark: SparkSession,
                           rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
                           schema: StructType): Unit = {
     val rdb = db.getOrElse(spark.sessionState.catalog.getCurrentDatabase)
-    // plain tables take the direct part-write path: the block encodes to
-    // ONE parquet file on THIS thread (concurrent connections encode in
-    // parallel) and only the rename serializes — no Spark job at all
-    if (directPartAppend(rdb, name, rows, schema)) return
-    val gc = GraftSession.groupCommits
-      .computeIfAbsent(rdb + "." + name, _ => new GraftSession.GroupCommit)
-    val me = new GraftSession.GroupWaiter
-    val leader = gc.synchronized {
-      gc.queue += ((rows, me))
-      if (!gc.writing) { gc.writing = true; true } else false
-    }
-    if (leader) {
-      var batch = gc.synchronized {
-        val b = gc.queue.toVector; gc.queue.clear(); b
-      }
-      try {
-        while (batch.nonEmpty) {
-          val err =
-            try {
-              val all =
-                if (batch.length == 1) batch.head._1
-                else batch.iterator.flatMap(_._1).toVector
-              val src = org.apache.spark.sql.GraftSqlBridge
-                .internalLocalDf(spark, schema, all)
-              appendToTable(Some(rdb), name, src, srcIsRaw = false)
-              null
-            } catch { case scala.util.control.NonFatal(e) => e }
-          batch.foreach(_._2.complete(err))
-          batch = gc.synchronized {
-            val b = gc.queue.toVector; gc.queue.clear()
-            if (b.isEmpty) gc.writing = false
-            b
-          }
-        }
-      } catch { case t: Throwable =>
-        // fatal error mid-drain: fail the in-flight batch AND anything
-        // already queued (a future flush would adopt the queue, but none
-        // may ever come), then hand leadership back
-        val stranded = gc.synchronized {
-          gc.writing = false
-          val b = gc.queue.toVector; gc.queue.clear(); b
-        }
-        (batch ++ stranded).foreach(_._2.complete(t))
-        throw t
-      }
-    } else me.await()
-    if (me.error != null) throw me.error
+    if (!directAppend(rdb, name, rows, schema))
+      appendToTable(Some(rdb), name, org.apache.spark.sql.GraftSqlBridge
+        .internalLocalDf(spark, schema, rows), srcIsRaw = false)
   }
 
-  /** Wire-flush fast path: encode the block as ONE parquet part file on
-    * the CALLING thread and atomically publish it into the table
-    * directory — no Spark job, no Hadoop commit cycle. A streamed block
-    * is already materialized on one server thread, so a distributed
-    * write buys nothing and pays task serialization of every row
-    * (~1.3 s/600k rows measured — PERF.md r19); with this path
-    * concurrent connections ENCODE in parallel and only the rename
-    * serializes under the table's write lock. The file is written by
-    * Spark's own ParquetWriteSupport (identical encoding to an
-    * insertInto part), pre-sorted in memory by the table's sorting key
-    * and carrying its declared bloom filters — the same part physics
-    * every other write path maintains. This is the reference's
-    * memtable->part flush (crates/meta/src/store/parts.rs:174-235)
-    * re-expressed on Spark's storage layout. Tables needing more than a
-    * plain append — partitioning (`__ptk`), MV/projection fanout, CHECK
-    * constraints, buckets, ENGINE=Null, temp tables, or a schema
-    * mismatch — return false and take the full [[appendToTable]] path.
+  /** The direct part writer for driver-resident rows: wire blocks, SQL
+    * `INSERT VALUES`/`FORMAT` payloads, and the materialized-view results
+    * computed from them. No Spark job and no Hadoop commit for the base
+    * write: on the CALLING thread the rows are checked against every
+    * CHECK constraint, split by partition key (both evaluated by
+    * expressions frozen in the table's [[DirectRecipe]]), and each group
+    * is sorted by the sorting key and encoded by Spark's own
+    * ParquetWriteSupport (identical encoding to an insertInto part, with
+    * the declared bloom filters) as a hidden file in its `__ptk=<v>`
+    * directory. Concurrent connections encode in parallel; only the
+    * publish serializes under the table's write lock. Then every
+    * subscribed view runs its SELECT over the same rows and lands its
+    * result the same way (ENGINE=Null lands no base part but still feeds
+    * the views). This is the reference's memtable->part flush, one part
+    * per partition per block (crates/meta/src/store/parts.rs:174-235),
+    * on Spark's storage layout. False — nothing written — when the table
+    * needs the Spark-job path: bucketed, temporary, or a block whose
+    * schema differs from the table's.
     */
-  private def directPartAppend(rdb: String, name: String,
+  private def directAppend(rdb: String, name: String,
       rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
-      schema: StructType): Boolean = {
-    if (rows.isEmpty) return true
-    // the verdict + write recipe cache makes the steady-state flush pay
-    // ZERO catalog round-trips (the uncached check costs ~0.4 s — mostly
-    // the mvsFor catalog scan — which would re-serialize the whole path);
-    // every shape-changing statement clears the cache (see sql())
-    val key = rdb + "." + name
-    val recipe = GraftSession.directRecipes
-      .computeIfAbsent(key, _ => directRecipe(rdb, name))
-    recipe match {
-      case None => false
-      case Some(r) =>
-        val dataCols = r.dataSchema.fields
-        if (dataCols.length != schema.fields.length ||
-            !dataCols.zip(schema.fields).forall { case (a, b) =>
-              a.name == b.name && a.dataType == b.dataType }) return false
-        // MergeTree parts are sorted by the sorting key — in-memory sort
-        // on this thread (the rows are RAM-resident already)
-        val sorted =
-          if (r.pks.isEmpty) rows
-          else rows.sorted(org.apache.spark.sql.GraftSqlBridge
-            .internalOrdering(r.dataSchema, r.pks))
-        val (tmp, _) = org.apache.spark.sql.execution.datasources.parquet
-          .GraftDirectParquet.writeHidden(spark,
-            new org.apache.hadoop.fs.Path(new java.net.URI(r.location)),
-            r.dataSchema, sorted.iterator, r.bloomCols)
-        val lock = GraftSession.tableWriteLocks
-          .computeIfAbsent(key, _ => new Object)
-        lock.synchronized {
-          org.apache.spark.sql.execution.datasources.parquet
-            .GraftDirectParquet.publish(spark, tmp): Unit
-          // invalidate the cached relation + file listing so the next
-          // read (this session or the wire SELECT path) sees the part
-          spark.sessionState.catalog.refreshTable(
-            org.apache.spark.sql.catalyst.TableIdentifier(name, Some(rdb)))
+      schema: StructType, mvDepth: Int = 0): Boolean =
+    directRecipeFor(rdb, name) match {
+      case Some(r) if r.dataSchema.length == schema.length &&
+          r.dataSchema.zip(schema).forall { case (a, b) =>
+            a.name == b.name && a.dataType == b.dataType } =>
+        if (rows.nonEmpty) {
+          val keys = checkedPartitionKeys(rdb, name, r, rows)
+          if (r.landsRows) writeParts(rdb, name, r, rows, keys)
+          if (mvsFor(rdb, name).nonEmpty)
+            propagateToMvs(rdb, name, org.apache.spark.sql.GraftSqlBridge
+              .internalLocalDf(spark, r.dataSchema, rows), mvDepth,
+              folded = true)
         }
         true
+      case _ => false
+    }
+
+  /** The cached recipe: the steady-state insert pays ZERO catalog
+    * round-trips (building one costs a table analysis and an expression
+    * analysis); every shape-changing statement clears the cache (see
+    * sql()).
+    */
+  private def directRecipeFor(rdb: String,
+      name: String): Option[GraftSession.DirectRecipe] =
+    GraftSession.directRecipes
+      .computeIfAbsent(rdb + "." + name, _ => directRecipe(rdb, name))
+
+  /** Evaluate the recipe's row expressions over `rows`: throw on the
+    * first row a CHECK constraint rejects (before anything is written),
+    * else return each row's partition key (empty for an unpartitioned
+    * table; a NULL or empty key is Hive's default partition, as in a
+    * Spark write).
+    */
+  private def checkedPartitionKeys(rdb: String, name: String,
+      r: GraftSession.DirectRecipe,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): Seq[String] = {
+    if (r.rowExprs.isEmpty) return Nil
+    // per call: a projection is not thread-safe (its codegen is cached)
+    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(r.rowExprs)
+    proj.initialize(0)
+    val nChecks = r.checkNames.length
+    val keys = if (r.partitioned) new Array[String](rows.length) else null
+    var i = 0
+    rows.foreach { row =>
+      val out = proj(row)
+      var c = 0
+      while (c < nChecks) {
+        if (!out.getBoolean(c)) throw new IllegalArgumentException(
+          s"INSERT violates CHECK constraint ${r.checkNames(c)} on `$rdb`.`$name`")
+        c += 1
+      }
+      if (keys != null) keys(i) =
+        if (out.isNullAt(nChecks)) null else out.getUTF8String(nChecks).toString
+      i += 1
+    }
+    if (keys == null) Nil else keys.toSeq
+  }
+
+  /** Write one sorted part per partition directory, then publish them
+    * all-or-nothing: every part is encoded as a hidden file first, the
+    * renames run under the table's write lock, and a failure part-way
+    * deletes the parts already renamed (and the hidden files and new
+    * directories) before it propagates. New partitions are registered in
+    * the catalog after their parts are visible.
+    */
+  private def writeParts(rdb: String, name: String,
+      r: GraftSession.DirectRecipe,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      keys: Seq[String]): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.execution.datasources.parquet.GraftDirectParquet
+    val root = new Path(new java.net.URI(r.location))
+    val groups: Seq[(Option[String], Seq[org.apache.spark.sql.catalyst.InternalRow])] =
+      if (!r.partitioned) Seq(None -> rows)
+      else {
+        val byKey = scala.collection.mutable.LinkedHashMap.empty[String,
+          scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.catalyst.InternalRow]]
+        rows.iterator.zip(keys.iterator).foreach { case (row, k) =>
+          val v = if (k == null || k.isEmpty)
+            ExternalCatalogUtils.DEFAULT_PARTITION_NAME else k
+          byKey.getOrElseUpdate(v, scala.collection.mutable.ArrayBuffer.empty) += row
+        }
+        byKey.toSeq.map { case (k, rs) => (Some(k), rs.toSeq) }
+      }
+    def dirOf(key: Option[String]): Path = key.fold(root)(v =>
+      new Path(root, ExternalCatalogUtils.getPartitionPathString(PtkCol, v)))
+    val ordering = if (r.pks.isEmpty) None
+      else Some(org.apache.spark.sql.GraftSqlBridge.internalOrdering(r.dataSchema, r.pks))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val madeDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+    val hidden = scala.collection.mutable.ArrayBuffer.empty[Path]
+    var published = false
+    try {
+      groups.foreach { case (key, rs) =>
+        val dir = dirOf(key)
+        if (key.isDefined && !fs.exists(dir)) { fs.mkdirs(dir); madeDirs += dir }
+        val sorted = ordering.fold(rs)(o => rs.sorted(o))
+        hidden += GraftDirectParquet.writeHidden(spark, dir, r.dataSchema,
+          sorted.iterator, r.bloomCols)._1
+      }
+      underWriteLock(rdb, name) {
+        val visible = scala.collection.mutable.ArrayBuffer.empty[Path]
+        try {
+          hidden.foreach { t =>
+            visible += GraftDirectParquet.publish(spark, t)
+            failpoint("publish")
+          }
+          if (r.partitioned) registerPartitions(rdb, name, r,
+            groups.flatMap(_._1).map(k => k -> dirOf(Some(k))))
+        } catch { case t: Throwable =>
+          visible.foreach(p => scala.util.Try(fs.delete(p, false)))
+          throw t
+        }
+        published = true
+        // this session reads its own write at once; other sessions catch
+        // up through the write generation underWriteLock publishes
+        spark.sessionState.catalog.refreshTable(
+          org.apache.spark.sql.catalyst.TableIdentifier(name, Some(rdb)))
+      }
+    } finally if (!published) {
+      hidden.foreach(t => scala.util.Try(fs.delete(t, false)))
+      // non-recursive: a directory another writer is filling stays
+      madeDirs.foreach(d => scala.util.Try(fs.delete(d, false)))
     }
   }
 
-  /** The frozen facts [[directPartAppend]] needs, or None when the table
-    * requires the full [[appendToTable]] semantics.
+  /** Register the partitions a direct write created in the session
+    * catalog (what an insertInto's commit does for a dynamic partition).
+    */
+  private def registerPartitions(rdb: String, name: String,
+      r: GraftSession.DirectRecipe, dirs: Seq[(String, org.apache.hadoop.fs.Path)]): Unit = {
+    val cat = spark.sessionState.catalog
+    val ident = org.apache.spark.sql.catalyst.TableIdentifier(name, Some(rdb))
+    val fresh = dirs.filter { case (v, _) =>
+      cat.listPartitions(ident, Some(Map(PtkCol -> v))).isEmpty }
+    if (fresh.nonEmpty)
+      cat.createPartitions(ident, fresh.map { case (v, dir) =>
+        org.apache.spark.sql.catalyst.catalog.CatalogTablePartition(
+          Map(PtkCol -> v), r.storage.copy(locationUri = Some(dir.toUri)))
+      }, ignoreIfExists = true)
+  }
+
+  /** The frozen facts [[directAppend]] needs, or None when the table
+    * takes the Spark-job path of [[appendToTable]] (bucketed, temporary,
+    * missing, or a partition key or CHECK the driver cannot evaluate
+    * outside a query plan).
     */
   private def directRecipe(rdb: String,
       name: String): Option[GraftSession.DirectRecipe] = {
@@ -4781,21 +4955,32 @@ class GraftSession(val spark: SparkSession,
     if (metaOpt.isEmpty) return None
     val meta = metaOpt.get
     if (meta.bucketSpec.isDefined) return None
-    if (meta.properties.get("graft.engine").exists(_.equalsIgnoreCase("Null")))
-      return None
     val (tschema, _, ptkExpr) = tableMeta(Some(rdb), name)
-    if (ptkExpr.isDefined) return None
-    if (checkConstraints(Some(rdb), name).nonEmpty) return None
-    if (mvsFor(rdb, name).nonEmpty) return None
     val dataCols = tschema.fields.filter(_.name != PtkCol)
+    val dataSchema = StructType(dataCols.toIndexedSeq)
+    val checks = checkConstraints(Some(rdb), name)
+    val rowCols =
+      checks.map { case (_, ce) => coalesce(expr(ce).cast(BooleanType), lit(true)) } ++
+        ptkExpr.map(e => expr(e).cast(StringType))
+    val rowExprs =
+      if (rowCols.isEmpty) Nil
+      else org.apache.spark.sql.GraftSqlBridge
+        .boundExpressions(spark, dataSchema, rowCols) match {
+        case Some(b) => b
+        case None => return None
+      }
     val pks = meta.properties.get("graft.pks")
-      .map(_.split("").filter(_.nonEmpty).toSeq).getOrElse(Nil)
+      .map(_.split("\u0001").filter(_.nonEmpty).toSeq).getOrElse(Nil)
       .filter(k => dataCols.exists(_.name == k))
     val bloomCols = meta.properties.get("graft.bloom").toSeq
       .flatMap(_.split(",").filter(_.nonEmpty))
       .filter(c => dataCols.exists(_.name == c))
-    Some(GraftSession.DirectRecipe(StructType(dataCols.toIndexedSeq), pks,
-      bloomCols, meta.location.toString))
+    Some(GraftSession.DirectRecipe(dataSchema, pks, bloomCols,
+      meta.location.toString, checks.map(_._1), rowExprs,
+      partitioned = ptkExpr.isDefined,
+      landsRows = !meta.properties.get("graft.engine")
+        .exists(_.equalsIgnoreCase("Null")),
+      storage = meta.storage))
   }
 
   /** The table's declared data schema (without the hidden partition key) —
@@ -4979,46 +5164,58 @@ class GraftSession(val spark: SparkSession,
 }
 
 object GraftSession {
-  /** JVM-wide per-table append locks (see appendToTable). */
+  /** JVM-wide per-table write locks (see [[GraftSession.underWriteLock]]). */
   private[exec] val tableWriteLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Per-table group-commit state for [[GraftSession.insertBlock]]: while
-    * one flush is paying the append job + Hadoop-commit, later flushes
-    * for the same table queue their rows; the leader drains the queue and
-    * lands EVERYTHING in one append. Throughput then scales with rows,
-    * not with the number of connections serializing ~0.8 s commits
-    * (PERF.md r18: the commit dominates regardless of block size).
+  /** Write generations: one JVM-wide counter, stamped onto a table when a
+    * write publishes into it ([[tableGens]]) or onto [[ddlGen]] when a DDL
+    * statement finishes. A session whose last-seen generation is behind
+    * the counter invalidates the cached relations that moved
+    * ([[GraftSession.catchUpWrites]]). The stamp is stored before the
+    * counter moves, so a reader that sees the new counter sees the stamp.
     */
-  private[exec] final class GroupCommit {
-    val queue = scala.collection.mutable.ArrayBuffer
-      .empty[(Seq[org.apache.spark.sql.catalyst.InternalRow], GroupWaiter)]
-    var writing = false
+  private[exec] val writeGen = new java.util.concurrent.atomic.AtomicLong()
+  private[exec] val tableGens =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
+  @volatile private[exec] var ddlGen = 0L
+  private[exec] def bumpWriteGen(rdb: String, name: String): Unit =
+    synchronized {
+      val g = writeGen.get + 1
+      tableGens.put((rdb, name), g)
+      writeGen.set(g)
+    }
+  private[exec] def bumpDdlGen(): Unit = synchronized {
+    val g = writeGen.get + 1
+    ddlGen = g
+    writeGen.set(g)
   }
-  private[exec] final class GroupWaiter {
-    private val latch = new java.util.concurrent.CountDownLatch(1)
-    @volatile var error: Throwable = null
-    def complete(e: Throwable): Unit = { error = e; latch.countDown() }
-    def await(): Unit = latch.await()
-  }
-  private[exec] val groupCommits =
-    new java.util.concurrent.ConcurrentHashMap[String, GroupCommit]()
 
-  /** Cached wire-ingest fast-path verdicts: "db.table" -> Some(frozen
-    * write recipe) | None (needs full appendToTable semantics). Cleared
-    * by [[GraftSession.sql]] on every statement that can change the
-    * frozen facts (DDL, ALTER, OPTIMIZE target swaps, MV churn).
+  /** Names the per-insert temp views a materialized view's SELECT reads. */
+  private[exec] val blockViews = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Cached direct part-write recipes: "db.table" -> Some(frozen facts)
+    * | None (bucketed, temporary or missing: the appendToTable job path).
+    * `rowExprs` are bound to `dataSchema`: one boolean per CHECK
+    * constraint (NULL passes), then the partition key as a string when
+    * `partitioned`. Cleared by [[GraftSession.sql]] on every statement
+    * that can change the frozen facts (DDL, ALTER, OPTIMIZE target
+    * swaps, MV churn).
     */
   private[exec] final case class DirectRecipe(
       dataSchema: org.apache.spark.sql.types.StructType,
-      pks: Seq[String], bloomCols: Seq[String], location: String)
+      pks: Seq[String], bloomCols: Seq[String], location: String,
+      checkNames: Seq[String],
+      rowExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      partitioned: Boolean, landsRows: Boolean,
+      storage: org.apache.spark.sql.catalyst.catalog.CatalogStorageFormat)
   private[exec] val directRecipes =
     new java.util.concurrent.ConcurrentHashMap[String, Option[DirectRecipe]]()
 
   /** Cached MV-subscription lookups: "db.table" -> the (mvName, select)
     * pairs subscribed to it. [[mvsFor]] is a full listTables +
     * getTableMetadata scan of the database — O(tables) catalog calls —
-    * and [[appendToTable]] consults it on EVERY insert, so a bench/wire
+    * and every insert consults it, so a bench/wire
     * session paid the scan per statement. Same lifecycle as
     * [[directRecipes]]: cleared by [[GraftSession.sql]] on every
     * shape-changing statement (CREATE/DROP MATERIALIZED VIEW is one).

@@ -202,21 +202,20 @@ final class ChWireServer(spark: SparkSession, port: Int = 0) {
           var open = true
           var cancelled = false
           var applyError: Throwable = null
-          // Received blocks BUFFER before landing: each append pays a
-          // full Spark job + Hadoop-committer parquet rename
-          // (~0.8 s regardless of block size — PERF.md r18), so
-          // per-block appends cap one connection near 50k rows/s while
-          // decode costs almost nothing. Buffered rows flush at
-          // FlushRows, at the stream terminator, and on Cancel — every
-          // block the client SENT still lands (same contract as the
-          // per-block appends; the reference also batches into memtables
-          // before its part writes). Error semantics unchanged: a flush
-          // failure records the apply error and the remaining stream
-          // drains to the terminator. Rows buffer CONVERTED (InternalRow)
-          // so the external->Catalyst cost — the measured bottleneck of
-          // the flush itself (PERF.md r19) — is paid here on the parallel
-          // per-connection threads, and concurrent flushes group-commit
-          // inside insertBlockInternal.
+          // Received blocks BUFFER before landing: each flush writes one
+          // part per partition directory and runs every subscribed
+          // view's SELECT once, so landing per block would multiply
+          // small parts and view jobs while decode costs almost nothing.
+          // Buffered rows flush at FlushRows, at the stream terminator,
+          // and on Cancel — every block the client SENT still lands
+          // (same contract as per-block appends; the reference also
+          // batches into memtables before its part writes). Error
+          // semantics unchanged: a flush failure records the apply error
+          // and the remaining stream drains to the terminator. Rows
+          // buffer CONVERTED (InternalRow) so the external->Catalyst cost
+          // — the measured bottleneck of the flush itself (PERF.md r19) —
+          // is paid here on the parallel per-connection threads; the
+          // direct part writer then encodes on this thread too.
           val toInternal =
             org.apache.spark.sql.GraftSqlBridge.rowSerializer(schema)
           val buffered = scala.collection.mutable.ArrayBuffer

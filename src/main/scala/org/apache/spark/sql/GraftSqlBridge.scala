@@ -67,4 +67,43 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       catalyst.plans.logical.LocalRelation(
         catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** `cols` resolved once against `schema` and bound to its ordinals, so
+    * the driver can evaluate them row by row over already-Catalyst rows
+    * (partition keys and CHECK constraints of a direct part write) with
+    * no query plan per block. None when an expression cannot be
+    * evaluated outside a plan (it needs an optimizer rule beyond the
+    * runtime-replaceable rewrite, e.g. a subquery).
+    */
+  def boundExpressions(spark: SparkSession, schema: types.StructType,
+                       cols: Seq[Column]): Option[Seq[Expression]] = {
+    val analyzed = internalLocalDf(spark, schema, Nil).select(cols: _*)
+      .queryExecution.analyzed
+    catalyst.optimizer.ReplaceExpressions(analyzed) match {
+      case catalyst.plans.logical.Project(list, child) =>
+        val bound = list.map { e =>
+          val body = e match {
+            case a: catalyst.expressions.Alias => a.child
+            case other => other
+          }
+          catalyst.expressions.BindReferences.bindReference(body, child.output)
+        }
+        val evaluable = !bound.exists(_.exists {
+          case _: catalyst.expressions.Unevaluable => true
+          case _ => false
+        })
+        if (evaluable) Some(bound) else None
+      case _ => None
+    }
+  }
+
+  /** Run `df` and return its rows as Catalyst rows, under a SQL execution
+    * id like any Dataset action — for results bounded by a driver-resident
+    * block (a materialized view's SELECT over one insert).
+    */
+  def collectInternal(df: DataFrame): Seq[catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect().toSeq)
+  }
 }

@@ -322,18 +322,22 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("partitioned INSERT hash-distributes by the partition key (r19-opt) " +
     "and lands identical rows with the distribution on or off") {
-    g.sql("DROP TABLE IF EXISTS ins_dist")
+    // INSERT ... SELECT from a table: the Spark write job the
+    // distribution applies to (VALUES rows take the direct part writer)
+    g.sql("DROP TABLE IF EXISTS ins_dist; DROP TABLE IF EXISTS ins_dist_src")
+    g.sql("CREATE TABLE ins_dist_src(id Int64, d Date)")
+    g.sql("INSERT INTO ins_dist_src VALUES (1, '2020-01-01'), (2, '2021-02-02'), " +
+      "(3, '2020-03-03'), (4, '2021-04-04'), (5, '2020-05-05')")
     g.sql("CREATE TABLE ins_dist(id Int64, d Date) ENGINE=BaseStorage " +
       "PARTITION BY toYear(d)")
-    g.sql("INSERT INTO ins_dist VALUES (1, '2020-01-01'), (2, '2021-02-02'), " +
-      "(3, '2020-03-03')")
+    g.sql("INSERT INTO ins_dist SELECT id, d FROM ins_dist_src WHERE id <= 3")
     spark.conf.set("graft.insert.distribute", "off")
-    try g.sql("INSERT INTO ins_dist VALUES (4, '2021-04-04'), (5, '2020-05-05')")
+    try g.sql("INSERT INTO ins_dist SELECT id, d FROM ins_dist_src WHERE id > 3")
     finally spark.conf.unset("graft.insert.distribute")
     assert(g.sql("SELECT CAST(sum(id) AS BIGINT) AS s, count(*) AS n, " +
         "CAST(count(DISTINCT year(d)) AS BIGINT) AS y FROM ins_dist")
       .collect()(0).toSeq === Seq(15L, 5L, 2L))
-    g.sql("DROP TABLE ins_dist")
+    g.sql("DROP TABLE ins_dist; DROP TABLE ins_dist_src")
   }
 
   test("OPTIMIZE TABLE compacts unpartitioned tables too") {
@@ -1095,6 +1099,36 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(g.sql("SELECT k FROM rsc_v ORDER BY k")
       .collect().map(_.getInt(0)).toSeq === Seq(20, 40, 100))
     g.sql("DROP TABLE rsc_v; DROP TABLE rsc_t; DROP TABLE rsc_src")
+  }
+
+  test("MV propagation pins a block read from a table its own views write " +
+    "into, partitioned or not") {
+    // rsf_feed (a TO-form view into the block's SOURCE) runs before
+    // rsf_z: re-running the block's plan for rsf_z would rescan the
+    // source with rsf_feed's rows in it. A partitioned source's
+    // CatalogFileIndex lists partitions afresh at every planning, so its
+    // listing is never pinned; a plain source's listing is refreshed in
+    // place by the append into it.
+    Seq("PARTITION BY toYYYYMM(d) ORDER BY k", "ORDER BY k").foreach { layout =>
+      g.sql("DROP VIEW IF EXISTS rsf_feed; DROP TABLE IF EXISTS rsf_z; " +
+        "DROP TABLE IF EXISTS rsf_t; DROP TABLE IF EXISTS rsf_src")
+      g.sql(s"CREATE TABLE rsf_src(k Int64, d Date) ENGINE = MergeTree $layout")
+      g.sql("INSERT INTO rsf_src VALUES (1, '2021-01-05'), (2, '2021-02-06')")
+      g.sql("CREATE TABLE rsf_t(k Int64, d Date) ENGINE = MergeTree ORDER BY k")
+      g.sql("CREATE MATERIALIZED VIEW rsf_feed TO rsf_src AS " +
+        "SELECT k + 100 AS k, d + 60 AS d FROM rsf_t")
+      g.sql("CREATE MATERIALIZED VIEW rsf_z AS SELECT k FROM rsf_t")
+      g.sql("INSERT INTO rsf_t SELECT k, d FROM rsf_src")
+      assert(g.sql("SELECT k FROM rsf_t ORDER BY k").collect()
+        .map(_.getLong(0)).toSeq === Seq(1L, 2L), layout)
+      assert(g.sql("SELECT k FROM rsf_z ORDER BY k").collect()
+        .map(_.getLong(0)).toSeq === Seq(1L, 2L),
+        s"$layout: the view must see exactly the block that landed")
+      assert(g.sql("SELECT k FROM rsf_src ORDER BY k").collect()
+        .map(_.getLong(0)).toSeq === Seq(1L, 2L, 101L, 102L), layout)
+    }
+    g.sql("DROP VIEW rsf_feed; DROP TABLE rsf_z; DROP TABLE rsf_t; " +
+      "DROP TABLE rsf_src")
   }
 
   test("MV propagation still pins a nondeterministic block") {
