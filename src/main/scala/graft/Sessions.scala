@@ -14,7 +14,11 @@ import org.apache.spark.sql.SparkSession
   *     default); on a real cluster this would be set per-job or left to AQE.
   *   - AQE on: runtime coalescing + skew-join handling is part of the
   *     100 TB design (SURVEY §4.1 — the reference's static repartition rule
-  *     is strictly weaker).
+  *     is strictly weaker). A CH SELECT whose input adds up to at most
+  *     `spark.sql.autoBroadcastJoinThreshold` is planned per statement
+  *     without AQE and with one shuffle partition, so it runs as one job
+  *     (`SmallStatementExecution`, via `GraftSession`); the session conf
+  *     itself never changes.
   */
 object Sessions {
   def build(appName: String,

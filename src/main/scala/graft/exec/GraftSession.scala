@@ -959,12 +959,13 @@ class GraftSession(val spark: SparkSession,
           // the fully-rewritten SQL the dialect layer hands to Spark —
           // exactly what CH's EXPLAIN SYNTAX shows (ITS rewritten query)
           rewriteSelect(sel)
+        // the plan the SELECT would run: routed like runSelect
         case "pipeline" =>
-          spark.sql(rewriteSelect(sel)).queryExecution.explainString(
-            org.apache.spark.sql.execution.CodegenMode)
+          org.apache.spark.sql.GraftSqlBridge.planSmall(spark.sql(rewriteSelect(sel)))
+            .queryExecution.explainString(org.apache.spark.sql.execution.CodegenMode)
         case _ =>
-          spark.sql(rewriteSelect(sel)).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          org.apache.spark.sql.GraftSqlBridge.planSmall(spark.sql(rewriteSelect(sel)))
+            .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
       }
       spark.createDataFrame(
         text.split("\n").toSeq.map(Row(_)).asJava,
@@ -976,14 +977,20 @@ class GraftSession(val spark: SparkSession,
 
   /** SELECT passthrough. The hidden partition key is storage metadata in
     * the reference (never a column, crates/meta/src/types.rs:55-63), so a
-    * `SELECT *` over a partitioned table must not leak it.
+    * `SELECT *` over a partitioned table must not leak it. A SELECT whose
+    * inputs add up to at most the broadcast threshold is planned as one
+    * Spark job — no AQE, one shuffle partition, for this statement only
+    * (`GraftSqlBridge.planSmall`); any other plans as the session says.
+    * Callers consume the returned Dataset itself: one derived from it
+    * plans afresh.
     */
   private def runSelect(raw: String): DataFrame =
     ChParser.splitIntoOutfile(raw) match {
       case Some(p) => writeOutfile(p)
       case None =>
         val df = spark.sql(rewriteSelect(raw))
-        if (df.columns.contains(PtkCol)) df.drop(PtkCol) else df
+        org.apache.spark.sql.GraftSqlBridge.planSmall(
+          if (df.columns.contains(PtkCol)) df.drop(PtkCol) else df)
     }
 
   /** ClickHouse `SELECT … INTO OUTFILE 'path' [FORMAT f]`: run the inner
@@ -1859,15 +1866,21 @@ class GraftSession(val spark: SparkSession,
       // the same source of truth the scanner uses — the table directory
       // plus each file's parquet footer (row count read from metadata,
       // never data pages). Partition id is the `__ptk=` value, or "all"
-      // for unpartitioned tables, matching CH's naming.
+      // for unpartitioned tables, matching CH's naming. A published part
+      // never changes, so a footer is read once per (path, length,
+      // mtime); this walk's files become the whole memo.
       val hconf = spark.sessionState.newHadoopConf()
-      def footerRows(p: java.nio.file.Path): Long =
-        scala.util.Try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toUri), hconf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.getOrElse(-1L)
+      val memo = GraftSession.partRows
+      val live = scala.collection.mutable.HashMap.empty[String, GraftSession.PartRows]
+      def footerRows(p: java.nio.file.Path, bytes: Long): Long = {
+        val key = p.toString
+        val mtime = java.nio.file.Files.getLastModifiedTime(p).toMillis
+        val known = memo.get(key).filter(m => m.bytes == bytes && m.mtime == mtime)
+        known.orElse(scala.util.Try(parquetRowCount(p, hconf)).toOption
+            .map(GraftSession.PartRows(bytes, mtime, _)))
+          .map { m => live(key) = m; m.rows }
+          .getOrElse(-1L)
+      }
       def partsOf(db: String, table: String, root: java.nio.file.Path,
                   detached: Boolean): Seq[Row] = {
         if (!java.nio.file.Files.isDirectory(root)) return Nil
@@ -1882,12 +1895,10 @@ class GraftSession(val spark: SparkSession,
             .find(_.startsWith(s"$PtkCol="))
             .map(s => unescapePartValue(s.stripPrefix(s"$PtkCol=")))
             .getOrElse("all")
-          if (detached)
-            Row(db, table, part, p.getFileName.toString,
-              java.nio.file.Files.size(p))
-          else
-            Row(db, table, part, p.getFileName.toString, footerRows(p),
-              java.nio.file.Files.size(p), 1)
+          val bytes = java.nio.file.Files.size(p)
+          if (detached) Row(db, table, part, p.getFileName.toString, bytes)
+          else Row(db, table, part, p.getFileName.toString,
+            footerRows(p, bytes), bytes, 1)
         }.toVector
         finally walk.close()
       }
@@ -1900,6 +1911,7 @@ class GraftSession(val spark: SparkSession,
           // live parts only: everything under _graft_detached is hidden
           partsOf(db, t, loc, detached = false)
         }
+        GraftSession.partRows = live.toMap
         spark.createDataFrame(rows.asJava, StructType(Seq(
             StructField("database", StringType), StructField("table", StringType),
             StructField("partition", StringType), StructField("name", StringType),
@@ -2561,7 +2573,7 @@ class GraftSession(val spark: SparkSession,
       val staging = loc.resolve(s"_graft_stage-$tag")
       val intentTmp = loc.resolve("_graft_intent.tmp")
       java.nio.file.Files.write(intentTmp,
-        (tag +: retired.map(parquetRowCount).sum.toString +:
+        (tag +: retired.map(parquetRowCount(_)).sum.toString +:
           retired.map(p => loc.relativize(p).toString)).asJava)
       java.nio.file.Files.move(intentTmp, intent,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -3182,7 +3194,7 @@ class GraftSession(val spark: SparkSession,
     val staging = loc.resolve(s"_graft_stage-$tag")
     val staged = stagedDataFiles(staging)
     val moved = taggedFiles(originals.map(_.getParent).distinct, tag)
-    if ((staged ++ moved).map(parquetRowCount).sum >= expected) {
+    if ((staged ++ moved).map(parquetRowCount(_)).sum >= expected) {
       staged.foreach(publishStaged(loc, staging, tag, _))
       originals.foreach(p => java.nio.file.Files.deleteIfExists(p))
     } else {
@@ -3249,7 +3261,7 @@ class GraftSession(val spark: SparkSession,
     * failure (disk full, interrupted job) without killing the process.
     * Sites: `write` and `retire` (compaction and mutation rewrites),
     * `publish` (a direct part write, after each part is renamed into
-    * view).
+    * view), `append` (a job-path append, after its write job returns).
     */
   private def failpoint(site: String): Unit =
     if (spark.conf.getOption("graft.optimize.failpoint").contains(site))
@@ -3258,12 +3270,13 @@ class GraftSession(val spark: SparkSession,
   /** Row count of one parquet file from its footer — metadata only, no
     * data read; the OPTIMIZE intent's commit witness.
     */
-  private def parquetRowCount(p: java.nio.file.Path): Long = {
+  private def parquetRowCount(p: java.nio.file.Path,
+      hconf: org.apache.hadoop.conf.Configuration =
+        spark.sessionState.newHadoopConf()): Long = {
     import scala.jdk.CollectionConverters._
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri),
-        spark.sessionState.newHadoopConf()))
+        new org.apache.hadoop.fs.Path(p.toUri), hconf))
     try r.getRowGroups.asScala.map(_.getRowCount).sum finally r.close()
   }
 
@@ -4501,7 +4514,7 @@ class GraftSession(val spark: SparkSession,
         recipe match {
           case Some(r) =>
             val rows = org.apache.spark.sql.GraftSqlBridge.collectInternal(
-              castTo(result, r.dataSchema))
+              org.apache.spark.sql.GraftSqlBridge.planSmall(castTo(result, r.dataSchema)))
             if (!directAppend(rdb, mvName, rows, r.dataSchema, depth + 1))
               appendToTable(Some(rdb), mvName, org.apache.spark.sql.GraftSqlBridge
                 .internalLocalDf(spark, r.dataSchema, rows), srcIsRaw = false, depth + 1)
@@ -4687,7 +4700,11 @@ class GraftSession(val spark: SparkSession,
       // a per-table CAS lock for exactly this
       // (crates/meta/src/store/parts.rs:174-235)
       underWriteLock(rdbName, name) {
-        block2.write.mode("append").insertInto(fullName(db, name).replace("`", ""))
+        val rollback = appendRollback(rdbName, name)
+        try {
+          block2.write.mode("append").insertInto(fullName(db, name).replace("`", ""))
+          failpoint("append")
+        } catch { case t: Throwable => rollback(); throw t }
       }
     }
     // insert-triggered materialized views see the TYPED block (CH runs
@@ -4699,6 +4716,47 @@ class GraftSession(val spark: SparkSession,
     if (hasMvs)
       try propagateToMvs(rdbName, name, block, mvDepth, folded)
       finally if (mustPin) releaseCheckpoint(block)
+  }
+
+  /** Snapshot what a job-path append can change in a table — its visible
+    * part files, partition directories and catalog partitions — and
+    * return the undo that removes whatever appeared since. The committer
+    * (algorithm v2) moves each task's files into the table as the task
+    * commits, so a job that fails after some tasks committed would
+    * otherwise leave part of its rows behind. Called under the table's
+    * write lock, so nothing else publishes into the table meanwhile; a
+    * concurrent direct writer's hidden files (and the directories they
+    * sit in) are left alone.
+    */
+  private def appendRollback(rdb: String, name: String): () => Unit = {
+    import scala.jdk.CollectionConverters._
+    val cat = spark.sessionState.catalog
+    val ident = org.apache.spark.sql.catalyst.TableIdentifier(name, Some(rdb))
+    val loc = tableLocation(rdb, name)
+    val partitioned = cat.getTableMetadata(ident).partitionColumnNames.nonEmpty
+    def visible(): Set[java.nio.file.Path] =
+      if (!java.nio.file.Files.isDirectory(loc)) Set.empty
+      else {
+        val walk = java.nio.file.Files.walk(loc)
+        try walk.iterator.asScala.filter(p =>
+          p != loc && !isHiddenPath(loc.relativize(p))).toSet
+        finally walk.close()
+      }
+    def specs() = if (partitioned) cat.listPartitions(ident).map(_.spec).toSet
+      else Set.empty[Map[String, String]]
+    val (before, specsBefore) = (visible(), specs())
+    () => {
+      val fs = new org.apache.hadoop.fs.Path(loc.toUri)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      // files before their directories (deepest paths first);
+      // non-recursive, so a directory that still holds anything stays
+      (visible() -- before).toSeq.sortBy(-_.getNameCount).foreach(p =>
+        scala.util.Try(fs.delete(new org.apache.hadoop.fs.Path(p.toUri), false)))
+      val added = (specs() -- specsBefore).toSeq
+      if (added.nonEmpty) cat.dropPartitions(ident, added,
+        ignoreIfNotExists = true, purge = false, retainData = true)
+      cat.refreshTable(ident)
+    }
   }
 
   /** True when `df`'s plan can be re-executed for MV propagation in place
@@ -5244,6 +5302,12 @@ object GraftSession {
       .matcher(body)
     if (m.matches()) Some(m.group(1)) else None
   }
+
+  /** Footer row counts of the live part files `system.parts` last saw,
+    * by path; an entry holds while the file's length and mtime match.
+    * Each walk replaces the whole map, so it holds only live files. */
+  private[exec] final case class PartRows(bytes: Long, mtime: Long, rows: Long)
+  @volatile private[exec] var partRows = Map.empty[String, PartRows]
 
   /** Restore fast-path registries (r20, guide §1.2 fixed costs): a warm
     * JVM constructs a GraftSession per query entry, and the restore scan

@@ -917,12 +917,17 @@ object LlmQueries {
     */
   private[graft] def substringSpanSql(spark: Boolean, hint: String = "",
                                       capDocs: Int = 50,
-                                      src: String = "documents",
-                                      wRef: Option[String] = None): String = {
+                                      src: String = "documents"): String = {
     val w =
       if (spark)
         s"""w AS (
-           |  ${substringWSelect(hint, src).replace("\n", "\n  ")}
+           |  SELECT doc_id, wnd.off AS off, wnd.h AS h
+           |  FROM (SELECT $hint doc_id, text FROM $src
+           |        WHERE length(text) >= 40) d
+           |  LATERAL VIEW explode(transform(
+           |    sequence(0, CAST(floor((length(text) - 40) / 10) AS INT)),
+           |    i -> named_struct('off', i * 10,
+           |                      'h', md5(substr(text, 1 + i * 10, 40))))) t AS wnd
            |)""".stripMargin
       else
         s"""w AS (
@@ -932,25 +937,16 @@ object LlmQueries {
            |      unnest(range(0, CAST(floor((length(text) - 40) / 10) AS BIGINT) + 1)) AS i
            |    FROM $src WHERE length(text) >= 40) d
            |)""".stripMargin
-    // The fingerprint relation is consumed FOUR times (eligible, capped,
-    // and both sides of the pair self-join); Spark inlines CTEs, so the
-    // inline form re-evaluates the window hashing per consumer. The spark
-    // entry passes `wRef` — a persisted temp view of the same SELECT — so
-    // the per-doc hashing runs once (guide §8: decide on a lightweight
-    // fingerprint proxy, never re-derive it). The oracle arm keeps the
-    // plain CTE: DuckDB materializes multi-referenced CTEs itself.
-    val wt = wRef.getOrElse("w")
-    val withHead = if (wRef.isDefined) "WITH " else s"WITH $w, "
-    s"""${withHead}eligible AS (
-       |  SELECT h FROM $wt GROUP BY h HAVING count(DISTINCT doc_id) <= $capDocs
+    s"""WITH $w, eligible AS (
+       |  SELECT h FROM w GROUP BY h HAVING count(DISTINCT doc_id) <= $capDocs
        |), capped AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n FROM (
-       |    SELECT h FROM $wt GROUP BY h HAVING count(DISTINCT doc_id) > $capDocs) c
+       |    SELECT h FROM w GROUP BY h HAVING count(DISTINCT doc_id) > $capDocs) c
        |), m AS (
        |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
        |    b.off - a.off AS diag, a.off AS o1
-       |  FROM $wt a JOIN eligible g ON a.h = g.h
-       |           JOIN $wt b ON a.h = b.h AND a.doc_id < b.doc_id
+       |  FROM w a JOIN eligible g ON a.h = g.h
+       |           JOIN w b ON a.h = b.h AND a.doc_id < b.doc_id
        |), runs AS (
        |  SELECT d1, d2, diag,
        |    o1 - 10 * row_number() OVER (
@@ -970,18 +966,6 @@ object LlmQueries {
        |  CAST(0 AS BIGINT), n FROM capped
        |ORDER BY d1, d2""".stripMargin
   }
-
-  /** The l25 fixed-window fingerprint pass (spark arm) as a standalone
-    * SELECT, so the entry can persist it once for the four consumers. */
-  private[graft] def substringWSelect(hint: String,
-                                      src: String = "documents"): String =
-    s"""SELECT doc_id, wnd.off AS off, wnd.h AS h
-       |FROM (SELECT $hint doc_id, text FROM $src
-       |      WHERE length(text) >= 40) d
-       |LATERAL VIEW explode(transform(
-       |  sequence(0, CAST(floor((length(text) - 40) / 10) AS INT)),
-       |  i -> named_struct('off', i * 10,
-       |                    'h', md5(substr(text, 1 + i * 10, 40))))) t AS wnd""".stripMargin
 
   /** l25b: substring-span dedup fed by POSITIONAL WINNOWING — the
     * exact-at-any-displacement production path the l25 Scaladoc names.
@@ -1014,14 +998,16 @@ object LlmQueries {
   private[graft] def winnowSpanSql(spark: Boolean, hint: String = "",
                                    capDocs: Int = 50,
                                    k: Int = 12, wWin: Int = 4,
-                                   src: String = "documents",
-                                   wRef: Option[String] = None): String = {
+                                   src: String = "documents"): String = {
     val slack = 3 * wWin
     val minLen = k + wWin - 1
     val w =
       if (spark)
         s"""w AS (
-           |  ${winnowWSelect(hint, k, wWin, src).replace("\n", "\n  ")}
+           |  SELECT doc_id, wnd.pos AS off, wnd.fp AS h
+           |  FROM (SELECT $hint doc_id, text FROM $src
+           |        WHERE length(text) >= $minLen) d
+           |  LATERAL VIEW explode(winnow_spans(text, $k, $wWin)) t AS wnd
            |)""".stripMargin
       else {
         // The oracle states the same selection relationally — and
@@ -1066,21 +1052,16 @@ object LlmQueries {
            |        <= least(off, maxpos - ${wWin - 1}, off + rp - ${wWin - 1})
            |)""".stripMargin
       }
-    // Same four-consumer persist contract as substringSpanSql: the spark
-    // entry persists the (costlier — per-position k-gram hashing) winnow
-    // selection once behind `wRef`; the oracle arm keeps the plain CTE.
-    val wt = wRef.getOrElse("w")
-    val withHead = if (wRef.isDefined) "WITH " else s"WITH $w, "
-    s"""${withHead}eligible AS (
-       |  SELECT h FROM $wt GROUP BY h HAVING count(DISTINCT doc_id) <= $capDocs
+    s"""WITH $w, eligible AS (
+       |  SELECT h FROM w GROUP BY h HAVING count(DISTINCT doc_id) <= $capDocs
        |), capped AS (
        |  SELECT CAST(count(*) AS BIGINT) AS n FROM (
-       |    SELECT h FROM $wt GROUP BY h HAVING count(DISTINCT doc_id) > $capDocs) c
+       |    SELECT h FROM w GROUP BY h HAVING count(DISTINCT doc_id) > $capDocs) c
        |), m AS (
        |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
        |    b.off - a.off AS diag, a.off AS o1
-       |  FROM $wt a JOIN eligible g ON a.h = g.h
-       |           JOIN $wt b ON a.h = b.h AND a.doc_id < b.doc_id
+       |  FROM w a JOIN eligible g ON a.h = g.h
+       |           JOIN w b ON a.h = b.h AND a.doc_id < b.doc_id
        |), runs AS (
        |  SELECT d1, d2, diag, o1,
        |    sum(CASE WHEN prev IS NULL OR o1 - prev > $slack THEN 1 ELSE 0 END)
@@ -1103,15 +1084,6 @@ object LlmQueries {
        |  CAST(0 AS BIGINT), n FROM capped
        |ORDER BY d1, d2""".stripMargin
   }
-
-  /** The l25b positional-winnowing fingerprint pass (spark arm) as a
-    * standalone SELECT, so the entry can persist it once. */
-  private[graft] def winnowWSelect(hint: String, k: Int = 12, wWin: Int = 4,
-                                   src: String = "documents"): String =
-    s"""SELECT doc_id, wnd.pos AS off, wnd.fp AS h
-       |FROM (SELECT $hint doc_id, text FROM $src
-       |      WHERE length(text) >= ${k + wWin - 1}) d
-       |LATERAL VIEW explode(winnow_spans(text, $k, $wWin)) t AS wnd""".stripMargin
 
   /** l12b's OFFLINE index build: train the shared Lloyd's template on a
     * deterministic 1-in-4 sample (`vec_id % 4 = 0` — no RNG, same rows in
@@ -2453,15 +2425,10 @@ object LlmQueries {
       val df0 = s.sql(sqlText)
       val df = if (singleFile) df0.coalesce(1)
                else df0.repartition(8, org.apache.spark.sql.functions.col("vec_id"))
-      // pin the ON-DISK layout: at test SF the build's upstream stage is
-      // one task, and AQE's local shuffle read would collapse the 8-way
-      // repartition back to one file. The build is a one-off write —
-      // serving plans keep AQE.
-      val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-      if (!singleFile) s.conf.set("spark.sql.adaptive.enabled", "false")
-      try df.write.mode("overwrite").parquet(tmp.toString)
-      finally if (!singleFile)
-        s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      // an explicit-width repartition writes its 8 files under AQE too:
+      // AQE coalesces and locally reads only exchanges of its own choice
+      // (PqStoreLayoutSpec pins the layout)
+      df.write.mode("overwrite").parquet(tmp.toString)
       try java.nio.file.Files.move(tmp, store,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
@@ -4413,10 +4380,11 @@ object LlmQueries {
     // the (-1, -1) sentinel (see substringSpanSql for the 100 TB shape).
     "l25_substring_span_dedup" -> { (s, dir) =>
       Tables.registerAll(s, dir)
-      // NOT persisted (unlike l25b): the fixed-window md5 pass is cheap
-      // enough that the cache write+read+count loses — measured r20 A/B
-      // (OFF 1.41 s vs ON 1.75 s; l25b's winnow pass wins 3.53→2.94).
-      // The l11-vs-l13 materialize() lesson again.
+      // NOT persisted: the fixed-window md5 pass is cheap enough that the
+      // cache write+read+count loses — measured r20 A/B (OFF 1.41 s vs
+      // ON 1.75 s). l25b's costlier winnow pass lost with a persist too
+      // (cold-JVM record 2.96→3.44 s). The l11-vs-l13 materialize()
+      // lesson again.
       s.sql(substringSpanSql(spark = true, hint = Tables.spreadHint(s)))
     },
 
@@ -4429,13 +4397,7 @@ object LlmQueries {
     "l25b_winnow_span_dedup" -> { (s, dir) =>
       Tables.registerAll(s, dir)
       graft.functions.WinnowFunctions.register(s)
-      // winnow the corpus ONCE (the per-position k-gram hashing is the
-      // entry's dominant cost and the plan consumed it 4x inline —
-      // measured: 4 Generate(winnow_spans) subtrees in the blessed r19
-      // plan); persist the fingerprint proxy, run the tail over it
-      materialize(s.sql(winnowWSelect(hint = Tables.spreadHint(s))))
-        .createOrReplaceTempView("l25b_w")
-      s.sql(winnowSpanSql(spark = true, wRef = Some("l25b_w")))
+      s.sql(winnowSpanSql(spark = true, hint = Tables.spreadHint(s)))
     },
 
     // ---- l14: duplicate-cluster resolution ---------------------------

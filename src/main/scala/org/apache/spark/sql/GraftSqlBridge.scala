@@ -106,4 +106,23 @@ object GraftSqlBridge {
     execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
       qe.executedPlan.executeCollect().toSeq)
   }
+
+  /** `df` re-planned per statement by size: a statement whose input is
+    * provably small plans as a single Spark job (see
+    * [[execution.SmallStatementExecution]]), any other exactly as the
+    * session says. The decision and the planning stay lazy — they run
+    * when the result is first planned or consumed, on the consuming
+    * thread — and the session conf is never written. Consume the
+    * returned Dataset itself: a Dataset derived from it plans afresh.
+    */
+  def planSmall(df: DataFrame): DataFrame = {
+    val from = df.queryExecution
+    val spark = from.sparkSession
+    spark.withActive {
+      val qe = new execution.SmallStatementExecution(spark, from.analyzed, from.tracker)
+      qe.assertAnalyzed()
+      new classic.Dataset[Row](qe,
+        () => catalyst.encoders.RowEncoder.encoderFor(qe.analyzed.schema))
+    }
+  }
 }

@@ -13,7 +13,8 @@ import graft.exec.GraftSession
   * partitioning, CHECKs, engine or MV subscriptions; subscribed views are
   * fed from the same rows; a failed publish leaves nothing behind; DDL
   * invalidates the cached recipe. Also pins the Spark-job path bucketed
-  * tables still take: concurrent flushes land exactly once.
+  * tables and `INSERT ... SELECT` still take: concurrent flushes land
+  * exactly once, and a failed append leaves nothing behind.
   */
 class DirectIngestSpec extends AnyFunSuite {
   import SparkTestSession.spark
@@ -72,28 +73,8 @@ class DirectIngestSpec extends AnyFunSuite {
     (blooms, sorted)
   }
 
-  /** Spark jobs started on this thread while `body` runs (a thread-local
-    * tag keeps other suites' concurrent jobs out of the count).
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val tag = java.util.UUID.randomUUID.toString
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("dis19.tag") == tag))
-          n.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    sc.setLocalProperty("dis19.tag", tag)
-    try body
-    finally {
-      sc.setLocalProperty("dis19.tag", null)
-      org.apache.spark.ListenerDrain.drain(sc)
-      sc.removeSparkListener(l)
-    }
-    n.get
-  }
+  private def jobsDuring(body: => Unit): Int =
+    org.apache.spark.ListenerDrain.jobsDuring(spark.sparkContext)(body)
 
   test("a wire block lands as ONE sorted part file with the declared " +
     "bloom filter, and reads back exactly") {
@@ -314,6 +295,47 @@ class DirectIngestSpec extends AnyFunSuite {
     assert(g2.sql("SELECT k FROM dis19.fp_mv ORDER BY k").collect()
       .map(_.getLong(0)).toSeq === Seq(1L, 2L, 8L))
     g2.sql("DROP TABLE dis19.fp_mv"); g2.sql("DROP TABLE dis19.fp_t")
+  }
+
+  test("a job-path append that fails after its write job leaves the " +
+    "table, its MV target, its files and its partitions exactly as before") {
+    // a session of its own: the failpoint conf must not reach other
+    // suites' inserts on the shared session
+    val s2 = spark.newSession()
+    val g2 = new GraftSession(s2, skipRestore = true)
+    g2.sql("CREATE DATABASE IF NOT EXISTS dis19")
+    g2.sql("DROP TABLE IF EXISTS dis19.fa_mv")
+    g2.sql("DROP TABLE IF EXISTS dis19.fa_t")
+    g2.sql("CREATE TABLE dis19.fa_t(k Int64) " +
+      "ENGINE = MergeTree PARTITION BY k % 3 ORDER BY k")
+    g2.sql("CREATE MATERIALIZED VIEW dis19.fa_mv AS SELECT k FROM dis19.fa_t")
+    g2.sql("INSERT INTO dis19.fa_t VALUES (3), (4)")
+    def state() = (
+      g2.sql("SELECT k FROM dis19.fa_t ORDER BY k").collect().map(_.getLong(0)).toSeq,
+      g2.sql("SELECT k FROM dis19.fa_mv ORDER BY k").collect().map(_.getLong(0)).toSeq,
+      allFiles("fa_t").map(_.toString).toSet, allFiles("fa_mv").map(_.toString).toSet,
+      java.nio.file.Files.list(tableDir("fa_t")).toArray.map(_.toString).toSet,
+      s2.sessionState.catalog.listPartitions(org.apache.spark.sql.catalyst
+        .TableIdentifier("fa_t", Some("dis19"))).map(_.spec).toSet)
+    val before = state()
+    assert(before._1 === Seq(3L, 4L) && before._2 === Seq(3L, 4L))
+    // INSERT ... SELECT takes the write job; its rows reach the two
+    // existing partitions and a new one before the failpoint fires
+    s2.conf.set("graft.optimize.failpoint", "append")
+    try {
+      val e = intercept[Exception] {
+        g2.sql("INSERT INTO dis19.fa_t SELECT number + 5 FROM numbers(3)")
+      }
+      assert(e.getMessage.contains("append"))
+    } finally s2.conf.unset("graft.optimize.failpoint")
+    assert(state() === before)
+    // the table still takes writes afterwards, new partition included
+    g2.sql("INSERT INTO dis19.fa_t SELECT number + 5 FROM numbers(3)")
+    assert(g2.sql("SELECT k FROM dis19.fa_mv ORDER BY k").collect()
+      .map(_.getLong(0)).toSeq === Seq(3L, 4L, 5L, 6L, 7L))
+    assert(g2.sql("SELECT count() FROM dis19.fa_t WHERE k % 3 = 2")
+      .collect().head.get(0).toString === "1")
+    g2.sql("DROP TABLE dis19.fa_mv"); g2.sql("DROP TABLE dis19.fa_t")
   }
 
   test("a composite multi-character ORDER BY sorts direct and " +
