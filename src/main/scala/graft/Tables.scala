@@ -53,26 +53,23 @@ object Tables {
     }
   }
 
-  // One registration per (session, dir): re-running the same query must not
-  // re-read ten parquet footers (VERDICT r1 defect #7).
-  private val registeredDir =
-    new java.util.concurrent.ConcurrentHashMap[Integer, String]()
-  // Layout probe result per session (computed once at registerAll): true
-  // when the documents scan cannot parallelize on its own.
-  private val probedClumped =
-    new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Boolean]()
-
-  // Per-session ledger of tables that failed to register and why. A healthy
-  // registerAll leaves the session's entry empty.
-  private val registerErrors =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Map[String, Throwable]]()
+  /** One registration per session: the dir it registered (None after a
+    * partial registration), the layout probe (true when the documents scan
+    * cannot parallelize on its own) and the tables that failed to register
+    * and why. Re-running the same query must not re-read ten parquet
+    * footers (VERDICT r1 defect #7). Held weakly by the session. */
+  private final case class Registration(dir: Option[String], clumped: Boolean,
+                                        errors: Map[String, Throwable])
+  private val registrations =
+    new java.util.WeakHashMap[SparkSession, Registration]()
+  private def registration(spark: SparkSession): Option[Registration] =
+    registrations.synchronized(Option(registrations.get(spark)))
 
   /** Tables that failed to register on this session, with their real causes
     * (empty when everything registered). Lets callers turn a downstream
     * TABLE_OR_VIEW_NOT_FOUND into the actual registration failure. */
   def registrationErrors(spark: SparkSession): Map[String, Throwable] =
-    Option(registerErrors.get(Integer.valueOf(System.identityHashCode(spark))))
-      .getOrElse(Map.empty)
+    registration(spark).fold(Map.empty[String, Throwable])(_.errors)
 
   /** Register every test table as a temp view (for spark.sql-based entries).
     *
@@ -84,8 +81,7 @@ object Tables {
     * registration instead of no-op'ing against a poisoned cache.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    val key = Integer.valueOf(System.identityHashCode(spark))
-    if (registeredDir.get(key) != dir) {
+    if (!registration(spark).exists(_.dir.contains(dir))) {
       val errs = all.flatMap { n =>
         try { apply(spark, dir, n).createOrReplaceTempView(n); None }
         catch { case e: Exception =>
@@ -94,11 +90,9 @@ object Tables {
           Some(n -> (e: Throwable))
         }
       }.toMap
-      probedClumped.put(key,
-        java.lang.Boolean.valueOf(clumped(spark, s"$dir/documents.parquet")))
-      registerErrors.put(key, errs)
-      if (errs.isEmpty) registeredDir.put(key, dir)
-      else registeredDir.remove(key)
+      val reg = Registration(Some(dir).filter(_ => errs.isEmpty),
+        clumped(spark, s"$dir/documents.parquet"), errs)
+      registrations.synchronized(registrations.put(spark, reg)): Unit
     }
   }
 
@@ -146,10 +140,7 @@ object Tables {
     * fixture layouts that path serves.
     */
   def spreadOn(spark: SparkSession): Boolean =
-    confSpread(spark).getOrElse {
-      val key = Integer.valueOf(System.identityHashCode(spark))
-      Option(probedClumped.get(key)).forall(_.booleanValue)
-    }
+    confSpread(spark).getOrElse(registration(spark).forall(_.clumped))
 
   private def confSpread(spark: SparkSession): Option[Boolean] =
     spark.conf.getOption("graft.spread")
@@ -191,10 +182,7 @@ object Tables {
     */
   def maybeSpread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val spread = confSpread(spark).orElse {
-      val key = Integer.valueOf(System.identityHashCode(spark))
-      Option(probedClumped.get(key)).map(_.booleanValue)
-    }.getOrElse {
+    val spread = confSpread(spark).orElse(registration(spark).map(_.clumped)).getOrElse {
       df.rdd.getNumPartitions < spark.sparkContext.defaultParallelism / 2
     }
     // explicit core-count partitioning: a bare repartition() is AQE-

@@ -352,8 +352,10 @@ object ClickHouseFunctions {
       case "MINUTE" => 60000000L
       case "SECOND" => 1000000L
     }
-    private def months(k: Int): Expression =
-      MakeYMInterval(Literal(0), Multiply(Cast(n, IntegerType), Literal(k)))
+    // Spark's add_months/date_add and make_ym_interval take an INT count:
+    // the CH count (any integer width) is cast first
+    private def nTimes(k: Int): Expression = Multiply(Cast(n, IntegerType), Literal(k))
+    private def months(k: Int): Expression = MakeYMInterval(Literal(0), nTimes(k))
     private def tsAdd(ts: Expression): Expression = unit match {
       // calendar month-add on a timestamp keeps the time of day (CH
       // addMonths(DateTime) contract) — ts + YM interval
@@ -369,11 +371,11 @@ object ClickHouseFunctions {
     }
     override lazy val replacement: Expression = child.dataType match {
       case DateType => unit match {
-        case "YEAR" => AddMonths(child, Multiply(n, Literal(12)))
-        case "QUARTER" => AddMonths(child, Multiply(n, Literal(3)))
-        case "MONTH" => AddMonths(child, n)
-        case "WEEK" => DateAdd(child, Multiply(n, Literal(7)))
-        case "DAY" => DateAdd(child, n)
+        case "YEAR" => AddMonths(child, nTimes(12))
+        case "QUARTER" => AddMonths(child, nTimes(3))
+        case "MONTH" => AddMonths(child, nTimes(1))
+        case "WEEK" => DateAdd(child, nTimes(7))
+        case "DAY" => DateAdd(child, nTimes(1))
         case _ => tsAdd(Cast(child, TimestampType, timeZoneId))
       }
       case _ => tsAdd(Cast(child, TimestampType, timeZoneId))

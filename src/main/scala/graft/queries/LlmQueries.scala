@@ -2397,7 +2397,8 @@ object LlmQueries {
        |SELECT vec_id, round(adc_sim, 6) AS adc_sim, round(sim, 6) AS sim
        |FROM rerank ORDER BY sim DESC, vec_id LIMIT 5""".stripMargin
 
-  /** The persisted PQ index for l26b, keyed by corpus path (the
+  /** The persisted PQ index for l26b, keyed by a hash of (corpus path,
+    * SQL text, layout) so a changed build never reads an older store (the
     * ivfCentroids discipline: deterministic build → reusable store;
     * temp-dir write + atomic rename so a crashed half-write can never be
     * served). TWO tables, because the codes ARE the index: the 16-row
@@ -2412,14 +2413,15 @@ object LlmQueries {
     * parquet store is still one map-side scan (PlanAuditSpec pins the
     * serving exchange counts, and PqStoreLayoutSpec pins the layout).
     */
-  private def pqIndexStore(s: SparkSession, dir: String, what: String,
-                           sqlText: String,
-                           singleFile: Boolean = false): DataFrame = {
+  private[graft] def pqIndexStore(s: SparkSession, dir: String, what: String,
+                                  sqlText: String,
+                                  singleFile: Boolean = false): DataFrame = {
     val key = java.util.UUID.nameUUIDFromBytes(
-      java.nio.file.Paths.get(dir).toAbsolutePath.toString
+      Seq(java.nio.file.Paths.get(dir).toAbsolutePath.toString, sqlText,
+        singleFile.toString).mkString("\u0000")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
     val store = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft-pq-$what-v3-$key")
+      sys.props("java.io.tmpdir"), s"graft-pq-$what-$key")
     if (!java.nio.file.Files.exists(store)) {
       val tmp = java.nio.file.Files.createTempDirectory(s"graft-pq-$what")
       val df0 = s.sql(sqlText)

@@ -56,8 +56,10 @@ final class ChHttpServer(spark: SparkSession, port: Int = 0) {
   /** `?session_id=` sessions: each gets its OWN SparkSession (so USE —
     * which sets the Spark session's current database — and temp views
     * are isolated per session, CH's HTTP-session contract), created
-    * lazily and evicted LRU past a small cap. Sessionless requests share
-    * the default GraftSession.
+    * lazily and evicted LRU past a small cap. Every session shares the
+    * catalog's engine state (views, dictionaries, restore errors), which
+    * the default GraftSession restored at server start. Sessionless
+    * requests share the default GraftSession.
     */
   private val MaxSessions = 16
   private val sessions =
@@ -69,11 +71,7 @@ final class ChHttpServer(spark: SparkSession, port: Int = 0) {
   private def sessionFor(id: Option[String]): GraftSession =
     id.fold(session) { sid =>
       sessions.synchronized {
-        sessions.computeIfAbsent(sid, { _ =>
-          val s = new GraftSession(spark.newSession(), skipRestore = true)
-          s.adoptRestoreErrors(session.restoreErrors)
-          s
-        })
+        sessions.computeIfAbsent(sid, _ => new GraftSession(spark.newSession()))
       }
     }
 

@@ -26,12 +26,10 @@ import graft.exec.GraftSession
   * multiple packets instead of one giant block.
   */
 final class ChWireServer(spark: SparkSession, port: Int = 0) {
-  // one catalog replay per SERVER, not per accept: the per-connection
-  // sessions pass skipRestore=true (re-scanning the meta root on every
-  // connect cost 2-3 s of metastore round-trips — PERF.md r19), so the
-  // restored-warehouse guarantee moves here and each connection adopts
-  // this boot's restore_errors
-  private val hostSession = new GraftSession(spark)
+  // the catalog's engine state is restored here, once, at server start:
+  // each connection's handle (a newSession() of `spark`) shares it, so a
+  // connect replays nothing and sees every view and dictionary
+  new GraftSession(spark): Unit
   private val socket = new ServerSocket(port)
   private val running = new AtomicBoolean(true)
 
@@ -70,8 +68,7 @@ final class ChWireServer(spark: SparkSession, port: Int = 0) {
     // private current-database and temp views): `USE db` is per-connection
     // state like the reference's ConnCtx, and must not leak into other
     // connections or the host session
-    val session = new GraftSession(spark.newSession(), skipRestore = true)
-    session.adoptRestoreErrors(hostSession.restoreErrors)
+    val session = new GraftSession(spark.newSession())
     try {
       var open = true
       while (open && running.get) {

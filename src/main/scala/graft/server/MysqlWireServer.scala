@@ -26,9 +26,9 @@ import graft.exec.GraftSession
 final class MysqlWireServer(spark: SparkSession, port: Int = 0) {
   import MysqlProto._
 
-  // one catalog replay per SERVER: per-connection sessions skip restore
-  // and adopt this boot's restore_errors
-  private val hostSession = new GraftSession(spark)
+  // the catalog's engine state is restored here, once, at server start;
+  // connections share it (see ChWireServer)
+  new GraftSession(spark): Unit
   private val socket = new ServerSocket(port)
   private val running = new AtomicBoolean(true)
 
@@ -62,8 +62,7 @@ final class MysqlWireServer(spark: SparkSession, port: Int = 0) {
     var compOut: CompressedOut = null
     // isolated per-connection session: USE/current-database must not leak
     // across connections or into the host session
-    val session = new GraftSession(spark.newSession(), skipRestore = true)
-    session.adoptRestoreErrors(hostSession.restoreErrors)
+    val session = new GraftSession(spark.newSession())
     // per-connection prepared statements: id -> (sql split at ?, bound
     // types — clients send types only on the FIRST execute and expect the
     // server to remember them)

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** Round-17 fixes for the ADVICE r16 findings:
@@ -24,10 +26,6 @@ class AdviceFixesR16Spec extends AnyFunSuite {
     Tables.registerAll(s, "/root/testdata/sf0.001")
     new GraftSession(s)
   }
-
-  private def forgetTable(table: String): Unit =
-    g.spark.sharedState.externalCatalog.dropTable(
-      "default", table, ignoreIfNotExists = true, purge = false)
 
   private def routed(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.toString.contains("__proj_")
@@ -98,6 +96,7 @@ class AdviceFixesR16Spec extends AnyFunSuite {
 
   test("RENAME TABLE moves the storage to the new default path so restart " +
     "replay finds the data") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS afx_rb; DROP TABLE IF EXISTS afx_ra")
     g.sql("CREATE TABLE afx_ra(k Int64, v Float64)")
     g.sql("INSERT INTO afx_ra VALUES (1, 1.5), (2, 2.5)")
@@ -109,9 +108,8 @@ class AdviceFixesR16Spec extends AnyFunSuite {
       .location.getPath
     assert(loc.endsWith("/afx_rb"), loc)
     assert(g.sql("SELECT count(*) AS n FROM afx_rb").head().getLong(0) === 2L)
-    // simulated restart: catalog forgets, scripts + files replay
-    forgetTable("afx_rb")
-    val g2 = new GraftSession(g.spark)
+    // restart: a fresh catalog replays the scripts over the files
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     assert(!g2.restoreErrors.exists(_._2.startsWith("afx_")),
       s"restore must be clean, got: ${g2.restoreErrors}")
     assert(g2.sql("SELECT count(*) AS n FROM afx_rb").head().getLong(0) === 2L,
@@ -121,6 +119,7 @@ class AdviceFixesR16Spec extends AnyFunSuite {
 
   test("RENAME TABLE on a PARTITIONED table: partition entries follow the " +
     "moved storage (RECOVER) and survive a restart with pruning intact") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS afx_pb; DROP TABLE IF EXISTS afx_pa")
     g.sql("CREATE TABLE afx_pa(k Int64, d Date) PARTITION BY toYear(d)")
     g.sql("INSERT INTO afx_pa VALUES (1, '2020-02-02'), (2, '2021-03-03'), " +
@@ -132,8 +131,7 @@ class AdviceFixesR16Spec extends AnyFunSuite {
     val pruned = g.sql("SELECT count(*) AS n FROM afx_pb WHERE toYear(d) = 2021")
     assert(pruned.head().getLong(0) === 2L)
     // restart: replay + RECOVER PARTITIONS must find the moved dirs
-    forgetTable("afx_pb")
-    val g2 = new GraftSession(g.spark)
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     assert(!g2.restoreErrors.exists(_._2.startsWith("afx_p")),
       s"restore must be clean, got: ${g2.restoreErrors}")
     assert(g2.sql("SELECT count(*) AS n FROM afx_pb").head().getLong(0) === 3L)
@@ -144,6 +142,7 @@ class AdviceFixesR16Spec extends AnyFunSuite {
 
   test("RENAME TABLE carries projections across a restart: hidden table, " +
     "partials, replay script and routing all follow the new name") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS afx_pq; DROP TABLE IF EXISTS afx_pp")
     g.sql("CREATE TABLE afx_pp(k Int64, cat String, v Int64)")
     g.sql("ALTER TABLE afx_pp ADD PROJECTION by_cat " +
@@ -162,9 +161,8 @@ class AdviceFixesR16Spec extends AnyFunSuite {
       (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq ===
       Seq(("a", 40L, 2L), ("b", 20L, 1L)))
 
-    // simulated restart
-    forgetTable("__proj_afx_pq_by_cat"); forgetTable("afx_pq")
-    val g2 = new GraftSession(g.spark)
+    // restart
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     assert(!g2.restoreErrors.exists(_._2.contains("afx_")),
       s"restore must be clean, got: ${g2.restoreErrors}")
     val df2 = g2.sql(q)

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 import graft.server.{ChProto, ChWireServer}
 
@@ -13,14 +15,6 @@ class AdviceFixesR18Spec extends AnyFunSuite {
   import SparkTestSession.spark
 
   private lazy val g = new GraftSession(spark)
-
-  /** The JVM-wide Nested registry (private[exec]; bytecode-public). */
-  private def nestedRegistry = {
-    val m = graft.exec.GraftSession.getClass.getMethod("nestedRegistry")
-    m.invoke(graft.exec.GraftSession).asInstanceOf[
-      java.util.concurrent.ConcurrentHashMap[(String, String),
-        Map[String, Seq[String]]]]
-  }
 
   test("a table alias matching some table's Nested family name is NOT " +
     "rewritten into the literal member column") {
@@ -53,15 +47,20 @@ class AdviceFixesR18Spec extends AnyFunSuite {
 
   test("Nested registry reseeds from the graft.nested prop when a " +
     "persistent catalog skips restore replay") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("CREATE DATABASE IF NOT EXISTS adv18")
     g.sql("DROP TABLE IF EXISTS adv18.a18_seed")
     g.sql("CREATE TABLE adv18.a18_seed(id Int64, n Nested(a String))")
     g.sql("INSERT INTO adv18.a18_seed VALUES (1, ['p','q'])")
-    // simulate a JVM restart over a persistent metastore: the catalog
-    // still KNOWS the table (so restore replay is skipped — CREATE never
-    // runs), but the JVM-wide registry starts empty
-    nestedRegistry.remove(("adv18", "a18_seed"))
-    val g2 = new GraftSession(spark)
+    // simulate a JVM restart over a persistent metastore: the restarted
+    // catalog still KNOWS the table (so restore replay is skipped —
+    // CREATE never runs), but its engine state starts empty
+    val s2 = GraftRestart.restart(g.spark)
+    val (old, ext) = (g.spark.sharedState.externalCatalog,
+      s2.sharedState.externalCatalog)
+    ext.createDatabase(old.getDatabase("adv18"), ignoreIfExists = true)
+    ext.createTable(old.getTable("adv18", "a18_seed"), ignoreIfExists = false)
+    val g2 = new GraftSession(s2)
     val r = g2.sql(
       "SELECT n.a AS a FROM adv18.a18_seed WHERE id = 1").collect()
     assert(r(0).getSeq[String](0) === Seq("p", "q"))

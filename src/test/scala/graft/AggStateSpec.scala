@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** AggregateFunction(f, T) + -State/-Merge (VERDICT r16 task #4): the CH
@@ -16,10 +18,6 @@ class AggStateSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
   private lazy val g = new GraftSession(spark)
-
-  private def forgetTable(table: String): Unit =
-    spark.sharedState.externalCatalog.dropTable(
-      "default", table, ignoreIfNotExists = true, purge = false)
 
   private def mkTables(gs: GraftSession): Unit = {
     gs.sql("DROP TABLE IF EXISTS ags_mv; DROP TABLE IF EXISTS ags_t; " +
@@ -97,15 +95,15 @@ class AggStateSpec extends AnyFunSuite {
 
   test("the TO-form view, its subscription, and the state table survive a " +
     "restart; DROP of the view detaches the subscription") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     mkTables(g)
     g.sql("INSERT INTO ags_raw VALUES (1, 1.0, 'a'), (2, 2.0, 'b')")
     val before = mergeRows(g)
     assert(before === directRows(g))
 
-    // simulated restart: catalog forgets the tables, views re-register
-    // from their replay scripts
-    forgetTable("ags_t"); forgetTable("ags_raw")
-    val g2 = new GraftSession(spark)
+    // restart: a fresh catalog replays the tables, and the views
+    // re-register from their replay scripts
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     assert(!g2.restoreErrors.exists(_._2.startsWith("ags_")),
       s"restore must be clean, got: ${g2.restoreErrors}")
     assert(mergeRows(g2) === before, "states lost across restart")

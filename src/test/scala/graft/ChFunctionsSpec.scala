@@ -148,6 +148,18 @@ class ChFunctionsSpec extends AnyFunSuite {
       .collect().map(_.getInt(0)).toSeq === Seq(1, 2, 3))
   }
 
+  test("addDays/addWeeks/addMonths/addYears on a Date take a BIGINT " +
+    "count, as numbers(N) yields") {
+    val r = new graft.exec.GraftSession(spark).sql(
+      "SELECT max(addDays(toDate('2020-01-01'), number % 700)) AS d, " +
+        "max(addWeeks(toDate('2020-01-01'), number)) AS w, " +
+        "max(addMonths(toDate('2021-01-31'), number % 2)) AS m, " +
+        "max(addYears(toDate('2020-02-29'), number % 3)) AS y " +
+        "FROM numbers(1000)").head()
+    assert((0 to 3).map(r.getDate(_).toString) ===
+      Seq("2021-11-30", "2039-02-23", "2021-02-28", "2022-02-28"))
+  }
+
   test("datetime pack #2: CH polymorphism and arithmetic") {
     ready
     // addDays on a Date stays DATE; addHours on a Date widens to

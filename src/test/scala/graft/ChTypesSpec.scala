@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 import graft.types.BqlType
 
@@ -45,6 +47,7 @@ class ChTypesSpec extends AnyFunSuite {
 
   test("Map and Tuple columns flow through INSERT SELECT, element " +
     "access works, schema survives restart") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS ty_rich")
     g.sql("CREATE TABLE ty_rich(k Int64, m Map(String, Int64), " +
       "t Tuple(x Int64, y String), ip IPv4)")
@@ -54,7 +57,7 @@ class ChTypesSpec extends AnyFunSuite {
       "FROM ty_rich").collect()(0)
     assert(r.getLong(0) === 10L && r.getLong(1) === 7L &&
       r.getString(2) === "hi" && r.getString(3) === "10.0.0.1")
-    val g2 = new GraftSession(spark)
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     val desc = g2.sql("DESC TABLE ty_rich").collect()
       .map(x => (x.getString(0), x.getString(1))).toMap
     assert(desc("m") === "Map(String, Int64)")

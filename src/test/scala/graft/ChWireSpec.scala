@@ -5,6 +5,8 @@ import java.net.Socket
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.server.{ChProto, ChWireServer}
 
 /** Drives a real TCP socket through the ClickHouse-native framing:
@@ -346,17 +348,19 @@ class ChWireSpec extends AnyFunSuite {
 
   test("system.restore_errors is queryable over the native wire: a " +
     "client can see what failed to restore at this connection's boot") {
-    // poison a persisted-MV meta script so the CONNECTION's GraftSession
-    // (built fresh per accept) records a restore failure at its boot
+    // poison a persisted-MV meta script in a fresh catalog's warehouse so
+    // the catalog's boot restore (which every connection's handle shares)
+    // records a failure the connection can read
+    val s = GraftRestart.isolated(spark)
     val wh = java.nio.file.Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+      s.conf.get("spark.sql.warehouse.dir")).getPath)
     val meta = wh.resolve("_graft_meta").resolve("default")
       .resolve("wire_poison.sql")
     java.nio.file.Files.createDirectories(meta.getParent)
     java.nio.file.Files.writeString(meta,
       "CREATE MATERIALIZED VIEW wire_poison AS " +
         "SELECT * FROM no_such_wire_table_xyz")
-    val server = new ChWireServer(spark).start()
+    val server = new ChWireServer(s).start()
     val client = new WireTestClient(server.boundPort)
     try {
       val b = client.rows("SELECT database, `table`, kind, error " +

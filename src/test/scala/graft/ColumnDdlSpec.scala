@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** ClickHouse column DDL beyond ADD COLUMN: DROP COLUMN (metadata-now,
@@ -103,6 +105,7 @@ class ColumnDdlSpec extends AnyFunSuite {
 
   test("sorting-key and partition-key columns are protected from all " +
     "three ops, and a restart replays the post-DDL schema") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS cd_guard")
     g.sql("CREATE TABLE cd_guard(k Int64 PRIMARY KEY, v Int64, d Date) " +
       "ENGINE=BaseStorage PARTITION BY toYear(d)")
@@ -112,9 +115,9 @@ class ColumnDdlSpec extends AnyFunSuite {
     intercept[Exception] { g.sql("ALTER TABLE cd_guard MODIFY COLUMN k UInt64") }
     g.sql("ALTER TABLE cd_guard RENAME COLUMN v TO w")
     g.sql("ALTER TABLE cd_guard MODIFY COLUMN w Float64")
-    // a fresh engine session sees the altered schema (replay script was
+    // a restarted catalog sees the altered schema (replay script was
     // re-recorded after each op)
-    val g2 = new GraftSession(spark)
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     val desc = g2.sql("DESC TABLE cd_guard").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(desc.map(_._1) === Seq("k", "w", "d"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** ALTER TABLE ... ADD/DROP CONSTRAINT (r19): CH's constraint lifecycle —
@@ -17,10 +19,6 @@ class ConstraintDdlSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
   private lazy val g = new GraftSession(spark)
-
-  private def forgetTable(table: String): Unit =
-    spark.sharedState.externalCatalog.dropTable(
-      "default", table, ignoreIfNotExists = true, purge = false)
 
   test("ADD CONSTRAINT guards future inserts; DROP stops; duplicate and " +
     "missing names follow the IF [NOT] EXISTS contract") {
@@ -61,30 +59,29 @@ class ConstraintDdlSpec extends AnyFunSuite {
 
   test("user constraints survive normalizing ALTERs and a restart " +
     "(the replay script re-emits CONSTRAINT clauses)") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS cds_r")
     g.sql("CREATE TABLE cds_r(a Int64, CONSTRAINT pos CHECK a > 0)")
     // ADD COLUMN rewrites the normalized replay script — the r19 bug
     // dropped CONSTRAINT clauses here
     g.sql("ALTER TABLE cds_r ADD COLUMN c Int64")
-    forgetTable("cds_r")
-    val g2 = new GraftSession(spark)
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     assert(!g2.restoreErrors.exists(_._2 == "cds_r"),
       s"restore must be clean: ${g2.restoreErrors}")
     intercept[Exception] {
       g2.sql("INSERT INTO cds_r VALUES (-1, 2)")
     }
     g2.sql("INSERT INTO cds_r VALUES (3, 4)")
-    assert(spark.table("cds_r").count() === 1L)
+    assert(g2.spark.table("cds_r").count() === 1L)
     // an ALTER-added constraint survives the same cycle
     g2.sql("ALTER TABLE cds_r ADD CONSTRAINT c_pos CHECK c >= 0")
     g2.sql("ALTER TABLE cds_r ADD COLUMN d Int64")
-    forgetTable("cds_r")
-    val g3 = new GraftSession(spark)
+    val g3 = new GraftSession(GraftRestart.restart(g2.spark))
     intercept[Exception] {
       g3.sql("INSERT INTO cds_r VALUES (5, -1, 0)")
     }
     g3.sql("INSERT INTO cds_r VALUES (5, 1, 0)")
-    assert(spark.table("cds_r").count() === 2L)
+    assert(g3.spark.table("cds_r").count() === 2L)
     g3.sql("DROP TABLE cds_r")
   }
 

@@ -17,8 +17,8 @@ class CrossSessionFreshnessSpec extends AnyFunSuite {
 
   test("a session that has read a table sees rows another session " +
     "direct-writes into it later: plain, partitioned and MV target") {
-    val w = new GraftSession(spark.newSession(), skipRestore = true)
-    val r = new GraftSession(spark.newSession(), skipRestore = true)
+    val w = new GraftSession(spark.newSession())
+    val r = new GraftSession(spark.newSession())
     w.sql("CREATE DATABASE IF NOT EXISTS xfresh")
     w.sql("DROP TABLE IF EXISTS xfresh.mv_tgt")
     w.sql("DROP VIEW IF EXISTS xfresh.mv")

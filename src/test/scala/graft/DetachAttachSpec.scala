@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** `DETACH TABLE` / `ATTACH TABLE` (the catalog forgets, data and the
@@ -16,6 +18,7 @@ class DetachAttachSpec extends AnyFunSuite {
 
   test("DETACH hides the table from the catalog AND from restart " +
     "restore; ATTACH brings it back with its data and partitions") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS da_t")
     g.sql("CREATE TABLE da_t(k Int64, d Date) ENGINE=BaseStorage " +
       "PARTITION BY toYear(d)")
@@ -24,8 +27,8 @@ class DetachAttachSpec extends AnyFunSuite {
     intercept[Exception] { g.sql("SELECT count(*) AS n FROM da_t") }
     // a RESTART must not resurrect a detached table (CH keeps it
     // detached until an explicit ATTACH)
-    val g2 = new GraftSession(spark)
-    assert(!spark.catalog.tableExists("default.da_t"))
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
+    assert(!g2.spark.catalog.tableExists("default.da_t"))
     g2.sql("ATTACH TABLE da_t")
     assert(g2.sql("SELECT CAST(sum(k) AS BIGINT) AS s FROM da_t")
       .collect()(0).getLong(0) === 3L)
@@ -37,6 +40,7 @@ class DetachAttachSpec extends AnyFunSuite {
   }
 
   test("EXCHANGE TABLES swaps names, data, scripts and DESC schemas") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS xc_a")
     g.sql("DROP TABLE IF EXISTS xc_b")
     g.sql("CREATE TABLE xc_a(k Int64)")
@@ -52,7 +56,7 @@ class DetachAttachSpec extends AnyFunSuite {
       Seq("k", "extra"))
     // scripts followed the swap: replay after a restart keeps the
     // exchanged shapes
-    val g2 = new GraftSession(spark)
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     assert(g2.sql("SHOW CREATE TABLE xc_b").collect()(0).getString(0)
       .contains("xc_b"))
     g2.sql("DROP TABLE xc_a")

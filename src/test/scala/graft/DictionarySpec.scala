@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** ClickHouse external dictionaries: CREATE DICTIONARY over a dimension
@@ -16,13 +18,13 @@ class DictionarySpec extends AnyFunSuite {
 
   private lazy val g = new GraftSession(spark)
 
-  private def mkDim(): Unit = {
-    g.sql("DROP DICTIONARY IF EXISTS dx")
-    g.sql("DROP TABLE IF EXISTS dx_dim")
-    g.sql("CREATE TABLE dx_dim(k Int64, nm String, w Int64)")
-    g.sql("INSERT INTO dx_dim VALUES (1, 'one', 10), (2, 'two', 20), " +
+  private def mkDim(on: GraftSession = g): Unit = {
+    on.sql("DROP DICTIONARY IF EXISTS dx")
+    on.sql("DROP TABLE IF EXISTS dx_dim")
+    on.sql("CREATE TABLE dx_dim(k Int64, nm String, w Int64)")
+    on.sql("INSERT INTO dx_dim VALUES (1, 'one', 10), (2, 'two', 20), " +
       "(3, 'three', 30)")
-    g.sql("CREATE DICTIONARY dx(k Int64, nm String DEFAULT 'none', w Int64) " +
+    on.sql("CREATE DICTIONARY dx(k Int64, nm String DEFAULT 'none', w Int64) " +
       "PRIMARY KEY k SOURCE(CLICKHOUSE(TABLE 'dx_dim')) LAYOUT(HASHED()) " +
       "LIFETIME(MIN 0 MAX 300)")
   }
@@ -65,7 +67,8 @@ class DictionarySpec extends AnyFunSuite {
 
   test("lifecycle: duplicate create errors, IF NOT EXISTS tolerated, " +
     "unknown attribute errors, DROP removes, restart replays") {
-    mkDim()
+    val g = new GraftSession(GraftRestart.isolated(spark))
+    mkDim(g)
     intercept[Exception] {
       g.sql("CREATE DICTIONARY dx(k Int64, nm String) PRIMARY KEY k " +
         "SOURCE(CLICKHOUSE(TABLE 'dx_dim'))")
@@ -75,9 +78,9 @@ class DictionarySpec extends AnyFunSuite {
     intercept[Exception] {
       g.sql("SELECT dictGet('dx', 'nope', 1) AS x").collect()
     }
-    // restart: a fresh session reloads the dictionary from its replayed
+    // restart: a fresh catalog reloads the dictionary from its replayed
     // script (source table restores first)
-    val g2 = new GraftSession(spark)
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     assert(g2.sql("SELECT dictGet('dx', 'nm', 2) AS nm").collect()(0)
       .getString(0) === "two")
     g2.sql("DROP DICTIONARY dx")

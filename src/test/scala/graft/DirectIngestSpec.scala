@@ -256,7 +256,7 @@ class DirectIngestSpec extends AnyFunSuite {
     // a session of its own: the failpoint conf must not reach other
     // suites' inserts on the shared session
     val s2 = spark.newSession()
-    val g2 = new GraftSession(s2, skipRestore = true)
+    val g2 = new GraftSession(s2)
     g2.sql("CREATE DATABASE IF NOT EXISTS dis19")
     g2.sql("DROP TABLE IF EXISTS dis19.fp_mv")
     g2.sql("DROP TABLE IF EXISTS dis19.fp_t")
@@ -302,7 +302,7 @@ class DirectIngestSpec extends AnyFunSuite {
     // a session of its own: the failpoint conf must not reach other
     // suites' inserts on the shared session
     val s2 = spark.newSession()
-    val g2 = new GraftSession(s2, skipRestore = true)
+    val g2 = new GraftSession(s2)
     g2.sql("CREATE DATABASE IF NOT EXISTS dis19")
     g2.sql("DROP TABLE IF EXISTS dis19.fa_mv")
     g2.sql("DROP TABLE IF EXISTS dis19.fa_t")

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** End-to-end DDL/INSERT/management round-trips, ported from the
@@ -620,19 +622,18 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("catalog persists across process restarts (sled-store analog, sys.rs:624-642)") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS persist_tab")
     g.sql("CREATE TABLE persist_tab(a UInt64, d Date) " +
       "ENGINE=BaseStorage PARTITION BY toYear(d)")
     g.sql("INSERT INTO persist_tab VALUES (1, '2021-01-05'), (2, '2022-07-01')")
-    // Simulate a restart: the in-memory catalog forgets the table, the
-    // warehouse files survive (external location, purge = false).
-    spark.sharedState.externalCatalog.dropTable(
-      spark.catalog.currentDatabase, "persist_tab",
-      ignoreIfNotExists = false, purge = false)
-    assert(!spark.catalog.tableExists("persist_tab"))
+    // A restart: a fresh in-memory catalog does not know the table, the
+    // warehouse files survive (external location).
+    val s2 = GraftRestart.restart(g.spark)
+    assert(!s2.catalog.tableExists("persist_tab"))
 
-    val g2 = new GraftSession(spark) // fresh session boots -> replay meta
-    assert(spark.catalog.tableExists("persist_tab"))
+    val g2 = new GraftSession(s2) // fresh catalog boots -> replay meta
+    assert(s2.catalog.tableExists("persist_tab"))
     val show = g2.sql("SHOW CREATE TABLE persist_tab").collect()(0).getString(0)
     assert(show.toUpperCase.contains("PARTITION BY"))
     val desc = g2.sql("DESC persist_tab").collect()
@@ -649,14 +650,13 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("partition pruning still fires on a restored table") {
     import org.apache.spark.sql.execution.FileSourceScanExec
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS persist_prune")
     g.sql("CREATE TABLE persist_prune(id Int64, d Date) PARTITION BY toYYYYMM(d)")
     g.sql("INSERT INTO persist_prune VALUES (1, '2021-01-05'), " +
       "(2, '2021-02-20'), (3, '2021-03-09')")
-    spark.sharedState.externalCatalog.dropTable(
-      spark.catalog.currentDatabase, "persist_prune",
-      ignoreIfNotExists = false, purge = false)
-    val g2 = new GraftSession(spark) // restore replays ptk expr + partitions
+    // restore replays ptk expr + partitions
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     def filesRead(sql: String): Int = {
       val scan = g2.sql(sql).queryExecution.executedPlan.collect {
         case s: FileSourceScanExec => s
@@ -672,19 +672,18 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("bucketed tables restore with their layout intact") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS persist_bkt")
     g.sql("CREATE TABLE persist_bkt(k Int64 PRIMARY KEY, v String) " +
       "ENGINE=BaseStorage SETTINGS buckets=4")
     g.sql("INSERT INTO persist_bkt VALUES (1, 'a'), (2, 'b'), (3, 'c')")
-    spark.sharedState.externalCatalog.dropTable(
-      spark.catalog.currentDatabase, "persist_bkt",
-      ignoreIfNotExists = false, purge = false)
-    val g2 = new GraftSession(spark)
-    assert(spark.catalog.tableExists("persist_bkt"))
+    val s2 = GraftRestart.restart(g.spark)
+    val g2 = new GraftSession(s2)
+    assert(s2.catalog.tableExists("persist_bkt"))
     // the CLUSTERED BY layout survived the replay (bucketSpec in catalog)
-    val meta = spark.sessionState.catalog.getTableMetadata(
+    val meta = s2.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier("persist_bkt",
-        Some(spark.catalog.currentDatabase)))
+        Some(s2.catalog.currentDatabase)))
     assert(meta.bucketSpec.exists(b =>
       b.numBuckets == 4 && b.bucketColumnNames == Seq("k")))
     assert(g2.sql("SELECT CAST(sum(k) AS BIGINT) AS s FROM persist_bkt")
@@ -693,6 +692,7 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("DROP TABLE removes data files; TRUNCATE keeps meta, drops data") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS lifecycle_tab")
     g.sql("CREATE TABLE lifecycle_tab(a Int32)")
     g.sql("INSERT INTO lifecycle_tab VALUES (1), (2)")
@@ -708,8 +708,8 @@ class GraftSessionSpec extends AnyFunSuite {
       .collect()(0).getLong(0) === 7L)
     g.sql("DROP TABLE lifecycle_tab")
     // dropped: nothing to restore on a fresh boot
-    val g3 = new GraftSession(spark)
-    assert(!spark.catalog.tableExists("lifecycle_tab"))
+    val g3 = new GraftSession(GraftRestart.restart(g.spark))
+    assert(!g3.spark.catalog.tableExists("lifecycle_tab"))
   }
 
   test("UInt64 full range: 2^64-1 round-trips exactly through Decimal(20,0)") {

@@ -116,33 +116,30 @@ class IndexIngestSpec extends AnyFunSuite {
 
   test("the index MV restores after a restart and its subscription keeps " +
     "firing") {
-    served // builds live + index + quantizer tables
-    val before = spark.table("graft_emb_index").count()
+    // builds live + index + quantizer tables in a catalog of its own
+    val s = org.apache.spark.sql.GraftRestart.isolated(spark)
+    queries.LlmQueries.queries("l35_ann_index_ingest")(s, sf).collect()
+    val before = s.table("graft_emb_index").count()
     assert(before > 0L)
-    // Simulate a fresh JVM: the in-memory catalog forgets every l35
-    // object and the session temp-function registry loses vec_dot.
-    Seq("graft_emb_index", "graft_emb_live",
-        "graft_ivf_centroids", "graft_pq_codebook").foreach { t =>
-      spark.sharedState.externalCatalog.dropTable(
-        "default", t, ignoreIfNotExists = true, purge = false)
-    }
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")): Unit
-    assert(!spark.catalog.tableExists("graft_emb_index"))
+    // A fresh JVM: a new catalog knows no l35 object and its
+    // temp-function registry holds no vec_dot.
+    val spark2 = org.apache.spark.sql.GraftRestart.restart(s)
+    assert(!spark2.catalog.tableExists("graft_emb_index"))
+    Tables.registerAll(spark2, sf)
 
-    val g2 = new exec.GraftSession(spark)
+    val g2 = new exec.GraftSession(spark2)
     assert(!g2.restoreErrors.exists(_._2.startsWith("graft_emb")) &&
            !g2.restoreErrors.exists(_._2.startsWith("graft_ivf")) &&
            !g2.restoreErrors.exists(_._2.startsWith("graft_pq")),
       s"l35 objects failed to restore: ${g2.restoreErrors}")
-    assert(spark.catalog.tableExists("graft_emb_index"), "index MV lost")
-    assert(spark.table("graft_emb_index").count() === before,
+    assert(spark2.catalog.tableExists("graft_emb_index"), "index MV lost")
+    assert(spark2.table("graft_emb_index").count() === before,
       "index contents did not survive the restart")
     // the subscription is live again: post-restart ingest maintains the
     // index (the exact freshness contract the in-session tests pin)
     g2.sql("INSERT INTO graft_emb_live SELECT vec_id + 500000, embedding " +
       "FROM embeddings WHERE vec_id = 42")
-    assert(spark.table("graft_emb_index")
+    assert(spark2.table("graft_emb_index")
         .where("vec_id = 500042").count() === 1L,
       "post-restart ingest did not reach the restored index MV")
   }

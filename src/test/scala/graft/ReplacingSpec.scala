@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** ReplacingMergeTree + `FROM t FINAL` + `OPTIMIZE TABLE t FINAL` — the
@@ -120,9 +122,16 @@ class ReplacingSpec extends AnyFunSuite {
   test("the engine declaration survives a restart: a fresh session still " +
     "honors FINAL (engine + version args round-trip through the meta " +
     "script)") {
-    val sc = g.sql("SHOW CREATE TABLE rep_t").collect()(0).getString(0)
+    // rep_t as the first test left it, in a catalog of its own
+    g.sql("DROP TABLE IF EXISTS rep_t")
+    val gi = new GraftSession(GraftRestart.isolated(spark))
+    gi.sql("CREATE TABLE rep_t(k Int64 PRIMARY KEY, v String, ver Int64) " +
+      "ENGINE=ReplacingMergeTree(ver)")
+    gi.sql("INSERT INTO rep_t VALUES (1, 'old', 1), (2, 'only', 1)")
+    gi.sql("INSERT INTO rep_t VALUES (1, 'new', 2), (1, 'mid', 1)")
+    val sc = gi.sql("SHOW CREATE TABLE rep_t").collect()(0).getString(0)
     assert(sc.contains("ReplacingMergeTree"), sc)
-    val g2 = new GraftSession(spark)
+    val g2 = new GraftSession(GraftRestart.restart(gi.spark))
     val fin = g2.sql("SELECT k, v FROM rep_t FINAL ORDER BY k")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(fin === Seq((1L, "new"), (2L, "only")))

@@ -105,7 +105,7 @@ class SmallStatementSpec extends AnyFunSuite {
     "the plan that runs") {
     g // set up the fixture on the shared session first
     val s2 = spark.newSession()
-    val g2 = new GraftSession(s2, skipRestore = true)
+    val g2 = new GraftSession(s2)
     val bound = bytesOf("small_t") + 1
     assert(bound < bytesOf("big_t"))
     s2.conf.set(Bound, bound.toString)
@@ -138,7 +138,7 @@ class SmallStatementSpec extends AnyFunSuite {
       // one GraftSession per thread (as per wire connection), one
       // SparkSession under both
       def run(sql: String, shape: DataFrame => Boolean): Seq[Boolean] = {
-        val gt = new GraftSession(s2, skipRestore = true)
+        val gt = new GraftSession(s2)
         (1 to rounds).map { _ =>
           barrier.await()
           shape(gt.sql(sql))

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** ClickHouse table TTL: `CREATE TABLE … TTL expr`, `ALTER TABLE t
@@ -67,13 +69,14 @@ class TtlSpec extends AnyFunSuite {
 
   test("TTL survives restart replay (normalized SETTINGS ttl='…' form) " +
     "and partitioned tables expire per-file") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS ttl_r")
     g.sql("CREATE TABLE ttl_r(k Int64, d Date) ENGINE=BaseStorage " +
       "PARTITION BY toYear(d) TTL d + INTERVAL 1 YEAR")
     g.sql("INSERT INTO ttl_r VALUES (1, '2000-03-03'), (2, '2049-04-04')")
     val script = g.sql("SHOW CREATE TABLE ttl_r").collect()(0).getString(0)
     assert(script.toLowerCase.contains("ttl d + interval 1 year"))
-    val g2 = new GraftSession(spark)
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     g2.sql("OPTIMIZE TABLE ttl_r")
     val kept = g2.sql("SELECT k FROM ttl_r").collect().map(_.getLong(0)).toSeq
     assert(kept === Seq(2L))

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftRestart
+
 import graft.exec.GraftSession
 
 /** ClickHouse plain (non-materialized) views: `CREATE [OR REPLACE] VIEW v
@@ -119,12 +121,13 @@ class ViewSpec extends AnyFunSuite {
 
   test("views survive a restart: a new GraftSession on the same " +
     "warehouse replays the view (nested too) from _graft_meta") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS vw_src7")
     g.sql("CREATE TABLE vw_src7(k Int64)")
     g.sql("INSERT INTO vw_src7 VALUES (5), (6)")
     g.sql("CREATE OR REPLACE VIEW vw_p1 AS SELECT k + 1 AS k1 FROM vw_src7")
     g.sql("CREATE OR REPLACE VIEW vw_p2 AS SELECT CAST(sum(k1) AS BIGINT) AS s FROM vw_p1")
-    val g2 = new GraftSession(spark)
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     assert(g2.restoreErrors.filter(e => e._2.startsWith("vw_p")).isEmpty)
     assert(g2.sql("SELECT s FROM vw_p2").collect()(0).getLong(0) === 13L)
     g2.sql("DROP VIEW vw_p2")
@@ -134,13 +137,14 @@ class ViewSpec extends AnyFunSuite {
 
   test("a view whose source vanished surfaces in system.restore_errors " +
     "instead of killing boot") {
+    val g = new GraftSession(GraftRestart.isolated(spark))
     g.sql("DROP TABLE IF EXISTS vw_src8")
     g.sql("CREATE TABLE vw_src8(k Int64)")
     g.sql("CREATE OR REPLACE VIEW vw_orphan AS SELECT k FROM vw_src8")
     // CH allows dropping a table out from under a view; the view then
     // breaks at read and, here, at restart replay
     g.sql("DROP TABLE vw_src8")
-    val g2 = new GraftSession(spark)
+    val g2 = new GraftSession(GraftRestart.restart(g.spark))
     assert(g2.restoreErrors.exists(e => e._2 == "vw_orphan" && e._3 == "view"))
     val n = g2.sql("SELECT count(*) AS n FROM system.restore_errors " +
       "WHERE `table` = 'vw_orphan'").collect()(0).getLong(0)
@@ -167,5 +171,20 @@ class ViewSpec extends AnyFunSuite {
     g.sql("DROP TABLE vw_src9")
     intercept[Exception] { g.sql("SELECT a FROM vw_stale").collect() }
     g.sql("DROP VIEW vw_stale")
+  }
+
+  test("system.tables lists each database's views with engine View, as " +
+    "ClickHouse does, beside its tables") {
+    g.sql("DROP DATABASE IF EXISTS vw_sys")
+    g.sql("CREATE DATABASE vw_sys")
+    g.sql("CREATE TABLE vw_sys.t(k Int64)")
+    g.sql("CREATE VIEW vw_sys.v AS SELECT k FROM vw_sys.t")
+    val rows = g.sql("SELECT name, engine FROM system.tables " +
+      "WHERE database = 'vw_sys' ORDER BY name").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(rows === Seq(("t", "BaseStorage"), ("v", "View")))
+    g.sql("DROP DATABASE vw_sys")
+    assert(g.sql("SELECT name FROM system.tables WHERE database = 'vw_sys'")
+      .collect().isEmpty)
   }
 }
