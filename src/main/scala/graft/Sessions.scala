@@ -45,23 +45,9 @@ object Sessions {
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // Fixed-zone civil-field collapse (year/month/day over timestamps as
-    // pure integer arithmetic) — registered here so EVERY entry point
-    // (bench anchors, verify, servers, tests) plans through it.
-    if (!s.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.CivilFieldRewrite]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.CivilFieldRewrite(s)
-    // Monotone civil-predicate unwrap (toYear(d)=1995 → d range) — must
-    // follow CivilFieldRewrite so it sees the EpochCivilField form.
-    if (!s.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.CivilPredicateUnwrap]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.CivilPredicateUnwrap(s)
-    if (!s.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.ProjectionRoute]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.ProjectionRoute(s)
+    // the engine's optimizer rules, so EVERY entry point (bench anchors,
+    // verify, servers, tests) plans through them
+    graft.plans.GraftRules.install(s)
     s
   }
 }

@@ -49,46 +49,16 @@ class GraftSession(val spark: SparkSession) {
   // Register EVERY function pack before the catalog replay below: a
   // persisted materialized view's SELECT may call vec_dot / ngram_* /
   // bloom_* — restore must never depend on which query entry happened to
-  // register a pack ad hoc earlier in the process.
+  // register a pack ad hoc earlier in the process. Once per SparkSession.
   graft.functions.GraftFunctions.registerAll(spark)
 
-  // Partition-prune derivation (the reference's one custom rewrite,
-  // parse.rs:539-893) as a Catalyst optimizer rule.
-  if (!spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.PartitionPruneDerivation]))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.PartitionPruneDerivation(spark)
-
-  // Fixed-zone civil-field collapse (toYear/date_part('year') as integer
-  // arithmetic) — idempotent alongside the Sessions.build registration for
-  // sessions constructed elsewhere (e.g. a bare SparkSession handed in).
-  if (!spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.CivilFieldRewrite]))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.CivilFieldRewrite(spark)
-
-  // Monotone civil-predicate unwrap (toYear(d)=1995 → raw d range for
-  // PushedFilters + __ptk pruning) — after CivilFieldRewrite by list order.
-  if (!spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.CivilPredicateUnwrap]))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.CivilPredicateUnwrap(spark)
-
-  // CH projection routing: matching aggregates over a table with ADD
-  // PROJECTION metadata re-aggregate the hidden pre-aggregated table.
-  if (!spark.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.ProjectionRoute]))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+
-        graft.plans.ProjectionRoute(spark)
+  // The engine's optimizer rules, in their one order (graft.plans.GraftRules).
+  graft.plans.GraftRules.install(spark)
 
   /** Hidden partition-key column name (not shown by DESC; reference keeps
     * the ptk entirely out of the table schema, crates/meta/src/types.rs:55-63).
     */
-  val PtkCol = "__ptk"
+  val PtkCol = GraftSession.PtkCol
 
   /** The catalog's engine state, shared with every handle on this
     * SparkSession's `SharedState`. */
@@ -423,6 +393,7 @@ class GraftSession(val spark: SparkSession) {
       // deletes data files with the meta, mgmt.rs:802-854).
       val r = spark.sql(s"DROP DATABASE ${if (ie) "IF EXISTS " else ""}`$name` CASCADE")
       rmTree(warehousePath.resolve(s"$name.db").toFile)
+      GraftSession.forgetParts(warehousePath.resolve(s"$name.db").toAbsolutePath.toString)
       rmTree(metaRoot.resolve(name).toFile)
       // its views and dictionaries go with it, and nothing else's
       state.views.keySet.removeIf(_._1 == name)
@@ -610,7 +581,7 @@ class GraftSession(val spark: SparkSession) {
       val r = spark.sql(s"DROP TABLE ${if (ie) "IF EXISTS " else ""}${fullName(db, name)}")
       // DROP removes data in the reference (mgmt.rs:802-854); external
       // tables need the file delete done here.
-      loc.foreach(p => rmTree(p.toFile))
+      loc.foreach { p => rmTree(p.toFile); GraftSession.forgetParts(p.toString) }
       java.nio.file.Files.deleteIfExists(metaFile(rdb, name))
       r
     case TruncateTable(db, name, _) if viewKey(db, name).isDefined =>
@@ -1674,21 +1645,11 @@ class GraftSession(val spark: SparkSession) {
       Set("tables", "columns", "restore_errors", "parts", "detached_parts",
         "databases", "processes", "query_log", "dictionaries", "functions"))
     if (hits.isEmpty) return sql
-    val cat = spark.sessionState.catalog
-    def userTables: Seq[(String, org.apache.spark.sql.catalyst.TableIdentifier,
-        org.apache.spark.sql.catalyst.catalog.CatalogTable)] =
-      cat.listDatabases().flatMap { db =>
-        cat.listTables(db, "*", includeLocalTempViews = false).flatMap { tid =>
-          scala.util.Try(cat.getTableMetadata(tid)).toOption
-            .filterNot(_ => tid.table.startsWith("graft_tmp_") ||
-              tid.table.startsWith("__graft"))
-            .map(m => (db, tid, m))
-        }
-      }
+    def userTables = GraftSession.userTables(spark.sessionState.catalog)
     if (hits.exists(_._1 == "tables")) {
       // views are listed from the engine state, with CH's engine `View`
-      val rows = userTables.map { case (db, tid, m) =>
-        Row(db, tid.table, m.properties.getOrElse("graft.engine", "BaseStorage"))
+      val rows = userTables.map { case (db, m) =>
+        Row(db, m.identifier.table, m.properties.getOrElse("graft.engine", "BaseStorage"))
       } ++ state.views.keySet.asScala.toSeq.map { case (db, v) => Row(db, v, "View") }
       spark.createDataFrame(rows.asJava, StructType(Seq(
           StructField("database", StringType), StructField("name", StringType),
@@ -1709,7 +1670,7 @@ class GraftSession(val spark: SparkSession) {
         .createOrReplaceTempView("__graft_system_functions")
     }
     if (hits.exists(_._1 == "columns")) {
-      val rows = userTables.flatMap { case (db, tid, m) =>
+      val rows = userTables.flatMap { case (db, m) =>
         val declared = m.properties.get("graft.ch.types").map {
           _.split("").filter(_.nonEmpty).map { kv =>
             val Array(k, v) = kv.split("", 2); k -> v
@@ -1719,7 +1680,7 @@ class GraftSession(val spark: SparkSession) {
           case (f, i) =>
             val ch = declared.getOrElse(f.name,
               BqlType.fromSpark(f.dataType, f.nullable).chName)
-            Row(db, tid.table, f.name, ch, (i + 1).toLong)
+            Row(db, m.identifier.table, f.name, ch, (i + 1).toLong)
         }
       }
       spark.createDataFrame(rows.asJava, StructType(Seq(
@@ -1728,74 +1689,21 @@ class GraftSession(val spark: SparkSession) {
           StructField("position", LongType))))
         .createOrReplaceTempView("__graft_system_columns")
     }
-    if (hits.exists(h => h._1 == "parts" || h._1 == "detached_parts")) {
-      // CH's parts metadata comes from its part store; ours comes from
-      // the same source of truth the scanner uses — the table directory
-      // plus each file's parquet footer (row count read from metadata,
-      // never data pages). Partition id is the `__ptk=` value, or "all"
-      // for unpartitioned tables, matching CH's naming. A published part
-      // never changes, so a footer is read once per (path, length,
-      // mtime); this walk's files become the whole memo.
-      val hconf = spark.sessionState.newHadoopConf()
-      val memo = GraftSession.partRows
-      val live = scala.collection.mutable.HashMap.empty[String, GraftSession.PartRows]
-      def footerRows(p: java.nio.file.Path, bytes: Long): Long = {
-        val key = p.toString
-        val mtime = java.nio.file.Files.getLastModifiedTime(p).toMillis
-        val known = memo.get(key).filter(m => m.bytes == bytes && m.mtime == mtime)
-        known.orElse(scala.util.Try(parquetRowCount(p, hconf)).toOption
-            .map(GraftSession.PartRows(bytes, mtime, _)))
-          .map { m => live(key) = m; m.rows }
-          .getOrElse(-1L)
+    if (hits.exists(_._1 == "parts")) SystemParts.register(spark)
+    if (hits.exists(_._1 == "detached_parts")) {
+      // parts moved under a table's `_graft_detached` directory
+      val rows = userTables.flatMap { case (db, m) =>
+        scala.util.Try(java.nio.file.Paths.get(m.location.getPath)).toOption.toSeq
+          .flatMap(loc => SystemParts.partFiles(loc.resolve("_graft_detached")))
+          .map { case (part, p, bytes, _) =>
+            Row(db, m.identifier.table, part, p.getFileName.toString, bytes)
+          }
       }
-      def partsOf(db: String, table: String, root: java.nio.file.Path,
-                  detached: Boolean): Seq[Row] = {
-        if (!java.nio.file.Files.isDirectory(root)) return Nil
-        val walk = java.nio.file.Files.walk(root)
-        try walk.iterator.asScala.filter { p =>
-          java.nio.file.Files.isRegularFile(p) &&
-            p.getFileName.toString.endsWith(".parquet") &&
-            !isHiddenPath(root.relativize(p))
-        }.map { p =>
-          val rel = root.relativize(p)
-          val part = rel.iterator.asScala.map(_.toString)
-            .find(_.startsWith(s"$PtkCol="))
-            .map(s => unescapePartValue(s.stripPrefix(s"$PtkCol=")))
-            .getOrElse("all")
-          val bytes = java.nio.file.Files.size(p)
-          if (detached) Row(db, table, part, p.getFileName.toString, bytes)
-          else Row(db, table, part, p.getFileName.toString,
-            footerRows(p, bytes), bytes, 1)
-        }.toVector
-        finally walk.close()
-      }
-      val located = userTables.flatMap { case (db, tid, m) =>
-        scala.util.Try(java.nio.file.Paths.get(m.location.getPath)).toOption
-          .map(loc => (db, tid.table, loc))
-      }
-      if (hits.exists(_._1 == "parts")) {
-        val rows = located.flatMap { case (db, t, loc) =>
-          // live parts only: everything under _graft_detached is hidden
-          partsOf(db, t, loc, detached = false)
-        }
-        GraftSession.partRows = live.toMap
-        spark.createDataFrame(rows.asJava, StructType(Seq(
-            StructField("database", StringType), StructField("table", StringType),
-            StructField("partition", StringType), StructField("name", StringType),
-            StructField("rows", LongType), StructField("bytes_on_disk", LongType),
-            StructField("active", IntegerType))))
-          .createOrReplaceTempView("__graft_system_parts")
-      }
-      if (hits.exists(_._1 == "detached_parts")) {
-        val rows = located.flatMap { case (db, t, loc) =>
-          partsOf(db, t, loc.resolve("_graft_detached"), detached = true)
-        }
-        spark.createDataFrame(rows.asJava, StructType(Seq(
-            StructField("database", StringType), StructField("table", StringType),
-            StructField("partition", StringType), StructField("name", StringType),
-            StructField("bytes_on_disk", LongType))))
-          .createOrReplaceTempView("__graft_system_detached_parts")
-      }
+      spark.createDataFrame(rows.asJava, StructType(Seq(
+          StructField("database", StringType), StructField("table", StringType),
+          StructField("partition", StringType), StructField("name", StringType),
+          StructField("bytes_on_disk", LongType))))
+        .createOrReplaceTempView("__graft_system_detached_parts")
     }
     if (hits.exists(_._1 == "databases")) {
       val rows = spark.catalog.listDatabases().collect().toSeq
@@ -2254,19 +2162,6 @@ class GraftSession(val spark: SparkSession) {
   private def defaultPartDir: String =
     s"$PtkCol=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
 
-  /** Spark's data-file listing rule: a path is data only if NO component is
-    * hidden — starts with '.' or with '_' (partition dirs like `__ptk=...`
-    * are exempt via the '=' test). Without this, leftovers under
-    * `_temporary/` from a crashed write would be swept into a compaction.
-    */
-  private def isHiddenPath(rel: java.nio.file.Path): Boolean = {
-    import scala.jdk.CollectionConverters._
-    rel.iterator.asScala.exists { seg =>
-      val n = seg.toString
-      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
-    }
-  }
-
   /** OPTIMIZE TABLE = small-file compaction. The reference's OPTIMIZE is a
     * part-store flush stub (mgmt.rs:923-941, parts.rs:453-455); here every
     * INSERT statement commits its own file set, so a 100 TB ingest stream
@@ -2355,7 +2250,7 @@ class GraftSession(val spark: SparkSession) {
           try walk.iterator.asScala.filter(p =>
             java.nio.file.Files.isRegularFile(p) &&
               p.getFileName.toString.endsWith(".parquet") &&
-              !isHiddenPath(loc.relativize(p))).toVector
+              !GraftSession.isHiddenPath(loc.relativize(p))).toVector
           finally walk.close()
         }
       def filesNeeded(fs: Seq[java.nio.file.Path]): Int = math.max(1,
@@ -2433,7 +2328,7 @@ class GraftSession(val spark: SparkSession) {
       val staging = loc.resolve(s"_graft_stage-$tag")
       val intentTmp = loc.resolve("_graft_intent.tmp")
       java.nio.file.Files.write(intentTmp,
-        (tag +: retired.map(parquetRowCount(_)).sum.toString +:
+        (tag +: retired.map(rowsInFooter).sum.toString +:
           retired.map(p => loc.relativize(p).toString)).asJava)
       java.nio.file.Files.move(intentTmp, intent,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -2846,7 +2741,7 @@ class GraftSession(val spark: SparkSession) {
         try walk.iterator.asScala.filter(p =>
           java.nio.file.Files.isRegularFile(p) &&
             p.getFileName.toString.endsWith(".parquet") &&
-            !isHiddenPath(loc.relativize(p))).toVector
+            !GraftSession.isHiddenPath(loc.relativize(p))).toVector
         finally walk.close()
       if (dataFiles.isEmpty) { spark.catalog.refreshTable(full); return }
       val src = spark.read.schema(schema)
@@ -3054,7 +2949,7 @@ class GraftSession(val spark: SparkSession) {
     val staging = loc.resolve(s"_graft_stage-$tag")
     val staged = stagedDataFiles(staging)
     val moved = taggedFiles(originals.map(_.getParent).distinct, tag)
-    if ((staged ++ moved).map(parquetRowCount(_)).sum >= expected) {
+    if ((staged ++ moved).map(rowsInFooter).sum >= expected) {
       staged.foreach(publishStaged(loc, staging, tag, _))
       originals.foreach(p => java.nio.file.Files.deleteIfExists(p))
     } else {
@@ -3076,7 +2971,7 @@ class GraftSession(val spark: SparkSession) {
       try w.iterator.asScala.filter(p =>
         java.nio.file.Files.isRegularFile(p) &&
           p.getFileName.toString.endsWith(".parquet") &&
-          !isHiddenPath(staging.relativize(p))).toVector
+          !GraftSession.isHiddenPath(staging.relativize(p))).toVector
       finally w.close()
     }
 
@@ -3127,18 +3022,11 @@ class GraftSession(val spark: SparkSession) {
     if (spark.conf.getOption("graft.optimize.failpoint").contains(site))
       throw new RuntimeException(s"graft.optimize.failpoint: $site")
 
-  /** Row count of one parquet file from its footer — metadata only, no
-    * data read; the OPTIMIZE intent's commit witness.
-    */
-  private def parquetRowCount(p: java.nio.file.Path,
-      hconf: org.apache.hadoop.conf.Configuration =
-        spark.sessionState.newHadoopConf()): Long = {
-    import scala.jdk.CollectionConverters._
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), hconf))
-    try r.getRowGroups.asScala.map(_.getRowCount).sum finally r.close()
-  }
+  /** Row count of one part file from its footer, unmemoized: the OPTIMIZE
+    * intent's commit witness, read while the part is being rewritten. */
+  private def rowsInFooter(p: java.nio.file.Path): Long =
+    GraftSession.parquetRowCount(new org.apache.hadoop.fs.Path(p.toUri),
+      spark.sessionState.newHadoopConf())
 
   private def createTable(ct0: CreateTable,
                           runCtasInsert: Boolean = true): DataFrame = {
@@ -3640,7 +3528,7 @@ class GraftSession(val spark: SparkSession) {
             try walk.iterator.asScala.filter(p =>
               java.nio.file.Files.isRegularFile(p) &&
                 p.getFileName.toString.endsWith(".parquet") &&
-                !isHiddenPath(loc.relativize(p))).toVector
+                !GraftSession.isHiddenPath(loc.relativize(p))).toVector
             finally walk.close()
           }
         if (dataFiles.nonEmpty) {
@@ -4624,7 +4512,7 @@ class GraftSession(val spark: SparkSession) {
       else {
         val walk = java.nio.file.Files.walk(loc)
         try walk.iterator.asScala.filter(p =>
-          p != loc && !isHiddenPath(loc.relativize(p))).toSet
+          p != loc && !GraftSession.isHiddenPath(loc.relativize(p))).toSet
         finally walk.close()
       }
     def specs() = if (partitioned) cat.listPartitions(ident).map(_.spec).toSet
@@ -5217,6 +5105,36 @@ object GraftSession {
   private[exec] def stateOf(spark: SparkSession): EngineState =
     states.synchronized(states.computeIfAbsent(spark.sharedState, _ => new EngineState))
 
+  /** The catalog's user tables, with their metadata, in the databases and
+    * under the names the predicates admit: every table but the engine's
+    * own (`graft_tmp_*` staging tables and `__graft*` helpers). What
+    * `system.tables`, `system.columns` and `system.parts` list. */
+  private[exec] def userTables(
+      cat: org.apache.spark.sql.catalyst.catalog.SessionCatalog,
+      db: String => Boolean = _ => true,
+      table: String => Boolean = _ => true)
+      : Seq[(String, org.apache.spark.sql.catalyst.catalog.CatalogTable)] =
+    cat.listDatabases().filter(db).flatMap { d =>
+      cat.listTables(d, "*", includeLocalTempViews = false)
+        .filter(t => table(t.table) && !t.table.startsWith("graft_tmp_") &&
+          !t.table.startsWith("__graft"))
+        .flatMap(t => scala.util.Try(cat.getTableMetadata(t)).toOption.map(d -> _))
+    }
+
+  /** Hidden partition-key column name. */
+  private[graft] val PtkCol = "__ptk"
+
+  /** Spark's data-file listing rule: a path is data only if NO component is
+    * hidden — starts with '.' or with '_' (partition dirs like `__ptk=...`
+    * are exempt via the '=' test). Without this, leftovers under
+    * `_temporary/` from a crashed write would be swept into a compaction.
+    */
+  private[exec] def isHiddenPath(rel: java.nio.file.Path): Boolean =
+    rel.iterator.asScala.exists { seg =>
+      val n = seg.toString
+      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    }
+
   /** The plain column of a `name col TYPE bloom_filter[...]` index body,
     * if that is its shape — only these wire to physical parquet blooms.
     */
@@ -5227,11 +5145,57 @@ object GraftSession {
     if (m.matches()) Some(m.group(1)) else None
   }
 
-  /** Footer row counts of the live part files `system.parts` last saw,
-    * by path; an entry holds while the file's length and mtime match.
-    * Each walk replaces the whole map, so it holds only live files. */
-  private[exec] final case class PartRows(bytes: Long, mtime: Long, rows: Long)
-  @volatile private[exec] var partRows = Map.empty[String, PartRows]
+  /** Row count of one parquet file from its footer — metadata only, no
+    * data page is read. */
+  private[graft] def parquetRowCount(p: org.apache.hadoop.fs.Path,
+                                     hconf: org.apache.hadoop.conf.Configuration): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
+    try r.getRowGroups.asScala.map(_.getRowCount).sum finally r.close()
+  }
+
+  /** The footer memo: the one owner of part row counts, read by
+    * `system.parts` and by the trivial-count rule (`graft.plans.TrivialCount`).
+    * Keyed by table root ([[partRoot]] of its location), then by file path;
+    * an entry holds while the file's length and mtime match, since a
+    * published part never changes in place. Each listing of a table
+    * replaces that table's entries only, so the memo holds the live files
+    * of the tables listed so far; DROP TABLE and DROP DATABASE
+    * [[forgetParts]] theirs.
+    */
+  private final case class PartRows(bytes: Long, mtime: Long, rows: Long)
+  private val partRows =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, PartRows]]()
+
+  /** The memo key of a table root (or any directory): its plain path. */
+  private[graft] def partRoot(p: org.apache.hadoop.fs.Path): String =
+    p.toUri.getPath.stripSuffix("/")
+
+  /** Footer row counts of `files` — (path, length, mtime), one listing of
+    * the table rooted at `root` — in order; None where a footer cannot be
+    * read. The listing's readable files become `root`'s entries. */
+  private[graft] def footerRows(root: String,
+      files: Seq[(org.apache.hadoop.fs.Path, Long, Long)],
+      hconf: => org.apache.hadoop.conf.Configuration): Seq[Option[Long]] = {
+    lazy val conf = hconf
+    val known = partRows.getOrDefault(root, Map.empty)
+    val now = files.map { case (path, bytes, mtime) =>
+      val key = partRoot(path)
+      key -> known.get(key).filter(m => m.bytes == bytes && m.mtime == mtime)
+        .orElse(scala.util.Try(parquetRowCount(path, conf)).toOption
+          .map(PartRows(bytes, mtime, _)))
+    }
+    partRows.put(root, now.collect { case (k, Some(m)) => k -> m }.toMap)
+    now.map(_._2.map(_.rows))
+  }
+
+  /** Drops the memo entries of the table rooted at `dir` and of every
+    * table under it (a database directory). */
+  private[graft] def forgetParts(dir: String): Unit =
+    partRows.keySet.removeIf(k => k == dir || k.startsWith(dir + "/"))
+
+  /** The table roots the memo holds entries for. */
+  private[graft] def memoizedRoots: Set[String] = partRows.keySet.asScala.toSet
 
   /** A running statement, for SHOW PROCESSLIST / system.processes /
     * KILL QUERY. The query id doubles as the Spark job group, so a kill

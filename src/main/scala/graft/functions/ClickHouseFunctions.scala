@@ -1051,8 +1051,8 @@ object UuidBytes {
 
 /** SparkSessionExtensions installer: enable with
   * `spark.sql.extensions=graft.functions.GraftExtensions`. Injects the CH
-  * function pack and the partition-prune derivation rule (the same pair
-  * GraftSession registers at runtime).
+  * function pack and the engine's optimizer rules (`graft.plans.GraftRules`,
+  * the list GraftSession installs at runtime).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -1062,9 +1062,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions.ClickHouseFunctions", name),
         builder))
     }
-    ext.injectOptimizerRule(graft.plans.PartitionPruneDerivation(_))
-    ext.injectOptimizerRule(graft.plans.CivilFieldRewrite(_))
-    ext.injectOptimizerRule(graft.plans.CivilPredicateUnwrap(_))
-    ext.injectOptimizerRule(graft.plans.ProjectionRoute(_))
+    graft.plans.GraftRules.inject(ext)
   }
 }

@@ -12,21 +12,28 @@ import org.apache.spark.sql.SparkSession
   * view whose SELECT uses `vec_dot` / `ngram_*` / `bloom_*` must resolve
   * at replay time, not only after the first query entry that happens to
   * register the pack ad hoc. Every pack's `register` is idempotent
-  * (createOrReplaceTempFunction / udf.register overwrite), so calling
-  * this once per session boot — and again from individual query entries —
-  * is safe.
+  * (createOrReplaceTempFunction / udf.register overwrite); [[registerAll]]
+  * runs them once per SparkSession: a second handle on a session leaves
+  * the registry untouched, while each `newSession()`, whose registry
+  * starts from the built-ins, gets its own registration.
   */
 object GraftFunctions {
-  def registerAll(spark: SparkSession): Unit = {
-    ClickHouseFunctions.register(spark)
-    ChAggregates.register(spark)
-    GraftUdafs.register(spark)
-    BehaviorFunctions.register(spark)
-    VectorFunctions.register(spark)
-    NGramFunctions.register(spark)
-    BloomFunctions.register(spark)
-    SimhashFunctions.register(spark)
-    WinnowFunctions.register(spark)
+  /** Sessions whose registry holds every pack, held weakly. */
+  private val registered = new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
+
+  def registerAll(spark: SparkSession): Unit = registered.synchronized {
+    if (!registered.containsKey(spark)) {
+      ClickHouseFunctions.register(spark)
+      ChAggregates.register(spark)
+      GraftUdafs.register(spark)
+      BehaviorFunctions.register(spark)
+      VectorFunctions.register(spark)
+      NGramFunctions.register(spark)
+      BloomFunctions.register(spark)
+      SimhashFunctions.register(spark)
+      WinnowFunctions.register(spark)
+      registered.put(spark, true)
+    }
   }
 
   /** Lowercased names of every function the CH packs register — the

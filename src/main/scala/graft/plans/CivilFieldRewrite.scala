@@ -21,8 +21,8 @@ import graft.functions.EpochCivilField
   * This is the engine-level analog of what ClickHouse's date LUT buys its
   * `toYear` (the BASELINE.md group-by row, docs/benchmarks.md:7-9, is
   * exactly this extraction over 1.47B rows): measured ~3-4× on that anchor.
-  * Registered in Sessions.build / GraftSession / GraftExtensions, so every
-  * entry point (bench, verify, wire servers) plans through it.
+  * Listed in [[GraftRules]], so every entry point (bench, verify, wire
+  * servers) plans through it.
   */
 case class CivilFieldRewrite(sparkIgnored: org.apache.spark.sql.SparkSession)
     extends Rule[LogicalPlan] {

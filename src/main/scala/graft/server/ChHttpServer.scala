@@ -44,7 +44,7 @@ import graft.types.BqlType
   * Sessionless requests share one GraftSession; statements execute under
   * a lock.
   * Results stream row-group-wise through a chunked response via
-  * toLocalIterator — the transport is a front door, not the 100 TB
+  * [[ResultRows]] — the transport is a front door, not the 100 TB
   * egress path (same posture as the wire servers).
   */
 final class ChHttpServer(spark: SparkSession, port: Int = 0) {
@@ -277,13 +277,12 @@ final class ChHttpServer(spark: SparkSession, port: Int = 0) {
     * rendered (the wait_end_of_query summary's result_rows).
     */
   private def render(os: OutputStream, df: DataFrame, fmt: String): Long = {
-    import scala.jdk.CollectionConverters._
     val names = df.columns.toSeq
     val types = chTypeNames(df)
     def w(s: String): Unit = os.write(s.getBytes(UTF_8))
     var rendered = 0L
     def rows: Iterator[Row] =
-      df.toLocalIterator().asScala.map { r => rendered += 1; r }
+      ResultRows.of(df).map { r => rendered += 1; r }
     fmt.toLowerCase match {
       case "tabseparated" | "tsv" | "tabseparatedwithnames" |
            "tsvwithnames" | "tabseparatedwithnamesandtypes" |

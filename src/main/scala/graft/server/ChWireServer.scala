@@ -276,7 +276,6 @@ final class ChWireServer(spark: SparkSession, port: Int = 0) {
         case _ =>
           val df = session.sql(queryText)
           if (df.schema.fields.nonEmpty) {
-            import scala.jdk.CollectionConverters._
             val schema = df.schema
             // query results carry derived Decimal(20,0)s (e.g. sum over a
             // Decimal(10,0) column) — only lineage-proven UInt64 columns
@@ -304,7 +303,7 @@ final class ChWireServer(spark: SparkSession, port: Int = 0) {
             // contract); anything else mid-query means the framing is
             // lost. Polling via available() never blocks the stream.
             var cancelled = false
-            val groups = df.toLocalIterator().asScala.grouped(blockRows)
+            val groups = ResultRows.of(df).grouped(blockRows)
             while (!cancelled && groups.hasNext) {
               val rows = groups.next()
               rowsSent += rows.size

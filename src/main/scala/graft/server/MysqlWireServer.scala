@@ -221,14 +221,13 @@ final class MysqlWireServer(spark: SparkSession, port: Int = 0) {
         send(new Out().lenencInt(schema.fields.length.toLong).result())
         schema.fields.foreach(f => send(columnDefinition(f.name, f.dataType)))
         send(eofPacket())
-        import scala.jdk.CollectionConverters._
         // Liveness on long results: MySQL's text protocol has no Progress
         // packet (the CH side interleaves real ones — ChWireServer), so
         // the protocol-legal equivalent is flushing completed row packets
         // periodically while later partitions are still computing, instead
         // of buffering the whole resultset to the final flush.
         var n = 0L
-        df.toLocalIterator().asScala.foreach { row =>
+        ResultRows.of(df).foreach { row =>
           if (binary) send(binaryRow(row))
           else {
             val o = new java.io.ByteArrayOutputStream()

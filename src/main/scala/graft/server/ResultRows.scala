@@ -1,0 +1,24 @@
+package graft.server
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LocalTableScanExec
+
+/** The rows of a SELECT's result, as every wire server streams them. */
+object ResultRows {
+
+  /** A result already on the driver — its executed plan is a
+    * `LocalTableScanExec`: a constant or folded SELECT, a trivial count
+    * answered from part footers — comes back through `collect`, which
+    * reads the local rows and runs no Spark job (`LocalTableScanExec` has
+    * no `executeToIterator` of its own, so `toLocalIterator` would
+    * parallelize them into one). Any other result streams through
+    * `toLocalIterator`, one partition at a time.
+    */
+  def of(df: DataFrame): Iterator[Row] =
+    df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec => df.collect().iterator
+      case _ => df.toLocalIterator().asScala
+    }
+}

@@ -8,14 +8,15 @@ import org.apache.spark.sql.execution.datasources.{CatalogFileIndex, HadoopFsRel
 import org.apache.spark.sql.internal.SQLConf
 
 /** A statement's execution, planned by the size of its input. When every
-  * leaf of the optimized plan (subqueries included) is a file relation,
-  * driver-resident rows, `OneRowRelation` or `Range`, and their bytes add
-  * up to at most `spark.sql.autoBroadcastJoinThreshold` (the session's
-  * own "small enough to ship whole" bound; <= 0 turns the routing off),
-  * the physical plan is built without AQE and with one shuffle partition:
-  * AQE runs one job per shuffle stage, and a one-partition range exchange
-  * samples nothing, so a `GROUP BY ... ORDER BY` runs as one job instead
-  * of four. Any other statement plans exactly as a plain QueryExecution.
+  * leaf of the optimized plan (subqueries included) is a file or other
+  * `BaseRelation`, driver-resident rows, `OneRowRelation` or `Range`, and
+  * their bytes add up to at most `spark.sql.autoBroadcastJoinThreshold`
+  * (the session's own "small enough to ship whole" bound; <= 0 turns the
+  * routing off), the physical plan is built without AQE and with one
+  * shuffle partition: AQE runs one job per shuffle stage, and a
+  * one-partition range exchange samples nothing, so a `GROUP BY ...
+  * ORDER BY` runs as one job instead of four. Any other statement plans
+  * exactly as a plain QueryExecution.
   *
   * Both settings hold for this plan only, on the planning thread:
   * `InsertAdaptiveSparkPlan` reads the session conf itself, so AQE is
@@ -65,14 +66,13 @@ object SmallStatementExecution {
       .foldLeft(Option(BigInt(0))) { (acc, leaf) =>
         acc.flatMap { sum =>
           val bytes = leaf match {
-            case lr: LogicalRelation => lr.relation match {
-              case fs: HadoopFsRelation => fs.location match {
-                case c: CatalogFileIndex =>
-                  Some(BigInt((c.filterPartitions(Nil).sizeInBytes * factor).toLong))
-                case _ => Some(lr.stats.sizeInBytes)
-              }
-              case _ => None
-            }
+            case lr: LogicalRelation => Some(lr.relation match {
+              case HadoopFsRelation(c: CatalogFileIndex, _, _, _, _, _) =>
+                BigInt((c.filterPartitions(Nil).sizeInBytes * factor).toLong)
+              // files by their listing, `system.parts` by its own estimate;
+              // a relation with none reports spark.sql.defaultSizeInBytes
+              case _ => lr.stats.sizeInBytes
+            })
             case _: LocalRelation | _: OneRowRelation | _: Range =>
               Some(leaf.stats.sizeInBytes)
             case _ => None

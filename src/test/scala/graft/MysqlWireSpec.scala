@@ -1,7 +1,5 @@
 package graft
 
-import java.io.{BufferedInputStream, BufferedOutputStream}
-import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,81 +9,11 @@ import graft.server.{MysqlProto, MysqlWireServer}
 /** Drives the MySQL text protocol over a real socket: handshake, ping,
   * and a CREATE/INSERT/SELECT round-trip — the shape of the reference's
   * MySQL-side sanity suite (crates/tests_integ/tests/sanity_checks_mysql.rs)
-  * with the test client below implementing the client half of the framing.
+  * with [[MysqlTestClient]] implementing the client half of the framing.
   */
 class MysqlWireSpec extends AnyFunSuite {
   import MysqlProto._
   import SparkTestSession.spark
-
-  private final class MysqlClient(port: Int, database: String = "") {
-    private val sock = new Socket("127.0.0.1", port)
-    private val in = new BufferedInputStream(sock.getInputStream)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
-
-    // read HandshakeV10, answer HandshakeResponse41, expect OK
-    locally {
-      val (_, greeting) = readPacket(in)
-      val g = new In(greeting)
-      assert(g.u8() == 10, "protocol version")
-      val _serverVersion = g.nulStr()
-      val caps = ClientLongPassword | ClientProtocol41 | ClientSecureConnection |
-        (if (database.nonEmpty) ClientConnectWithDb else 0L)
-      val resp = new Out()
-        .u32(caps).u32(1L << 24).u8(33).bytes(new Array[Byte](23))
-        .nulStr("default").lenencInt(0)
-      if (database.nonEmpty) resp.nulStr(database)
-      writePacket(out, 1, resp.result())
-      out.flush()
-      val (_, ok) = readPacket(in)
-      assert((ok(0) & 0xff) == 0x00, s"expected OK after auth, got 0x${(ok(0) & 0xff).toHexString}")
-    }
-
-    def ping(): Boolean = {
-      writePacket(out, 0, new Out().u8(ComPing).result()); out.flush()
-      val (_, p) = readPacket(in)
-      (p(0) & 0xff) == 0x00
-    }
-
-    /** COM_QUERY; returns (column names, rows as string/null cells) or
-      * throws on ERR; OK-only responses return (Nil, Nil).
-      */
-    def query(sql: String): (Seq[String], Seq[Seq[String]]) = {
-      writePacket(out, 0,
-        new Out().u8(ComQuery).bytes(sql.getBytes(UTF_8)).result())
-      out.flush()
-      val (_, first) = readPacket(in)
-      (first(0) & 0xff) match {
-        case 0x00 => (Nil, Nil) // OK: statement without resultset
-        case 0xff =>
-          val e = new In(first); e.u8(); val errno = e.u16()
-          e.u8(); e.bytes(5) // '#' + sqlstate
-          fail(s"server error $errno: ${new String(e.rest(), UTF_8)}")
-        case _ =>
-          val nCols = new In(first).lenencInt().toInt
-          val names = (1 to nCols).map { _ =>
-            val (_, colDef) = readPacket(in)
-            val c = new In(colDef)
-            c.lenencStr(); c.lenencStr(); c.lenencStr(); c.lenencStr()
-            c.lenencStr() // name
-          }
-          val (_, eof1) = readPacket(in)
-          assert(isEof(eof1), "expected EOF after column definitions")
-          val rows = Vector.newBuilder[Seq[String]]
-          var done = false
-          while (!done) {
-            val (_, p) = readPacket(in)
-            if (isEof(p)) done = true
-            else {
-              val r = new In(p)
-              rows += (1 to nCols).map(_ => r.lenencStr())
-            }
-          }
-          (names, rows.result())
-      }
-    }
-
-    def close(): Unit = sock.close()
-  }
 
   test("an INDEPENDENT python-stdlib client speaks the wire format " +
     "(no shared code with the server — closest interop proof the " +
@@ -170,7 +98,7 @@ class MysqlWireSpec extends AnyFunSuite {
 
   test("handshake, ping, and CREATE/INSERT/SELECT round-trip") {
     val server = new MysqlWireServer(spark).start()
-    val client = new MysqlClient(server.boundPort)
+    val client = new MysqlTestClient(server.boundPort)
     try {
       assert(client.ping())
       client.query("DROP TABLE IF EXISTS mysql_tab")
@@ -197,7 +125,7 @@ class MysqlWireSpec extends AnyFunSuite {
 
   test("per-type round-trips over the MySQL text protocol (ref sanity_checks_mysql.rs)") {
     val server = new MysqlWireServer(spark).start()
-    val c = new MysqlClient(server.boundPort)
+    val c = new MysqlTestClient(server.boundPort)
     try {
       c.query("CREATE DATABASE IF NOT EXISTS mysql_types_db")
       c.query("USE mysql_types_db")
@@ -252,7 +180,7 @@ class MysqlWireSpec extends AnyFunSuite {
 
   test("a >16MB text row survives the wire (length field is never masked)") {
     val server = new MysqlWireServer(spark).start()
-    val c = new MysqlClient(server.boundPort)
+    val c = new MysqlTestClient(server.boundPort)
     try {
       val n = MaxPacket + 1024 // one row packet longer than the 3-byte length field
       val (_, rows) = c.query(s"SELECT repeat('d', $n) AS doc")
@@ -266,13 +194,13 @@ class MysqlWireSpec extends AnyFunSuite {
 
   test("connect-with-database selects the initial database") {
     val server = new MysqlWireServer(spark).start()
-    val setup = new MysqlClient(server.boundPort)
+    val setup = new MysqlTestClient(server.boundPort)
     try {
       setup.query("CREATE DATABASE IF NOT EXISTS mysql_db")
       setup.query("DROP TABLE IF EXISTS mysql_db.in_db")
       setup.query("CREATE TABLE mysql_db.in_db(v Int64)")
       setup.query("INSERT INTO mysql_db.in_db VALUES (7)")
-      val client = new MysqlClient(server.boundPort, database = "mysql_db")
+      val client = new MysqlTestClient(server.boundPort, database = "mysql_db")
       try {
         val (_, rows) = client.query("SELECT v FROM in_db")
         assert(rows === Seq(Seq("7")))

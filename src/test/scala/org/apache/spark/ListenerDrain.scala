@@ -27,4 +27,26 @@ object ListenerDrain {
     }
     n.get
   }
+
+  /** Spark jobs started while `body` runs whose description contains
+    * `marker` — a `GraftSession` statement's jobs carry its text as their
+    * description, on whichever thread serves it (a wire connection's).
+    */
+  def jobsDescribed(sc: SparkContext, marker: String)(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new scheduler.SparkListener {
+      override def onJobStart(e: scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+            Option(p.getProperty(SparkContext.SPARK_JOB_DESCRIPTION)))
+            .exists(_.contains(marker)))
+          n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(l)
+    try body
+    finally {
+      drain(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
 }
