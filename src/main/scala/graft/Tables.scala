@@ -104,8 +104,6 @@ object Tables {
     */
   def rowGroupCount(spark: SparkSession, path: String): Int = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -113,10 +111,7 @@ object Tables {
       if (fs.getFileStatus(p).isDirectory)
         fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
       else Array(fs.getFileStatus(p))
-    files.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-      try r.getRowGroups.size finally r.close()
-    }.sum
+    files.map(f => graft.sources.ParquetFooters.rowGroups(f.getPath, conf).size).sum
   }
 
   /** True when the layout starves the session of scan parallelism: fewer

@@ -2328,7 +2328,7 @@ class GraftSession(val spark: SparkSession) {
       val staging = loc.resolve(s"_graft_stage-$tag")
       val intentTmp = loc.resolve("_graft_intent.tmp")
       java.nio.file.Files.write(intentTmp,
-        (tag +: retired.map(rowsInFooter).sum.toString +:
+        (tag +: rowsInFooters(retired).toString +:
           retired.map(p => loc.relativize(p).toString)).asJava)
       java.nio.file.Files.move(intentTmp, intent,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -2949,7 +2949,7 @@ class GraftSession(val spark: SparkSession) {
     val staging = loc.resolve(s"_graft_stage-$tag")
     val staged = stagedDataFiles(staging)
     val moved = taggedFiles(originals.map(_.getParent).distinct, tag)
-    if ((staged ++ moved).map(rowsInFooter).sum >= expected) {
+    if (rowsInFooters(staged ++ moved) >= expected) {
       staged.foreach(publishStaged(loc, staging, tag, _))
       originals.foreach(p => java.nio.file.Files.deleteIfExists(p))
     } else {
@@ -3022,11 +3022,14 @@ class GraftSession(val spark: SparkSession) {
     if (spark.conf.getOption("graft.optimize.failpoint").contains(site))
       throw new RuntimeException(s"graft.optimize.failpoint: $site")
 
-  /** Row count of one part file from its footer, unmemoized: the OPTIMIZE
-    * intent's commit witness, read while the part is being rewritten. */
-  private def rowsInFooter(p: java.nio.file.Path): Long =
-    GraftSession.parquetRowCount(new org.apache.hadoop.fs.Path(p.toUri),
-      spark.sessionState.newHadoopConf())
+  /** Total row count of part files from their footers, unmemoized: the
+    * OPTIMIZE intent's commit witness, read while the parts are being
+    * rewritten. */
+  private def rowsInFooters(ps: Seq[java.nio.file.Path]): Long = {
+    val hconf = spark.sessionState.newHadoopConf()
+    ps.map(p => graft.sources.ParquetFooters.rowCount(
+      new org.apache.hadoop.fs.Path(p.toUri), hconf)).sum
+  }
 
   private def createTable(ct0: CreateTable,
                           runCtasInsert: Boolean = true): DataFrame = {
@@ -5145,15 +5148,6 @@ object GraftSession {
     if (m.matches()) Some(m.group(1)) else None
   }
 
-  /** Row count of one parquet file from its footer — metadata only, no
-    * data page is read. */
-  private[graft] def parquetRowCount(p: org.apache.hadoop.fs.Path,
-                                     hconf: org.apache.hadoop.conf.Configuration): Long = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
-    try r.getRowGroups.asScala.map(_.getRowCount).sum finally r.close()
-  }
-
   /** The footer memo: the one owner of part row counts, read by
     * `system.parts` and by the trivial-count rule (`graft.plans.TrivialCount`).
     * Keyed by table root ([[partRoot]] of its location), then by file path;
@@ -5182,8 +5176,8 @@ object GraftSession {
     val now = files.map { case (path, bytes, mtime) =>
       val key = partRoot(path)
       key -> known.get(key).filter(m => m.bytes == bytes && m.mtime == mtime)
-        .orElse(scala.util.Try(parquetRowCount(path, conf)).toOption
-          .map(PartRows(bytes, mtime, _)))
+        .orElse(scala.util.Try(graft.sources.ParquetFooters.rowCount(path, conf))
+          .toOption.map(PartRows(bytes, mtime, _)))
     }
     partRows.put(root, now.collect { case (k, Some(m)) => k -> m }.toMap)
     now.map(_._2.map(_.rows))

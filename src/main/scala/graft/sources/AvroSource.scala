@@ -6,7 +6,8 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -18,6 +19,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.AvroFiles._
 
@@ -43,9 +45,10 @@ final class AvroSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = AvroSource.pathOf(options.asCaseSensitiveMap().asScala.toMap)
-    val files = AvroSource.listFiles(path, new Configuration())
+    val conf = AvroSource.sessionConf()
+    val files = AvroSource.listFiles(path, conf)
     require(files.nonEmpty, s"graftavro: no .avro files under $path")
-    val fs = new HPath(files.head).getFileSystem(new Configuration())
+    val fs = new HPath(files.head).getFileSystem(conf)
     val in = new BufferedInputStream(fs.open(new HPath(files.head)))
     try {
       val (json, _, _) = readHeader(new Decoder(in))
@@ -67,6 +70,10 @@ private object AvroSource {
     options.collectFirst {
       case (k, v) if k.equalsIgnoreCase("path") => v
     }.getOrElse(throw new IllegalArgumentException("graftavro: missing path"))
+
+  /** The active session's Hadoop conf, for driver-side file access; tasks
+    * get it serialized in their reader or writer factory. */
+  def sessionConf(): Configuration = SparkSession.active.sessionState.newHadoopConf()
 
   def listFiles(path: String, conf: Configuration): Seq[String] = {
     val p = new HPath(path)
@@ -112,30 +119,32 @@ private final class AvroBatchWrite(schema: StructType, path: String,
                                    codec: String, truncate: Boolean)
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    val conf = AvroSource.sessionConf()
     val p = new HPath(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(conf)
     if (truncate && fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
-    new AvroWriterFactory(schema, path, codec)
+    new AvroWriterFactory(schema, path, codec, new SerializableConfiguration(conf))
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 private final class AvroWriterFactory(schema: StructType, path: String,
-                                      codec: String)
+                                      codec: String, hconf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new AvroDataWriter(schema, path, codec, partitionId, taskId)
+    new AvroDataWriter(schema, path, codec, partitionId, taskId, hconf.value)
 }
 
 private final class AvroDataWriter(schema: StructType, path: String,
-                                   codec: String, partitionId: Int, taskId: Long)
+                                   codec: String, partitionId: Int, taskId: Long,
+                                   conf: Configuration)
     extends DataWriter[InternalRow] {
   private val rec = toAvro(schema)
   private val json = schemaJson(rec)
   private val sync = syncMarker(json, s"$partitionId-$taskId")
-  private val fs = new HPath(path).getFileSystem(new Configuration())
+  private val fs = new HPath(path).getFileSystem(conf)
   private val tmp = new HPath(path, f".part-$partitionId%05d-$taskId.avro.inprogress")
   private val out = fs.create(tmp, true)
   writeHeader(out, json, codec, sync)
@@ -191,31 +200,35 @@ private final class AvroScan(required: StructType, path: String)
   override def description(): String =
     s"graftavro $path cols=[${required.fieldNames.mkString(",")}]"
 
+  private lazy val conf = AvroSource.sessionConf()
+
   override def planInputPartitions(): Array[InputPartition] =
-    AvroSource.listFiles(path, new Configuration())
+    AvroSource.listFiles(path, conf)
       .map(f => AvroInputPartition(f): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new AvroReaderFactory(required.fieldNames)
+    new AvroReaderFactory(required.fieldNames, new SerializableConfiguration(conf))
 }
 
 private final case class AvroInputPartition(file: String) extends InputPartition
 
-private final class AvroReaderFactory(requiredCols: Array[String])
+private final class AvroReaderFactory(requiredCols: Array[String],
+                                      hconf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[AvroInputPartition].file
-    new AvroPartitionReader(file, requiredCols)
+    new AvroPartitionReader(file, requiredCols, hconf.value)
   }
 }
 
 /** Streams one container file: block framing + per-record decode with
   * field skipping for pruned columns.
   */
-private final class AvroPartitionReader(file: String, requiredCols: Array[String])
+private final class AvroPartitionReader(file: String, requiredCols: Array[String],
+                                        conf: Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val fs = new HPath(file).getFileSystem(new Configuration())
+  private val fs = new HPath(file).getFileSystem(conf)
   private val in = new BufferedInputStream(fs.open(new HPath(file)), 1 << 16)
   private val fileDecoder = new Decoder(in)
   private val (writerSchema, codec, sync) = {
