@@ -28,6 +28,39 @@ object ListenerDrain {
     n.get
   }
 
+  /** Stages submitted on this thread while `body` runs, and the tasks
+    * they ran (a stage skipped for a reused shuffle is not submitted).
+    */
+  def stagesDuring(sc: SparkContext)(body: => Unit): (Int, Int) = {
+    val tag = java.util.UUID.randomUUID.toString
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new scheduler.SparkListener {
+      override def onStageSubmitted(e: scheduler.SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag)) {
+          stages.incrementAndGet()
+          tasks.addAndGet(e.stageInfo.numTasks)
+        }
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      drain(sc)
+      sc.removeSparkListener(l)
+    }
+    (stages.get, tasks.get)
+  }
+
+  /** Shuffles registered while `body` runs (every shuffle dependency
+    * takes the next id of its SparkContext). */
+  def shufflesDuring(sc: SparkContext)(body: => Unit): Int = {
+    val before = sc.newShuffleId()
+    body
+    sc.newShuffleId() - before - 1
+  }
+
   /** Spark jobs started while `body` runs whose description contains
     * `marker` — a `GraftSession` statement's jobs carry its text as their
     * description, on whichever thread serves it (a wire connection's).
