@@ -45,6 +45,7 @@ import graft.types.BqlType
   */
 class GraftSession(val spark: SparkSession) {
   import ChStatement._
+  import GraftSession.GraftTable
 
   // Register EVERY function pack before the catalog replay below: a
   // persisted materialized view's SELECT may call vec_dot / ngram_* /
@@ -223,6 +224,17 @@ class GraftSession(val spark: SparkSession) {
             .failed.foreach(e => recordRestoreError(db, nm, "dictionary", e))
         case _ => () // damaged meta entry: leave the files alone
       }
+      // a rewrite that crashed after publishing its output leaves both
+      // copies of its rows visible: settle it now, not at the table's
+      // next rewrite (see stagedReplace)
+      for ((table, _) <- metaFiles if tableKnown(table))
+        scala.util.Try {
+          val meta = catalogTable(db, table)
+          val loc = tableDir(meta)
+          if (java.nio.file.Files.exists(loc.resolve("_graft_intent")) ||
+              java.nio.file.Files.exists(loc.resolve("_graft_intent.tmp")))
+            underWriteLock(db, table)(settleIntent(meta))
+        }.failed.foreach(e => recordRestoreError(db, table, "pending rewrite", e))
     }
     // nested views restore in dependency order by fixpoint: each round
     // registers every view whose sources now resolve; a round with no
@@ -576,7 +588,7 @@ class GraftSession(val spark: SparkSession) {
           run(DropTable(Some(rdb), hidden, ifExists = true), "")
         }
       val loc =
-        if (spark.catalog.tableExists(s"$rdb.$name")) Some(tableLocation(rdb, name))
+        if (spark.catalog.tableExists(s"$rdb.$name")) Some(tableDir(catalogTable(rdb, name)))
         else None
       val r = spark.sql(s"DROP TABLE ${if (ie) "IF EXISTS " else ""}${fullName(db, name)}")
       // DROP removes data in the reference (mgmt.rs:802-854); external
@@ -830,13 +842,6 @@ class GraftSession(val spark: SparkSession) {
           if (df.columns.contains(PtkCol)) df.drop(PtkCol) else df)
     }
 
-  /** ClickHouse `SELECT … INTO OUTFILE 'path' [FORMAT f]`: run the inner
-    * SELECT and export ONE file at the given path (CH's outfile is a
-    * single client-side file by definition — the coalesce is the clause's
-    * own semantics, not a plan habit; distributed exports go through
-    * INSERT INTO table / remote()). Refuses to overwrite, like CH.
-    * Returns a one-row summary (path, rows, format).
-    */
   /** Release the executor-storage blocks a `localCheckpoint(eager=true)`
     * pinned, once every consumer of the checkpointed plan has run: the
     * ContextCleaner only reclaims them when the RDD is GC'd, so a
@@ -852,6 +857,13 @@ class GraftSession(val spark: SparkSession) {
       case _ => ()
     }
 
+  /** ClickHouse `SELECT … INTO OUTFILE 'path' [FORMAT f]`: run the inner
+    * SELECT and export ONE file at the given path (CH's outfile is a
+    * single client-side file by definition — the coalesce is the clause's
+    * own semantics, not a plan habit; distributed exports go through
+    * INSERT INTO table / remote()). Refuses to overwrite, like CH.
+    * Returns a one-row summary (path, rows, format).
+    */
   private def writeOutfile(p: ChParser.IntoOutfileParts): DataFrame = {
     val df0 = spark.sql(rewriteSelect(p.core))
     val df1 = if (df0.columns.contains(PtkCol)) df0.drop(PtkCol) else df0
@@ -1100,8 +1112,7 @@ class GraftSession(val spark: SparkSession) {
             org.apache.spark.sql.catalyst.TableIdentifier(p.table, Some(rdb))))
           .toOption
         val engine = meta.flatMap(_.properties.get("graft.engine"))
-        val pks = meta.flatMap(_.properties.get("graft.pks"))
-          .map(_.split("").filter(_.nonEmpty).toSeq).getOrElse(Nil)
+        val pks = meta.toSeq.flatMap(_.sortingKey)
         def fail(why: String): Nothing = throw new IllegalArgumentException(
           s"FINAL: table ${p.table} $why — FINAL is only defined for " +
             "MergeTree merging engines with a sorting key")
@@ -1154,8 +1165,7 @@ class GraftSession(val spark: SparkSession) {
   private def mergedViewSelect(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
       rdb: String, table: String, withPtk: Boolean): Option[String] = {
     val engine = meta.properties.getOrElse("graft.engine", "")
-    val pks = meta.properties.get("graft.pks")
-      .map(_.split("").filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    val pks = meta.sortingKey
     if (pks.isEmpty) return None
     val schema = meta.schema
     val dataCols = schema.fieldNames.filterNot(_ == PtkCol).toSeq
@@ -1328,8 +1338,7 @@ class GraftSession(val spark: SparkSession) {
             spark.sessionState.catalog.getTableMetadata(
               org.apache.spark.sql.catalyst.TableIdentifier(p.table, Some(rdb))))
             .toOption
-          val pkHead = meta.flatMap(_.properties.get("graft.pks"))
-            .flatMap(_.split("").find(_.nonEmpty))
+          val pkHead = meta.flatMap(_.sortingKey.headOption)
           // the declared SAMPLE BY key wins; the PK head is the fallback
           val key = meta.flatMap(_.properties.get("graft.setting.sample_by"))
             .orElse(pkHead)
@@ -2144,11 +2153,15 @@ class GraftSession(val spark: SparkSession) {
     case _ => false
   }
 
-  private def tableLocation(db: String, name: String): java.nio.file.Path = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
+  private def catalogTable(db: String,
+      name: String): org.apache.spark.sql.catalyst.catalog.CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(name, Some(db)))
+
+  /** The local directory holding a table's part files. */
+  private def tableDir(
+      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable): java.nio.file.Path =
     java.nio.file.Paths.get(meta.location.getPath)
-  }
 
   /** Spark's own inverse of its partition-dir escaping — a hand-rolled
     * copy here would have to stay bit-for-bit in sync with the writer (and
@@ -2167,42 +2180,14 @@ class GraftSession(val spark: SparkSession) {
     * INSERT statement commits its own file set, so a 100 TB ingest stream
     * accumulates per-statement small files whose open/footer cost comes to
     * dominate scans. Rewrite each over-fragmented partition directory into
-    * ~`graft.optimize.targetFileBytes` files (default 128 MB, the
-    * maxPartitionBytes-aligned scan unit):
+    * the [[filesNeeded]] count of files:
     *
     *   - only directories with more files than their byte size warrants
     *     are rewritten — OPTIMIZE on a compact table is a no-op;
-    *   - oversized partitions split across ceil(bytes/target) files via a
-    *     per-row salt (no single giant file per partition: a file is the
-    *     scan-parallelism unit on a cluster);
-    *   - crash-safe without a lock on readers, via an INTENT marker with
-    *     ATTRIBUTABLE output and a commit witness. The intent
-    *     (`_graft_intent`, published atomically BEFORE the compaction
-    *     write) records a unique job tag, the originals to retire, and
-    *     their total footer row count. The job writes into a hidden
-    *     staging directory (`_graft_stage-<tag>`, invisible to readers),
-    *     then publishes each staged file into its table directory under a
-    *     tag-prefixed name. Replay therefore touches ONLY files provably
-    *     from the crashed job — staged files plus tag-prefixed files —
-    *     and a file committed by anyone else (an INSERT landing between
-    *     the intent publish and the replay) is invisible to the decision
-    *     and can never be deleted (ADVICE r7 high). The witness: every
-    *     compacted part holds ≥1 row, so a job that died before its
-    *     Spark write committed counts SHORT of the expected total ⇒ roll
-    *     its own output back, originals untouched; a full count proves
-    *     the write committed ⇒ roll forward (finish the publish moves and
-    *     the retirement, idempotently). Every crash instant is covered:
-    *     before the intent publish nothing has happened (a stale `.tmp`
-    *     is discarded); between publish and commit the replay rolls back;
-    *     between commit and the retirement deletes (the window a
-    *     post-commit retire marker cannot cover — VERDICT r6) the replay
-    *     completes them. A plain EXCEPTION (disk full, interrupted job)
-    *     before the publish moves finish takes the same rollback inline —
-    *     own output deleted, intent withdrawn, rethrow — so a lingering
-    *     intent only ever means a process crash (ADVICE r7 medium); after
-    *     that point failures roll FORWARD via the intent. Readers may see
-    *     duplicates only between commit and retirement, and that window
-    *     is bounded, never compounded;
+    *   - FINAL on a merging engine rewrites the scope as its merged view,
+    *     DEDUPLICATE as its distinct rows; both retire every scoped file;
+    *   - every rewrite is one [[stagedReplace]] — crash-safe without a lock
+    *     on readers; its scaladoc describes the protocol and the layout;
     *   - bucketed tables (CLUSTERED BY) keep their co-located-join layout
     *     and are left alone — their file count is fixed by the bucket
     *     spec, not by insert history.
@@ -2215,8 +2200,7 @@ class GraftSession(val spark: SparkSession) {
       dedup: Boolean = false, dedupBy: Option[Seq[String]] = None): Unit = {
     val rdb = db.getOrElse(spark.catalog.currentDatabase)
     val full = fullName(db, name)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(name, Some(rdb)))
+    val meta = catalogTable(rdb, name)
     if (meta.bucketSpec.isDefined) { spark.catalog.refreshTable(full); return }
     // TTL applies at merge time (CH's model): expire rows FIRST — as a
     // mutation, so only files containing an expired row are rewritten —
@@ -2225,184 +2209,74 @@ class GraftSession(val spark: SparkSession) {
     meta.properties.get("graft.setting.ttl").foreach { ttl =>
       mutateTable(AlterMutate(db, name, Nil, s"($ttl) <= now()", partition))
     }
-    val loc = tableLocation(rdb, name)
+    val loc = tableDir(meta)
     underWriteLock(rdb, name) {
-      val target = spark.conf.getOption("graft.optimize.targetFileBytes")
-        .map(_.toLong).getOrElse(128L * 1024 * 1024)
-      import scala.jdk.CollectionConverters._
-      // Replay an interrupted predecessor first (see scaladoc). A stale
-      // .tmp is a crash before the atomic publish — no write started,
-      // discard it.
-      val intent = loc.resolve("_graft_intent")
-      java.nio.file.Files.deleteIfExists(loc.resolve("_graft_intent.tmp"))
-      if (java.nio.file.Files.exists(intent)) replayIntent(loc, intent, full)
+      settleIntent(meta)
       // OPTIMIZE ... PARTITION v: only that partition's directory is
       // listed, rewritten and (under FINAL) merged — the rest of the
       // table is untouched bytes, CH's partition-scoped merge
       val scopeDir = partition.map(v => loc.resolve(s"$PtkCol=" +
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .escapePathName(v)))
-      val walkRoot = scopeDir.getOrElse(loc)
-      val dataFiles =
-        if (!java.nio.file.Files.isDirectory(walkRoot)) Vector.empty
-        else {
-          val walk = java.nio.file.Files.walk(walkRoot)
-          try walk.iterator.asScala.filter(p =>
-            java.nio.file.Files.isRegularFile(p) &&
-              p.getFileName.toString.endsWith(".parquet") &&
-              !GraftSession.isHiddenPath(loc.relativize(p))).toVector
-          finally walk.close()
-        }
-      def filesNeeded(fs: Seq[java.nio.file.Path]): Int = math.max(1,
-        math.ceil(fs.map(java.nio.file.Files.size(_)).sum.toDouble / target).toInt)
+      val dataFiles = SystemParts.partFiles(scopeDir.getOrElse(loc)).map(_._2)
+      if (dataFiles.isEmpty) { spark.catalog.refreshTable(full); return }
+      val schema = spark.table(full).schema
+      val partitioned = schema.fieldNames.contains(PtkCol)
+      def scan(paths: Seq[java.nio.file.Path]): DataFrame =
+        spark.read.schema(schema).option("basePath", loc.toString)
+          .parquet(paths.map(_.toString): _*)
       // OPTIMIZE ... FINAL on a ReplacingMergeTree: the merge itself —
       // physically rewrite the table as its deduplicated view (same
       // per-key max-version selection as the FROM ... FINAL rewrite,
-      // partition-scoped like a real MergeTree merge). Reuses the
-      // intent/replay protocol with ONE change: the commit witness is the
-      // PLANNED deduplicated row count (computed up front), not the
-      // retired files' count — a crash mid-write counts short and rolls
-      // back to the originals; a complete write counts exactly and
-      // commits. Non-merging engines ignore FINAL (plain compaction).
+      // partition-scoped like a real MergeTree merge). Non-merging
+      // engines ignore FINAL (plain compaction).
       val mergedSel =
         if (fin && meta.properties.get("graft.engine").exists(isMergingEngine))
           mergedViewSelect(meta, rdb, name, withPtk = true)
         else None
-      if (mergedSel.isDefined) {
-        if (dataFiles.isEmpty) { spark.catalog.refreshTable(full); return }
-        val partitioned =
-          spark.table(full).schema.fieldNames.contains(PtkCol)
+      // OPTIMIZE ... DEDUPLICATE: CH's exact-duplicate-row removal at
+      // merge time — a full distinct over the scoped files (identical
+      // rows share their partition key, so the partitioned layout is
+      // preserved). DEDUPLICATE BY cols: duplicates are judged on the
+      // listed columns only; CH keeps an arbitrary row of each group —
+      // the deterministic stand-in here is the full-row MAX (field-order
+      // lexicographic, the same pinned divergence ReplacingMergeTree's
+      // no-version merge uses). The partition key joins the grouping
+      // implicitly: MergeTree merges never cross partitions.
+      def deduped: DataFrame = dedupBy match {
+        case None => scan(dataFiles).distinct()
+        case Some(by) =>
+          val all = schema.fieldNames.toSeq
+          by.foreach(c => require(all.exists(_.equalsIgnoreCase(c)),
+            s"DEDUPLICATE BY: no column $c in $name"))
+          val keys = by ++
+            (if (partitioned && !by.exists(_.equalsIgnoreCase(PtkCol)))
+              Seq(PtkCol) else Nil)
+          scan(dataFiles).groupBy(keys.map(c => col(s"`$c`")): _*)
+            .agg(max(struct(all.map(c => col(s"`$c`")): _*))
+              .as("__graft_rep"))
+            .select(all.map(c => col(s"__graft_rep.`$c`").as(c)): _*)
+      }
+      if (mergedSel.isDefined || dedup) {
         // partition-scoped FINAL merges (and retires) ONLY that
         // partition's rows — writing the full merged table while
         // retiring one directory would duplicate everything else
-        val merged = partition.foldLeft(spark.sql(mergedSel.get))(
-          (df, v) => df.where(col(s"`$PtkCol`") === lit(v)))
-        stagedReplace(loc, full, partitioned, merged,
-          dataFiles, "optf-", filesNeeded(dataFiles))
-        return
+        val rows = mergedSel.fold(deduped)(sel =>
+          partition.foldLeft(spark.sql(sel))(
+            (df, v) => df.where(col(s"`$PtkCol`") === lit(v))))
+        stagedReplace(meta, rows, dataFiles, rows.count(),
+          if (mergedSel.isDefined) "optf-" else "optd-")
+      } else {
+        val needs = dataFiles.groupBy(_.getParent)
+          .filter { case (_, fs) => fs.size > filesNeeded(fs) }
+        if (needs.isEmpty) { spark.catalog.refreshTable(full); return }
+        // a fragmented directory is rewritten whole, and nothing else
+        // publishes into the table under its write lock, so reading the
+        // directories reads exactly the retired files
+        val retired = needs.values.flatten.toSeq
+        stagedReplace(meta, scan(needs.keys.toSeq), retired,
+          rowsInFooters(retired), "opt-")
       }
-      // OPTIMIZE ... DEDUPLICATE: CH's exact-duplicate-row removal at
-      // merge time — a full distinct over the scoped files, through the
-      // same crash-safe staged replace (identical rows share their
-      // partition key, so the partitioned layout is preserved)
-      if (dedup) {
-        if (dataFiles.isEmpty) { spark.catalog.refreshTable(full); return }
-        val schema = spark.table(full).schema
-        val partitioned = schema.fieldNames.contains(PtkCol)
-        val src = spark.read.schema(schema)
-          .option("basePath", loc.toString)
-          .parquet(dataFiles.map(_.toString): _*)
-        // DEDUPLICATE BY cols: duplicates are judged on the listed
-        // columns only; CH keeps an arbitrary row of each group — the
-        // deterministic stand-in here is the full-row MAX (field-order
-        // lexicographic, the same pinned divergence ReplacingMergeTree's
-        // no-version merge uses). The partition key joins the grouping
-        // implicitly: MergeTree merges never cross partitions.
-        val deduped = dedupBy match {
-          case None => src.distinct()
-          case Some(by) =>
-            val all = schema.fieldNames.toSeq
-            by.foreach(c => require(all.exists(_.equalsIgnoreCase(c)),
-              s"DEDUPLICATE BY: no column $c in $name"))
-            val keys = by ++
-              (if (partitioned && !by.exists(_.equalsIgnoreCase(PtkCol)))
-                Seq(PtkCol) else Nil)
-            src.groupBy(keys.map(c => col(s"`$c`")): _*)
-              .agg(max(struct(all.map(c => col(s"`$c`")): _*))
-                .as("__graft_rep"))
-              .select(all.map(c => col(s"__graft_rep.`$c`").as(c)): _*)
-        }
-        stagedReplace(loc, full, partitioned, deduped,
-          dataFiles, "optd-", filesNeeded(dataFiles))
-        return
-      }
-      val needs = dataFiles.groupBy(_.getParent)
-        .filter { case (_, fs) => fs.size > filesNeeded(fs) }
-      if (needs.isEmpty) { spark.catalog.refreshTable(full); return }
-      // Publish the intent BEFORE the compaction write: the job tag (the
-      // output-attribution key), the originals to retire, and their
-      // footer row count (the commit witness). Atomic (temp +
-      // ATOMIC_MOVE) so a torn marker can never half-replay.
-      val retired = needs.values.flatten.toSeq
-      val tag = "opt-" + java.util.UUID.randomUUID.toString
-      val staging = loc.resolve(s"_graft_stage-$tag")
-      val intentTmp = loc.resolve("_graft_intent.tmp")
-      java.nio.file.Files.write(intentTmp,
-        (tag +: rowsInFooters(retired).toString +:
-          retired.map(p => loc.relativize(p).toString)).asJava)
-      java.nio.file.Files.move(intentTmp, intent,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      try {
-        val schema = spark.table(full).schema
-        val partitioned = schema.fieldNames.contains(PtkCol)
-        val outCols = schema.fieldNames.map(f => col(s"`$f`")).toSeq
-        failpoint("write")
-        if (partitioned) {
-          // one job over all fragmented dirs: read them with the table's
-          // basePath so __ptk survives, broadcast each dir's target file
-          // count, salt rows into that many write groups, and shuffle on
-          // (__ptk, salt) so each group becomes one output file
-          val nfRows = needs.toSeq.map { case (dir, fs) =>
-            val dn = dir.getFileName.toString
-            // the Hive default dir (__ptk=__HIVE_DEFAULT_PARTITION__)
-            // holds the NULL partition value: reading with basePath
-            // yields __ptk = NULL there, so its per-dir file count must
-            // join back null-safely (<=>) — a string-equality join would
-            // match zero rows and the "compaction" would silently drop
-            // the partition
-            Row(if (dn == defaultPartDir) null
-                else unescapePartValue(dn.stripPrefix(s"$PtkCol=")),
-              filesNeeded(fs))
-          }
-          val nfDf = spark.createDataFrame(nfRows.asJava, StructType(Seq(
-            StructField("__nfptk", StringType), StructField("__nf", IntegerType))))
-          val src = spark.read.schema(schema)
-            .option("basePath", loc.toString)
-            .parquet(needs.keys.map(_.toString).toSeq: _*)
-          // partitionBy writes the same __ptk=… layout (and Hive default
-          // dir) as the table itself, so staged relative paths map 1:1
-          // onto table directories
-          val joined = src
-            .join(broadcast(nfDf), col(s"`$PtkCol`") <=> col("__nfptk"))
-            .withColumn("__salt", pmod(monotonically_increasing_id(), col("__nf")))
-            .repartition(col(s"`$PtkCol`"), col("__salt"))
-            .select(outCols: _*)
-          sortedRuns(meta, joined, withPtk = true)
-            .write.options(bloomWriteOpts(meta)).partitionBy(PtkCol)
-            .mode("overwrite").parquet(staging.toString)
-        } else {
-          val nf = filesNeeded(needs.values.flatten.toSeq)
-          val compacted = spark.read.schema(schema).parquet(loc.toString)
-            .repartition(nf)
-            .select(outCols: _*)
-          sortedRuns(meta, compacted, withPtk = false)
-            .write.options(bloomWriteOpts(meta))
-            .mode("overwrite").parquet(staging.toString)
-        }
-        // the staged files are committed (Spark's own job commit);
-        // publish them into the table under tag-prefixed names
-        stagedDataFiles(staging).foreach(publishStaged(loc, staging, tag, _))
-      } catch {
-        case t: Throwable =>
-          // no original has been touched yet, so deleting this job's own
-          // (tag-attributed) output and withdrawing the intent restores
-          // the exact pre-OPTIMIZE state — a lingering intent only ever
-          // means a process crash (ADVICE r7 medium)
-          taggedFiles(retired.map(_.getParent).distinct, tag)
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-          deleteRecursively(staging)
-          java.nio.file.Files.deleteIfExists(intent)
-          spark.catalog.refreshTable(full)
-          throw t
-      }
-      // from here the job is committed and failures roll FORWARD: the
-      // retirement is idempotent, and if anything below dies the next
-      // OPTIMIZE's replay (full witness count ⇒ committed) finishes it
-      failpoint("retire")
-      retired.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      deleteRecursively(staging)
-      java.nio.file.Files.delete(intent)
-      spark.catalog.refreshTable(full)
     }
   }
 
@@ -2422,16 +2296,15 @@ class GraftSession(val spark: SparkSession) {
     val full = fullName(a.db, a.name)
     require(spark.table(full).schema.fieldNames.contains(PtkCol),
       s"ALTER ... PARTITION: table ${a.name} is not partitioned")
-    val loc = tableLocation(rdb, a.name)
+    val meta = catalogTable(rdb, a.name)
+    val loc = tableDir(meta)
     val dirName = s"$PtkCol=" + org.apache.spark.sql.catalyst.catalog
       .ExternalCatalogUtils.escapePathName(a.value)
     val live = loc.resolve(dirName)
     val detachedRoot = loc.resolve("_graft_detached")
     val detached = detachedRoot.resolve(dirName)
     underWriteLock(rdb, a.name) {
-      java.nio.file.Files.deleteIfExists(loc.resolve("_graft_intent.tmp"))
-      val intent = loc.resolve("_graft_intent")
-      if (java.nio.file.Files.exists(intent)) replayIntent(loc, intent, full)
+      settleIntent(meta)
       def dropCatalogEntry(): Unit =
         spark.sql(s"ALTER TABLE $full DROP IF EXISTS PARTITION " +
           s"(`$PtkCol`='${a.value.replace("'", "''")}')"): Unit
@@ -2493,8 +2366,7 @@ class GraftSession(val spark: SparkSession) {
     val full = fullName(db, name)
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(name, Some(rdb)))
-    val pks = meta.properties.get("graft.pks")
-      .map(_.split("").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+    val pks = meta.sortingKey.toSet
     require(!pks.contains(col),
       s"$op: cannot alter sorting-key column $col (ClickHouse forbids it)")
     require(!meta.properties.get("graft.ptk.expr").exists(e =>
@@ -2721,54 +2593,32 @@ class GraftSession(val spark: SparkSession) {
     recordNormalizedScript(rdb, a.name)
   }
 
-  /** Rewrite EVERY data file of a table through `project`, under the
-    * table write lock and the intent/replay protocol. Used by the column
-    * DDL that genuinely must touch data (rename/modify).
+  /** Rewrite EVERY data file of a table through `project` — one
+    * row-preserving [[stagedReplace]] under the table write lock. Used by
+    * the column DDL that genuinely must touch data (rename/modify) and by
+    * MATERIALIZE INDEX.
     */
   private def rewriteTableFiles(rdb: String, name: String, full: String,
       meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
       project: DataFrame => DataFrame, tagPrefix: String): Unit = {
-    import scala.jdk.CollectionConverters._
     val schema = spark.table(full).schema
-    val partitioned = schema.fieldNames.contains(PtkCol)
-    val loc = tableLocation(rdb, name)
+    val loc = tableDir(meta)
     underWriteLock(rdb, name) {
-      java.nio.file.Files.deleteIfExists(loc.resolve("_graft_intent.tmp"))
-      val intent = loc.resolve("_graft_intent")
-      if (java.nio.file.Files.exists(intent)) replayIntent(loc, intent, full)
-      val walk = java.nio.file.Files.walk(loc)
-      val dataFiles =
-        try walk.iterator.asScala.filter(p =>
-          java.nio.file.Files.isRegularFile(p) &&
-            p.getFileName.toString.endsWith(".parquet") &&
-            !GraftSession.isHiddenPath(loc.relativize(p))).toVector
-        finally walk.close()
+      settleIntent(meta)
+      val dataFiles = SystemParts.partFiles(loc).map(_._2)
       if (dataFiles.isEmpty) { spark.catalog.refreshTable(full); return }
       val src = spark.read.schema(schema)
         .option("basePath", loc.toString)
         .parquet(dataFiles.map(_.toString): _*)
       val projected = project(src)
       val withPtk =
-        if (partitioned && !projected.columns.contains(PtkCol))
+        if (schema.fieldNames.contains(PtkCol) && !projected.columns.contains(PtkCol))
           projected.withColumn(PtkCol, src(s"`$PtkCol`"))
         else projected
-      val target = spark.conf.getOption("graft.optimize.targetFileBytes")
-        .map(_.toLong).getOrElse(128L * 1024 * 1024)
-      val nf = math.max(1, math.ceil(dataFiles
-        .map(java.nio.file.Files.size(_)).sum.toDouble / target).toInt)
-      stagedReplace(loc, full, partitioned, withPtk, dataFiles, tagPrefix, nf)
+      stagedReplace(meta, withPtk, dataFiles, rowsInFooters(dataFiles), tagPrefix)
     }
   }
 
-  /** Crash-safe staged rewrite under the intent/replay protocol: replace
-    * `retired` (under `loc`) with the rows of `df`, written into a
-    * staging dir, tag-published into the table's partition layout, and
-    * only then retired. The commit witness in the intent is the PLANNED
-    * output row count (computed up front): a crash mid-write counts
-    * short on replay and rolls back to the originals; a complete write
-    * counts exactly and commits. Shared by OPTIMIZE ... FINAL (retires
-    * every file) and mutations (retires only the affected files).
-    */
   /** Declared bloom-filter write options for DIRECT parquet writes of a
     * graft table's data — paths that bypass the catalog relation
     * (OPTIMIZE compaction/FINAL/DEDUPLICATE, mutations) must re-apply
@@ -2788,68 +2638,174 @@ class GraftSession(val spark: SparkSession) {
   private def sortedRuns(
       meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
       df: DataFrame, withPtk: Boolean): DataFrame = {
-    val pks = meta.properties.get("graft.pks")
-      .map(_.split("").filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      .filter(df.columns.contains)
+    val pks = meta.sortingKey.filter(df.columns.contains)
     if (pks.isEmpty) df
     else df.sortWithinPartitions(
       ((if (withPtk && df.columns.contains(PtkCol)) Seq(PtkCol) else Nil)
         ++ pks).map(c => col(s"`$c`")): _*)
   }
 
-  private def stagedReplace(loc: java.nio.file.Path, full: String,
-      partitioned: Boolean, df: DataFrame,
-      retired: Seq[java.nio.file.Path], tagPrefix: String,
-      nFiles: Int): Unit = {
-    import scala.jdk.CollectionConverters._
-    val expected = df.count()
-    val intent = loc.resolve("_graft_intent")
+  /** How many files `fs` are rewritten into: ceil(bytes / target) with
+    * target `graft.optimize.targetFileBytes` (default 128 MB, the
+    * maxPartitionBytes-aligned scan unit), at least one.
+    */
+  private def filesNeeded(fs: Seq[java.nio.file.Path]): Int = {
+    val target = spark.conf.getOption("graft.optimize.targetFileBytes")
+      .map(_.toLong).getOrElse(128L * 1024 * 1024)
+    math.max(1, math.ceil(
+      fs.map(java.nio.file.Files.size(_)).sum.toDouble / target).toInt)
+  }
+
+  /** The one crash-safe part rewrite: replace `retired` (part files of
+    * `meta`'s table) with the rows of `df`. OPTIMIZE compaction, FINAL
+    * and DEDUPLICATE, mutations, RENAME/MODIFY COLUMN and MATERIALIZE
+    * INDEX all go through it. Call under the table's write lock, after
+    * [[settleIntent]].
+    *
+    * Layout: each partition directory holding retired files gets
+    * [[filesNeeded]] of them (an unpartitioned table, of all of them) —
+    * no single giant file per partition: a file is the scan-parallelism
+    * unit on a cluster. A per-row salt spreads a directory's rows over
+    * consecutive write slots, one task and so one file each; rows of a
+    * partition no retired file sits in keep one slot. Files stay sorted
+    * runs on the sorting key and keep the declared bloom filters: this
+    * direct parquet write bypasses the catalog relation, so both are
+    * re-applied here.
+    *
+    * Protocol — crash-safe without a lock on readers, via an INTENT
+    * marker with ATTRIBUTABLE output and a commit witness:
+    *   - intent: `_graft_intent`, published atomically (temp +
+    *     ATOMIC_MOVE) BEFORE the write, records a unique job tag, the
+    *     witness and the files to retire;
+    *   - stage: the job writes into a hidden staging directory
+    *     (`_graft_stage-<tag>`, invisible to readers);
+    *   - publish: each staged file moves into its table directory under
+    *     a tag-prefixed name;
+    *   - rollback: a plain EXCEPTION (disk full, interrupted job) before
+    *     the publish moves finish deletes this job's own output and
+    *     withdraws the intent, originals untouched — so a lingering
+    *     intent only ever means a process crash (ADVICE r7 medium);
+    *   - retire: the originals, the staging directory, then the intent
+    *     are deleted. From the publish on, failures roll FORWARD.
+    *
+    * The witness is the row count of the complete output: the retired
+    * files' footer total for a row-preserving rewrite (compaction, column
+    * rewrites — no Spark job), the planned `count()` for a row-changing
+    * one (FINAL, DEDUPLICATE, mutations). [[settleIntent]] replays a
+    * crashed predecessor and touches ONLY files provably from it —
+    * staged files plus tag-prefixed files — so a file committed by anyone
+    * else (an INSERT landing between the intent publish and the replay)
+    * is invisible to the decision and is never deleted (ADVICE r7 high).
+    * Output counting SHORT of the witness means the write never committed
+    * (every written file holds at least one row): roll back. A full count
+    * proves the commit: finish the publish moves and the retirement,
+    * idempotently. Every crash instant is covered: before the intent
+    * publish nothing has happened (a stale `.tmp` is discarded); between
+    * publish and commit the replay rolls back; between commit and the
+    * retirement deletes (the window a post-commit retire marker cannot
+    * cover — VERDICT r6) it completes them. Readers may see duplicates
+    * only in that last window, which ends at the table's next rewrite,
+    * partition operation or catalog restore.
+    */
+  private def stagedReplace(
+      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable, df: DataFrame,
+      retired: Seq[java.nio.file.Path], witness: Long, tagPrefix: String): Unit = {
+    val loc = tableDir(meta)
     val tag = tagPrefix + java.util.UUID.randomUUID.toString
     val staging = loc.resolve(s"_graft_stage-$tag")
     val intentTmp = loc.resolve("_graft_intent.tmp")
     java.nio.file.Files.write(intentTmp,
-      (tag +: expected.toString +:
+      (tag +: witness.toString +:
         retired.map(p => loc.relativize(p).toString)).asJava)
-    java.nio.file.Files.move(intentTmp, intent,
+    java.nio.file.Files.move(intentTmp, loc.resolve("_graft_intent"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     try {
       failpoint("write")
-      // rewrites must keep the table's part physics: sorted runs on the
-      // sorting key (CH merges keep parts sorted) and declared bloom
-      // filters — this direct parquet write bypasses the catalog
-      // relation, so both must be re-applied here or OPTIMIZE/mutations
-      // silently degrade the layout the insert path built
-      val meta2 = {
-        val parts = full.replace("`", "").split("\\.", 2)
-        val (d, t) =
-          if (parts.length == 2) (parts(0), parts(1))
-          else (spark.sessionState.catalog.getCurrentDatabase, parts(0))
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(t, Some(d)))
-      }
-      val base = if (partitioned)
-        df.repartition(math.max(nFiles, 1), col(s"`$PtkCol`"))
-      else df.repartition(math.max(nFiles, 1))
-      val sorted = sortedRuns(meta2, base, withPtk = partitioned)
-      val w = if (partitioned) sorted.write.partitionBy(PtkCol)
-              else sorted.write
-      w.options(bloomWriteOpts(meta2)).mode("overwrite")
+      val partitioned = meta.partitionColumnNames.nonEmpty
+      val laid =
+        if (!partitioned) df.repartition(filesNeeded(retired))
+        else {
+          // directory i owns the slots [off_i, off_i + nf_i); the Hive
+          // default dir holds the NULL partition value, so its row joins
+          // back null-safely (<=>)
+          val dirs = retired.groupBy(_.getParent).toSeq
+            .map { case (dir, fs) => (dir.getFileName.toString, filesNeeded(fs)) }
+          val offs = dirs.scanLeft(0)(_ + _._2)
+          val slots = dirs.zip(offs).map { case ((dn, nf), off) =>
+            Row(if (dn == defaultPartDir) null
+                else unescapePartValue(dn.stripPrefix(s"$PtkCol=")), nf, off)
+          }
+          val slotDf = spark.createDataFrame(slots.asJava, StructType(Seq(
+            StructField("__slotptk", StringType), StructField("__nf", IntegerType),
+            StructField("__off", IntegerType))))
+          df.join(broadcast(slotDf), col(s"`$PtkCol`") <=> col("__slotptk"), "left")
+            .repartitionById(offs.last, coalesce(col("__off"), lit(0)) +
+              pmod(monotonically_increasing_id(),
+                coalesce(col("__nf"), lit(1)).cast(LongType)).cast(IntegerType))
+            .select(df.columns.map(c => col(s"`$c`")).toSeq: _*)
+        }
+      val w = sortedRuns(meta, laid, withPtk = partitioned).write
+      (if (partitioned) w.partitionBy(PtkCol) else w)
+        .options(bloomWriteOpts(meta)).mode("overwrite")
         .parquet(staging.toString)
       stagedDataFiles(staging).foreach(publishStaged(loc, staging, tag, _))
     } catch {
-      case t: Throwable =>
-        taggedFiles(retired.map(_.getParent).distinct, tag)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        deleteRecursively(staging)
-        java.nio.file.Files.deleteIfExists(intent)
-        spark.catalog.refreshTable(full)
-        throw t
+      case t: Throwable => rollBack(meta, tag, retired); throw t
     }
     failpoint("retire")
+    retire(meta, tag, retired)
+  }
+
+  /** Settle the table's pending rewrite, if any (see [[stagedReplace]]):
+    * discard a stale `_graft_intent.tmp` (a crash before the intent's
+    * atomic publish — no write started), then replay a published
+    * intent: roll its write back when its own output counts short of the
+    * witness, else finish its publish moves and retirement. Idempotent —
+    * a replay that itself crashes re-replays. Call under the table's
+    * write lock, before anything else touches its parts.
+    */
+  private def settleIntent(
+      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable): Unit = {
+    val loc = tableDir(meta)
+    java.nio.file.Files.deleteIfExists(loc.resolve("_graft_intent.tmp"))
+    val intent = loc.resolve("_graft_intent")
+    if (java.nio.file.Files.exists(intent)) {
+      val lines = java.nio.file.Files.readAllLines(intent).asScala
+        .filter(_.nonEmpty).toVector
+      val tag = lines.head
+      val retired = lines.drop(2).map(loc.resolve(_))
+      val staging = loc.resolve(s"_graft_stage-$tag")
+      val staged = stagedDataFiles(staging)
+      val moved = taggedFiles(retired.map(_.getParent).distinct, tag)
+      if (rowsInFooters(staged ++ moved) >= lines(1).toLong) {
+        staged.foreach(publishStaged(loc, staging, tag, _))
+        retire(meta, tag, retired)
+      } else rollBack(meta, tag, retired)
+    }
+  }
+
+  /** Withdraw rewrite `tag`: delete its own (tag-attributed) output and
+    * staging directory, then its intent. The originals were never
+    * touched. */
+  private def rollBack(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+      tag: String, retired: Seq[java.nio.file.Path]): Unit = {
+    val loc = tableDir(meta)
+    taggedFiles(retired.map(_.getParent).distinct, tag)
+      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    deleteRecursively(loc.resolve(s"_graft_stage-$tag"))
+    java.nio.file.Files.deleteIfExists(loc.resolve("_graft_intent"))
+    spark.catalog.refreshTable(meta.identifier.quotedString)
+  }
+
+  /** Finish published rewrite `tag`: delete the originals, its staging
+    * directory, then its intent. Idempotent up to the intent delete. */
+  private def retire(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+      tag: String, retired: Seq[java.nio.file.Path]): Unit = {
+    val loc = tableDir(meta)
     retired.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    deleteRecursively(staging)
-    java.nio.file.Files.delete(intent)
-    spark.catalog.refreshTable(full)
+    deleteRecursively(loc.resolve(s"_graft_stage-$tag"))
+    java.nio.file.Files.delete(loc.resolve("_graft_intent"))
+    spark.catalog.refreshTable(meta.identifier.quotedString)
   }
 
   /** A ClickHouse mutation — `ALTER TABLE t DELETE WHERE` / `ALTER TABLE
@@ -2863,18 +2819,16 @@ class GraftSession(val spark: SparkSession) {
     * alone, and updated values cast back to the column's declared type.
     * CH's restrictions carried: sorting-key/PK columns and columns the
     * PARTITION BY expression reads cannot be updated (a partition-key
-    * update would move rows across partition dirs). Crash-safe via the
-    * same intent/replay protocol as OPTIMIZE (planned-count witness).
+    * update would move rows across partition dirs). Crash-safe through
+    * [[stagedReplace]] (planned-count witness).
     */
   private def mutateTable(m: AlterMutate): Unit = {
     val rdb = m.db.getOrElse(spark.catalog.currentDatabase)
     val full = fullName(m.db, m.name)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(m.name, Some(rdb)))
+    val meta = catalogTable(rdb, m.name)
     val schema = spark.table(full).schema
     val partitioned = schema.fieldNames.contains(PtkCol)
-    val pks = meta.properties.get("graft.pks")
-      .map(_.split("").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+    val pks = meta.sortingKey.toSet
     val ptkExpr = meta.properties.get("graft.ptk.expr")
     m.sets.foreach { case (c, _) =>
       require(schema.fieldNames.contains(c) && c != PtkCol,
@@ -2888,11 +2842,9 @@ class GraftSession(val spark: SparkSession) {
         s"UPDATE: cannot update $c — the PARTITION BY expression depends " +
           "on it and rows cannot move between partitions")
     }
-    val loc = tableLocation(rdb, m.name)
+    val loc = tableDir(meta)
     underWriteLock(rdb, m.name) {
-      java.nio.file.Files.deleteIfExists(loc.resolve("_graft_intent.tmp"))
-      val intent = loc.resolve("_graft_intent")
-      if (java.nio.file.Files.exists(intent)) replayIntent(loc, intent, full)
+      settleIntent(meta)
       val cond = coalesce(expr(m.where), lit(false))
       // IN PARTITION scopes the file-locating scan (partition-pruned: it
       // reads one directory, not the table) AND the rewrite set
@@ -2920,63 +2872,18 @@ class GraftSession(val spark: SparkSession) {
         }
       val retired = affected.map(u =>
         java.nio.file.Paths.get(new java.net.URI(u).getPath))
-      val target = spark.conf.getOption("graft.optimize.targetFileBytes")
-        .map(_.toLong).getOrElse(128L * 1024 * 1024)
-      val nf = math.max(1, math.ceil(retired
-        .map(java.nio.file.Files.size(_)).sum.toDouble / target).toInt)
-      stagedReplace(loc, full, partitioned, rewritten, retired, "mut-", nf)
+      stagedReplace(meta, rewritten, retired, rewritten.count(), "mut-")
     }
   }
 
-  /** Replay an interrupted predecessor's intent. Only files attributable
-    * to the crashed job — its staging directory plus tag-prefixed files
-    * in the table directories — are ever touched; a file committed by
-    * anyone else (e.g. an INSERT landing between the intent publish and
-    * this replay) is invisible to the decision and never deleted
-    * (ADVICE r7 high). Witness: a job that died before its Spark write
-    * committed counts SHORT of the expected total ⇒ delete its own
-    * output; a full count proves commit ⇒ finish the publish moves and
-    * the retirement. Idempotent — a replay that itself crashes re-replays.
-    */
-  private def replayIntent(loc: java.nio.file.Path, intent: java.nio.file.Path,
-      full: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val lines = java.nio.file.Files.readAllLines(intent).asScala
-      .filter(_.nonEmpty).toVector
-    val tag = lines.head
-    val expected = lines(1).toLong
-    val originals = lines.drop(2).map(loc.resolve(_))
-    val staging = loc.resolve(s"_graft_stage-$tag")
-    val staged = stagedDataFiles(staging)
-    val moved = taggedFiles(originals.map(_.getParent).distinct, tag)
-    if (rowsInFooters(staged ++ moved) >= expected) {
-      staged.foreach(publishStaged(loc, staging, tag, _))
-      originals.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } else {
-      moved.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-    deleteRecursively(staging)
-    java.nio.file.Files.delete(intent)
-    spark.catalog.refreshTable(full)
-  }
-
-  /** Committed data files under a compaction staging dir (skips Spark's
+  /** Committed data files under a rewrite's staging dir (skips Spark's
     * own `_SUCCESS`/`_temporary`). Empty when no write committed.
     */
-  private def stagedDataFiles(staging: java.nio.file.Path): Vector[java.nio.file.Path] =
-    if (!java.nio.file.Files.isDirectory(staging)) Vector.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      val w = java.nio.file.Files.walk(staging)
-      try w.iterator.asScala.filter(p =>
-        java.nio.file.Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet") &&
-          !GraftSession.isHiddenPath(staging.relativize(p))).toVector
-      finally w.close()
-    }
+  private def stagedDataFiles(staging: java.nio.file.Path): Seq[java.nio.file.Path] =
+    SystemParts.partFiles(staging).map(_._2)
 
   /** Move one staged file into its table directory under a tag-prefixed
-    * name — the prefix is what makes compaction output attributable on
+    * name — the prefix is what makes rewrite output attributable on
     * replay. Staged relative paths (`__ptk=…/part-…`) map 1:1 onto table
     * directories because the staging write used the same partition layout.
     */
@@ -2991,8 +2898,7 @@ class GraftSession(val spark: SparkSession) {
   /** The tag-attributed (this-job-only) parquet files in the given table
     * directories. */
   private def taggedFiles(dirs: Seq[java.nio.file.Path],
-      tag: String): Vector[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
+      tag: String): Vector[java.nio.file.Path] =
     dirs.filter(java.nio.file.Files.isDirectory(_)).flatMap { d =>
       val s = java.nio.file.Files.list(d)
       try s.iterator.asScala.filter { p =>
@@ -3001,7 +2907,6 @@ class GraftSession(val spark: SparkSession) {
       }.toVector
       finally s.close()
     }.toVector
-  }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
@@ -3012,18 +2917,19 @@ class GraftSession(val spark: SparkSession) {
     }
 
   /** Test-only fault injection: setting `graft.optimize.failpoint` to a
-    * site name makes that site throw, simulating a mid-compaction
-    * failure (disk full, interrupted job) without killing the process.
-    * Sites: `write` and `retire` (compaction and mutation rewrites),
-    * `publish` (a direct part write, after each part is renamed into
-    * view), `append` (a job-path append, after its write job returns).
+    * site name makes that site throw, simulating a mid-rewrite failure
+    * (disk full, interrupted job) without killing the process. Sites:
+    * `write` and `retire` ([[stagedReplace]], before its write and before
+    * its retirement), `publish` (a direct part write, after each part is
+    * renamed into view), `append` (a job-path append, after its write job
+    * returns).
     */
   private def failpoint(site: String): Unit =
     if (spark.conf.getOption("graft.optimize.failpoint").contains(site))
       throw new RuntimeException(s"graft.optimize.failpoint: $site")
 
-  /** Total row count of part files from their footers, unmemoized: the
-    * OPTIMIZE intent's commit witness, read while the parts are being
+  /** Total row count of part files from their footers, unmemoized: a
+    * rewrite's commit witness, read while the parts are being
     * rewritten. */
   private def rowsInFooters(ps: Seq[java.nio.file.Path]): Long = {
     val hconf = spark.sessionState.newHadoopConf()
@@ -3333,11 +3239,6 @@ class GraftSession(val spark: SparkSession) {
     (schema, chTypes(db, name), tableProp(db, name, "graft.ptk.expr"))
   }
 
-  /** Align a DataFrame of source values (any types) to the table's declared
-    * schema + computed __ptk, then append. The partition expression is
-    * evaluated by Catalyst codegen over the CH function pack — the Spark
-    * replacement for the reference's cranelift JIT (write.rs:146-179).
-    */
   /** ClickHouse MATERIALIZED VIEW: a normal engine table whose schema
     * derives from the SELECT (the CTAS machinery), tagged with
     * `graft.mv.src` / `graft.mv.select` properties; [[appendToTable]]
@@ -3406,17 +3307,6 @@ class GraftSession(val spark: SparkSession) {
         } yield (p, tbl, sel)
       }
 
-  /** ALTER TABLE … ADD / DROP / MATERIALIZE INDEX — the skipping-index
-    * DDL family over the physical parquet-bloom wiring: ADD records the
-    * column (NEW writes carry the filter), MATERIALIZE rewrites existing
-    * files through the staged-replace machinery so OLD data carries it
-    * too (CH's MATERIALIZE INDEX contract; sorted runs re-applied with
-    * it), DROP detaches (filters already in old footers are inert
-    * bytes). Non-bloom kinds are accepted as documentation, CREATE
-    * parity. Tracked (bloom) indexes are addressed by their COLUMN name
-    * or the normalized `bf_<col>` (original creation names are not
-    * persisted — the normalized replay script re-emits bf_<col>).
-    */
   /** `ALTER TABLE t ADD CONSTRAINT n CHECK e` / `DROP CONSTRAINT n` —
     * CH's constraint lifecycle (MergeTree mutations docs): ADD applies
     * to FUTURE inserts only (existing rows are NOT re-validated — CH
@@ -3466,6 +3356,17 @@ class GraftSession(val spark: SparkSession) {
     spark.catalog.refreshTable(full.replace("`", ""))
   }
 
+  /** ALTER TABLE … ADD / DROP / MATERIALIZE INDEX — the skipping-index
+    * DDL family over the physical parquet-bloom wiring: ADD records the
+    * column (NEW writes carry the filter), MATERIALIZE rewrites existing
+    * files through the staged-replace machinery so OLD data carries it
+    * too (CH's MATERIALIZE INDEX contract; sorted runs re-applied with
+    * it), DROP detaches (filters already in old footers are inert
+    * bytes). Non-bloom kinds are accepted as documentation, CREATE
+    * parity. Tracked (bloom) indexes are addressed by their COLUMN name
+    * or the normalized `bf_<col>` (original creation names are not
+    * persisted — the normalized replay script re-emits bf_<col>).
+    */
   private[graft] def alterIndex(ai: AlterIndex): DataFrame = {
     val rdb = ai.db.getOrElse(spark.catalog.currentDatabase)
     val tid = org.apache.spark.sql.catalyst.TableIdentifier(ai.name, Some(rdb))
@@ -3521,28 +3422,7 @@ class GraftSession(val spark: SparkSession) {
       case "materialize" =>
         // full rewrite: EXISTING files gain the declared filters (and the
         // sorted-run discipline) — stagedReplace re-applies both
-        import scala.jdk.CollectionConverters._
-        val loc = java.nio.file.Paths.get(
-          new java.net.URI(meta.location.toString).getPath)
-        val dataFiles =
-          if (!java.nio.file.Files.isDirectory(loc)) Vector.empty
-          else {
-            val walk = java.nio.file.Files.walk(loc)
-            try walk.iterator.asScala.filter(p =>
-              java.nio.file.Files.isRegularFile(p) &&
-                p.getFileName.toString.endsWith(".parquet") &&
-                !GraftSession.isHiddenPath(loc.relativize(p))).toVector
-            finally walk.close()
-          }
-        if (dataFiles.nonEmpty) {
-          val schema = spark.table(full).schema
-          val partitioned = schema.fieldNames.contains(PtkCol)
-          val src = spark.read.schema(schema)
-            .option("basePath", loc.toString)
-            .parquet(dataFiles.map(_.toString): _*)
-          stagedReplace(loc, full, partitioned, src, dataFiles, "idxm-",
-            math.max(dataFiles.size, 1))
-        }
+        rewriteTableFiles(rdb, ai.name, full, meta, identity, "idxm-")
         emptyOk
     }
   }
@@ -4164,10 +4044,9 @@ class GraftSession(val spark: SparkSession) {
     // columns would come back Nullable on DESC and the wire. PKs come
     // from the graft.pks prop (recorded at create); for pre-prop tables
     // the bucket spec's column list is the same fact.
-    val pks: Set[String] = meta.properties.get("graft.pks")
-      .map(_.split("").filter(_.nonEmpty).toSet)
-      .orElse(meta.bucketSpec.map(_.bucketColumnNames.toSet))
-      .getOrElse(Set.empty)
+    val pks: Set[String] =
+      if (meta.sortingKey.nonEmpty) meta.sortingKey.toSet
+      else meta.bucketSpec.map(_.bucketColumnNames.toSet).getOrElse(Set.empty)
     val notNulls: Set[String] = meta.properties.get("graft.notnull")
       .map(_.split("\u0001").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
     // Nested families re-group into their `n Nested(a T, b U)` clause --
@@ -4357,6 +4236,11 @@ class GraftSession(val spark: SparkSession) {
     next.createOrReplaceTempView(name)
   }
 
+  /** Align a DataFrame of source values (any types) to the table's declared
+    * schema + computed __ptk, then append. The partition expression is
+    * evaluated by Catalyst codegen over the CH function pack — the Spark
+    * replacement for the reference's cranelift JIT (write.rs:146-179).
+    */
   private def appendToTable(db: Option[String], name: String, src: DataFrame,
                             srcIsRaw: Boolean, mvDepth: Int = 0): Unit = {
     if (tempDef(db, name).isDefined) { appendTempTable(name, src, srcIsRaw); return }
@@ -4419,8 +4303,7 @@ class GraftSession(val spark: SparkSession) {
     // must be EXACTLY the rows the base append landed: a localCheckpoint
     // pin, unless re-executing the block's plan provably yields the same
     // rows (see mvRescanSafe) — then the MV pass re-runs the plan: one
-    // fewer job, no storage pin. `graft.mv.rescan=off` restores the
-    // unconditional checkpoint.
+    // fewer job, no storage pin.
     val hasMvs = mvsFor(rdbName, name).nonEmpty
     val mustPin = hasMvs && !mvRescanSafe(checked, rdbName, name)
     val block = if (mustPin) checked.localCheckpoint(eager = true) else checked
@@ -4442,12 +4325,9 @@ class GraftSession(val spark: SparkSession) {
       // (partition dir first, so each output file is one sorted run);
       // bucketed tables skip this — their CLUSTERED/SORTED layout already
       // owns the ordering.
-      val sortKeys = tableProp(db, name, "graft.pks")
-        .map(_.split("\u0001").filter(_.nonEmpty).toSeq).getOrElse(Nil)
-        .filter(withPtk.columns.contains)
-      val bucketed = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(name, Some(rdbName)))
-        .bucketSpec.isDefined
+      val meta = catalogTable(rdbName, name)
+      val sortKeys = meta.sortingKey.filter(withPtk.columns.contains)
+      val bucketed = meta.bucketSpec.isDefined
       // Partitioned inserts hash-distribute by the partition key before
       // the write (guide §6 / Iceberg write.distribution-mode=hash): a
       // task holding every partition value writes one file PER value —
@@ -4455,11 +4335,9 @@ class GraftSession(val spark: SparkSession) {
       // clustered write lands P files and encodes partition values in
       // parallel. Explicit width so AQE's byte-based coalescing cannot
       // fold the tiny-byte exchange back to one task (the spreadHint
-      // lesson). `graft.insert.distribute=off` restores the
-      // straight-through plan.
+      // lesson).
       val distributed =
-        if (ptkExpr.isDefined && !bucketed &&
-            spark.conf.getOption("graft.insert.distribute").forall(_ != "off"))
+        if (ptkExpr.isDefined && !bucketed)
           withPtk.repartition(spark.sparkContext.defaultParallelism,
             col(s"`$PtkCol`"))
         else withPtk
@@ -4508,8 +4386,9 @@ class GraftSession(val spark: SparkSession) {
     import scala.jdk.CollectionConverters._
     val cat = spark.sessionState.catalog
     val ident = org.apache.spark.sql.catalyst.TableIdentifier(name, Some(rdb))
-    val loc = tableLocation(rdb, name)
-    val partitioned = cat.getTableMetadata(ident).partitionColumnNames.nonEmpty
+    val meta = cat.getTableMetadata(ident)
+    val loc = tableDir(meta)
+    val partitioned = meta.partitionColumnNames.nonEmpty
     def visible(): Set[java.nio.file.Path] =
       if (!java.nio.file.Files.isDirectory(loc)) Set.empty
       else {
@@ -4552,7 +4431,6 @@ class GraftSession(val spark: SparkSession) {
     */
   private def mvRescanSafe(df: DataFrame, rdb: String,
                            target: String): Boolean = {
-    if (spark.conf.getOption("graft.mv.rescan").exists(_ == "off")) return false
     // subquery plans too: collectLeaves does not descend into them, and a
     // scalar subquery scanning the target table is just as unsafe
     val plans = df.queryExecution.analyzed +:
@@ -4803,9 +4681,7 @@ class GraftSession(val spark: SparkSession) {
         case Some(b) => b
         case None => return None
       }
-    val pks = meta.properties.get("graft.pks")
-      .map(_.split("\u0001").filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      .filter(k => dataCols.exists(_.name == k))
+    val pks = meta.sortingKey.filter(k => dataCols.exists(_.name == k))
     val bloomCols = meta.properties.get("graft.bloom").toSeq
       .flatMap(_.split(",").filter(_.nonEmpty))
       .filter(c => dataCols.exists(_.name == c))
@@ -4817,9 +4693,6 @@ class GraftSession(val spark: SparkSession) {
       storage = meta.storage))
   }
 
-  /** The table's declared data schema (without the hidden partition key) —
-    * what a wire client's INSERT header block advertises.
-    */
   /** Declared LowCardinality wire types by data-column position — what the
     * INSERT header block must advertise so a real client frames those
     * columns with CH's dict-block serialization (blocks.rs:480-531).
@@ -4843,6 +4716,9 @@ class GraftSession(val spark: SparkSession) {
     i => if (i >= 0 && i < byPos.length) byPos(i) else None
   }
 
+  /** The table's declared data schema (without the hidden partition key) —
+    * what a wire client's INSERT header block advertises.
+    */
   def dataSchema(db: Option[String], name: String): StructType =
     StructType(spark.table(fullName(db, name)).schema.fields.filter(_.name != PtkCol))
 
@@ -5126,6 +5002,16 @@ object GraftSession {
 
   /** Hidden partition-key column name. */
   private[graft] val PtkCol = "__ptk"
+
+  /** What a graft table's CREATE recorded in its catalog properties. */
+  private[graft] implicit class GraftTable(
+      private val meta: org.apache.spark.sql.catalyst.catalog.CatalogTable)
+      extends AnyVal {
+    /** The sorting key (`graft.pks`), in declared order; empty when the
+      * table has none. */
+    def sortingKey: Seq[String] = meta.properties.get("graft.pks")
+      .map(_.split("\u0001").filter(_.nonEmpty).toSeq).getOrElse(Nil)
+  }
 
   /** Spark's data-file listing rule: a path is data only if NO component is
     * hidden — starts with '.' or with '_' (partition dirs like `__ptk=...`

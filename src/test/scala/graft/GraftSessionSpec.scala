@@ -323,7 +323,7 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("partitioned INSERT hash-distributes by the partition key (r19-opt) " +
-    "and lands identical rows with the distribution on or off") {
+    "and lands every row in its partition") {
     // INSERT ... SELECT from a table: the Spark write job the
     // distribution applies to (VALUES rows take the direct part writer)
     g.sql("DROP TABLE IF EXISTS ins_dist; DROP TABLE IF EXISTS ins_dist_src")
@@ -333,9 +333,7 @@ class GraftSessionSpec extends AnyFunSuite {
     g.sql("CREATE TABLE ins_dist(id Int64, d Date) ENGINE=BaseStorage " +
       "PARTITION BY toYear(d)")
     g.sql("INSERT INTO ins_dist SELECT id, d FROM ins_dist_src WHERE id <= 3")
-    spark.conf.set("graft.insert.distribute", "off")
-    try g.sql("INSERT INTO ins_dist SELECT id, d FROM ins_dist_src WHERE id > 3")
-    finally spark.conf.unset("graft.insert.distribute")
+    g.sql("INSERT INTO ins_dist SELECT id, d FROM ins_dist_src WHERE id > 3")
     assert(g.sql("SELECT CAST(sum(id) AS BIGINT) AS s, count(*) AS n, " +
         "CAST(count(DISTINCT year(d)) AS BIGINT) AS y FROM ins_dist")
       .collect()(0).toSeq === Seq(15L, 5L, 2L))
@@ -1082,7 +1080,7 @@ class GraftSessionSpec extends AnyFunSuite {
   test("MV rescan fast path delivers the identical block (deterministic source)") {
     // r20: a deterministic file-backed INSERT..SELECT skips the
     // localCheckpoint pin and re-executes the block plan for the MV pass —
-    // the view must land exactly the base rows, identical to rescan=off
+    // the view must land exactly the base rows
     g.sql("DROP TABLE IF EXISTS rsc_v; DROP TABLE IF EXISTS rsc_t; " +
       "DROP TABLE IF EXISTS rsc_src")
     g.sql("CREATE TABLE rsc_src(k Int32)")
@@ -1092,12 +1090,6 @@ class GraftSessionSpec extends AnyFunSuite {
     g.sql("INSERT INTO rsc_t SELECT k * 10 FROM rsc_src WHERE k % 2 = 0")
     assert(g.sql("SELECT k FROM rsc_v ORDER BY k")
       .collect().map(_.getInt(0)).toSeq === Seq(20, 40))
-    // rescan=off (unconditional pin) lands the same rows
-    spark.conf.set("graft.mv.rescan", "off")
-    try g.sql("INSERT INTO rsc_t SELECT k * 100 FROM rsc_src WHERE k = 1")
-    finally spark.conf.unset("graft.mv.rescan")
-    assert(g.sql("SELECT k FROM rsc_v ORDER BY k")
-      .collect().map(_.getInt(0)).toSeq === Seq(20, 40, 100))
     g.sql("DROP TABLE rsc_v; DROP TABLE rsc_t; DROP TABLE rsc_src")
   }
 
