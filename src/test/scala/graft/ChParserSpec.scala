@@ -297,6 +297,48 @@ class ChParserSpec extends AnyFunSuite {
       "SELECT ' PREWHERE x ' AS s FROM t") === None)
   }
 
+  test("scanner scope: a top-level set operation leaves PREWHERE, " +
+    "ARRAY JOIN, SAMPLE and FINAL unmatched") {
+    val pw = "SELECT a FROM t PREWHERE x > 1"
+    val aj = "SELECT a, e FROM t ARRAY JOIN arr AS e"
+    val sm = "SELECT a FROM t SAMPLE 0.5"
+    val fn = "SELECT a FROM t FINAL"
+    assert(ChParser.splitPrewhere(pw).isDefined)
+    assert(ChParser.splitArrayJoin(aj).isDefined)
+    assert(ChParser.splitSample(sm).isDefined)
+    assert(ChParser.splitFinal(fn).isDefined)
+    for (op <- Seq("UNION ALL", "INTERSECT", "EXCEPT")) {
+      val tail = s" $op SELECT a FROM u"
+      assert(ChParser.splitPrewhere(pw + tail) === None, op)
+      assert(ChParser.splitArrayJoin(aj + tail) === None, op)
+      assert(ChParser.splitSample(sm + tail) === None, op)
+      assert(ChParser.splitFinal(fn + tail) === None, op)
+    }
+  }
+
+  test("scanner scope: a clause inside a subquery is not top-level") {
+    def sub(s: String) = s"SELECT * FROM ($s) q"
+    assert(ChParser.splitPrewhere(sub("SELECT a FROM t PREWHERE x > 1")) === None)
+    assert(ChParser.splitArrayJoin(
+      sub("SELECT a, e FROM t ARRAY JOIN arr AS e")) === None)
+    assert(ChParser.splitSample(sub("SELECT a FROM t SAMPLE 0.5")) === None)
+    assert(ChParser.splitFinal(sub("SELECT a FROM t FINAL")) === None)
+    assert(ChParser.firstFromTable("SELECT (SELECT max(y) FROM u) AS m") === None)
+  }
+
+  test("scanner scope: a keyword inside a string literal or a comment " +
+    "never matches") {
+    for (wrap <- Seq((s: String) => s" '$s' AS s", (s: String) => s" /* $s */",
+        (s: String) => s" -- $s")) {
+      assert(ChParser.splitPrewhere("SELECT a FROM t" + wrap("PREWHERE x > 1")) === None)
+      assert(ChParser.splitArrayJoin(
+        "SELECT a FROM t" + wrap("ARRAY JOIN arr AS e")) === None)
+      assert(ChParser.splitSample("SELECT a" + wrap("FROM t SAMPLE 0.5")) === None)
+      assert(ChParser.splitFinal("SELECT a" + wrap("FROM t FINAL")) === None)
+      assert(ChParser.firstFromTable("SELECT 1" + wrap("FROM t")) === None)
+    }
+  }
+
   test("rewriteDistinctOn and inTableRefs") {
     assert(ChParser.rewriteDistinctOn(
       "SELECT DISTINCT ON (a, b) a, b, c FROM t ORDER BY c") ===
