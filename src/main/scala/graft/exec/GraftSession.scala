@@ -533,16 +533,12 @@ class GraftSession(val spark: SparkSession) {
         // record the declared CH type (+ DEFAULT) and refresh the script.
         // Pre-existing rows read NULL for the new column (parquet schema
         // evolution); CH computes the default on read — divergence noted.
-        val typesProp = tableProp(Some(rdb), a.name, "graft.ch.types")
-          .map(_ + "").getOrElse("") +
-          s"${a.col.name}${a.col.tpe.chName}"
-        val defProp = a.col.default.map { d =>
-          val prev = tableProp(Some(rdb), a.name, "graft.defaults")
-            .map(_ + "").getOrElse("")
-          s", 'graft.defaults'='${(prev + s"${a.col.name}$d").replace("'", "''")}'"
-        }.getOrElse("")
-        spark.sql(s"ALTER TABLE `$rdb`.`${a.name}` SET TBLPROPERTIES (" +
-          s"'graft.ch.types'='${typesProp.replace("'", "''")}'$defProp)")
+        val meta = catalogEntry(Some(rdb), a.name)
+        setProps(fullName(Some(rdb), a.name), Seq("graft.ch.types" ->
+          encodePropMap(propMap(meta, "graft.ch.types") +
+            (a.col.name -> a.col.tpe.chName))) ++
+          a.col.default.map(d => "graft.defaults" ->
+            encodePropMap(propMap(meta, "graft.defaults") + (a.col.name -> d))): _*)
         famOpt.foreach { case (fam, members) =>
           writeNestedFamilies(a.db, a.name,
             nestedFamilies(a.db, a.name)
@@ -871,45 +867,79 @@ class GraftSession(val spark: SparkSession) {
     require(!java.nio.file.Files.exists(target),
       s"INTO OUTFILE target exists: ${p.path} (ClickHouse refuses to overwrite)")
     val fmt = p.format.getOrElse("CSV")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_outfile")
     // pin the result once: counting and then re-running the plan for the
     // write would let a nondeterministic SELECT report a row count that
     // does not match the exported file
     val df = df1.localCheckpoint(eager = true)
     val rows = df.count()
-    val (writer, ext) = fmt.toUpperCase(java.util.Locale.ROOT) match {
-      case "CSV" =>
-        (df.coalesce(1).write.option("header", "false"), "csv")
-      case "CSVWITHNAMES" =>
-        (df.coalesce(1).write.option("header", "true"), "csv")
-      case "TSV" | "TABSEPARATED" =>
-        (df.coalesce(1).write.option("header", "false").option("sep", "\t"), "csv")
-      case "JSONEACHROW" =>
-        (df.coalesce(1).write, "json")
-      case "PARQUET" =>
-        (df.coalesce(1).write, "parquet")
-      case other => throw new IllegalArgumentException(
-        s"INTO OUTFILE format not supported: $other")
+    writeOneFile(df, fmt, "INTO OUTFILE") { part =>
+      Option(target.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.move(part, target)
     }
-    ext match {
-      case "csv" => writer.mode("overwrite").csv(tmp.toString)
-      case "json" => writer.mode("overwrite").json(tmp.toString)
-      case "parquet" => writer.mode("overwrite").parquet(tmp.toString)
-    }
-    val listing = java.nio.file.Files.list(tmp)
-    val part =
-      try listing.iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-"))
-        .getOrElse(sys.error("no output part file written"))
-      finally listing.close()
-    Option(target.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    java.nio.file.Files.move(part, target)
-    rmTree(tmp.toFile)
     releaseCheckpoint(df)
     spark.createDataFrame(
       Seq(Row(p.path, rows, fmt)).asJava,
       StructType(Seq(StructField("path", StringType),
         StructField("rows", LongType), StructField("format", StringType))))
+  }
+
+  /** The CH file formats `file()` reads and both file exports (INTO
+    * OUTFILE, INSERT INTO FUNCTION file) write: lower-case CH name →
+    * (Spark data source, its options).
+    */
+  private val chFileFormats: Map[String, (String, Map[String, String])] = {
+    val text = Map("header" -> "false")
+    val named = Map("header" -> "true")
+    val tab = "sep" -> "\t"
+    Map("csv" -> ("csv", text), "csvwithnames" -> ("csv", named),
+      "tsv" -> ("csv", text + tab), "tabseparated" -> ("csv", text + tab),
+      "tsvwithnames" -> ("csv", named + tab),
+      "tabseparatedwithnames" -> ("csv", named + tab),
+      "jsoneachrow" -> ("json", Map.empty), "parquet" -> ("parquet", Map.empty))
+  }
+
+  private def chFileFormat(format: String,
+                           what: String): (String, Map[String, String]) =
+    chFileFormats.getOrElse(format.trim.toLowerCase(java.util.Locale.ROOT),
+      throw new IllegalArgumentException(s"$what: unsupported format " +
+        s"$format (supported: CSV[WithNames], TSV/TabSeparated[WithNames], " +
+        "JSONEachRow, Parquet)"))
+
+  /** Write `df` as ONE file of CH format `format` into a fresh temp
+    * directory and hand its `part-` file to `use`; the directory is
+    * removed afterwards.
+    */
+  private def writeOneFile[A](df: DataFrame, format: String, what: String)(
+      use: java.nio.file.Path => A): A = {
+    val (source, options) = chFileFormat(format, what)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_export")
+    try {
+      df.coalesce(1).write.mode("overwrite").format(source).options(options)
+        .save(tmp.toString)
+      val listing = java.nio.file.Files.list(tmp)
+      val part =
+        try listing.iterator().asScala
+          .find(_.getFileName.toString.startsWith("part-"))
+          .getOrElse(throw new IllegalStateException(
+            s"$what: no output part file written"))
+        finally listing.close()
+      use(part)
+    } finally rmTree(tmp.toFile)
+  }
+
+  /** Resolve `rel` under the confined data root of `file()` reads and
+    * exports (CH's user_files_path; here the `spark.graft.fileRoot` conf,
+    * default /tmp/graft_user_files): (root, resolved path). Path
+    * traversal out of the root is rejected.
+    */
+  private def underFileRoot(
+      rel: String): (java.nio.file.Path, java.nio.file.Path) = {
+    val root = java.nio.file.Paths.get(
+      spark.conf.getOption("spark.graft.fileRoot")
+        .getOrElse("/tmp/graft_user_files")).toAbsolutePath.normalize
+    val p = root.resolve(rel).normalize
+    require(p.startsWith(root), s"file(): path escapes the data root $root: $rel")
+    (root, p)
   }
 
   private def jdbcReader(url: String, table: String,
@@ -937,31 +967,52 @@ class GraftSession(val spark: SparkSession) {
       .load()
   }
 
-  /** SELECT-passthrough rewrites, driven by the tokenizer (r2 used raw-text
-    * regexes, which also fired inside string literals and comments — the
-    * same shallow-scan trap the reference's own parser has):
-    *   - `numbers(N)` (parsed-but-unwired in the reference, bql.pest:349-353)
-    *     → Spark `range(N)` aliased to CH's `number` column;
-    *   - `remote('url', 'table'[, 'user', 'pwd'])` (reference fans out over
-    *     the wire, crates/runtime/src/read.rs:151-228) → for `ch://`
-    *     addresses a native-protocol shard fan-out ([[chRemoteDf]]), else a
-    *     JDBC scan; either registered as a temp view. Views are registered
-    *     BEFORE splicing
-    *     (no side effects inside a replacement callback) and the view name
-    *     is an MD5 of url|table|user|pwd — collision-resistant, so two
-    *     calls differing only in credentials (or any other arg) can never
-    *     silently share a view the way a 32-bit hashCode could.
+  /** The CH-to-Spark text rewrites of a SELECT, applied top to bottom;
+    * each scans the text it is handed afresh. The order matters where a
+    * rewrite reads what an earlier one produced, or must see the text
+    * before a later one restructures it:
+    *   - Nested `n.a` references are backquoted first, while the text is
+    *     the user's and before any rewrite analyzes subquery text;
+    *   - scalar WITH aliases are inlined next, so later rewrites see the
+    *     main query with its bound expressions in place;
+    *   - the expression- and tail-level normalizations (array literals,
+    *     parametric quantiles, trailing FORMAT/SETTINGS, `count()`,
+    *     `LIMIT m, n`, bare USING, GLOBAL, ANY/ALL JOIN) come before the
+    *     clause rewrites: WITH TIES and WITH FILL only match a statement
+    *     that ends at their clause, and `LIMIT m, n BY` is left for LIMIT
+    *     BY;
+    *   - dictionary calls become lookups and `system.*` references views;
+    *   - FINAL and SAMPLE replace the FROM table in place, before any
+    *     rewrite wraps the statement in a subquery;
+    *   - DISTINCT ON becomes `LIMIT 1 BY`, ahead of the LIMIT BY rewrite;
+    *   - IN-table, ARRAY JOIN, PREWHERE and WITH TOTALS rewrite clauses of
+    *     the one SELECT; LIMIT BY, WITH TIES and WITH FILL then wrap the
+    *     statement as a subquery of their own;
+    *   - table functions splice in views and subqueries, and ASOF JOIN,
+    *     last, replaces its two relations with the operator's view.
     */
-  private def rewriteSelect(sqlIn: String): String =
-    rewriteAsofJoin(spliceTableFns(rewriteWithFill(
-      rewriteLimitTies(rewriteLimitBy(rewriteWithTotals(
-        rewritePrewhere(rewriteArrayJoin(rewriteInTable(rewriteDistinctOnStep(
-          rewriteSample(rewriteFinal(spliceSystemViews(
-            rewriteDictFns(ChParser.rewriteAnyJoin(
-              ChParser.rewriteQueryTails(ChParser.rewriteQuantiles(
-                ChParser.rewriteArrayLiterals(
-                  ChParser.rewriteScalarWith(
-                    rewriteNestedRefs(sqlIn))))))))))))))))))))
+  private def rewriteSelect(sqlIn: String): String = Seq[String => String](
+    rewriteNestedRefs,
+    ChParser.rewriteScalarWith,
+    ChParser.rewriteArrayLiterals,
+    ChParser.rewriteQuantiles,
+    ChParser.rewriteQueryTails,
+    ChParser.rewriteAnyJoin,
+    rewriteDictFns,
+    spliceSystemViews,
+    rewriteFinal,
+    rewriteSample,
+    sql => ChParser.rewriteDistinctOn(sql).getOrElse(sql),
+    rewriteInTable,
+    rewriteArrayJoin,
+    rewritePrewhere,
+    rewriteWithTotals,
+    rewriteLimitBy,
+    rewriteLimitTies,
+    rewriteWithFill,
+    spliceTableFns,
+    rewriteAsofJoin
+  ).foldLeft(sqlIn)((sql, rewrite) => rewrite(sql))
 
   /** CH SQL says `n.a`; the flattened Nested storage column is literally
     * named "n.a", which Spark only resolves backticked. Innermost rewrite
@@ -1371,6 +1422,24 @@ class GraftSession(val spark: SparkSession) {
         }
     }
 
+  /** SELECT-passthrough table functions, driven by the tokenizer (r2 used
+    * raw-text regexes, which also fired inside string literals and
+    * comments — the same shallow-scan trap the reference's own parser
+    * has):
+    *   - `numbers(N)` (parsed-but-unwired in the reference, bql.pest:349-353)
+    *     → Spark `range(N)` aliased to CH's `number` column;
+    *   - `remote('url', 'table'[, 'user', 'pwd'])` (reference fans out over
+    *     the wire, crates/runtime/src/read.rs:151-228) → for `ch://`
+    *     addresses a native-protocol shard fan-out ([[chRemoteDf]]), else a
+    *     JDBC scan; either registered as a temp view. Views are registered
+    *     BEFORE splicing (no side effects inside a replacement callback)
+    *     and the view name is an MD5 of url|table|user|pwd —
+    *     collision-resistant, so two calls differing only in credentials
+    *     (or any other arg) can never silently share a view the way a
+    *     32-bit hashCode could;
+    *   - `file(…)`, `merge(…)` and `generateRandom(…)` → a file view, a
+    *     UNION ALL over the matching tables, and a generated subquery.
+    */
   private def spliceTableFns(sql: String): String = {
     val remotes = ChParser.tableFnCalls(sql, "remote")
       .filter(c => c._3.length == 2 || c._3.length == 4)
@@ -1409,27 +1478,18 @@ class GraftSession(val spark: SparkSession) {
     } ++ gens.map { case (from, to, args) =>
       (from, to, generateRandomSubquery(args))
     }
-    splices.sortBy(-_._1).foldLeft(sql) { case (acc, (from, to, text)) =>
-      acc.substring(0, from) + text + acc.substring(to)
-    }
+    ChParser.splice(sql, splices)
   }
 
   /** CH `file('rel/path', 'Format'[, 'structure'])` — read a file under
-    * the confined data root (CH's user_files_path; here the
-    * `spark.graft.fileRoot` conf, default /tmp/graft_user_files). Path
-    * traversal out of the root is rejected. Formats: CSV (headerless,
+    * the confined data root ([[underFileRoot]]). Formats: CSV (headerless,
     * columns c1..cn like CH), CSVWithNames, TSV/TabSeparated[WithNames],
     * JSONEachRow, Parquet. The optional structure is CH DDL
     * (`'a Int64, b String'`) parsed through [[graft.types.BqlType]].
     */
   private def fileDf(rel: String, format: String,
                      structure: Option[String]): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      spark.conf.getOption("spark.graft.fileRoot")
-        .getOrElse("/tmp/graft_user_files")).toAbsolutePath.normalize
-    val p = root.resolve(rel).normalize
-    require(p.startsWith(root),
-      s"file(): path escapes the data root $root: $rel")
+    val (root, p) = underFileRoot(rel)
     require(java.nio.file.Files.exists(p),
       s"file(): no such file under the data root $root: $rel")
     val schema = structure.map { st =>
@@ -1444,33 +1504,13 @@ class GraftSession(val spark: SparkSession) {
           org.apache.spark.sql.types.StructField(n, bt.sparkType)
         })
     }
-    def reader = schema.fold(spark.read)(spark.read.schema)
-    val df = format.trim.toLowerCase(java.util.Locale.ROOT) match {
-      case "csv" =>
-        val r = reader.option("header", "false")
-        if (schema.isDefined) r.csv(p.toString)
-        else r.option("inferSchema", "true").csv(p.toString)
-      case "csvwithnames" =>
-        val r = reader.option("header", "true")
-        if (schema.isDefined) r.csv(p.toString)
-        else r.option("inferSchema", "true").csv(p.toString)
-      case "tsv" | "tabseparated" =>
-        val r = reader.option("header", "false").option("sep", "\t")
-        if (schema.isDefined) r.csv(p.toString)
-        else r.option("inferSchema", "true").csv(p.toString)
-      case "tsvwithnames" | "tabseparatedwithnames" =>
-        val r = reader.option("header", "true").option("sep", "\t")
-        if (schema.isDefined) r.csv(p.toString)
-        else r.option("inferSchema", "true").csv(p.toString)
-      case "jsoneachrow" => reader.json(p.toString)
-      case "parquet" => reader.parquet(p.toString)
-      case other => throw new IllegalArgumentException(
-        s"file(): unsupported format $other (supported: CSV[WithNames], " +
-          "TSV/TabSeparated[WithNames], JSONEachRow, Parquet)")
-    }
+    val (source, options) = chFileFormat(format, "file()")
+    val reader = schema.fold(spark.read)(spark.read.schema).format(source)
+      .options(options)
+    val df = (if (schema.isEmpty && source == "csv")
+      reader.option("inferSchema", "true") else reader).load(p.toString)
     // headerless text without a declared structure: CH names columns c1..cn
-    val fmt = format.trim.toLowerCase(java.util.Locale.ROOT)
-    if (schema.isEmpty && (fmt == "csv" || fmt == "tsv" || fmt == "tabseparated"))
+    if (schema.isEmpty && options.get("header").contains("false"))
       df.toDF(df.columns.indices.map(i => s"c${i + 1}"): _*)
     else df
   }
@@ -1680,11 +1720,7 @@ class GraftSession(val spark: SparkSession) {
     }
     if (hits.exists(_._1 == "columns")) {
       val rows = userTables.flatMap { case (db, m) =>
-        val declared = m.properties.get("graft.ch.types").map {
-          _.split("").filter(_.nonEmpty).map { kv =>
-            val Array(k, v) = kv.split("", 2); k -> v
-          }.toMap
-        }.getOrElse(Map.empty[String, String])
+        val declared = propMap(m, "graft.ch.types")
         m.schema.fields.toSeq.filter(_.name != PtkCol).zipWithIndex.map {
           case (f, i) =>
             val ch = declared.getOrElse(f.name,
@@ -1752,17 +1788,10 @@ class GraftSession(val spark: SparkSession) {
           StructField("kind", StringType), StructField("error", StringType))))
         .createOrReplaceTempView("__graft_system_restore_errors")
     }
-    hits.sortBy(-_._2).foldLeft(sql) { case (acc, (which, from, to)) =>
-      acc.substring(0, from) + s"__graft_system_$which " + acc.substring(to)
-    }
+    ChParser.splice(sql, hits.map { case (which, from, to) =>
+      (from, to, s"__graft_system_$which ")
+    })
   }
-
-  /** ClickHouse `SELECT DISTINCT ON (keys) …` → the LIMIT 1 BY form (the
-    * identical first-row-per-group contract), which the LIMIT BY
-    * rewriter downstream turns into the windowed plan.
-    */
-  private def rewriteDistinctOnStep(sql: String): String =
-    ChParser.rewriteDistinctOn(sql).getOrElse(sql)
 
   /** ClickHouse table-set membership `x [GLOBAL] [NOT] IN t` → the ANSI
     * subquery form `IN (SELECT * FROM t)`. GLOBAL is CH's
@@ -1771,11 +1800,9 @@ class GraftSession(val spark: SparkSession) {
     * drops.
     */
   private def rewriteInTable(sql: String): String = {
-    val hits = ChParser.inTableRefs(sql)
-    if (hits.isEmpty) sql
-    else hits.sortBy(-_._2).foldLeft(sql) { case (acc, (t, from, to)) =>
-      acc.substring(0, from) + s"IN (SELECT * FROM $t) " + acc.substring(to)
-    }
+    ChParser.splice(sql, ChParser.inTableRefs(sql).map { case (t, from, to) =>
+      (from, to, s"IN (SELECT * FROM $t) ")
+    })
   }
 
   /** ClickHouse `[LEFT] ARRAY JOIN arr [AS a][, …]` — per-element row
@@ -1984,68 +2011,36 @@ class GraftSession(val spark: SparkSession) {
     * not fact tables). Appends if the file exists (CH's default).
     */
   private def insertFile(fi: ChStatement.InsertFile): DataFrame = {
-    val root = java.nio.file.Paths.get(
-      spark.conf.getOption("spark.graft.fileRoot")
-        .getOrElse("/tmp/graft_user_files")).toAbsolutePath.normalize
-    val target = root.resolve(fi.path).normalize
-    require(target.startsWith(root),
-      s"file(): path escapes the data root $root: ${fi.path}")
+    val what = "INSERT INTO FUNCTION file"
+    val (source, options) = chFileFormat(fi.format, what)
+    val (_, target) = underFileRoot(fi.path)
     java.nio.file.Files.createDirectories(target.getParent)
-    val df = spark.sql(rewriteSelect(fi.selectSql)).coalesce(1)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_file_out")
-    val fmt = fi.format.trim.toLowerCase(java.util.Locale.ROOT)
-    val w = df.write.mode("overwrite")
-    val (writer, ext) = fmt match {
-      case "csv" => (w.option("header", "false"), "csv")
-      case "csvwithnames" => (w.option("header", "true"), "csv")
-      case "tsv" | "tabseparated" =>
-        (w.option("header", "false").option("sep", "\t"), "csv")
-      case "tsvwithnames" | "tabseparatedwithnames" =>
-        (w.option("header", "true").option("sep", "\t"), "csv")
-      case "jsoneachrow" => (w, "json")
-      case "parquet" => (w, "parquet")
-      case other => throw new IllegalArgumentException(
-        s"INSERT INTO FUNCTION file: unsupported format $other")
+    val df = spark.sql(rewriteSelect(fi.selectSql))
+    writeOneFile(df, fi.format, what) { produced =>
+      if (java.nio.file.Files.exists(target)) {
+        // append mode for text formats, CH's behavior on an existing file.
+        // Parquet cannot append to a single file — reject rather than the
+        // silent overwrite CH would never do (ADVICE r17).
+        require(source != "parquet",
+          s"INSERT INTO FUNCTION file: $target exists and Parquet files " +
+            "cannot be appended to; remove the file or use a new path")
+        val out = java.nio.file.Files.newOutputStream(target,
+          java.nio.file.StandardOpenOption.APPEND)
+        try {
+          if (options.get("header").contains("true")) {
+            // the appended part re-emits the header row — strip it so the
+            // target stays one header + rows (re-reading with header=true
+            // must not see a mid-file header as data; ADVICE r17)
+            val bytes = java.nio.file.Files.readAllBytes(produced)
+            val nl = bytes.indexOf('\n'.toByte)
+            if (nl >= 0) out.write(bytes, nl + 1, bytes.length - nl - 1)
+          } else
+            java.nio.file.Files.copy(produced, out): Unit
+        } finally out.close()
+      } else
+        java.nio.file.Files.move(produced, target,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    ext match {
-      case "csv" => writer.csv(tmp.toString)
-      case "json" => writer.json(tmp.toString)
-      case "parquet" => writer.parquet(tmp.toString)
-    }
-    val listing = java.nio.file.Files.list(tmp)
-    val produced =
-      try {
-        val it = listing.iterator()
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-          .find(_.getFileName.toString.startsWith("part-"))
-          .getOrElse(
-            throw new IllegalStateException("file(): no output part"))
-      } finally listing.close()
-    if (java.nio.file.Files.exists(target)) {
-      // append mode for text formats, CH's behavior on an existing file.
-      // Parquet cannot append to a single file — reject rather than the
-      // silent overwrite CH would never do (ADVICE r17).
-      require(ext != "parquet",
-        s"INSERT INTO FUNCTION file: $target exists and Parquet files " +
-          "cannot be appended to; remove the file or use a new path")
-      val withHeader = fmt.endsWith("withnames")
-      val out = java.nio.file.Files.newOutputStream(target,
-        java.nio.file.StandardOpenOption.APPEND)
-      try {
-        if (withHeader) {
-          // the appended part re-emits the header row — strip it so the
-          // target stays one header + rows (re-reading with header=true
-          // must not see a mid-file header as data; ADVICE r17)
-          val bytes = java.nio.file.Files.readAllBytes(produced)
-          val nl = bytes.indexOf('\n'.toByte)
-          if (nl >= 0) out.write(bytes, nl + 1, bytes.length - nl - 1)
-        } else
-          java.nio.file.Files.copy(produced, out): Unit
-      } finally out.close()
-    } else
-      java.nio.file.Files.move(produced, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    rmTree(tmp.toFile)
     emptyOk
   }
 
@@ -2129,24 +2124,21 @@ class GraftSession(val spark: SparkSession) {
   private def fullName(db: Option[String], name: String): String =
     db.fold(s"`$name`")(d => s"`$d`.`$name`")
 
-  private def tableProp(db: Option[String], name: String, key: String): Option[String] = {
+  private def catalogEntry(db: Option[String],
+      name: String): org.apache.spark.sql.catalyst.catalog.CatalogTable = {
     val ident = spark.sessionState.sqlParser.parseMultipartIdentifier(
       db.map(d => s"`$d`.`$name`").getOrElse(s"`$name`"))
-    val cat = spark.sessionState.catalog
-    val tid = org.apache.spark.sql.catalyst.TableIdentifier(
-      ident.last, if (ident.length > 1) Some(ident(ident.length - 2)) else None)
-    val meta = cat.getTableMetadata(tid)
-    meta.properties.get(key)
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(
+        ident.last, if (ident.length > 1) Some(ident(ident.length - 2)) else None))
   }
+
+  private def tableProp(db: Option[String], name: String, key: String): Option[String] =
+    catalogEntry(db, name).properties.get(key)
 
   /** Declared CH types per column, recorded at CREATE time. */
   private def chTypes(db: Option[String], name: String): Map[String, String] =
-    tableProp(db, name, "graft.ch.types").map {
-      _.split("\u0001").filter(_.nonEmpty).map { kv =>
-        val Array(k, v) = kv.split("\u0002", 2)
-        k -> v
-      }.toMap
-    }.getOrElse(Map.empty)
+    propMap(catalogEntry(db, name), "graft.ch.types")
 
   private def isNullable(t: BqlType): Boolean = t match {
     case BqlType.Nullable(_) => true
@@ -2338,21 +2330,25 @@ class GraftSession(val spark: SparkSession) {
 
   // ---- column DDL -----------------------------------------------------
 
+  /** A table property holding `key\u0002value` entries separated by
+    * `\u0001`, decoded in stored order ([[encodePropMap]] writes it).
+    */
   private def propMap(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
                       prop: String): Map[String, String] =
-    meta.properties.get(prop).map {
-      _.split("").filter(_.nonEmpty).map { kv =>
-        val Array(k, v) = kv.split("", 2); k -> v
-      }.toMap
-    }.getOrElse(Map.empty)
+    meta.properties.get(prop).fold(Map.empty[String, String]) { enc =>
+      scala.collection.immutable.VectorMap.from(
+        enc.split("\u0001").filter(_.nonEmpty).map { kv =>
+          val Array(k, v) = kv.split("\u0002", 2); k -> v
+        })
+    }
 
   private def setProps(full: String, kvs: (String, String)*): Unit =
     spark.sql(s"ALTER TABLE $full SET TBLPROPERTIES (" + kvs.map {
       case (k, v) => s"'$k'='${v.replace("'", "''")}'"
     }.mkString(", ") + ")"): Unit
 
-  private def encodePropMap(m: Map[String, String]): String =
-    m.map { case (k, v) => k + "" + v }.mkString("")
+  private def encodePropMap(m: Iterable[(String, String)]): String =
+    m.map { case (k, v) => k + "\u0002" + v }.mkString("\u0001")
 
   /** Shared preamble for column DDL: resolve (db, full, meta), and reject
     * touching sorting-key columns or columns the PARTITION BY expression
@@ -2388,13 +2384,10 @@ class GraftSession(val spark: SparkSession) {
       s"$op: $col is the SAMPLE BY key (ClickHouse forbids altering it)")
     // a column referenced by a CHECK constraint: dropping/renaming it
     // would poison every subsequent INSERT's guard expression
-    meta.properties.get("graft.checks").foreach { enc =>
-      enc.split("\u0001").filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("\u0002", 2)
-        val refs = graft.parser.ChParser.tokenizedIdents(v)
-        require(!refs.exists(_.equalsIgnoreCase(col)),
-          s"$op: $col is referenced by CHECK constraint $k")
-      }
+    propMap(meta, "graft.checks").foreach { case (k, v) =>
+      val refs = graft.parser.ChParser.tokenizedIdents(v)
+      require(!refs.exists(_.equalsIgnoreCase(col)),
+        s"$op: $col is referenced by CHECK constraint $k")
     }
     // a column a projection aggregates or groups by: altering it would
     // silently desynchronize the routed results (CH rejects these ALTERs
@@ -2410,12 +2403,13 @@ class GraftSession(val spark: SparkSession) {
   /** Decoded `graft.nested` prop: family -> flattened member names. */
   private def nestedFamilies(db: Option[String],
                              name: String): Map[String, Seq[String]] =
-    tableProp(db, name, "graft.nested").map {
-      _.split("\u0001").filter(_.nonEmpty).map { kv =>
-        val Array(k, v) = kv.split("\u0002", 2)
-        k -> v.split(",").filter(_.nonEmpty).toSeq
-      }.toMap
-    }.getOrElse(Map.empty)
+    nestedFamilies(catalogEntry(db, name))
+
+  private def nestedFamilies(
+      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable): Map[String, Seq[String]] =
+    propMap(meta, "graft.nested").map { case (f, ms) =>
+      f -> ms.split(",").filter(_.nonEmpty).toSeq
+    }
 
   /** Rewrite a table's Nested-family metadata after an ALTER: the
     * `graft.nested` prop, the implicit `__nested_*` equal-length CHECKs
@@ -2435,8 +2429,8 @@ class GraftSession(val spark: SparkSession) {
           s"size(`${ms.head}`) = size(`$m`)").mkString(" AND ")
       }
     setProps(full,
-      "graft.nested" -> live.map { case (f, ms) =>
-        s"$f\u0002${ms.mkString(",")}" }.mkString("\u0001"),
+      "graft.nested" -> encodePropMap(live.map { case (f, ms) =>
+        f -> ms.mkString(",") }),
       "graft.checks" -> encodePropMap(checks))
     state.nestedRegistry.put((rdb, name), live)
     spark.catalog.refreshTable(full)
@@ -2486,8 +2480,8 @@ class GraftSession(val spark: SparkSession) {
       "graft.ch.types" -> encodePropMap(propMap(meta, "graft.ch.types") - a.col),
       "graft.defaults" -> encodePropMap(propMap(meta, "graft.defaults") - a.col),
       "graft.notnull" -> meta.properties.get("graft.notnull")
-        .map(_.split("").filter(n => n.nonEmpty && n != a.col)
-          .mkString("")).getOrElse(""))
+        .map(_.split("\u0001").filter(n => n.nonEmpty && n != a.col)
+          .mkString("\u0001")).getOrElse(""))
     spark.catalog.refreshTable(full)
     recordNormalizedScript(rdb, a.name)
   }
@@ -2534,9 +2528,9 @@ class GraftSession(val spark: SparkSession) {
       "graft.ch.types" -> encodePropMap(renKey(propMap(meta, "graft.ch.types"))),
       "graft.defaults" -> encodePropMap(renKey(propMap(meta, "graft.defaults"))),
       "graft.notnull" -> meta.properties.get("graft.notnull")
-        .map(_.split("").filter(_.nonEmpty)
+        .map(_.split("\u0001").filter(_.nonEmpty)
           .map(n => if (n == a.from) a.to else n)
-          .mkString("")).getOrElse(""))
+          .mkString("\u0001")).getOrElse(""))
     spark.catalog.refreshTable(full)
     recordNormalizedScript(rdb, a.name)
   }
@@ -2725,24 +2719,26 @@ class GraftSession(val spark: SparkSession) {
       val laid =
         if (!partitioned) df.repartition(filesNeeded(retired))
         else {
-          // directory i owns the slots [off_i, off_i + nf_i); the Hive
-          // default dir holds the NULL partition value, so its row joins
-          // back null-safely (<=>)
+          // directory i owns the slots [off_i, off_i + nf_i), looked up
+          // by a literal CASE over the directories; the Hive default dir
+          // holds the NULL partition value, so it matches null-safely
+          // (<=>). A row whose partition has no retired file keeps slot 0
+          // of one.
           val dirs = retired.groupBy(_.getParent).toSeq
             .map { case (dir, fs) => (dir.getFileName.toString, filesNeeded(fs)) }
           val offs = dirs.scanLeft(0)(_ + _._2)
           val slots = dirs.zip(offs).map { case ((dn, nf), off) =>
-            Row(if (dn == defaultPartDir) null
-                else unescapePartValue(dn.stripPrefix(s"$PtkCol=")), nf, off)
+            (col(s"`$PtkCol`") <=> lit(if (dn == defaultPartDir) null
+              else unescapePartValue(dn.stripPrefix(s"$PtkCol="))), off, nf)
           }
-          val slotDf = spark.createDataFrame(slots.asJava, StructType(Seq(
-            StructField("__slotptk", StringType), StructField("__nf", IntegerType),
-            StructField("__off", IntegerType))))
-          df.join(broadcast(slotDf), col(s"`$PtkCol`") <=> col("__slotptk"), "left")
-            .repartitionById(offs.last, coalesce(col("__off"), lit(0)) +
-              pmod(monotonically_increasing_id(),
-                coalesce(col("__nf"), lit(1)).cast(LongType)).cast(IntegerType))
-            .select(df.columns.map(c => col(s"`$c`")).toSeq: _*)
+          def lookup(pick: ((org.apache.spark.sql.Column, Int, Int)) => Int,
+                     none: Int) =
+            slots.tail.foldLeft(when(slots.head._1, pick(slots.head))) {
+              case (c, slot) => c.when(slot._1, pick(slot))
+            }.otherwise(none)
+          df.repartitionById(offs.last, lookup(_._2, 0) +
+            pmod(monotonically_increasing_id(),
+              lookup(_._3, 1).cast(LongType)).cast(IntegerType))
         }
       val w = sortedRuns(meta, laid, withPtk = partitioned).write
       (if (partitioned) w.partitionBy(PtkCol) else w)
@@ -3068,8 +3064,8 @@ class GraftSession(val spark: SparkSession) {
     // reloads lazily from this prop — nestedMemberNames)
     val nestedProp =
       if (nestedFams.isEmpty) Nil
-      else Seq("graft.nested" -> nestedFams.map { case (f, ms) =>
-        s"$f\u0002${ms.mkString(",")}" }.mkString("\u0001"))
+      else Seq("graft.nested" -> encodePropMap(nestedFams.map { case (f, ms) =>
+        f -> ms.mkString(",") }))
     val full = fullName(ct.db, ct.name)
     // Collapsing engines are unusable without a valid sign (and, for the
     // versioned form, version) column — fail at CREATE, not at first
@@ -3116,13 +3112,13 @@ class GraftSession(val spark: SparkSession) {
           s" CLUSTERED BY (`${pk.name}`) SORTED BY (`${pk.name}`) INTO $n BUCKETS"
         case _ => ""
       }
-    val chTypesProp = ct.cols.map(c => s"${c.name}\u0002${c.tpe.chName}").mkString("\u0001")
-    val defaultsProp = ct.cols.collect {
-      case c if c.default.isDefined => s"${c.name}\u0002${c.default.get}"
-    }.mkString("\u0001")
-    val pksProp = ct.cols.filter(_.primaryKey).map(_.name).mkString("")
+    val chTypesProp = encodePropMap(ct.cols.map(c => c.name -> c.tpe.chName))
+    val defaultsProp = encodePropMap(ct.cols.collect {
+      case c if c.default.isDefined => c.name -> c.default.get
+    })
+    val pksProp = ct.cols.filter(_.primaryKey).map(_.name).mkString("\u0001")
     val nnProp = ct.cols.filter(c => c.notNull ||
-      (!isNullable(c.tpe) && c.primaryKey)).map(_.name).mkString("")
+      (!isNullable(c.tpe) && c.primaryKey)).map(_.name).mkString("\u0001")
     val props = Seq(
       "graft.create_script" -> ct.createScript,
       "graft.engine" -> ct.engine.getOrElse("BaseStorage"),
@@ -3137,8 +3133,7 @@ class GraftSession(val spark: SparkSession) {
       // CHECK constraints (CONSTRAINT n CHECK e) — enforced on every
       // INSERT path in appendToTable, ClickHouse's semantics
       (if (ct.checks.nonEmpty)
-        Seq("graft.checks" -> ct.checks.map { case (k, v) =>
-          s"$k\u0002$v" }.mkString("\u0001")) else Nil) ++
+        Seq("graft.checks" -> encodePropMap(ct.checks)) else Nil) ++
       nestedProp ++
       ct.partitionBy.map("graft.ptk.expr" -> _) ++
       ct.settings.map { case (k, v) => s"graft.setting.$k" -> v }
@@ -3262,8 +3257,8 @@ class GraftSession(val spark: SparkSession) {
   //   graft.proj.list            = p1,p2
   //   graft.proj.<p>.table       = hidden table name
   //   graft.proj.<p>.select      = full SELECT (rebuilds + introspection)
-  //   graft.proj.<p>.map         = outkindsrc entries joined by
-  //                                , kind ∈ key|sum|min|max|count|countcol
+  //   graft.proj.<p>.map         = out\u0002kind\u0002src entries joined by
+  //                                \u0001, kind ∈ key|sum|min|max|count|countcol
   // Mutations/OPTIMIZE FINAL/partition DDL on the parent rebuild the
   // projection in full (CH rebuilds projections for mutated parts).
 
@@ -3523,22 +3518,22 @@ class GraftSession(val spark: SparkSession) {
       case ar: AttributeReference =>
         require(groupNames.contains(ar.name),
           s"ADD PROJECTION: non-aggregate output ${ar.name} is not a GROUP BY key")
-        s"${ar.name}key${ar.name}"
+        s"${ar.name}\u0002key\u0002${ar.name}"
       case al @ Alias(ar: AttributeReference, _) =>
         require(groupNames.contains(ar.name),
           s"ADD PROJECTION: non-aggregate output ${al.name} is not a GROUP BY key")
-        s"${al.name}key${ar.name}"
+        s"${al.name}\u0002key\u0002${ar.name}"
       case al @ Alias(ae: AggregateExpression, _) =>
         require(!ae.isDistinct && ae.filter.isEmpty,
           "ADD PROJECTION: aggregates must be plain (no DISTINCT / FILTER)")
         ae.aggregateFunction match {
-          case s: Sum => s"${al.name}sum${srcOf(s.child, "sum")}"
-          case m: Min => s"${al.name}min${srcOf(m.child, "min")}"
-          case m: Max => s"${al.name}max${srcOf(m.child, "max")}"
+          case s: Sum => s"${al.name}\u0002sum\u0002${srcOf(s.child, "sum")}"
+          case m: Min => s"${al.name}\u0002min\u0002${srcOf(m.child, "min")}"
+          case m: Max => s"${al.name}\u0002max\u0002${srcOf(m.child, "max")}"
           case c: Count => c.children match {
-            case Seq(CLit(_, _)) => s"${al.name}count"
+            case Seq(CLit(_, _)) => s"${al.name}\u0002count\u0002"
             case Seq(ar: AttributeReference) =>
-              s"${al.name}countcol${ar.name}"
+              s"${al.name}\u0002countcol\u0002${ar.name}"
             case _ => throw new IllegalArgumentException(
               "ADD PROJECTION: count must be count() or count(column)")
           }
@@ -3550,7 +3545,7 @@ class GraftSession(val spark: SparkSession) {
         s"ADD PROJECTION: unsupported output ${other.sql}")
     }
     val keySrcs = entries.collect {
-      case e if e.split("")(1) == "key" => e.split("")(2)
+      case e if e.split("\u0002")(1) == "key" => e.split("\u0002")(2)
     }
     require(groupNames.forall(keySrcs.contains),
       "ADD PROJECTION: every GROUP BY key must appear in the SELECT list")
@@ -3570,7 +3565,7 @@ class GraftSession(val spark: SparkSession) {
       s"'graft.proj.list'='$list', " +
       s"'graft.proj.$pname.table'='$hidden', " +
       s"'graft.proj.$pname.select'='${fullSel.replace("'", "''")}', " +
-      s"'graft.proj.$pname.map'='${entries.mkString("").replace("'", "''")}')")
+      s"'graft.proj.$pname.map'='${entries.mkString("\u0001").replace("'", "''")}')")
     emptyOk
   }
 
@@ -4029,14 +4024,8 @@ class GraftSession(val spark: SparkSession) {
     val full = fullName(Some(rdb), table)
     val meta = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table, Some(rdb)))
-    def dec(prop: String): Map[String, String] =
-      meta.properties.get(prop).map {
-        _.split("").filter(_.nonEmpty).map { kv =>
-          val Array(k, v) = kv.split("", 2); k -> v
-        }.toMap
-      }.getOrElse(Map.empty)
-    val types = dec("graft.ch.types")
-    val dflts = dec("graft.defaults")
+    val types = propMap(meta, "graft.ch.types")
+    val dflts = propMap(meta, "graft.defaults")
     // PRIMARY KEY / NOT NULL must survive normalization: the replayed
     // script feeds createTableInner's bucketClause match — dropping the
     // PK marker while keeping SETTINGS buckets=N would silently recreate
@@ -4053,13 +4042,7 @@ class GraftSession(val spark: SparkSession) {
     // normalizing to the flattened members would replay fine but LOSE the
     // family metadata (graft.nested), breaking `ARRAY JOIN n` and plain
     // `n.a` references after a TRUNCATE/RENAME replay.
-    val nestedFams: Seq[(String, Seq[String])] =
-      meta.properties.get("graft.nested").map {
-        _.split("\u0001").filter(_.nonEmpty).toSeq.map { kv =>
-          val Array(k, v) = kv.split("\u0002", 2)
-          k -> v.split(",").filter(_.nonEmpty).toSeq
-        }
-      }.getOrElse(Nil)
+    val nestedFams: Seq[(String, Seq[String])] = nestedFamilies(meta).toSeq
     val famOfMember: Map[String, String] = nestedFams.flatMap { case (f, ms) =>
       ms.map(_ -> f) }.toMap
     def innerOfArray(ch: String): String =
@@ -4103,7 +4086,7 @@ class GraftSession(val spark: SparkSession) {
     // normalizing ALTER + restart); the implicit __nested_ equal-length
     // checks regenerate from the Nested clause at CREATE and must NOT
     // be re-emitted or they would double up
-    val checksDdl = dec("graft.checks").toSeq
+    val checksDdl = propMap(meta, "graft.checks").toSeq
       .filterNot(_._1.startsWith("__nested_")).sortBy(_._1)
       .map { case (n, e) => s", CONSTRAINT $n CHECK $e" }.mkString
     val script = s"CREATE TABLE $table($colsDdl$checksDdl$idxDdl)" +
@@ -4724,24 +4707,14 @@ class GraftSession(val spark: SparkSession) {
 
   /** Declared DEFAULT literals per column (bql.pest column_constraint). */
   private def defaults(db: Option[String], name: String): Map[String, String] =
-    tableProp(db, name, "graft.defaults").map {
-      _.split("").filter(_.nonEmpty).map { kv =>
-        val Array(k, v) = kv.split("", 2)
-        k -> v
-      }.toMap
-    }.getOrElse(Map.empty)
+    propMap(catalogEntry(db, name), "graft.defaults")
 
   /** Declared CHECK constraints (name -> boolean expr) — enforced on every
     * insert path ([[appendToTable]]).
     */
   private def checkConstraints(db: Option[String],
                                name: String): Seq[(String, String)] =
-    tableProp(db, name, "graft.checks").toSeq.flatMap {
-      _.split("").filter(_.nonEmpty).map { kv =>
-        val Array(k, v) = kv.split("", 2)
-        k -> v
-      }.toSeq
-    }
+    propMap(catalogEntry(db, name), "graft.checks").toSeq
 
   /** Expand an explicit column list to full arity: missing columns take
     * their declared DEFAULT literal, else NULL.

@@ -1,5 +1,7 @@
 package graft.parser
 
+import java.util.Locale
+
 import scala.collection.mutable.ArrayBuffer
 
 import graft.types.BqlType
@@ -91,15 +93,15 @@ object ChStatement {
                            kind: String = "plan") extends ChStatement
   /** Raw SELECT/WITH passthrough for Spark SQL. */
   final case class Select(sql: String) extends ChStatement
-  /** INSERT INTO FUNCTION remote('url', 'table' [, 'user', 'pwd']) …
-    * (reference: crates/runtime/src/mgmt.rs:744-770; addr is a JDBC url
-    * here — the Spark-native federation transport).
-    */
   /** INSERT INTO FUNCTION file('rel/path', 'Format') SELECT … — CH's
     * file-export table function (the write side of `file()`).
     */
   final case class InsertFile(path: String, format: String,
                               selectSql: String) extends ChStatement
+  /** INSERT INTO FUNCTION remote('url', 'table' [, 'user', 'pwd']) …
+    * (reference: crates/runtime/src/mgmt.rs:744-770; addr is a JDBC url
+    * here — the Spark-native federation transport).
+    */
   final case class InsertRemote(url: String, table: String,
                                 auth: Option[(String, String)],
                                 values: Option[Seq[Seq[Option[String]]]],
@@ -163,12 +165,6 @@ object ChStatement {
                                   op: String, value: String)
       extends ChStatement
 
-  /** Projection DDL: `ALTER TABLE t ADD PROJECTION [IF NOT EXISTS] p
-    * (SELECT … GROUP BY …)` / `DROP PROJECTION [IF EXISTS] p` /
-    * `MATERIALIZE PROJECTION p` (full rebuild). `op` is
-    * add|drop|materialize; `selectSql` carries the parenthesized body for
-    * `add`.
-    */
   /** ALTER TABLE t ADD INDEX n col TYPE kind… / DROP INDEX n /
     * MATERIALIZE INDEX n — the skipping-index DDL family (bloom_filter
     * indexes are physical parquet blooms; MATERIALIZE rewrites existing
@@ -178,6 +174,12 @@ object ChStatement {
                               indexName: String,
                               body: Option[String] = None,
                               ifExists: Boolean = false) extends ChStatement
+  /** Projection DDL: `ALTER TABLE t ADD PROJECTION [IF NOT EXISTS] p
+    * (SELECT … GROUP BY …)` / `DROP PROJECTION [IF EXISTS] p` /
+    * `MATERIALIZE PROJECTION p` (full rebuild). `op` is
+    * add|drop|materialize; `selectSql` carries the parenthesized body for
+    * `add`.
+    */
   final case class AlterProjection(db: Option[String], name: String,
                                    op: String, projName: String,
                                    selectSql: Option[String],
@@ -346,30 +348,124 @@ object ChParser {
     Right(out.result())
   }
 
+  /** One token scan of a SQL text, shared by every text scanner below:
+    * the tokens, each token's parenthesis depth, whether a set operation
+    * sits at the top level, and the token predicates the scanners test.
+    * Every predicate is safe for any index, negative or past the end.
+    *
+    * Depth convention: a token's depth is the number of parentheses open
+    * around it, and a `(` or `)` carries the depth OUTSIDE itself — in
+    * `f(x)`, `f`, `(` and `)` are at depth 0 and `x` at depth 1 — so a
+    * clause keyword is top-level exactly when its depth is 0. A stray `)`
+    * clamps at 0 instead of going negative. Text that does not tokenize
+    * scans as no tokens (`error` says why): every scanner then leaves it
+    * alone, and Spark reports the error.
+    */
+  final case class Scan(sql: String) {
+    private val lexed = tokenize(sql)
+    def error: Option[String] = lexed.left.toOption
+    val toks: Vector[Tok] = lexed.getOrElse(Vector.empty)
+    def length: Int = toks.length
+    def indices: Range = toks.indices
+    def apply(i: Int): Tok = toks(i)
+    def lift(i: Int): Option[Tok] = toks.lift(i)
+
+    private var op = false
+    /** Each token's depth; computed on first use, as most scanners never
+      * ask.
+      */
+    lazy val depth: Array[Int] = {
+      val a = new Array[Int](length)
+      var d = 0
+      for (i <- indices) toks(i) match {
+        case Punct("(", _) => a(i) = d; d += 1
+        case Punct(")", _) => d = math.max(0, d - 1); a(i) = d
+        case _ =>
+          a(i) = d
+          op ||= d == 0 &&
+            (kw(i, "union") || kw(i, "intersect") || kw(i, "except"))
+      }
+      a
+    }
+    /** A UNION/INTERSECT/EXCEPT at depth 0: the scope of a clause of the
+      * statement would be ambiguous.
+      */
+    def setOp: Boolean = { depth; op }
+
+    /** The identifier at i, unless it is one of the lower-case words in
+      * `except`.
+      */
+    def ident(i: Int, except: Set[String] = Set.empty): Option[String] =
+      lift(i) match {
+        case Some(Ident(w, _))
+            if except.isEmpty || !except(w.toLowerCase(Locale.ROOT)) => Some(w)
+        case _ => None
+      }
+    def kw(i: Int, w: String): Boolean = i >= 0 && i < length && (toks(i) match {
+      case Ident(t, _) => t.equalsIgnoreCase(w)
+      case _ => false
+    })
+    /** Whether token i is one of the lower-case keywords `ws`. */
+    def kwIn(i: Int, ws: Set[String]): Boolean =
+      ident(i).exists(w => ws(w.toLowerCase(Locale.ROOT)))
+    /** `kw` at depth 0. */
+    def top(i: Int, w: String): Boolean = kw(i, w) && depth(i) == 0
+    /** Where a clause ends: a depth-0 keyword from `ws`, or a `;`. */
+    def stop(i: Int, ws: Set[String]): Boolean =
+      i >= 0 && i < length && depth(i) == 0 && (punct(i, ";") || kwIn(i, ws))
+    /** Whether token i is a backquoted identifier. */
+    def quoted(i: Int): Boolean = ident(i).isDefined && sql.charAt(pos(i)) == '`'
+    /** The numeric literal at i, as written. */
+    def num(i: Int): Option[String] = lift(i).collect { case NumLit(t, _) => t }
+    /** The integer literal at i. */
+    def int(i: Int): Option[Long] = num(i).flatMap(_.toLongOption)
+    /** A signed integer literal at i: (value, tokens it spans). */
+    def signedNum(i: Int): Option[(Long, Int)] =
+      if (punct(i, "-")) int(i + 1).map(v => (-v, 2)) else int(i).map((_, 1))
+    def str(i: Int): Option[String] = lift(i).collect { case StrLit(t, _) => t }
+    def punct(i: Int, p: String): Boolean = i >= 0 && i < length && (toks(i) match {
+      case Punct(t, _) => t == p
+      case _ => false
+    })
+    /** The start of token i, or the text length past the end. */
+    def pos(i: Int): Int = if (i >= 0 && i < length) toks(i).pos else sql.length
+    /** The text from token a up to token b, trimmed. */
+    def slice(a: Int, b: Int): String = sql.substring(pos(a), pos(b)).trim
+    /** The first index from `from` on whose token satisfies `p`, or
+      * `length` when none does.
+      */
+    def seek(from: Int)(p: Int => Boolean): Int = {
+      var i = math.max(from, 0)
+      while (i < length && !p(i)) i += 1
+      math.min(i, length)
+    }
+    /** The matching `)` for the `(` at i. */
+    def close(i: Int): Option[Int] =
+      if (!punct(i, "(")) None
+      else Some(seek(i + 1)(j => depth(j) == depth(i) && punct(j, ")")))
+        .filter(_ < length)
+  }
+
+  /** Apply non-overlapping (from, to, replacement) text edits. */
+  private[graft] def splice(sql: String, edits: Seq[(Int, Int, String)]): String =
+    edits.sortBy(-_._1).foldLeft(sql) { case (acc, (from, to, text)) =>
+      acc.substring(0, from) + text + acc.substring(to)
+    }
+
   // ---- parser --------------------------------------------------------
-  private final class P(toks: Vector[Tok], val sql: String) {
+  private final class P(s: Scan) {
+    val sql: String = s.sql
     var i = 0
-    def peek: Option[Tok] = if (i < toks.length) Some(toks(i)) else None
-    def peekAt(off: Int): Option[Tok] =
-      if (i + off < toks.length) Some(toks(i + off)) else None
-    def next(): Tok = { val t = toks(i); i += 1; t }
-    def done: Boolean = i >= toks.length || isPunct(";") // trailing ';'
+    def peek: Option[Tok] = s.lift(i)
+    def peekAt(off: Int): Option[Tok] = s.lift(i + off)
+    def next(): Tok = { val t = s(i); i += 1; t }
+    def done: Boolean = i >= s.length || isPunct(";") // trailing ';'
     /** Lookahead: is the token `off` positions AFTER the current one the
       * given keyword? (isKwAt(0) == isKw.)
       */
-    def isKwAt(off: Int, kw: String): Boolean =
-      i + off < toks.length && (toks(i + off) match {
-        case Ident(t, _) => t.equalsIgnoreCase(kw)
-        case _ => false
-      })
-    def isKw(kw: String): Boolean = peek.exists {
-      case Ident(t, _) => t.equalsIgnoreCase(kw)
-      case _ => false
-    }
-    def isPunct(p: String): Boolean = peek.exists {
-      case Punct(t, _) => t == p
-      case _ => false
-    }
+    def isKwAt(off: Int, kw: String): Boolean = s.kw(i + off, kw)
+    def isKw(kw: String): Boolean = s.kw(i, kw)
+    def isPunct(p: String): Boolean = s.punct(i, p)
     def eatKw(kw: String): Boolean = if (isKw(kw)) { i += 1; true } else false
     def expectKw(kw: String): Either[String, Unit] =
       if (eatKw(kw)) Right(()) else Left(s"expected $kw at ${posText}")
@@ -380,21 +476,36 @@ object ChParser {
       case Some(Ident(t, _)) => i += 1; Right(t)
       case other => Left(s"expected identifier, got ${other.map(_.text)}")
     }
+    /** A string literal; `what` names the construct in the error. */
+    def string(what: String): Either[String, String] = peek match {
+      case Some(StrLit(t, _)) => i += 1; Right(t)
+      case other => Left(s"$what: expected string literal, got ${other.map(_.text)}")
+    }
     def posText: String = peek.map(t => s"'${t.text}' (pos ${t.pos})").getOrElse("<end>")
     /** Raw SQL from the current token to the end (for passthrough tails). */
-    def rest: String = peek.map(t => sql.substring(t.pos)).getOrElse("")
+    def rest: String = sql.substring(s.pos(i))
     /** Raw SQL between current token and (exclusive) a stop condition. */
     def sliceUntil(stop: P => Boolean): String = {
-      val from = peek.map(_.pos).getOrElse(sql.length)
+      val from = i
       while (peek.isDefined && !stop(this)) i += 1
-      val to = peek.map(_.pos).getOrElse(sql.length)
-      sql.substring(from, to).trim
+      s.slice(from, i)
+    }
+    /** Skip a balanced `( … )` group when one starts here. */
+    def skipGroup(): Unit = if (eatPunct("(")) {
+      var depth = 1
+      while (depth > 0 && peek.isDefined) {
+        next() match {
+          case Punct("(", _) => depth += 1
+          case Punct(")", _) => depth -= 1
+          case _ => ()
+        }
+      }
     }
     /** Like [[sliceUntil]], but the stop only fires OUTSIDE parentheses —
       * a comma inside `greatest(a, b)` doesn't end an UPDATE assignment.
       */
     def sliceBalancedUntil(stop: P => Boolean): String = {
-      val from = peek.map(_.pos).getOrElse(sql.length)
+      val from = s.pos(i)
       var depth = 0
       var go = true
       while (go && peek.isDefined) {
@@ -408,15 +519,10 @@ object ChParser {
           i += 1
         }
       }
-      val to = peek.map(_.pos).getOrElse(sql.length)
-      sql.substring(from, to).trim
+      sql.substring(from, s.pos(i)).trim
     }
   }
 
-  /** A mutation's WHERE condition: everything to the statement end
-    * (exclusive of a trailing `;`), required non-empty — a mutation
-    * without a predicate is always a mistake (CH requires one too).
-    */
   /** A partition VALUE after `DROP|DETACH|ATTACH PARTITION` — a string
     * literal, a (possibly negative) number, or a bare word; stored as the
     * unquoted text the partition expression evaluates to.
@@ -441,6 +547,10 @@ object ChParser {
       partitionValue(p).map(Some(_))
     } else Right(None)
 
+  /** A mutation's WHERE condition: everything to the statement end
+    * (exclusive of a trailing `;`), required non-empty — a mutation
+    * without a predicate is always a mistake (CH requires one too).
+    */
   private def mutationWhere(p: P, what: String): Either[String, String] = {
     val w = p.sliceUntil(_.isPunct(";"))
     if (w.nonEmpty) Right(w)
@@ -524,16 +634,7 @@ object ChParser {
           // CODEC(ZSTD(3)) etc. — a storage hint; parquet's own encoding
           // applies here, so the clause is accepted and dropped
           p.next()
-          if (p.eatPunct("(")) {
-            var depth = 1
-            while (depth > 0 && p.peek.isDefined) {
-              p.next() match {
-                case Punct("(", _) => depth += 1
-                case Punct(")", _) => depth -= 1
-                case _ => ()
-              }
-            }
-          }
+          p.skipGroup()
         } else if (p.isKw("comment")) {
           p.next()
           p.peek match { case Some(StrLit(_, _)) => p.next(): Unit; case _ => () }
@@ -774,16 +875,6 @@ object ChParser {
     */
   private def parseCreateDictionary(
       p: P): Either[String, CreateDictionary] = {
-    def skipParenGroup(): Unit = if (p.eatPunct("(")) {
-      var depth = 1
-      while (depth > 0 && p.peek.isDefined) {
-        p.next() match {
-          case Punct("(", _) => depth += 1
-          case Punct(")", _) => depth -= 1
-          case _ => ()
-        }
-      }
-    }
     val ine = parseIfNotExists(p)
     for {
       dbTab <- qualifiedName(p)
@@ -823,7 +914,7 @@ object ChParser {
       }
     } yield {
       while (p.isKw("layout") || p.isKw("lifetime")) {
-        p.next(); skipParenGroup()
+        p.next(); p.skipGroup()
       }
       CreateDictionary(dbTab._1, dbTab._2, cols, key, src, ine, p.sql.trim)
     }
@@ -859,35 +950,18 @@ object ChParser {
     * materialized-view engine to substitute the inserted block for the
     * source table. None when the FROM target is a subquery or absent.
     */
-  def firstFromTable(sql: String): Option[(String, Int, Int)] =
-    tokenize(sql).toOption.flatMap { toks =>
-      var d = 0
-      val depth = toks.map {
-        case Punct("(", _) => { val r = d; d += 1; r }
-        case Punct(")", _) => { d = math.max(0, d - 1); d }
-        case _ => d
+  def firstFromTable(sql: String): Option[(String, Int, Int)] = {
+    val s = Scan(sql)
+    val fi = s.seek(0)(s.top(_, "FROM"))
+    s.ident(fi + 1).map { t1 =>
+      // qualified form db.table
+      val (text, last) = s.ident(fi + 3) match {
+        case Some(t2) if s.punct(fi + 2, ".") => (s"$t1.$t2", fi + 3)
+        case _ => (t1, fi + 1)
       }
-      def kw(i: Int, k: String) = i < toks.length && (toks(i) match {
-        case Ident(w, _) => w.equalsIgnoreCase(k)
-        case _ => false
-      })
-      toks.indices.find(i => depth(i) == 0 && kw(i, "FROM")).flatMap { fi =>
-        toks.lift(fi + 1) match {
-          case Some(Ident(t1, p1)) =>
-            // qualified form db.table
-            val (text, lastIdx) = toks.lift(fi + 2) match {
-              case Some(Punct(".", _)) => toks.lift(fi + 3) match {
-                case Some(Ident(t2, _)) => (s"$t1.$t2", fi + 3)
-                case _ => (t1, fi + 1)
-              }
-              case _ => (t1, fi + 1)
-            }
-            val end = toks.lift(lastIdx + 1).map(_.pos).getOrElse(sql.length)
-            Some((text, p1, end))
-          case _ => None
-        }
-      }
+      (text, s.pos(fi + 1), s.pos(last + 1))
     }
+  }
 
   /** Rewrite `SELECT DISTINCT ON (c1, c2) …` to the equivalent
     * `… LIMIT 1 BY c1, c2` form (same contract: first row per key group
@@ -895,52 +969,22 @@ object ChParser {
     * LIMIT when one exists — the LIMIT BY rewriter then does the window
     * work. None when the clause is absent.
     */
-  def rewriteDistinctOn(sql: String): Option[String] =
-    tokenize(sql).toOption.flatMap { toks =>
-      def kw(i: Int, k: String) = i < toks.length && (toks(i) match {
-        case Ident(w, _) => w.equalsIgnoreCase(k)
-        case _ => false
-      })
-      if (!(kw(0, "SELECT") && kw(1, "DISTINCT") && kw(2, "ON") &&
-          toks.lift(3).exists(_.text == "(")))
-        return None
-      // span of the parenthesized key list
-      var d = 0
-      var i = 3
-      var end = -1
-      while (i < toks.length && end < 0) {
-        toks(i) match {
-          case Punct("(", _) => d += 1
-          case Punct(")", _) => d -= 1; if (d == 0) end = i
-          case _ => ()
-        }
-        i += 1
-      }
-      if (end < 0) return None
-      val keys = sql.substring(toks(3).pos + 1, toks(end).pos).trim
-      if (keys.isEmpty) return None
-      val bodyStart = toks.lift(end + 1).map(_.pos).getOrElse(sql.length)
-      val body = "SELECT " + sql.substring(bodyStart)
+  def rewriteDistinctOn(sql: String): Option[String] = {
+    val s = Scan(sql)
+    if (!(s.kw(0, "SELECT") && s.kw(1, "DISTINCT") && s.kw(2, "ON"))) None
+    // span of the parenthesized key list
+    else s.close(3).flatMap { end =>
+      val keys = sql.substring(s.pos(3) + 1, s.pos(end)).trim
+      val body = "SELECT " + sql.substring(s.pos(end + 1))
       // insert before a depth-0 outer LIMIT (or at the end)
-      tokenize(body).toOption.map { btoks =>
-        var bd = 0
-        val depth = btoks.map {
-          case Punct("(", _) => { val r = bd; bd += 1; r }
-          case Punct(")", _) => { bd = math.max(0, bd - 1); bd }
-          case _ => bd
-        }
-        val li = btoks.indices.find(j => depth(j) == 0 && (btoks(j) match {
-          case Ident(w, _) => w.equalsIgnoreCase("limit")
-          case _ => false
-        }))
-        li match {
-          case Some(j) =>
-            body.substring(0, btoks(j).pos) + s"LIMIT 1 BY $keys " +
-              body.substring(btoks(j).pos)
-          case None => body.replaceAll(";\\s*$", "") + s" LIMIT 1 BY $keys"
-        }
-      }
+      val b = Scan(body)
+      val li = b.seek(0)(b.top(_, "limit"))
+      Option.when(keys.nonEmpty)(
+        if (li < b.length)
+          body.substring(0, b.pos(li)) + s"LIMIT 1 BY $keys " + body.substring(b.pos(li))
+        else body.replaceAll(";\\s*$", "") + s" LIMIT 1 BY $keys")
     }
+  }
 
   /** Spans of ClickHouse's table-set membership form `[GLOBAL] [NOT] IN
     * <table>` (a bare identifier, not a parenthesized list/subquery):
@@ -948,35 +992,19 @@ object ChParser {
     * with no local meaning and is included in the span so the rewrite
     * drops it.
     */
-  def inTableRefs(sql: String): Seq[(String, Int, Int)] =
-    tokenize(sql).toOption.map { toks =>
-      val reserved = Set("select", "where", "group", "order", "limit",
-        "having", "settings", "window", "join", "on", "and", "or", "not",
-        "union", "intersect", "except", "by", "from", "as", "inner",
-        "left", "right", "full", "cross", "using", "asc", "desc", "with")
-      toks.indices.flatMap { i =>
-        val isIn = toks(i) match {
-          case Ident(w, _) => w.equalsIgnoreCase("in")
-          case _ => false
-        }
-        if (!isIn) None
-        else {
-          val globalStart = toks.lift(i - 1) match {
-            case Some(Ident(g, gp)) if g.equalsIgnoreCase("global") => Some(gp)
-            case _ => None
-          }
-          toks.lift(i + 1) match {
-            case Some(Ident(t, tp))
-                if !reserved.contains(t.toLowerCase(java.util.Locale.ROOT)) &&
-                  !toks.lift(i + 2).exists(_.text == "(") &&
-                  !toks.lift(i + 2).exists(_.text == ".") =>
-              val end = toks.lift(i + 2).map(_.pos).getOrElse(sql.length)
-              Some((t, globalStart.getOrElse(toks(i).pos), end))
-            case _ => None
-          }
-        }
-      }
-    }.getOrElse(Nil)
+  def inTableRefs(sql: String): Seq[(String, Int, Int)] = {
+    val s = Scan(sql)
+    s.indices.flatMap { i =>
+      s.ident(i + 1, inTableReserved).filter(_ => s.kw(i, "in") &&
+          !s.punct(i + 2, "(") && !s.punct(i + 2, "."))
+        .map(t => (t, s.pos(if (s.kw(i - 1, "global")) i - 1 else i), s.pos(i + 2)))
+    }
+  }
+
+  private val inTableReserved = Set("select", "where", "group", "order",
+    "limit", "having", "settings", "window", "join", "on", "and", "or", "not",
+    "union", "intersect", "except", "by", "from", "as", "inner", "left",
+    "right", "full", "cross", "using", "asc", "desc", "with")
 
   /** The pieces of a `… PREWHERE p [WHERE w] …` statement. `pre` is the
     * text before PREWHERE, `pw` the PREWHERE expression, `whereExpr` the
@@ -988,66 +1016,34 @@ object ChParser {
   /** Find a TOP-LEVEL ClickHouse PREWHERE clause (depth-0,
     * string-aware). None when absent or for set operations.
     */
-  def splitPrewhere(sql: String): Option[PrewhereParts] =
-    tokenize(sql).toOption.flatMap { toks =>
-      var d = 0
-      var unionish = false
-      val depth = toks.map {
-        case Punct("(", _) => { val r = d; d += 1; r }
-        case Punct(")", _) => { d = math.max(0, d - 1); d }
-        case Ident(w, _) if d == 0 &&
-            Seq("union", "intersect", "except").contains(w.toLowerCase) =>
-          unionish = true; d
-        case _ => d
-      }
-      def isClause(i: Int, ks: Set[String]) = toks(i) match {
-        case Ident(w, _) => ks.contains(w.toLowerCase(java.util.Locale.ROOT))
-        case Punct(";", _) => true
-        case _ => false
-      }
-      val stops = Set("where", "group", "order", "limit", "having",
-        "settings", "window")
-      val pi = toks.indices.find(i => depth(i) == 0 && (toks(i) match {
-        case Ident(w, _) => w.equalsIgnoreCase("prewhere")
-        case _ => false
-      }))
-      pi match {
-        case Some(i) if !unionish =>
-          val pwEnd = ((i + 1) until toks.length)
-            .find(j => depth(j) == 0 && isClause(j, stops))
-          val pwText = sql.substring(toks(i + 1).pos,
-            pwEnd.map(toks(_).pos).getOrElse(sql.length)).trim
-          if (pwText.isEmpty) None
-          else pwEnd match {
-            case Some(wi) if toks(wi).text.equalsIgnoreCase("where") =>
-              val wEnd = ((wi + 1) until toks.length)
-                .find(j => depth(j) == 0 && isClause(j, stops - "where"))
-              val wText = sql.substring(toks(wi + 1).pos,
-                wEnd.map(toks(_).pos).getOrElse(sql.length)).trim
-              Some(PrewhereParts(sql.substring(0, toks(i).pos), pwText,
-                Some(wText),
-                wEnd.map(j => sql.substring(toks(j).pos)).getOrElse("")))
-            case other =>
-              Some(PrewhereParts(sql.substring(0, toks(i).pos), pwText, None,
-                other.map(j => sql.substring(toks(j).pos)).getOrElse("")))
-          }
-        case _ => None
-      }
+  def splitPrewhere(sql: String): Option[PrewhereParts] = {
+    val s = Scan(sql)
+    val stops = Set("where", "group", "order", "limit", "having",
+      "settings", "window")
+    val i = s.seek(0)(s.top(_, "prewhere"))
+    val pwEnd = s.seek(i + 1)(s.stop(_, stops))
+    val pw = s.slice(i + 1, pwEnd)
+    if (i == s.length || s.setOp || pw.isEmpty) None
+    else {
+      val hasWhere = s.kw(pwEnd, "where")
+      val end = if (hasWhere) s.seek(pwEnd + 1)(s.stop(_, stops - "where"))
+                else pwEnd
+      Some(PrewhereParts(sql.substring(0, s.pos(i)), pw,
+        Option.when(hasWhere)(s.slice(pwEnd + 1, end)),
+        sql.substring(s.pos(end))))
     }
+  }
 
   /** Whether `name` appears as an IDENTIFIER token in `sql` — unlike a
     * regex over the raw text, string literals and comments never match
     * (ADVICE r17: `merge()`'s `_table` detection false-positived on the
     * token inside a string literal).
     */
-  def hasIdent(sql: String, name: String): Boolean =
-    tokenize(sql) match {
-      case Left(_) => sql.contains(name) // unparseable: conservative
-      case Right(toks) => toks.exists {
-        case Ident(t, _) => t.equalsIgnoreCase(name)
-        case _ => false
-      }
-    }
+  def hasIdent(sql: String, name: String): Boolean = {
+    val s = Scan(sql)
+    if (s.error.isDefined) sql.contains(name) // unparseable: conservative
+    else s.indices.exists(s.kw(_, name))
+  }
 
   /** Backquote every `a.b` identifier pair whose joined name is in
     * `names` — the flattened members of `Nested(...)` columns, which CH
@@ -1057,36 +1053,24 @@ object ChParser {
     * backticked ident (raw char at pos is '`') is left alone; chains
     * `x.a.b` (db.table.col) are excluded by requiring no adjacent dots.
     */
-  def backquoteDotted(sql: String, names: Set[String]): String =
-    tokenize(sql) match {
-      case Left(_) => sql
-      case Right(toks) =>
-        def rawIdent(i: Int): Option[Ident] = toks.lift(i) match {
-          case Some(id: Ident) if sql.charAt(id.pos) != '`' => Some(id)
-          case _ => None
-        }
-        def isDot(i: Int): Boolean = toks.lift(i) match {
-          case Some(Punct(".", _)) => true
-          case _ => false
-        }
-        val hits = toks.indices.flatMap { i =>
-          (rawIdent(i), toks.lift(i + 1), rawIdent(i + 2)) match {
-            case (Some(a), Some(Punct(".", _)), Some(b))
-                if names.contains(s"${a.text}.${b.text}") &&
-                  !isDot(i - 1) && !isDot(i + 3) &&
-                  // `.` must be ADJACENT on both sides: `tuple.field`
-                  // spaced as `t . f` is never a nested ref, and a NumLit
-                  // never starts an ident so `1.5` can't reach here
-                  a.pos + a.text.length == toks(i + 1).pos &&
-                  toks(i + 1).pos + 1 == b.pos =>
-              Some((a.pos, b.pos + b.text.length, s"`${a.text}.${b.text}`"))
-            case _ => None
-          }
-        }
-        hits.sortBy(-_._1).foldLeft(sql) { case (acc, (from, to, rep)) =>
-          acc.substring(0, from) + rep + acc.substring(to)
-        }
-    }
+  def backquoteDotted(sql: String, names: Set[String]): String = {
+    val s = Scan(sql)
+    splice(sql, s.indices.flatMap { i =>
+      (s.ident(i), s.ident(i + 2)) match {
+        case (Some(a), Some(b))
+            if s.punct(i + 1, ".") && !s.quoted(i) && !s.quoted(i + 2) &&
+              names.contains(s"$a.$b") &&
+              !s.punct(i - 1, ".") && !s.punct(i + 3, ".") &&
+              // `.` must be ADJACENT on both sides: `tuple.field`
+              // spaced as `t . f` is never a nested ref, and a NumLit
+              // never starts an ident so `1.5` can't reach here
+              s.pos(i) + a.length == s.pos(i + 1) &&
+              s.pos(i + 1) + 1 == s.pos(i + 2) =>
+          Some((s.pos(i), s.pos(i + 2) + b.length, s"`$a.$b`"))
+        case _ => None
+      }
+    })
+  }
 
   /** One `expr [AS alias]` item of an ARRAY JOIN clause. `bare` marks a
     * plain un-aliased column reference, which ClickHouse REPLACES in
@@ -1110,81 +1094,40 @@ object ChParser {
     * name the element by — ClickHouse would accept it but only the item
     * expression text itself could reference it).
     */
-  def splitArrayJoin(sql: String): Option[ArrayJoinParts] =
-    tokenize(sql).toOption.flatMap { toks =>
-      var d = 0
-      var unionish = false
-      val depth = toks.map {
-        case Punct("(", _) => { val r = d; d += 1; r }
-        case Punct(")", _) => { d = math.max(0, d - 1); d }
-        case Ident(w, _) if d == 0 &&
-            Seq("union", "intersect", "except").contains(w.toLowerCase) =>
-          unionish = true; d
-        case _ => d
+  def splitArrayJoin(sql: String): Option[ArrayJoinParts] = {
+    val s = Scan(sql)
+    val i = s.seek(0)(j => s.top(j, "array") && s.top(j + 1, "join"))
+    val left = s.top(i - 1, "left")
+    val clauseStart = if (left) i - 1 else i
+    val seli = s.seek(0)(s.top(_, "select"))
+    val fromi = s.seek(0)(j => j < clauseStart && s.top(j, "from"))
+    if (i == s.length || s.setOp || fromi == s.length || seli >= fromi) None
+    else {
+      val stops = Set("where", "prewhere", "group", "order", "limit",
+        "having", "settings", "window")
+      val end = s.seek(i + 2)(s.stop(_, stops))
+      // split items on depth-0 commas within [i+2, end)
+      val cuts = ((i + 2) until end).filter(j => s.depth(j) == 0 && s.punct(j, ","))
+      val items = ((i + 2) +: cuts.map(_ + 1)).zip(cuts :+ end).map { case (a, b) =>
+        ((a until b).find(s.top(_, "as")), s.ident(a)) match {
+          // the alias must be the item's FINAL token: `expr AS a x`
+          // (e.g. a trailing JOIN clause CH grammar allows here)
+          // must fall through unrewritten rather than silently
+          // dropping the trailing tokens
+          case (Some(k), _) if k + 2 == b =>
+            s.ident(k + 1).map(ArrayJoinItem(s.slice(a, k), _, bare = false))
+              .filter(_.expr.nonEmpty)
+          case (None, Some(c)) if b - a == 1 =>
+            Some(ArrayJoinItem(c, c, bare = true))
+          case _ => None
+        }
       }
-      def kw(i: Int, w: String) = i >= 0 && i < toks.length &&
-        depth(i) == 0 && (toks(i) match {
-          case Ident(t, _) => t.equalsIgnoreCase(w)
-          case _ => false
-        })
-      val aji = toks.indices.find(i => kw(i, "array") && kw(i + 1, "join"))
-      aji match {
-        case Some(i) if !unionish =>
-          val left = kw(i - 1, "left")
-          val clauseStart = if (left) i - 1 else i
-          val seli = toks.indices.find(kw(_, "select"))
-          val fromi = toks.indices.find(j => j < clauseStart && kw(j, "from"))
-          if (seli.isEmpty || fromi.isEmpty || seli.get >= fromi.get) None
-          else {
-            val stops = Set("where", "prewhere", "group", "order", "limit",
-              "having", "settings", "window")
-            def isStop(j: Int) = depth(j) == 0 && (toks(j) match {
-              case Ident(w, _) => stops.contains(w.toLowerCase(java.util.Locale.ROOT))
-              case Punct(";", _) => true
-              case _ => false
-            })
-            val end = ((i + 2) until toks.length).find(isStop)
-              .getOrElse(toks.length)
-            // split items on depth-0 commas within [i+2, end)
-            val cuts = ((i + 2) until end)
-              .filter(j => depth(j) == 0 && toks(j).text == ",")
-            val bounds = ((i + 2) +: cuts.map(_ + 1)).zip(
-              cuts :+ end)
-            val items = bounds.map { case (a, b) =>
-              val asIdx = (a until b).find(j => depth(j) == 0 &&
-                (toks(j) match {
-                  case Ident(w, _) => w.equalsIgnoreCase("as")
-                  case _ => false
-                }))
-              asIdx match {
-                // the alias must be the item's FINAL token: `expr AS a x`
-                // (e.g. a trailing JOIN clause CH grammar allows here)
-                // must fall through unrewritten rather than silently
-                // dropping the trailing tokens
-                case Some(k) if k + 2 == b =>
-                  (toks(k + 1), sql.substring(toks(a).pos, toks(k).pos).trim) match {
-                    case (Ident(al, _), ex) if ex.nonEmpty =>
-                      Some(ArrayJoinItem(ex, al, bare = false))
-                    case _ => None
-                  }
-                case None if b - a == 1 => toks(a) match {
-                  case Ident(c, _) => Some(ArrayJoinItem(c, c, bare = true))
-                  case _ => None
-                }
-                case _ => None
-              }
-            }
-            if (items.isEmpty || items.exists(_.isEmpty)) None
-            else Some(ArrayJoinParts(
-              sql.substring(0, toks(seli.get).pos),
-              sql.substring(toks(seli.get + 1).pos, toks(fromi.get).pos).trim,
-              sql.substring(toks(fromi.get + 1).pos, toks(clauseStart).pos).trim,
-              left, items.flatten,
-              if (end < toks.length) sql.substring(toks(end).pos) else ""))
-          }
-        case _ => None
-      }
+      if (items.exists(_.isEmpty)) None
+      else Some(ArrayJoinParts(sql.substring(0, s.pos(seli)),
+        s.slice(seli + 1, fromi), s.slice(fromi + 1, clauseStart),
+        left, items.flatten, sql.substring(s.pos(end))))
     }
+  }
 
   /** A `FROM [db.]table SAMPLE <num> [OFFSET <num>]` occurrence: the
     * table it samples, the span [from, to) covering the whole clause
@@ -1196,51 +1139,24 @@ object ChParser {
                                from: Int, to: Int, num: String,
                                offset: Option[String] = None)
 
-  def splitSample(sql: String): Option[SampleParts] =
-    tokenize(sql).toOption.flatMap { toks =>
-      var d = 0
-      var unionish = false
-      val depth = toks.map {
-        case Punct("(", _) => { val r = d; d += 1; r }
-        case Punct(")", _) => { d = math.max(0, d - 1); d }
-        case Ident(w, _) if d == 0 &&
-            Seq("union", "intersect", "except").contains(w.toLowerCase) =>
-          unionish = true; d
-        case _ => d
-      }
-      def kw(i: Int, w: String) = i >= 0 && i < toks.length &&
-        depth(i) == 0 && (toks(i) match {
-          case Ident(t, _) => t.equalsIgnoreCase(w)
-          case _ => false
-        })
-      val si = toks.indices.find(i => kw(i, "sample") &&
-        (toks.lift(i + 1) match {
-          case Some(NumLit(_, _)) => depth(i + 1) == 0
-          case _ => false
-        }))
-      si match {
-        case Some(i) if !unionish =>
-          // optional `OFFSET <num>` after the fraction
-          val (off, after) = (toks.lift(i + 2), toks.lift(i + 3)) match {
-            case (Some(Ident(o, _)), Some(NumLit(_, _)))
-                if o.equalsIgnoreCase("offset") && depth(i + 2) == 0 =>
-              (Some(toks(i + 3).text), i + 4)
-            case _ => (None, i + 2)
-          }
-          val end = toks.lift(after).map(_.pos).getOrElse(sql.length)
-          // the table ref immediately precedes SAMPLE: ident or db.ident
-          (toks.lift(i - 3), toks.lift(i - 2), toks.lift(i - 1)) match {
-            case (Some(Ident(db, p0)), Some(Punct(".", _)), Some(Ident(t, _)))
-                if depth(i - 1) == 0 =>
-              Some(SampleParts(Some(db), t, p0, end, toks(i + 1).text, off))
-            case (_, _, Some(Ident(t, p0))) if depth(i - 1) == 0 &&
-                !t.equalsIgnoreCase("from") =>
-              Some(SampleParts(None, t, p0, end, toks(i + 1).text, off))
-            case _ => None
-          }
+  def splitSample(sql: String): Option[SampleParts] = {
+    val s = Scan(sql)
+    val i = s.seek(0)(j => s.top(j, "sample") && s.num(j + 1).isDefined)
+    if (i == s.length || s.setOp) None
+    else {
+      // optional `OFFSET <num>` after the fraction
+      val off = s.num(i + 3).filter(_ => s.top(i + 2, "offset"))
+      val end = s.pos(if (off.isDefined) i + 4 else i + 2)
+      // the table ref immediately precedes SAMPLE: ident or db.ident
+      (s.ident(i - 3), s.ident(i - 1)) match {
+        case (Some(db), Some(t)) if s.punct(i - 2, ".") =>
+          Some(SampleParts(Some(db), t, s.pos(i - 3), end, s(i + 1).text, off))
+        case (_, Some(t)) if !t.equalsIgnoreCase("from") =>
+          Some(SampleParts(None, t, s.pos(i - 1), end, s(i + 1).text, off))
         case _ => None
       }
     }
+  }
 
   /** A `FROM [db.]table FINAL` occurrence: the table it reads and the
     * span [from, to) covering `<table ref> FINAL` (for splicing). Same
@@ -1252,84 +1168,37 @@ object ChParser {
   final case class FinalParts(db: Option[String], table: String,
                               from: Int, to: Int)
 
-  def splitFinal(sql: String): Option[FinalParts] =
-    tokenize(sql).toOption.flatMap { toks =>
-      var d = 0
-      var unionish = false
-      val depth = toks.map {
-        case Punct("(", _) => { val r = d; d += 1; r }
-        case Punct(")", _) => { d = math.max(0, d - 1); d }
-        case Ident(w, _) if d == 0 &&
-            Seq("union", "intersect", "except").contains(w.toLowerCase) =>
-          unionish = true; d
-        case _ => d
-      }
-      val fi = toks.indices.find { i =>
-        depth(i) == 0 && (toks(i) match {
-          case Ident(t, _) => t.equalsIgnoreCase("final")
-          case _ => false
-        }) && ((toks.lift(i - 2), toks.lift(i - 1)) match {
-          // the table ref immediately precedes FINAL and itself follows
-          // FROM — `SELECT final FROM t` or a bare alias elsewhere can
-          // never match (v1 scope: the FROM table only, not JOIN sides)
-          case (Some(Ident(kw, _)), Some(Ident(t, _)))
-              if depth(i - 1) == 0 && !t.equalsIgnoreCase("from") =>
-            kw.equalsIgnoreCase("from")
-          case _ => false
-        })
-      }
-      // separately allow the qualified `FROM db.t FINAL` shape
-      val fiQ = toks.indices.find { i =>
-        depth(i) == 0 && (toks(i) match {
-          case Ident(t, _) => t.equalsIgnoreCase("final")
-          case _ => false
-        }) && ((toks.lift(i - 4), toks.lift(i - 3), toks.lift(i - 2),
-          toks.lift(i - 1)) match {
-          case (Some(Ident(kw, _)), Some(Ident(_, _)), Some(Punct(".", _)),
-              Some(Ident(_, _))) if depth(i - 1) == 0 =>
-            kw.equalsIgnoreCase("from")
-          case _ => false
-        })
-      }
-      val hit = fi.orElse(fiQ)
-      hit match {
-        case Some(i) if !unionish &&
-            // refuse FINAL SAMPLE: undefined composition, error loudly
-            !(toks.lift(i + 1) match {
-              case Some(Ident(s, _)) => s.equalsIgnoreCase("sample")
-              case _ => false
-            }) =>
-          val end = toks.lift(i + 1).map(_.pos).getOrElse(sql.length)
-          (toks.lift(i - 3), toks.lift(i - 2), toks.lift(i - 1)) match {
-            case (Some(Ident(db, p0)), Some(Punct(".", _)), Some(Ident(t, _)))
-                if depth(i - 1) == 0 && fiQ.contains(i) =>
-              Some(FinalParts(Some(db), t, p0, end))
-            case (_, _, Some(Ident(t, p0))) if depth(i - 1) == 0 &&
-                !t.equalsIgnoreCase("from") =>
-              Some(FinalParts(None, t, p0, end))
-            case _ => None
-          }
-        case _ => None
-      }
-    }
+  def splitFinal(sql: String): Option[FinalParts] = {
+    val s = Scan(sql)
+    // the table ref immediately precedes FINAL and itself follows FROM —
+    // `SELECT final FROM t` or a bare alias elsewhere can never match
+    // (v1 scope: the FROM table only, not JOIN sides)
+    val fi = s.seek(0)(i => s.top(i, "final") && s.kw(i - 2, "from") &&
+      s.ident(i - 1).exists(!_.equalsIgnoreCase("from")))
+    // separately allow the qualified `FROM db.t FINAL` shape
+    val fiQ = s.seek(0)(i => s.top(i, "final") && s.kw(i - 4, "from") &&
+      s.ident(i - 3).isDefined && s.punct(i - 2, ".") && s.ident(i - 1).isDefined)
+    val i = if (fi < s.length) fi else fiQ
+    // refuse FINAL SAMPLE: undefined composition, error loudly
+    if (i == s.length || s.setOp || s.kw(i + 1, "sample")) None
+    else if (i == fiQ)
+      Some(FinalParts(s.ident(i - 3), s.ident(i - 1).get, s.pos(i - 3), s.pos(i + 1)))
+    else Some(FinalParts(None, s.ident(i - 1).get, s.pos(i - 1), s.pos(i + 1)))
+  }
 
   /** All spans of `db.name` qualified references (for names in the given
     * set) — string/comment-aware, any nesting depth. Used to splice the
     * engine's `system.*` introspection views into SELECT text.
     */
   def qualifiedRefs(sql: String, db: String,
-                    names: Set[String]): Seq[(String, Int, Int)] =
-    tokenize(sql).toOption.map { toks =>
-      toks.indices.flatMap { i =>
-        (toks(i), toks.lift(i + 1), toks.lift(i + 2)) match {
-          case (Ident(d, p), Some(Punct(".", _)), Some(Ident(n, _)))
-              if d.equalsIgnoreCase(db) && names.contains(n.toLowerCase(java.util.Locale.ROOT)) =>
-            val end = toks.lift(i + 3).map(_.pos).getOrElse(sql.length)
-            Some((n.toLowerCase(java.util.Locale.ROOT), p, end))
-          case _ => None
-        }
-      }
-    }.getOrElse(Nil)
+                    names: Set[String]): Seq[(String, Int, Int)] = {
+    val s = Scan(sql)
+    s.indices.flatMap { i =>
+      s.ident(i + 2).map(_.toLowerCase(Locale.ROOT)).filter(n =>
+        s.kw(i, db) && s.punct(i + 1, ".") && names.contains(n))
+        .map(n => (n, s.pos(i), s.pos(i + 3)))
+    }
+  }
 
   /** SETTINGS k=v [, k=v ...] — values admit a leading sign
     * (signed_number in the reference grammar, bql.pest); a dangling
@@ -1363,16 +1232,12 @@ object ChParser {
   /** remote('url', 'table' [, 'user', 'pwd']) argument list. */
   private def parseRemoteArgs(p: P): Either[String, (String, String, Option[(String, String)])] = {
     if (!p.eatPunct("(")) return Left(s"remote: expected '(' at ${p.posText}")
-    def str(): Either[String, String] = p.peek match {
-      case Some(StrLit(s, _)) => p.next(); Right(s)
-      case other => Left(s"remote: expected string literal, got ${other.map(_.text)}")
-    }
     for {
-      url <- str()
+      url <- p.string("remote")
       _ <- p.expectPunct(",")
-      tab <- str()
+      tab <- p.string("remote")
       auth <- if (p.eatPunct(",")) for {
-        u <- str(); _ <- p.expectPunct(","); w <- str()
+        u <- p.string("remote"); _ <- p.expectPunct(","); w <- p.string("remote")
       } yield Some((u, w))
       else Right(None)
       _ <- p.expectPunct(")")
@@ -1380,23 +1245,15 @@ object ChParser {
   }
 
   private def parseInsert(p: P): Either[String, ChStatement] =
-    if (p.isKw("into") && {
-      val save = p.i; p.next()
-      val isFn = p.isKw("function"); p.i = save; isFn
-    }) {
+    if (p.isKw("into") && p.isKwAt(1, "function")) {
       p.next(); p.next() // INTO FUNCTION
       if (p.isKw("file")) {
         p.next()
-        def str(): Either[String, String] = p.peek match {
-          case Some(StrLit(s, _)) => p.next(); Right(s)
-          case other =>
-            Left(s"file: expected string literal, got ${other.map(_.text)}")
-        }
         for {
           _ <- p.expectPunct("(")
-          path <- str()
+          path <- p.string("file")
           _ <- p.expectPunct(",")
-          fmt <- str()
+          fmt <- p.string("file")
           _ <- p.expectPunct(")")
           stmt <- {
             if (p.isKw("select") || p.isKw("with"))
@@ -1518,41 +1375,24 @@ object ChParser {
     Right(rows.toSeq)
   }
 
-  /** Parse one statement. */
   /** Splice every DDL-position `ON CLUSTER x` out of a statement — a
     * single-process engine IS its whole cluster, so the clause is
     * accepted and dropped (real CH scripts carry it on nearly every
     * DDL). Applied only to command statements, never to SELECTs, where
     * `on` is a join keyword.
     */
-  private def stripOnCluster(sql: String): String =
-    tokenize(sql).toOption.fold(sql) { toks =>
-      val spans = toks.indices.collect {
-        case i if (toks(i) match {
-              case Ident(w, _) => w.equalsIgnoreCase("on")
-              case _ => false
-            }) && (toks.lift(i + 1) match {
-              case Some(Ident(w, _)) => w.equalsIgnoreCase("cluster")
-              case _ => false
-            }) && toks.lift(i + 2).exists {
-              case Ident(_, _) | StrLit(_, _) => true
-              case _ => false
-            } =>
-          // end at the NEXT token's start (escaped string literals make
-          // the raw span of toks(i+2) non-recoverable from its text)
-          (toks(i).pos, toks.lift(i + 3).map(_.pos).getOrElse(sql.length))
-      }
-      if (spans.isEmpty) sql
-      else {
-        val sb = new StringBuilder
-        var last = 0
-        spans.foreach { case (a, b) =>
-          sb.append(sql.substring(last, a)); last = b
-        }
-        sb.append(sql.substring(last)).toString
-      }
-    }
+  private def stripOnCluster(sql: String): String = {
+    val s = Scan(sql)
+    splice(sql, s.indices.collect {
+      case i if s.kw(i, "on") && s.kw(i + 1, "cluster") &&
+          (s.ident(i + 2).isDefined || s.str(i + 2).isDefined) =>
+        // end at the NEXT token's start (escaped string literals make
+        // the raw span of toks(i+2) non-recoverable from its text)
+        (s.pos(i), s.pos(i + 3), "")
+    })
+  }
 
+  /** Parse one statement. */
   def parse(sql0: String): Either[String, ChStatement] = {
     val ddlHead = ("(?is)^\\s*(create|drop|alter|rename|truncate|detach|" +
       "attach|exchange|optimize)\\b").r
@@ -1561,8 +1401,10 @@ object ChParser {
     parseInner(sql)
   }
 
-  private def parseInner(sql: String): Either[String, ChStatement] = tokenize(sql).flatMap { toks =>
-    val p = new P(toks, sql)
+  private def parseInner(sql: String): Either[String, ChStatement] = {
+    val s = Scan(sql)
+    s.error.toLeft(new P(s))
+  }.flatMap { p =>
     if (p.isKw("select") || p.isKw("with")) Right(Select(sql))
     else if (p.isKw("explain")) {
       p.next()
@@ -1910,38 +1752,33 @@ object ChParser {
     * (`numbers()`, `remote()`) splice on these spans instead of regexing
     * raw text, so `SELECT 'numbers(5)'` survives untouched.
     */
-  def tableFnCalls(sql: String, fn: String): Seq[(Int, Int, Seq[String])] =
-    tokenize(sql) match {
-      case Left(_) => Nil // let the real parser produce the error
-      case Right(toks) =>
-        val out = ArrayBuffer.empty[(Int, Int, Seq[String])]
-        var i = 0
-        while (i < toks.length) {
-          toks(i) match {
-            case Ident(t, p0) if t.equalsIgnoreCase(fn) && i + 1 < toks.length &&
-                (toks(i + 1) match { case Punct("(", _) => true; case _ => false }) =>
-              val args = ArrayBuffer.empty[String]
-              var j = i + 2
-              var endPos = -1
-              var ok = true
-              var expectArg = true
-              while (endPos < 0 && ok && j < toks.length) {
-                toks(j) match {
-                  case StrLit(s, _) if expectArg => args += s; expectArg = false
-                  case NumLit(s, _) if expectArg => args += s; expectArg = false
-                  case Punct(",", _) if !expectArg => expectArg = true
-                  case Punct(")", p) if !expectArg => endPos = p + 1
-                  case _ => ok = false
-                }
-                j += 1
-              }
-              if (ok && endPos > 0) { out += ((p0, endPos, args.toSeq)); i = j - 1 }
-            case _ => ()
+  def tableFnCalls(sql: String, fn: String): Seq[(Int, Int, Seq[String])] = {
+    val s = Scan(sql)
+    val out = ArrayBuffer.empty[(Int, Int, Seq[String])]
+    var i = 0
+    while (i < s.length) {
+      if (s.kw(i, fn) && s.punct(i + 1, "(")) {
+        val args = ArrayBuffer.empty[String]
+        var j = i + 2
+        var endPos = -1
+        var ok = true
+        var expectArg = true
+        while (endPos < 0 && ok && j < s.length) {
+          s(j) match {
+            case StrLit(a, _) if expectArg => args += a; expectArg = false
+            case NumLit(a, _) if expectArg => args += a; expectArg = false
+            case Punct(",", _) if !expectArg => expectArg = true
+            case Punct(")", p) if !expectArg => endPos = p + 1
+            case _ => ok = false
           }
-          i += 1
+          j += 1
         }
-        out.toSeq
+        if (ok && endPos > 0) { out += ((s.pos(i), endPos, args.toSeq)); i = j - 1 }
+      }
+      i += 1
     }
+    out.toSeq
+  }
 
   /** Lexical occurrences of `fn('lit', …, expr, …)`: the first `nLit`
     * arguments must be string literals (dictionary and attribute names);
@@ -1951,59 +1788,35 @@ object ChParser {
     * comments never match. Returns (start, endExclusive, litArgs, rawArgs).
     */
   def dictFnCalls(sql: String, fn: String,
-                  nLit: Int): Seq[(Int, Int, Seq[String], Seq[String])] =
-    tokenize(sql) match {
-      case Left(_) => Nil
-      case Right(toks) =>
-        val out = ArrayBuffer.empty[(Int, Int, Seq[String], Seq[String])]
-        var i = 0
-        while (i < toks.length) {
-          toks(i) match {
-            case Ident(t, p0) if t.equalsIgnoreCase(fn) && i + 1 < toks.length &&
-                (toks(i + 1) match { case Punct("(", _) => true; case _ => false }) =>
-              var j = i + 2
-              val lits = ArrayBuffer.empty[String]
-              var ok = true
-              while (ok && lits.length < nLit && j + 1 < toks.length) {
-                (toks(j), toks(j + 1)) match {
-                  case (StrLit(s, _), Punct(",", _)) => lits += s; j += 2
-                  case _ => ok = false
-                }
-              }
-              if (ok && lits.length == nLit) {
-                val raws = ArrayBuffer.empty[String]
-                var depth = 1
-                var argStart = toks(j).pos
-                var endPos = -1
-                while (endPos < 0 && ok && j < toks.length) {
-                  toks(j) match {
-                    case Punct("(", _) => depth += 1
-                    case Punct(")", pp) =>
-                      depth -= 1
-                      if (depth == 0) {
-                        val a = sql.substring(argStart, pp).trim
-                        if (a.isEmpty) ok = false else raws += a
-                        endPos = pp + 1
-                      }
-                    case Punct(",", pp) if depth == 1 =>
-                      val a = sql.substring(argStart, pp).trim
-                      if (a.isEmpty) ok = false else raws += a
-                      argStart = pp + 1
-                    case _ => ()
-                  }
-                  j += 1
-                }
-                if (ok && endPos > 0) {
-                  out += ((p0, endPos, lits.toSeq, raws.toSeq))
-                  i = j - 1
-                }
-              }
-            case _ => ()
-          }
-          i += 1
+                  nLit: Int): Seq[(Int, Int, Seq[String], Seq[String])] = {
+    val s = Scan(sql)
+    val out = ArrayBuffer.empty[(Int, Int, Seq[String], Seq[String])]
+    var i = 0
+    while (i < s.length) {
+      if (s.kw(i, fn) && s.punct(i + 1, "(")) {
+        var j = i + 2
+        val lits = ArrayBuffer.empty[String]
+        while (lits.length < nLit && s.str(j).isDefined && s.punct(j + 1, ",")) {
+          lits += s.str(j).get; j += 2
         }
-        out.toSeq
+        s.close(i + 1).filter(_ => lits.length == nLit).foreach { end =>
+          // the raw arguments split on the call's own commas
+          val cuts = (j until end).filter(k =>
+            s.depth(k) == s.depth(i + 1) + 1 && s.punct(k, ","))
+          val raws = (s.pos(j) +: cuts.map(s.pos(_) + 1)).zip(
+            cuts.map(s.pos) :+ s.pos(end)).map { case (a, b) =>
+            sql.substring(a, b).trim
+          }
+          if (raws.forall(_.nonEmpty)) {
+            out += ((s.pos(i), s.pos(end) + 1, lits.toSeq, raws))
+            i = end
+          }
+        }
+      }
+      i += 1
     }
+    out.toSeq
+  }
 
   /** CH query-surface normalizations that don't change results, so a
     * clickhouse-client-authored SELECT runs unmodified:
@@ -2022,177 +1835,116 @@ object ChParser {
     var guard = 0
     while (changed && guard < 12) {
       changed = false; guard += 1
-      tokenize(sql) match {
-        case Left(_) => return sql
-        case Right(toks) =>
-          val depths = new Array[Int](toks.length)
-          var d = 0
-          toks.zipWithIndex.foreach { case (t, i) =>
-            t match {
-              case Punct("(", _) => depths(i) = d; d += 1
-              case Punct(")", _) => d -= 1; depths(i) = d
-              case _ => depths(i) = d
-            }
+      val s = Scan(sql)
+      val last = s.length - 1
+      val end = if (s.punct(last, ";")) last - 1 else last
+      // trailing FORMAT <name>
+      if (end >= 1 && s.depth(end) == 0 && s.kw(end - 1, "format") &&
+          s.ident(end, Set("format")).isDefined) {
+        sql = sql.substring(0, s.pos(end - 1)).trim
+        changed = true
+      }
+      // trailing SETTINGS k = v [, k = v …]
+      if (!changed) {
+        val si = s.indices.lastIndexWhere(s.top(_, "settings"))
+        if (si > 0 && si < end) {
+          var j = si + 1
+          var ok = true
+          while (ok && j <= end) {
+            if (j + 2 <= end && s.ident(j).isDefined && s.punct(j + 1, "=") &&
+                !s(j + 2).isInstanceOf[Punct]) {
+              j += 3
+              if (j <= end) { if (s.punct(j, ",")) j += 1 else ok = false }
+            } else ok = false
           }
-          def isIdent(i: Int, s: String): Boolean =
-            i >= 0 && i < toks.length && (toks(i) match {
-              case Ident(t, _) => t.equalsIgnoreCase(s)
-              case _ => false
-            })
-          val last = toks.length - 1
-          val end = if (last >= 0 && toks(last).text == ";") last - 1 else last
-          // trailing FORMAT <name>
-          if (!changed && end >= 1 && depths(end) == 0 &&
-              isIdent(end - 1, "format") && toks(end).isInstanceOf[Ident] &&
-              !isIdent(end, "format")) {
-            sql = sql.substring(0, toks(end - 1).pos).trim
+          if (ok && j == end + 1) {
+            sql = sql.substring(0, s.pos(si)).trim + (if (last != end) ";" else "")
             changed = true
           }
-          // trailing SETTINGS k = v [, k = v …]
-          if (!changed) {
-            val si = toks.indices.lastIndexWhere(i =>
-              depths(i) == 0 && isIdent(i, "settings"))
-            if (si > 0 && si < end) {
-              var j = si + 1
-              var ok = true
-              while (ok && j <= end) {
-                val kvOk = j + 2 <= end && toks(j).isInstanceOf[Ident] &&
-                  toks(j + 1).text == "=" &&
-                  (toks(j + 2) match {
-                    case _: NumLit | _: StrLit | _: Ident => true
-                    case Punct("-", _) => false
-                    case _ => false
-                  })
-                if (kvOk) {
-                  j += 3
-                  if (j <= end) {
-                    if (toks(j).text == ",") j += 1 else ok = false
-                  }
-                } else ok = false
-              }
-              if (ok && j == end + 1) {
-                sql = sql.substring(0, toks(si).pos).trim +
-                  (if (last != end) ";" else "")
-                changed = true
-              }
-            }
-          }
-          // CH dateDiff('unit', a, b[, tz]): Spark's parser owns the name
-          // `datediff` and demands an UNQUOTED unit keyword, so the
-          // quoted-unit CH form renames onto the registry builder
-          // (chDateDiff). Spark's own unquoted form passes untouched.
-          if (!changed) {
-            val di = toks.indices.find(i =>
-              (isIdent(i, "datediff") || isIdent(i, "date_diff")) &&
-                i + 2 < toks.length && toks(i + 1).text == "(" &&
-                toks(i + 2).isInstanceOf[StrLit])
-            di.foreach { i =>
-              sql = sql.substring(0, toks(i).pos) + "chDateDiff" +
-                sql.substring(toks(i).pos + toks(i).text.length)
-              changed = true
-            }
-          }
-          // count() → count(*)
-          if (!changed) {
-            val ci = toks.indices.find(i => isIdent(i, "count") &&
-              i + 2 < toks.length && toks(i + 1).text == "(" &&
-              toks(i + 2).text == ")")
-            ci.foreach { i =>
-              sql = sql.substring(0, toks(i).pos) + "count(*)" +
-                sql.substring(toks(i + 2).pos + 1)
-              changed = true
-            }
-          }
-          // CH `LIMIT off, n` → `LIMIT n OFFSET off` (not the LIMIT BY
-          // form — a following BY keyword leaves it for that rewrite)
-          if (!changed) {
-            val li = toks.indices.find(i => isIdent(i, "limit") &&
-              i + 3 < toks.length && depths(i) == 0 &&
-              toks(i + 1).isInstanceOf[NumLit] && toks(i + 2).text == "," &&
-              toks(i + 3).isInstanceOf[NumLit] &&
-              !(i + 4 < toks.length && isIdent(i + 4, "by")))
-            li.foreach { i =>
-              val off = toks(i + 1).text
-              val nn = toks(i + 3).text
-              val endOff = toks(i + 3).pos + toks(i + 3).text.length
-              sql = sql.substring(0, toks(i).pos) +
-                s"LIMIT $nn OFFSET $off" + sql.substring(endOff)
-              changed = true
-            }
-          }
-          // bare `USING k1, k2` (CH allows it; Spark requires parens)
-          if (!changed) {
-            val kwStop = Set("from", "where", "group", "order", "limit",
-              "on", "join", "left", "right", "inner", "full", "cross",
-              "union", "intersect", "except", "having", "settings",
-              "format", "as", "select", "with", "by", "using", "sample",
-              "prewhere", "window", "qualify", "asof", "any", "all")
-            val ui = toks.indices.find(i => isIdent(i, "using") &&
-              i + 1 < toks.length && (toks(i + 1) match {
-                case Ident(t, _) => t.matches("[A-Za-z_][A-Za-z0-9_]*") &&
-                  !kwStop.contains(t.toLowerCase(java.util.Locale.ROOT))
-                case _ => false
-              }))
-            ui.foreach { i =>
-              var j = i + 1
-              val cols = scala.collection.mutable.ArrayBuffer.empty[Tok]
-              var go = true
-              while (go && j < toks.length) {
-                toks(j) match {
-                  case t @ Ident(n, _) if cols.size % 2 == 0 &&
-                      n.matches("[A-Za-z_][A-Za-z0-9_]*") &&
-                      !kwStop.contains(n.toLowerCase(java.util.Locale.ROOT)) =>
-                    cols += t; j += 1
-                    if (j < toks.length && toks(j).text == ",") {
-                      cols += toks(j); j += 1
-                    } else go = false
-                  case _ => go = false
-                }
-              }
-              val names = cols.collect { case Ident(n, _) => n }
-              if (names.nonEmpty) {
-                val lastTok = cols.reverse.collectFirst {
-                  case t: Ident => t }.get
-                val endOff = lastTok.pos + lastTok.text.length
-                sql = sql.substring(0, toks(i + 1).pos) +
-                  names.mkString("(", ", ", ") ") + sql.substring(endOff)
-                changed = true
-              }
-            }
-          }
-          // GLOBAL before IN / NOT IN / a join word — but ONLY in modifier
-          // position, i.e. right after an expression or relation (an
-          // identifier that is not a clause keyword, a literal, or a
-          // closing paren/bracket). `WHERE global IN (1,2)` keeps its
-          // column named global (ADVICE r15 #5).
-          if (!changed) {
-            val clauseKws = Set("select", "where", "and", "or", "on",
-              "when", "then", "else", "by", "from", "having", "not", "in",
-              "case", "between", "like", "as", "union", "all", "any",
-              "distinct", "join", "cross", "comma")
-            def modifierPos(i: Int): Boolean = toks.lift(i - 1) match {
-              case Some(Ident(w, _)) => !clauseKws.contains(w.toLowerCase)
-              case Some(Punct(p, _)) => p == ")" || p == "]"
-              case Some(_: NumLit) | Some(_: StrLit) => true
-              case _ => false
-            }
-            val gi = toks.indices.find(i => isIdent(i, "global") &&
-              modifierPos(i) &&
-              (isIdent(i + 1, "in") || isIdent(i + 1, "not") ||
-                isIdent(i + 1, "any") || isIdent(i + 1, "all") ||
-                isIdent(i + 1, "left") || isIdent(i + 1, "right") ||
-                isIdent(i + 1, "inner") || isIdent(i + 1, "full") ||
-                isIdent(i + 1, "join")))
-            gi.foreach { i =>
-              sql = sql.substring(0, toks(i).pos) +
-                sql.substring(toks(i + 1).pos)
-              changed = true
-            }
-          }
+        }
+      }
+      // CH dateDiff('unit', a, b[, tz]): Spark's parser owns the name
+      // `datediff` and demands an UNQUOTED unit keyword, so the
+      // quoted-unit CH form renames onto the registry builder
+      // (chDateDiff). Spark's own unquoted form passes untouched.
+      if (!changed) {
+        val di = s.seek(0)(i => (s.kw(i, "datediff") || s.kw(i, "date_diff")) &&
+          s.punct(i + 1, "(") && s.str(i + 2).isDefined)
+        if (di < s.length) {
+          sql = sql.substring(0, s.pos(di)) + "chDateDiff" +
+            sql.substring(s.pos(di) + s(di).text.length)
+          changed = true
+        }
+      }
+      // count() → count(*)
+      if (!changed) {
+        val ci = s.seek(0)(i =>
+          s.kw(i, "count") && s.punct(i + 1, "(") && s.punct(i + 2, ")"))
+        if (ci < s.length) {
+          sql = sql.substring(0, s.pos(ci)) + "count(*)" +
+            sql.substring(s.pos(ci + 2) + 1)
+          changed = true
+        }
+      }
+      // CH `LIMIT off, n` → `LIMIT n OFFSET off` (not the LIMIT BY
+      // form — a following BY keyword leaves it for that rewrite)
+      if (!changed) {
+        val li = s.seek(0)(i => s.top(i, "limit") && s.num(i + 1).isDefined &&
+          s.punct(i + 2, ",") && s.num(i + 3).isDefined && !s.kw(i + 4, "by"))
+        if (li < s.length) {
+          val (off, n) = (s(li + 1).text, s(li + 3).text)
+          sql = sql.substring(0, s.pos(li)) + s"LIMIT $n OFFSET $off" +
+            sql.substring(s.pos(li + 3) + n.length)
+          changed = true
+        }
+      }
+      // bare `USING k1, k2` (CH allows it; Spark requires parens)
+      if (!changed) {
+        val ui = s.seek(0)(i => s.kw(i, "using") &&
+          s.ident(i + 1, usingStops).exists(_.matches(plainName)))
+        if (ui < s.length) {
+          var j = ui + 1 // the list's last column
+          while (s.punct(j + 1, ",") &&
+              s.ident(j + 2, usingStops).exists(_.matches(plainName))) j += 2
+          sql = sql.substring(0, s.pos(ui + 1)) +
+            (ui + 1 to j by 2).map(s(_).text).mkString("(", ", ", ") ") +
+            sql.substring(s.pos(j) + s(j).text.length)
+          changed = true
+        }
+      }
+      // GLOBAL before IN / NOT IN / a join word — but ONLY in modifier
+      // position, i.e. right after an expression or relation (an
+      // identifier that is not a clause keyword, a literal, or a
+      // closing paren/bracket). `WHERE global IN (1,2)` keeps its
+      // column named global (ADVICE r15 #5).
+      if (!changed) {
+        val gi = s.seek(0)(i => s.kw(i, "global") &&
+          s.kwIn(i + 1, globalNext) && (s.lift(i - 1) match {
+            case Some(Ident(w, _)) =>
+              !globalAfter.contains(w.toLowerCase(Locale.ROOT))
+            case Some(Punct(p, _)) => p == ")" || p == "]"
+            case other => other.isDefined
+          }))
+        if (gi < s.length) {
+          sql = sql.substring(0, s.pos(gi)) + sql.substring(s.pos(gi + 1))
+          changed = true
+        }
       }
     }
     sql
   }
+
+  private val plainName = "[A-Za-z_][A-Za-z0-9_]*"
+  private val usingStops = Set("from", "where", "group", "order", "limit",
+    "on", "join", "left", "right", "inner", "full", "cross", "union",
+    "intersect", "except", "having", "settings", "format", "as", "select",
+    "with", "by", "using", "sample", "prewhere", "window", "qualify", "asof",
+    "any", "all")
+  private val globalNext = Set("in", "not", "any", "all", "left", "right",
+    "inner", "full", "join")
+  private val globalAfter = Set("select", "where", "and", "or", "on", "when",
+    "then", "else", "by", "from", "having", "not", "in", "case", "between",
+    "like", "as", "union", "all", "any", "distinct", "join", "cross", "comma")
 
   /** CH `[a, b, …]` array literals → Spark `array(a, b, …)`. A '[' that
     * follows a non-keyword identifier, ')' or ']' is SUBSCRIPTING
@@ -2201,57 +1953,51 @@ object ChParser {
     * documented divergence from CH's 1-based arrays; CH code normally
     * uses arrayElement/has/indexOf, which the function packs carry.)
     */
-  def rewriteArrayLiterals(sql0: String): String = tokenize(sql0) match {
-    case Left(_) => sql0
-    case Right(toks) =>
-      val kw = Set("in", "and", "or", "not", "when", "then", "else",
-        "select", "where", "by", "having", "on", "using", "values", "as",
-        "is", "between", "like", "limit", "union", "all", "any",
-        "distinct", "array", "from", "return", "returns")
-      // style per bracket: 0 = subscript (untouched), 1 = array literal,
-      // 2 = IN-list (CH `x IN ['a','b']` is list membership → plain parens)
-      val opens = scala.collection.mutable.Map.empty[Int, Int]
-      val closes = scala.collection.mutable.Map.empty[Int, Int]
-      val stack = scala.collection.mutable.Stack.empty[(Int, Int)]
-      toks.zipWithIndex.foreach { case (t, ti) =>
-        t match {
-          case Punct("[", p) =>
-            val prev = if (ti > 0) Some(toks(ti - 1)) else None
-            val style = prev match {
-              case Some(Ident(n, _))
-                  if n.equalsIgnoreCase("in") => 2
-              case Some(Ident(n, _))
-                  if !kw.contains(n.toLowerCase(java.util.Locale.ROOT)) => 0
-              case Some(Punct(")", _)) | Some(Punct("]", _)) => 0
-              case _ => 1
-            }
-            stack.push((p, style))
-            if (style != 0) opens += (p -> style)
-          case Punct("]", p) =>
-            if (stack.nonEmpty) {
-              val (_, style) = stack.pop()
-              if (style != 0) closes += (p -> style)
-            }
-          case _ => ()
+  def rewriteArrayLiterals(sql0: String): String = {
+    val s = Scan(sql0)
+    // style per bracket: 0 = subscript (untouched), 1 = array literal,
+    // 2 = IN-list (CH `x IN ['a','b']` is list membership → plain parens)
+    val opens = scala.collection.mutable.Map.empty[Int, Int]
+    val closes = scala.collection.mutable.Map.empty[Int, Int]
+    val stack = scala.collection.mutable.Stack.empty[Int]
+    for (ti <- s.indices) {
+      if (s.punct(ti, "[")) {
+        val style = s.lift(ti - 1) match {
+          case Some(Ident(n, _)) if n.equalsIgnoreCase("in") => 2
+          case Some(Ident(n, _))
+              if !arrayLitAfter.contains(n.toLowerCase(Locale.ROOT)) => 0
+          case Some(Punct(")" | "]", _)) => 0
+          case _ => 1
         }
+        stack.push(style)
+        if (style != 0) opens += (s.pos(ti) -> style)
+      } else if (s.punct(ti, "]") && stack.nonEmpty) {
+        val style = stack.pop()
+        if (style != 0) closes += (s.pos(ti) -> style)
       }
-      if (opens.isEmpty) sql0
-      else {
-        val sb = new StringBuilder
-        var i = 0
-        while (i < sql0.length) {
-          opens.get(i) match {
-            case Some(2) => sb.append("(")
-            case Some(_) => sb.append("array(")
-            case None =>
-              if (closes.contains(i)) sb.append(")")
-              else sb.append(sql0.charAt(i))
-          }
-          i += 1
+    }
+    if (opens.isEmpty) sql0
+    else {
+      val sb = new StringBuilder
+      var i = 0
+      while (i < sql0.length) {
+        opens.get(i) match {
+          case Some(2) => sb.append("(")
+          case Some(_) => sb.append("array(")
+          case None =>
+            if (closes.contains(i)) sb.append(")")
+            else sb.append(sql0.charAt(i))
         }
-        sb.toString
+        i += 1
       }
+      sb.toString
+    }
   }
+
+  private val arrayLitAfter = Set("in", "and", "or", "not", "when", "then",
+    "else", "select", "where", "by", "having", "on", "using", "values", "as",
+    "is", "between", "like", "limit", "union", "all", "any", "distinct",
+    "array", "from", "return", "returns")
 
   /** CH scalar WITH — `WITH <expr> AS name, … SELECT …` binds expression
     * ALIASES (including scalar subqueries: `WITH (SELECT max(x) FROM t)
@@ -2261,69 +2007,31 @@ object ChParser {
     * (a.name / name.a) and function calls name(…), and wraps each
     * splice in parens.
     */
-  def rewriteScalarWith(sql0: String): String = tokenize(sql0) match {
-    case Left(_) => sql0
-    case Right(toks) if toks.nonEmpty && (toks.head match {
-        case Ident(t, _) => t.equalsIgnoreCase("with"); case _ => false
-      }) =>
-      // split prologue items at depth-0 commas; the prologue ends at the
-      // depth-0 SELECT
-      var depth = 0
-      var selIdx = -1
-      val itemBounds = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var ti = 1
-      while (selIdx < 0 && ti < toks.length) {
-        toks(ti) match {
-          case Punct("(", _) => depth += 1
-          case Punct(")", _) => depth -= 1
-          case Punct(",", _) if depth == 0 => itemBounds += ti
-          case Ident(t, _) if depth == 0 && t.equalsIgnoreCase("select") =>
-            selIdx = ti
-          case _ => ()
-        }
-        ti += 1
-      }
-      if (selIdx < 0) return sql0
-      val starts = 1 +: itemBounds.map(_ + 1).toSeq
-      val ends = itemBounds.toSeq :+ selIdx // exclusive token index
-      val items = starts.zip(ends)
-      // CTE form anywhere → not scalar WITH
-      val isCte = items.exists { case (s, e) =>
-        e - s >= 3 && ((toks(s), toks(s + 1), toks(s + 2)) match {
-          case (_: Ident, Ident(a, _), Punct("(", _)) =>
-            a.equalsIgnoreCase("as")
-          case _ => false
-        })
-      }
-      if (isCte) return sql0
-      val binds = items.map { case (s, e) =>
-        if (e - s < 3) return sql0
-        (toks(e - 2), toks(e - 1)) match {
-          case (Ident(a, _), Ident(name, _)) if a.equalsIgnoreCase("as") =>
-            val exprText =
-              sql0.substring(toks(s).pos, toks(e - 2).pos).trim
-            if (exprText.isEmpty) return sql0
-            name -> exprText
-          case _ => return sql0
-        }
-      }.toMap
-      if (binds.isEmpty) return sql0
-      // rebuild: the main query with alias tokens substituted
-      val mainStart = toks(selIdx).pos
-      var out = sql0.substring(mainStart)
-      val shift = mainStart
-      val repls = toks.zipWithIndex.drop(selIdx).collect {
-        case (Ident(n, p), i) if binds.contains(n) &&
-            (i + 1 >= toks.length || toks(i + 1).text != "(") &&
-            (i + 1 >= toks.length || toks(i + 1).text != ".") &&
-            toks(i - 1).text != "." =>
-          (p - shift, p - shift + n.length, binds(n))
-      }
-      repls.sortBy(-_._1).foreach { case (f, t, e) =>
-        out = out.substring(0, f) + s"($e)" + out.substring(t)
-      }
-      out
-    case _ => sql0
+  def rewriteScalarWith(sql0: String): String = {
+    val s = Scan(sql0)
+    // split prologue items at depth-0 commas; the prologue ends at the
+    // depth-0 SELECT
+    val selIdx = s.seek(1)(s.top(_, "select"))
+    if (!s.kw(0, "with") || selIdx == s.length) return sql0
+    val cuts = (1 until selIdx).filter(i => s.depth(i) == 0 && s.punct(i, ","))
+    val items = (1 +: cuts.map(_ + 1)).zip(cuts :+ selIdx) // [start, end)
+    // CTE form anywhere → not scalar WITH
+    if (items.exists { case (a, b) =>
+          b - a >= 3 && s.ident(a).isDefined && s.kw(a + 1, "as") &&
+            s.punct(a + 2, "(") }) return sql0
+    val binds = items.map { case (a, b) =>
+      s.ident(b - 1).filter(_ => b - a >= 3 && s.kw(b - 2, "as"))
+        .map(_ -> s.slice(a, b - 2)).filter(_._2.nonEmpty)
+        .getOrElse(return sql0)
+    }.toMap
+    // rebuild: the main query with alias tokens substituted
+    val mainStart = s.pos(selIdx)
+    splice(sql0.substring(mainStart), (selIdx until s.length).collect {
+      case i if s.ident(i).exists(binds.contains) && !s.punct(i + 1, "(") &&
+          !s.punct(i + 1, ".") && !s.punct(i - 1, ".") =>
+        (s.pos(i) - mainStart, s.pos(i) - mainStart + s(i).text.length,
+          s"(${binds(s(i).text)})")
+    })
   }
 
   /** CH parametric quantiles — `quantile[Exact|TDigest](p)(x)` and the
@@ -2351,59 +2059,32 @@ object ChParser {
     var guard = 0
     while (changed && guard < 8) {
       changed = false; guard += 1
-      tokenize(sql) match {
-        case Left(_) => return sql
-        case Right(toks) =>
-          var i = 0
-          while (!changed && i < toks.length) {
-            toks(i) match {
-              case Ident(n, p0) if fns.contains(
-                  n.toLowerCase(java.util.Locale.ROOT)) &&
-                  i + 1 < toks.length && toks(i + 1).text == "(" =>
-                // params: literal numbers up to the closing ')'
-                var j = i + 2
-                val ps = scala.collection.mutable.ArrayBuffer.empty[String]
-                var ok = true
-                while (ok && j < toks.length && toks(j).text != ")") {
-                  toks(j) match {
-                    case NumLit(s, _) => ps += s; j += 1
-                      if (j < toks.length && toks(j).text == ",") j += 1
-                    case _ => ok = false
-                  }
-                }
-                if (ok && ps.nonEmpty && j + 1 < toks.length &&
-                    toks(j).text == ")" && toks(j + 1).text == "(") {
-                  // arg: balanced slice to the matching ')'
-                  var k = j + 2
-                  var d = 1
-                  val argStart = toks(k).pos
-                  var endPos = -1
-                  while (endPos < 0 && k < toks.length) {
-                    toks(k) match {
-                      case Punct("(", _) => d += 1
-                      case Punct(")", pp) =>
-                        d -= 1; if (d == 0) endPos = pp
-                      case _ => ()
-                    }
-                    k += 1
-                  }
-                  if (endPos > 0) {
-                    val arg = sql.substring(argStart, endPos).trim
-                    val plural = n.toLowerCase(java.util.Locale.ROOT)
-                      .startsWith("quantiles")
-                    val pexpr =
-                      if (plural) ps.mkString("array(", ", ", ")")
-                      else ps.head
-                    val repl = s"${fns(n.toLowerCase(java.util.Locale.ROOT))}" +
-                      s"(($arg), $pexpr)"
-                    sql = sql.substring(0, p0) + repl + sql.substring(endPos + 1)
-                    changed = true
-                  }
-                }
-              case _ => ()
+      val s = Scan(sql)
+      var i = 0
+      while (!changed && i < s.length) {
+        s.ident(i).map(_.toLowerCase(Locale.ROOT)).filter(fns.contains) match {
+          case Some(n) if s.punct(i + 1, "(") =>
+            // params: literal numbers up to the closing ')'
+            var j = i + 2
+            val ps = scala.collection.mutable.ArrayBuffer.empty[String]
+            var ok = true
+            while (ok && j < s.length && !s.punct(j, ")")) s.num(j) match {
+              case Some(v) => ps += v; j += 1; if (s.punct(j, ",")) j += 1
+              case None => ok = false
             }
-            i += 1
-          }
+            // arg: balanced slice to the matching ')'
+            if (ok && ps.nonEmpty && s.punct(j, ")")) s.close(j + 1).foreach { k =>
+              val pexpr =
+                if (n.startsWith("quantiles")) ps.mkString("array(", ", ", ")")
+                else ps.head
+              sql = sql.substring(0, s.pos(i)) +
+                s"${fns(n)}((${s.slice(j + 2, k)}), $pexpr)" +
+                sql.substring(s.pos(k) + 1)
+              changed = true
+            }
+          case _ => ()
+        }
+        i += 1
       }
     }
     sql
@@ -2425,72 +2106,57 @@ object ChParser {
     var guard = 0
     while (changed && guard < 8) {
       changed = false; guard += 1
-      tokenize(sql) match {
-        case Left(_) => return sql
-        case Right(toks) =>
-          def identAt(i: Int): Option[String] =
-            if (i >= 0 && i < toks.length) toks(i) match {
-              case Ident(t, _) => Some(t)
-              case _ => None
-            } else None
-          def is(i: Int, s: String) = identAt(i).exists(_.equalsIgnoreCase(s))
-          val joinWords = Set("left", "right", "inner", "join")
-          var i = 0
-          while (!changed && i < toks.length) {
-            if (is(i, "all") && identAt(i + 1).exists(w =>
-                joinWords.contains(w.toLowerCase(java.util.Locale.ROOT)))) {
-              // ALL JOIN is the default strictness: drop the word
-              sql = sql.substring(0, toks(i).pos) +
-                sql.substring(toks(i + 1).pos)
-              changed = true
-            } else if (is(i, "any") && identAt(i + 1).exists(w =>
-                joinWords.contains(w.toLowerCase(java.util.Locale.ROOT)))) {
-              var j = i + 1
-              while (!is(j, "join") && j < i + 3) j += 1
-              if (!is(j, "join"))
-                throw new IllegalArgumentException(
-                  "ANY JOIN: unsupported join form after ANY")
-              val joinType = if (j > i + 1) identAt(i + 1).get else "inner"
-              val rel = identAt(j + 1).filter(_.matches("[A-Za-z_][A-Za-z0-9_]*"))
-                .getOrElse(throw new IllegalArgumentException(
-                  "ANY JOIN: the right side must be a plain table name"))
-              var k = j + 2
-              val alias =
-                if (is(k, "as")) { k += 1; identAt(k).map { a => k += 1; a } }
-                else identAt(k).filter(a =>
-                  !a.equalsIgnoreCase("using") && !a.equalsIgnoreCase("on"))
-                  .map { a => k += 1; a }
-              if (!is(k, "using"))
-                throw new IllegalArgumentException(
-                  "ANY JOIN: only the USING form is supported (spell the " +
-                    "dedup explicitly for ON-joins)")
-              // read the USING column list WITHOUT consuming it
-              var u = k + 1
-              val cols = scala.collection.mutable.ArrayBuffer.empty[String]
-              if (u < toks.length && toks(u).text == "(") {
-                u += 1
-                while (u < toks.length && toks(u).text != ")") {
-                  identAt(u).foreach(cols += _)
-                  u += 1
-                }
-              } else identAt(u).foreach(cols += _)
-              require(cols.nonEmpty, "ANY JOIN: empty USING list")
-              val pby = cols.map(c => s"`$c`").mkString(", ")
-              val a = alias.getOrElse(rel)
-              val dedup = s"(SELECT * EXCEPT (__graft_rn) FROM (SELECT *, " +
-                s"row_number() OVER (PARTITION BY $pby ORDER BY struct(*)) " +
-                s"AS __graft_rn FROM $rel) __graft_any_$a " +
-                s"WHERE __graft_rn = 1) AS $a"
-              val repl = (if (joinType.equalsIgnoreCase("inner")) "JOIN"
-                          else s"${joinType.toUpperCase(java.util.Locale.ROOT)} JOIN") +
-                " " + dedup
-              val from = toks(i).pos
-              val to = toks(k).pos // start of USING — keep it
-              sql = sql.substring(0, from) + repl + " " + sql.substring(to)
-              changed = true
+      val s = Scan(sql)
+      val joinWords = Set("left", "right", "inner", "join")
+      var i = 0
+      while (!changed && i < s.length) {
+        if (s.kw(i, "all") && s.kwIn(i + 1, joinWords)) {
+          // ALL JOIN is the default strictness: drop the word
+          sql = sql.substring(0, s.pos(i)) + sql.substring(s.pos(i + 1))
+          changed = true
+        } else if (s.kw(i, "any") && s.kwIn(i + 1, joinWords)) {
+          var j = i + 1
+          while (!s.kw(j, "join") && j < i + 3) j += 1
+          if (!s.kw(j, "join"))
+            throw new IllegalArgumentException(
+              "ANY JOIN: unsupported join form after ANY")
+          val joinType = if (j > i + 1) s.ident(i + 1).get else "inner"
+          val rel = s.ident(j + 1).filter(_.matches(plainName))
+            .getOrElse(throw new IllegalArgumentException(
+              "ANY JOIN: the right side must be a plain table name"))
+          var k = j + 2
+          val alias =
+            if (s.kw(k, "as")) { k += 1; s.ident(k).map { a => k += 1; a } }
+            else s.ident(k, Set("using", "on")).map { a => k += 1; a }
+          if (!s.kw(k, "using"))
+            throw new IllegalArgumentException(
+              "ANY JOIN: only the USING form is supported (spell the " +
+                "dedup explicitly for ON-joins)")
+          // read the USING column list WITHOUT consuming it
+          var u = k + 1
+          val cols = scala.collection.mutable.ArrayBuffer.empty[String]
+          if (s.punct(u, "(")) {
+            u += 1
+            while (u < s.length && !s.punct(u, ")")) {
+              s.ident(u).foreach(cols += _)
+              u += 1
             }
-            i += 1
-          }
+          } else s.ident(u).foreach(cols += _)
+          require(cols.nonEmpty, "ANY JOIN: empty USING list")
+          val pby = cols.map(c => s"`$c`").mkString(", ")
+          val a = alias.getOrElse(rel)
+          val dedup = s"(SELECT * EXCEPT (__graft_rn) FROM (SELECT *, " +
+            s"row_number() OVER (PARTITION BY $pby ORDER BY struct(*)) " +
+            s"AS __graft_rn FROM $rel) __graft_any_$a " +
+            s"WHERE __graft_rn = 1) AS $a"
+          val repl = (if (joinType.equalsIgnoreCase("inner")) "JOIN"
+                      else s"${joinType.toUpperCase(Locale.ROOT)} JOIN") +
+            " " + dedup
+          // up to the start of USING — keep it
+          sql = sql.substring(0, s.pos(i)) + repl + " " + sql.substring(s.pos(k))
+          changed = true
+        }
+        i += 1
       }
     }
     sql
@@ -2510,25 +2176,24 @@ object ChParser {
     * reference streams the payload outside the statement text entirely,
     * mgmt.rs:724-730).
     */
-  def splitStatements(sql: String): Either[String, Seq[String]] =
-    tokenize(sql).map { toks =>
+  def splitStatements(sql: String): Either[String, Seq[String]] = {
+    val s = Scan(sql)
+    s.error.toLeft {
       val out = ArrayBuffer.empty[String]
       var start = 0 // char offset where the current statement begins
       var first: Option[String] = None // first keyword of current statement
-      var depth = 0 // paren depth (FORMAT inside a column list isn't the clause)
       var opaque = false
       var ti = 0
-      while (ti < toks.length && !opaque) {
-        toks(ti) match {
-          case Punct(";", pos) if depth == 0 =>
+      while (ti < s.length && !opaque) {
+        // depth: FORMAT inside a column list isn't the clause
+        s(ti) match {
+          case Punct(";", pos) if s.depth(ti) == 0 =>
             out += sql.substring(start, pos)
             start = pos + 1
             first = None
-          case Punct("(", _) => depth += 1
-          case Punct(")", _) => depth = math.max(0, depth - 1)
           case Ident(t, _) =>
             if (first.isEmpty) first = Some(t.toLowerCase)
-            else if (depth == 0 && first.contains("insert") &&
+            else if (s.depth(ti) == 0 && first.contains("insert") &&
               t.equalsIgnoreCase("format")) opaque = true
           case _ => ()
         }
@@ -2536,6 +2201,7 @@ object ChParser {
       }
       (out += sql.substring(start)).map(_.trim).filter(_.nonEmpty).toSeq
     }
+  }
 
   /** The pieces of a `SELECT … [ORDER BY o] LIMIT [m,]n BY exprs [LIMIT k]`
     * statement — ClickHouse's per-group LIMIT BY clause
@@ -2554,72 +2220,31 @@ object ChParser {
     * (UNION/INTERSECT/EXCEPT at top level — scope would be ambiguous),
     * or untokenizable input (the real parser reports those).
     */
-  def splitLimitBy(sql: String): Option[LimitByParts] =
-    tokenize(sql).toOption.flatMap { toks =>
-      // per-token depth AFTER processing the token's own paren
-      val depth = new Array[Int](toks.length)
-      var d = 0
-      var unionish = false
-      toks.zipWithIndex.foreach { case (t, i) =>
-        t match {
-          case Punct("(", _) => depth(i) = d; d += 1
-          case Punct(")", _) => d = math.max(0, d - 1); depth(i) = d
-          case Ident(w, _) if d == 0 &&
-              Seq("union", "intersect", "except").contains(w.toLowerCase) =>
-            unionish = true; depth(i) = d
-          case _ => depth(i) = d
-        }
-      }
-      def kw(i: Int, k: String) = i < toks.length && (toks(i) match {
-        case Ident(w, _) => w.equalsIgnoreCase(k)
-        case _ => false
-      })
-      def num(i: Int): Option[Long] =
-        if (i < toks.length) toks(i) match {
-          case NumLit(s, _) => s.toLongOption
-          case _ => None
-        } else None
-      // locate LIMIT [m,]n BY at depth 0
-      val lb = toks.indices.find { i =>
-        depth(i) == 0 && kw(i, "LIMIT") && num(i + 1).isDefined &&
-          (kw(i + 2, "BY") ||
-            (i + 2 < toks.length && toks(i + 2).text == "," &&
-              num(i + 3).isDefined && kw(i + 4, "BY")))
-      }
-      lb match {
-        case None => None
-        case Some(_) if unionish => None
-        case Some(li) =>
-          val twoArg = !kw(li + 2, "BY")
-          val (off, n, byTokIdx) =
-            if (twoArg) (num(li + 1).get, num(li + 3).get, li + 5)
-            else (0L, num(li + 1).get, li + 3)
-          if (byTokIdx >= toks.length) None
-          else {
-            // ORDER BY before the clause (depth 0)
-            val ord = toks.indices.find(i =>
-              depth(i) == 0 && i < li && kw(i, "ORDER") && kw(i + 1, "BY"))
-            // outer LIMIT after the BY exprs (depth 0)
-            val outerIdx = (byTokIdx until toks.length).find(i =>
-              depth(i) == 0 && kw(i, "LIMIT"))
-            val stopIdx = (byTokIdx until toks.length).find(i =>
-              depth(i) == 0 && (kw(i, "LIMIT") || toks(i).text == ";"))
-            val byEndPos = stopIdx.map(toks(_).pos).getOrElse(sql.length)
-            val byText = sql.substring(toks(byTokIdx).pos, byEndPos).trim
-            val corePos = ord.map(toks(_).pos).getOrElse(toks(li).pos)
-            val orderText = ord.map(i =>
-              sql.substring(toks(i + 2).pos, toks(li).pos).trim)
-            val outerText = outerIdx.flatMap { i =>
-              if (i + 1 < toks.length)
-                Some(sql.substring(toks(i + 1).pos).replaceAll(";\\s*$", "").trim)
-              else None
-            }
-            if (byText.isEmpty) None
-            else Some(LimitByParts(sql.substring(0, corePos).trim, orderText,
-              off, n, byText, outerText))
-          }
-      }
+  def splitLimitBy(sql: String): Option[LimitByParts] = {
+    val s = Scan(sql)
+    // locate LIMIT [m,]n BY at depth 0
+    val li = s.seek(0)(i => s.top(i, "LIMIT") && s.int(i + 1).isDefined &&
+      (s.kw(i + 2, "BY") ||
+        (s.punct(i + 2, ",") && s.int(i + 3).isDefined && s.kw(i + 4, "BY"))))
+    val twoArg = !s.kw(li + 2, "BY")
+    val by = if (twoArg) li + 5 else li + 3 // first token of the BY list
+    if (li == s.length || s.setOp || by >= s.length) None
+    else {
+      val (off, n) =
+        if (twoArg) (s.int(li + 1).get, s.int(li + 3).get) else (0L, s.int(li + 1).get)
+      // ORDER BY before the clause (depth 0)
+      val ord = s.seek(0)(i => i < li && s.top(i, "ORDER") && s.kw(i + 1, "BY"))
+      // outer LIMIT after the BY exprs (depth 0)
+      val outer = s.seek(by)(s.top(_, "LIMIT"))
+      val stops = Set("limit")
+      val byText = s.slice(by, s.seek(by)(s.stop(_, stops)))
+      if (byText.isEmpty) None
+      else Some(LimitByParts(sql.substring(0, s.pos(math.min(ord, li))).trim,
+        Option.when(ord < li)(s.slice(ord + 2, li)), off, n, byText,
+        Option.when(outer + 1 < s.length)(
+          sql.substring(s.pos(outer + 1)).replaceAll(";\\s*$", "").trim)))
     }
+  }
 
   /** The pieces of a `SELECT … INTO OUTFILE 'path' [FORMAT f]` statement —
     * ClickHouse's file-export clause. `core` is the SELECT text before
@@ -2632,40 +2257,15 @@ object ChParser {
     * string-aware; None when absent, when the path is not a string
     * literal, or when anything but the optional FORMAT and ';' follows).
     */
-  def splitIntoOutfile(sql: String): Option[IntoOutfileParts] =
-    tokenize(sql).toOption.flatMap { toks =>
-      var d = 0
-      val depth = toks.map {
-        case Punct("(", _) => { val r = d; d += 1; r }
-        case Punct(")", _) => { d = math.max(0, d - 1); d }
-        case _ => d
-      }
-      def kw(i: Int, k: String) = i < toks.length && (toks(i) match {
-        case Ident(w, _) => w.equalsIgnoreCase(k)
-        case _ => false
-      })
-      val io = toks.indices.find(i =>
-        depth(i) == 0 && kw(i, "INTO") && kw(i + 1, "OUTFILE"))
-      io.flatMap { i =>
-        toks.lift(i + 2) match {
-          case Some(StrLit(path, _)) =>
-            val rest = toks.drop(i + 3)
-            rest match {
-              case Vector() =>
-                Some(IntoOutfileParts(sql.substring(0, toks(i).pos).trim, path, None))
-              case _ if rest.head.text == ";" && rest.tail.isEmpty =>
-                Some(IntoOutfileParts(sql.substring(0, toks(i).pos).trim, path, None))
-              case _ if kw(i + 3, "FORMAT") && rest.length >= 2 &&
-                  rest(1).isInstanceOf[Ident] &&
-                  rest.drop(2).forall(_.text == ";") =>
-                Some(IntoOutfileParts(sql.substring(0, toks(i).pos).trim, path,
-                  Some(rest(1).text)))
-              case _ => None
-            }
-          case _ => None
-        }
-      }
-    }
+  def splitIntoOutfile(sql: String): Option[IntoOutfileParts] = {
+    val s = Scan(sql)
+    val i = s.seek(0)(j => s.top(j, "INTO") && s.kw(j + 1, "OUTFILE"))
+    val (format, end) =
+      if (s.kw(i + 3, "FORMAT")) (s.ident(i + 4), i + 5) else (None, i + 3)
+    s.str(i + 2).filter(_ => (end == i + 3 || format.isDefined) &&
+        (end until s.length).forall(s.punct(_, ";")))
+      .map(IntoOutfileParts(sql.substring(0, s.pos(i)).trim, _, format))
+  }
 
   /** The pieces of a `SELECT … ORDER BY o LIMIT n WITH TIES` statement —
     * the ties-extending LIMIT (ClickHouse and the SQL standard's FETCH
@@ -2677,50 +2277,16 @@ object ChParser {
     * without the clause, for set operations, when ORDER BY is absent —
     * CH itself rejects that — or when anything but ';' follows TIES).
     */
-  def splitLimitTies(sql: String): Option[LimitTiesParts] =
-    tokenize(sql).toOption.flatMap { toks =>
-      val depth = new Array[Int](toks.length)
-      var d = 0
-      var unionish = false
-      toks.zipWithIndex.foreach { case (t, i) =>
-        t match {
-          case Punct("(", _) => depth(i) = d; d += 1
-          case Punct(")", _) => d = math.max(0, d - 1); depth(i) = d
-          case Ident(w, _) if d == 0 &&
-              Seq("union", "intersect", "except").contains(w.toLowerCase) =>
-            unionish = true; depth(i) = d
-          case _ => depth(i) = d
-        }
-      }
-      def kw(i: Int, k: String) = i < toks.length && (toks(i) match {
-        case Ident(w, _) => w.equalsIgnoreCase(k)
-        case _ => false
-      })
-      def num(i: Int): Option[Long] =
-        if (i < toks.length) toks(i) match {
-          case NumLit(s, _) => s.toLongOption
-          case _ => None
-        } else None
-      val li = toks.indices.find { i =>
-        depth(i) == 0 && kw(i, "LIMIT") && num(i + 1).isDefined &&
-          kw(i + 2, "WITH") && kw(i + 3, "TIES")
-      }
-      li match {
-        case Some(i) if !unionish =>
-          val trailingOk = (i + 4 until toks.length).forall(toks(_).text == ";")
-          val ord = toks.indices.find(j =>
-            depth(j) == 0 && j < i && kw(j, "ORDER") && kw(j + 1, "BY"))
-          (ord, num(i + 1)) match {
-            case (Some(oi), Some(n)) if trailingOk =>
-              val orderText = sql.substring(toks(oi + 2).pos, toks(i).pos).trim
-              if (orderText.isEmpty) None
-              else Some(LimitTiesParts(sql.substring(0, toks(oi).pos).trim,
-                orderText, n))
-            case _ => None
-          }
-        case _ => None
-      }
-    }
+  def splitLimitTies(sql: String): Option[LimitTiesParts] = {
+    val s = Scan(sql)
+    val i = s.seek(0)(j => s.top(j, "LIMIT") && s.int(j + 1).isDefined &&
+      s.kw(j + 2, "WITH") && s.kw(j + 3, "TIES"))
+    val ord = s.seek(0)(j => j < i && s.top(j, "ORDER") && s.kw(j + 1, "BY"))
+    if (i == s.length || s.setOp || ord >= i ||
+        !(i + 4 until s.length).forall(s.punct(_, ";"))) None
+    else Some(s.slice(ord + 2, i)).filter(_.nonEmpty).map(
+      LimitTiesParts(sql.substring(0, s.pos(ord)).trim, _, s.int(i + 1).get))
+  }
 
   /** The pieces of a `… ORDER BY col WITH FILL [FROM a] [TO b] [STEP s]`
     * statement — ClickHouse's gap-filling ORDER BY modifier. `core` is
@@ -2738,85 +2304,54 @@ object ChParser {
     * modifiers but ';'. Anything else → None (the statement runs
     * unrewritten and Spark reports its own error for true CH-isms).
     */
-  def splitWithFill(sql: String): Option[WithFillParts] =
-    tokenize(sql).toOption.flatMap { toks =>
-      var d = 0
-      val depth = toks.map {
-        case Punct("(", _) => { val r = d; d += 1; r }
-        case Punct(")", _) => { d = math.max(0, d - 1); d }
-        case _ => d
-      }
-      def kw(i: Int, k: String) = i < toks.length && (toks(i) match {
-        case Ident(w, _) => w.equalsIgnoreCase(k)
-        case _ => false
-      })
-      // signed integer literal at i → (value, tokens consumed)
-      def snum(i: Int): Option[(Long, Int)] = toks.lift(i) match {
-        case Some(NumLit(s, _)) => s.toLongOption.map((_, 1))
-        case Some(Punct("-", _)) => toks.lift(i + 1) match {
-          case Some(NumLit(s, _)) => s.toLongOption.map(v => (-v, 2))
-          case _ => None
-        }
-        case _ => None
-      }
-      val ob = toks.indices.find(i =>
-        depth(i) == 0 && kw(i, "ORDER") && kw(i + 1, "BY"))
-      ob.flatMap { oi =>
-        toks.lift(oi + 2) match {
-          case Some(Ident(col, _)) if !Seq("asc", "desc").contains(col.toLowerCase) =>
-            var j = oi + 3
-            if (kw(j, "ASC")) j += 1
-            if (!(kw(j, "WITH") && kw(j + 1, "FILL"))) None
-            else {
-              j += 2
-              var from: Option[Long] = None
-              var to: Option[Long] = None
-              var step = 1L
-              val interp = ArrayBuffer.empty[String]
-              var ok = true
-              while (ok && j < toks.length && toks(j).text != ";") {
-                if (kw(j, "FROM")) snum(j + 1) match {
-                  case Some((v, c)) => from = Some(v); j += 1 + c
-                  case None => ok = false
-                } else if (kw(j, "TO")) snum(j + 1) match {
-                  case Some((v, c)) => to = Some(v); j += 1 + c
-                  case None => ok = false
-                } else if (kw(j, "STEP")) snum(j + 1) match {
-                  case Some((v, c)) if v > 0 => step = v; j += 1 + c
-                  case _ => ok = false
-                } else if (kw(j, "INTERPOLATE")) {
-                  // INTERPOLATE (c1 [, c2]...) — carry-forward columns on
-                  // filled rows. The `col AS expr` form is CH-iterative
-                  // (each filled row builds on the previous FILLED row)
-                  // and out of v1 scope: reject via ok=false so the
-                  // caller errors loudly rather than interpolating wrong.
-                  j += 1
-                  if (toks.lift(j).exists(_.text == "(")) {
-                    j += 1
-                    var more = true
-                    while (ok && more) {
-                      toks.lift(j) match {
-                        case Some(Ident(c, _)) =>
-                          interp += c; j += 1
-                          toks.lift(j).map(_.text) match {
-                            case Some(",") => j += 1
-                            case Some(")") => j += 1; more = false
-                            case _ => ok = false; more = false
-                          }
-                        case _ => ok = false; more = false
-                      }
-                    }
-                  } else ok = false
-                } else ok = false
-              }
-              if (ok) Some(WithFillParts(sql.substring(0, toks(oi).pos).trim,
-                col, from, to, step, interp.toSeq))
-              else None
+  def splitWithFill(sql: String): Option[WithFillParts] = {
+    val s = Scan(sql)
+    val oi = s.seek(0)(i => s.top(i, "ORDER") && s.kw(i + 1, "BY"))
+    s.ident(oi + 2, Set("asc", "desc")).flatMap { col =>
+      var j = oi + 3
+      if (s.kw(j, "ASC")) j += 1
+      if (!(s.kw(j, "WITH") && s.kw(j + 1, "FILL"))) None
+      else {
+        j += 2
+        var from: Option[Long] = None
+        var to: Option[Long] = None
+        var step = 1L
+        val interp = ArrayBuffer.empty[String]
+        var ok = true
+        while (ok && j < s.length && !s.punct(j, ";")) {
+          if (s.kw(j, "FROM")) s.signedNum(j + 1) match {
+            case Some((v, c)) => from = Some(v); j += 1 + c
+            case None => ok = false
+          } else if (s.kw(j, "TO")) s.signedNum(j + 1) match {
+            case Some((v, c)) => to = Some(v); j += 1 + c
+            case None => ok = false
+          } else if (s.kw(j, "STEP")) s.signedNum(j + 1) match {
+            case Some((v, c)) if v > 0 => step = v; j += 1 + c
+            case _ => ok = false
+          } else if (s.kw(j, "INTERPOLATE") && s.punct(j + 1, "(")) {
+            // INTERPOLATE (c1 [, c2]...) — carry-forward columns on
+            // filled rows. The `col AS expr` form is CH-iterative
+            // (each filled row builds on the previous FILLED row)
+            // and out of v1 scope: reject via ok=false so the
+            // caller errors loudly rather than interpolating wrong.
+            j += 2
+            var more = true
+            while (ok && more) s.ident(j) match {
+              case Some(c) =>
+                interp += c; j += 1
+                if (s.punct(j, ",")) j += 1
+                else if (s.punct(j, ")")) { j += 1; more = false }
+                else ok = false
+              case None => ok = false
             }
-          case _ => None
+          } else ok = false
         }
+        if (ok) Some(WithFillParts(sql.substring(0, s.pos(oi)).trim,
+          col, from, to, step, interp.toSeq))
+        else None
       }
     }
+  }
 
   /** The pieces of a `… GROUP BY exprs WITH TOTALS …` statement —
     * ClickHouse's totals-row modifier. `pre` is the text before GROUP,
@@ -2830,47 +2365,23 @@ object ChParser {
     * None for statements without it or for set operations, whose clause
     * scope would be ambiguous).
     */
-  def splitWithTotals(sql: String): Option[WithTotalsParts] =
-    tokenize(sql).toOption.flatMap { toks =>
-      val depth = new Array[Int](toks.length)
-      var d = 0
-      var unionish = false
-      toks.zipWithIndex.foreach { case (t, i) =>
-        t match {
-          case Punct("(", _) => depth(i) = d; d += 1
-          case Punct(")", _) => d = math.max(0, d - 1); depth(i) = d
-          case Ident(w, _) if d == 0 &&
-              Seq("union", "intersect", "except").contains(w.toLowerCase) =>
-            unionish = true; depth(i) = d
-          case _ => depth(i) = d
-        }
-      }
-      def kw(i: Int, k: String) = i < toks.length && (toks(i) match {
-        case Ident(w, _) => w.equalsIgnoreCase(k)
-        case _ => false
-      })
-      val grp = toks.indices.find(i =>
-        depth(i) == 0 && kw(i, "GROUP") && kw(i + 1, "BY"))
-      val tot = toks.indices.find(i =>
-        depth(i) == 0 && kw(i, "WITH") && kw(i + 1, "TOTALS"))
-      (grp, tot) match {
-        case (Some(g), Some(w)) if !unionish && w > g + 2 =>
-          val exprs = sql.substring(toks(g + 2).pos, toks(w).pos).trim
-          val tailPos = toks(w + 1).pos + toks(w + 1).text.length
-          if (exprs.isEmpty) None
-          else Some(WithTotalsParts(sql.substring(0, toks(g).pos), exprs,
-            sql.substring(tailPos)))
-        case _ => None
-      }
-    }
+  def splitWithTotals(sql: String): Option[WithTotalsParts] = {
+    val s = Scan(sql)
+    val g = s.seek(0)(i => s.top(i, "GROUP") && s.kw(i + 1, "BY"))
+    val w = s.seek(0)(i => s.top(i, "WITH") && s.kw(i + 1, "TOTALS"))
+    if (w == s.length || s.setOp || w <= g + 2) None
+    else Some(s.slice(g + 2, w)).filter(_.nonEmpty).map(WithTotalsParts(
+      sql.substring(0, s.pos(g)), _,
+      sql.substring(s.pos(w + 1) + s(w + 1).text.length)))
+  }
 
   /** All identifier tokens of an expression — column-reference detection
     * for DDL guards (comments/literals never contribute).
     */
-  def tokenizedIdents(exprText: String): Seq[String] =
-    tokenize(exprText).toOption.fold(Seq.empty[String])(_.collect {
-      case Ident(w, _) => w
-    })
+  def tokenizedIdents(exprText: String): Seq[String] = {
+    val s = Scan(exprText)
+    s.indices.flatMap(s.ident(_))
+  }
 
   /** Keywords that may directly follow a table ref — never bare aliases. */
   private val postTableKeywords: Set[String] = Set(
@@ -2891,61 +2402,28 @@ object ChParser {
     * (ADVICE r18: `SELECT tag.name FROM t AS tag` must not backquote
     * `tag.name` just because some table declares a Nested family `tag`).
     */
-  def definedNames(sql: String): Set[String] = tokenize(sql) match {
-    case Left(_) => Set.empty
-    case Right(toks) =>
-      val out = scala.collection.mutable.Set.empty[String]
-      def idt(i: Int): Option[String] = toks.lift(i).collect {
-        case Ident(w, _) => w
+  def definedNames(sql: String): Set[String] = {
+    val s = Scan(sql)
+    s.indices.flatMap { i =>
+      s(i) match {
+        // CTE / WINDOW definition: `x AS (`
+        case Ident(x, _) if s.kw(i + 1, "as") && s.punct(i + 2, "(") => Some(x)
+        // subquery alias: `) [AS] x`
+        case Punct(")", _) =>
+          if (s.kw(i + 1, "as")) s.ident(i + 2)
+          else s.ident(i + 1, postTableKeywords)
+        // table alias: FROM/JOIN t[.u] [AS] x
+        case Ident(_, _) if (s.kw(i, "from") || s.kw(i, "join")) &&
+            s.ident(i + 1).isDefined =>
+          // consume the dotted table chain
+          var j = i + 1
+          while (s.punct(j + 1, ".") && s.ident(j + 2).isDefined) j += 2
+          if (s.kw(j + 1, "as")) s.ident(j + 2)
+          else if (s.punct(j + 2, "(")) None // `FROM f(...)` is a call
+          else s.ident(j + 1, postTableKeywords)
+        case _ => None
       }
-      def punct(i: Int, p: String): Boolean = toks.lift(i).exists {
-        case Punct(t, _) => t == p; case _ => false
-      }
-      var i = 0
-      while (i < toks.length) {
-        toks(i) match {
-          // CTE / WINDOW definition: `x AS (`
-          case Ident(x, _)
-              if idt(i + 1).exists(_.equalsIgnoreCase("as")) &&
-                punct(i + 2, "(") =>
-            out += x.toLowerCase(java.util.Locale.ROOT)
-          // subquery alias: `) [AS] x`
-          case Punct(")", _) =>
-            idt(i + 1) match {
-              case Some(a) if a.equalsIgnoreCase("as") =>
-                idt(i + 2).foreach(x =>
-                  out += x.toLowerCase(java.util.Locale.ROOT))
-              case Some(x)
-                  if !postTableKeywords(x.toLowerCase(java.util.Locale.ROOT)) =>
-                out += x.toLowerCase(java.util.Locale.ROOT)
-              case _ => ()
-            }
-          // table alias: FROM/JOIN t[.u] [AS] x
-          case Ident(kw, _)
-              if kw.equalsIgnoreCase("from") || kw.equalsIgnoreCase("join") =>
-            idt(i + 1) match {
-              case Some(_) =>
-                // consume the dotted table chain
-                var j = i + 1
-                while (punct(j + 1, ".") && idt(j + 2).isDefined) j += 2
-                idt(j + 1) match {
-                  case Some(a) if a.equalsIgnoreCase("as") =>
-                    idt(j + 2).foreach(x =>
-                      out += x.toLowerCase(java.util.Locale.ROOT))
-                  case Some(x)
-                      if !postTableKeywords(
-                        x.toLowerCase(java.util.Locale.ROOT)) &&
-                        !punct(j + 2, "(") => // `FROM f(...)` is a call
-                    out += x.toLowerCase(java.util.Locale.ROOT)
-                  case _ => ()
-                }
-              case None => ()
-            }
-          case _ => ()
-        }
-        i += 1
-      }
-      out.toSet
+    }.map(_.toLowerCase(Locale.ROOT)).toSet
   }
 
   /** A `FINAL` token following a JOIN-side table ref — a shape
@@ -2954,26 +2432,19 @@ object ChParser {
     * silently (ADVICE r15 #1). Returns the joined table's name so the
     * caller can error loudly.
     */
-  def findJoinSideFinal(sql: String): Option[String] =
-    tokenize(sql).toOption.flatMap { toks =>
-      def idt(i: Int): Option[String] = toks.lift(i).collect {
-        case Ident(w, _) => w
-      }
-      def isKw(i: Int, k: String) = idt(i).exists(_.equalsIgnoreCase(k))
-      def isDot(i: Int) = toks.lift(i).exists {
-        case Punct(".", _) => true; case _ => false
-      }
-      toks.indices.collectFirst {
-        // JOIN t FINAL
-        case i if isKw(i, "final") && isKw(i - 2, "join") &&
-            idt(i - 1).isDefined && !isDot(i + 1) =>
-          idt(i - 1).get
-        // JOIN db.t FINAL
-        case i if isKw(i, "final") && isKw(i - 4, "join") &&
-            idt(i - 3).isDefined && isDot(i - 2) && idt(i - 1).isDefined =>
-          s"${idt(i - 3).get}.${idt(i - 1).get}"
-      }
+  def findJoinSideFinal(sql: String): Option[String] = {
+    val s = Scan(sql)
+    s.indices.collectFirst {
+      // JOIN t FINAL
+      case i if s.kw(i, "final") && s.kw(i - 2, "join") &&
+          s.ident(i - 1).isDefined && !s.punct(i + 1, ".") =>
+        s.ident(i - 1).get
+      // JOIN db.t FINAL
+      case i if s.kw(i, "final") && s.kw(i - 4, "join") &&
+          s.ident(i - 3).isDefined && s.punct(i - 2, ".") && s.ident(i - 1).isDefined =>
+        s"${s.ident(i - 3).get}.${s.ident(i - 1).get}"
     }
+  }
 
   /** One side of an ASOF JOIN condition: `alias.col` or a bare `col`. */
   final case class ARef(qual: Option[String], col: String)
@@ -2997,212 +2468,155 @@ object ChParser {
     * v1 scope: plain (optionally db-qualified) table refs on both sides,
     * ON-conjunction of equalities plus ONE `>=`/`>` inequality.
     */
-  def splitAsofJoin(sql: String): Option[Either[String, AsofParts]] =
-    tokenize(sql).toOption.flatMap { toks =>
-      def idt(i: Int): Option[String] = toks.lift(i).collect {
-        case Ident(w, _) => w
+  def splitAsofJoin(sql: String): Option[Either[String, AsofParts]] = {
+    val s = Scan(sql)
+    val a = s.seek(0)(i => s.kw(i, "asof") && s.kw(i + 1, "join"))
+    Option.when(a < s.length) {
+      val leftOuter = s.kw(a - 1, "left")
+      val relEnd = if (leftOuter) a - 1 else a // exclusive
+      // back-scan the left relation: FROM name[.name] [[AS] alias];
+      // returns (table, alias, startTokenIdx)
+      def parseRelBack(end: Int): Either[String, (String, String, Int)] = {
+        val kws = Set("from", "as", "join", "on")
+        // candidates, longest first
+        // FROM db . t AS al | FROM db . t al | FROM t AS al | FROM t al
+        // FROM db . t       | FROM t
+        (for {
+          al <- s.ident(end - 1, kws) if s.kw(end - 2, "as")
+          t <- s.ident(end - 3, kws) if s.punct(end - 4, ".")
+          d <- s.ident(end - 5, kws) if s.kw(end - 6, "from")
+        } yield (s"$d.$t", al, end - 5)).orElse(for {
+          al <- s.ident(end - 1, kws)
+          t <- s.ident(end - 2, kws) if s.punct(end - 3, ".")
+          d <- s.ident(end - 4, kws) if s.kw(end - 5, "from")
+        } yield (s"$d.$t", al, end - 4)).orElse(for {
+          al <- s.ident(end - 1, kws) if s.kw(end - 2, "as")
+          t <- s.ident(end - 3, kws) if s.kw(end - 4, "from")
+        } yield (t, al, end - 3)).orElse(for {
+          t <- s.ident(end - 1, kws) if s.punct(end - 2, ".")
+          d <- s.ident(end - 3, kws) if s.kw(end - 4, "from")
+        } yield (s"$d.$t", t, end - 3)).orElse(for {
+          al <- s.ident(end - 1, kws)
+          t <- s.ident(end - 2, kws) if s.kw(end - 3, "from")
+        } yield (t, al, end - 2)).orElse(for {
+          t <- s.ident(end - 1, kws) if s.kw(end - 2, "from")
+        } yield (t, t, end - 1)).toRight(
+          "the left side must be a plain table ref directly after FROM " +
+            "(subqueries/comma-joins before ASOF JOIN are not supported)")
       }
-      def isKw(i: Int, k: String) = idt(i).exists(_.equalsIgnoreCase(k))
-      val hit = toks.indices.find(i => isKw(i, "asof") && isKw(i + 1, "join"))
-      hit.map { a =>
-        val leftOuter = isKw(a - 1, "left")
-        val relEnd = if (leftOuter) a - 1 else a // exclusive
-        // back-scan the left relation: [FROM] name[.name] [AS] [alias]
-        def parseRelBack(end: Int): Either[String, (String, String, Int)] = {
-          // returns (table, alias, startTokenIdx)
-          def bare(i: Int): Option[String] = toks.lift(i).collect {
-            case Ident(w, _) if !Seq("from", "as", "join", "on")
-              .contains(w.toLowerCase) => w
-          }
-          def isDot(i: Int) = toks.lift(i).exists {
-            case Punct(".", _) => true; case _ => false
-          }
-          // candidates, longest first
-          // FROM db . t AS al | FROM db . t al | FROM t AS al | FROM t al
-          // FROM db . t       | FROM t
-          val shapes: Seq[(Int, () => Option[(String, String, Int)])] = Seq(
-            (6, () => for {
-              al <- bare(end - 1); _ <- Some(()).filter(_ => isKw(end - 2, "as"))
-              t <- bare(end - 3); _ <- Some(()).filter(_ => isDot(end - 4))
-              d <- bare(end - 5); _ <- Some(()).filter(_ => isKw(end - 6, "from"))
-            } yield (s"$d.$t", al, end - 5)),
-            (5, () => for {
-              al <- bare(end - 1); t <- bare(end - 2)
-              _ <- Some(()).filter(_ => isDot(end - 3)); d <- bare(end - 4)
-              _ <- Some(()).filter(_ => isKw(end - 5, "from"))
-            } yield (s"$d.$t", al, end - 4)),
-            (4, () => for {
-              al <- bare(end - 1); _ <- Some(()).filter(_ => isKw(end - 2, "as"))
-              t <- bare(end - 3); _ <- Some(()).filter(_ => isKw(end - 4, "from"))
-            } yield (t, al, end - 3)),
-            (4, () => for {
-              t <- bare(end - 1); _ <- Some(()).filter(_ => isDot(end - 2))
-              d <- bare(end - 3); _ <- Some(()).filter(_ => isKw(end - 4, "from"))
-            } yield (s"$d.$t", t, end - 3)),
-            (3, () => for {
-              al <- bare(end - 1); t <- bare(end - 2)
-              _ <- Some(()).filter(_ => isKw(end - 3, "from"))
-            } yield (t, al, end - 2)),
-            (2, () => for {
-              t <- bare(end - 1); _ <- Some(()).filter(_ => isKw(end - 2, "from"))
-            } yield (t, t, end - 1)),
-          )
-          shapes.view.flatMap(_._2()).headOption.toRight(
-            "the left side must be a plain table ref directly after FROM " +
-              "(subqueries/comma-joins before ASOF JOIN are not supported)")
-        }
-        // forward-scan the right relation from after JOIN
-        def parseRelFwd(start: Int):
-            Either[String, (String, String, Int, String)] = {
-          // returns (table, alias, idx of ON/USING keyword, which)
-          def bare(i: Int): Option[String] = toks.lift(i).collect {
-            case Ident(w, _)
-              if !Seq("on", "as", "using").contains(w.toLowerCase) => w
-          }
-          def isDot(i: Int) = toks.lift(i).exists {
-            case Punct(".", _) => true; case _ => false
-          }
-          bare(start).toRight("expected a table name after ASOF JOIN")
-            .flatMap { n1 =>
-              val (tbl, next) =
-                if (isDot(start + 1) && bare(start + 2).isDefined)
-                  (s"$n1.${bare(start + 2).get}", start + 3)
-                else (n1, start + 1)
-              val short = if (tbl.contains(".")) tbl.split("\\.")(1) else tbl
-              val (alias, onIdx) =
-                if (isKw(next, "as") && bare(next + 1).isDefined)
-                  (bare(next + 1).get, next + 2)
-                else if (bare(next).isDefined) (bare(next).get, next + 1)
-                else (short, next)
-              if (isKw(onIdx, "on")) Right((tbl, alias, onIdx, "on"))
-              else if (isKw(onIdx, "using")) Right((tbl, alias, onIdx, "using"))
-              else Left("expected ON or USING after the ASOF JOIN relation")
+      // forward-scan the right relation from after JOIN; returns
+      // (table, alias, idx of ON/USING keyword, which)
+      def parseRelFwd(start: Int):
+          Either[String, (String, String, Int, String)] = {
+        val notName = Set("on", "as", "using")
+        s.ident(start, notName).toRight("expected a table name after ASOF JOIN")
+          .flatMap { n1 =>
+            val (tbl, next) = s.ident(start + 2, notName) match {
+              case Some(n2) if s.punct(start + 1, ".") => (s"$n1.$n2", start + 3)
+              case _ => (n1, start + 1)
             }
-        }
-        // ON conjuncts: ref op ref (AND …)*
-        def parseConds(start: Int):
-            Either[String, (Seq[(ARef, String, ARef)], Int)] = {
-          var i = start
-          def ref(): Either[String, ARef] = idt(i) match {
-            case Some(q) if toks.lift(i + 1).exists {
-                case Punct(".", _) => true; case _ => false
-              } && idt(i + 2).isDefined =>
-              i += 3; Right(ARef(Some(q), idt(i - 1).get))
-            case Some(c) => i += 1; Right(ARef(None, c))
-            case None => Left(s"expected a column ref in the ON clause")
-          }
-          def op(): Either[String, String] = toks.lift(i) match {
-            case Some(Punct(o, _)) if Seq("=", ">", "<").contains(o) =>
-              i += 1
-              toks.lift(i) match {
-                case Some(Punct("=", _)) if o != "=" => i += 1; Right(o + "=")
-                case _ => Right(o)
+            val short = if (tbl.contains(".")) tbl.split("\\.")(1) else tbl
+            val (alias, onIdx) =
+              (s.ident(next, notName), s.ident(next + 1, notName)) match {
+                case (_, Some(al)) if s.kw(next, "as") => (al, next + 2)
+                case (Some(al), _) => (al, next + 1)
+                case _ => (short, next)
               }
-            case other => Left(s"expected =, >=, >, <= or < in the ON " +
-              s"clause, got ${other.map(_.text)}")
+            if (s.kw(onIdx, "on")) Right((tbl, alias, onIdx, "on"))
+            else if (s.kw(onIdx, "using")) Right((tbl, alias, onIdx, "using"))
+            else Left("expected ON or USING after the ASOF JOIN relation")
           }
-          val conds = ArrayBuffer.empty[(ARef, String, ARef)]
-          var err: Option[String] = None
-          var go = true
-          while (go && err.isEmpty) {
-            (for { l <- ref(); o <- op(); r <- ref() } yield (l, o, r)) match {
-              case Right(c) =>
-                conds += c
-                if (isKw(i, "and")) i += 1 else go = false
-              case Left(e) => err = Some(e)
-            }
-          }
-          // the fragment must end at a clause boundary — anything else
-          // (parenthesized conds, OR, functions) is out of v1 scope
-          val boundary = toks.lift(i) match {
-            case None => true
-            case Some(Ident(w, _)) => Seq("where", "group", "order", "limit",
-              "having", "settings", "format", "union", "window", "qualify")
-              .contains(w.toLowerCase)
-            case Some(Punct(";", _)) => true
-            case _ => false
-          }
-          err.toLeft(()).flatMap { _ =>
-            if (!boundary) Left("only a conjunction of plain column " +
-              "comparisons is supported in ASOF JOIN ON")
-            else {
-              val endPos = toks.lift(i).map(_.pos).getOrElse(sql.length)
-              Right((conds.toSeq, endPos))
-            }
-          }
-        }
-        // CH's USING form: the LAST column is the inequality (>=), the
-        // rest are equalities — both sides share the names, so conds
-        // emit pre-qualified refs
-        def parseUsing(start: Int, la: String, ra: String):
-            Either[String, (Seq[(ARef, String, ARef)], Int)] = {
-          var i = start
-          val parens = toks.lift(i).exists {
-            case Punct("(", _) => true; case _ => false
-          }
-          if (parens) i += 1
-          val cols = ArrayBuffer.empty[String]
-          var go = true
-          while (go) {
-            idt(i) match {
-              case Some(c) =>
-                cols += c; i += 1
-                if (toks.lift(i).exists {
-                    case Punct(",", _) => true; case _ => false
-                  }) i += 1
-                else go = false
-              case None => go = false
-            }
-          }
-          if (parens && !toks.lift(i).exists {
-              case Punct(")", _) => true; case _ => false
-            }) Left("unclosed USING list")
-          else {
-            if (parens) i += 1
-            if (cols.length < 2)
-              Left("ASOF JOIN USING needs at least one equality column " +
-                "plus the time column (the LAST one)")
-            else {
-              val conds = cols.init.map(c =>
-                (ARef(Some(la), c), "=", ARef(Some(ra), c))).toSeq :+
-                ((ARef(Some(la), cols.last), ">=", ARef(Some(ra), cols.last)))
-              Right((conds, toks.lift(i).map(_.pos).getOrElse(sql.length)))
-            }
-          }
-        }
-        for {
-          l <- parseRelBack(relEnd)
-          r <- parseRelFwd(a + 2)
-          c <- if (r._4 == "using") parseUsing(r._3 + 1, l._2, r._2)
-               else parseConds(r._3 + 1)
-        } yield AsofParts(l._1, l._2, r._1, r._2, leftOuter, c._1,
-          toks(l._3).pos, c._2)
       }
+      // ON conjuncts: ref op ref (AND …)*
+      def parseConds(start: Int):
+          Either[String, (Seq[(ARef, String, ARef)], Int)] = {
+        var i = start
+        def ref(): Either[String, ARef] = s.ident(i) match {
+          case Some(q) if s.punct(i + 1, ".") && s.ident(i + 2).isDefined =>
+            i += 3; Right(ARef(Some(q), s.ident(i - 1).get))
+          case Some(c) => i += 1; Right(ARef(None, c))
+          case None => Left(s"expected a column ref in the ON clause")
+        }
+        def op(): Either[String, String] = s.lift(i) match {
+          case Some(Punct(o, _)) if Seq("=", ">", "<").contains(o) =>
+            i += 1
+            if (o != "=" && s.punct(i, "=")) { i += 1; Right(o + "=") }
+            else Right(o)
+          case other => Left(s"expected =, >=, >, <= or < in the ON " +
+            s"clause, got ${other.map(_.text)}")
+        }
+        val conds = ArrayBuffer.empty[(ARef, String, ARef)]
+        var err: Option[String] = None
+        var go = true
+        while (go && err.isEmpty) {
+          (for { l <- ref(); o <- op(); r <- ref() } yield (l, o, r)) match {
+            case Right(c) =>
+              conds += c
+              if (s.kw(i, "and")) i += 1 else go = false
+            case Left(e) => err = Some(e)
+          }
+        }
+        // the fragment must end at a clause boundary — anything else
+        // (parenthesized conds, OR, functions) is out of v1 scope
+        val boundary = i >= s.length || s.punct(i, ";") || s.kwIn(i, Set(
+          "where", "group", "order", "limit", "having", "settings", "format",
+          "union", "window", "qualify"))
+        err.toLeft(()).flatMap { _ =>
+          if (!boundary) Left("only a conjunction of plain column " +
+            "comparisons is supported in ASOF JOIN ON")
+          else Right((conds.toSeq, s.pos(i)))
+        }
+      }
+      // CH's USING form: the LAST column is the inequality (>=), the
+      // rest are equalities — both sides share the names, so conds
+      // emit pre-qualified refs
+      def parseUsing(start: Int, la: String, ra: String):
+          Either[String, (Seq[(ARef, String, ARef)], Int)] = {
+        val parens = s.punct(start, "(")
+        var i = if (parens) start + 1 else start
+        val cols = ArrayBuffer.empty[String]
+        var go = true
+        while (go) s.ident(i) match {
+          case Some(c) =>
+            cols += c; i += 1
+            if (s.punct(i, ",")) i += 1 else go = false
+          case None => go = false
+        }
+        if (parens && !s.punct(i, ")")) Left("unclosed USING list")
+        else {
+          if (parens) i += 1
+          if (cols.length < 2)
+            Left("ASOF JOIN USING needs at least one equality column " +
+              "plus the time column (the LAST one)")
+          else {
+            val conds = cols.init.map(c =>
+              (ARef(Some(la), c), "=", ARef(Some(ra), c))).toSeq :+
+              ((ARef(Some(la), cols.last), ">=", ARef(Some(ra), cols.last)))
+            Right((conds, s.pos(i)))
+          }
+        }
+      }
+      for {
+        l <- parseRelBack(relEnd)
+        r <- parseRelFwd(a + 2)
+        c <- if (r._4 == "using") parseUsing(r._3 + 1, l._2, r._2)
+             else parseConds(r._3 + 1)
+      } yield AsofParts(l._1, l._2, r._1, r._2, leftOuter, c._1,
+        s.pos(l._3), c._2)
     }
+  }
 
   /** Rewrite every `qual.` qualifier token pair to `to.` — used after an
     * ASOF JOIN splice collapses two relations into one view, whose single
     * alias must serve both sides' qualified references.
     */
-  def renameQualifier(segment: String, from: String, to: String): String =
-    tokenize(segment).toOption.fold(segment) { toks =>
-      val spans = toks.zipWithIndex.collect {
-        case (Ident(w, p), i) if w.equalsIgnoreCase(from) &&
-            segment.charAt(p) != '`' && (toks.lift(i + 1) match {
-              case Some(Punct(".", _)) => true
-              case _ => false
-            }) && (i == 0 || (toks(i - 1) match {
-              case Punct(".", _) => false // itself a field access tail
-              case _ => true
-            })) =>
-          (p, w.length)
-      }
-      val sb = new StringBuilder
-      var last = 0
-      spans.foreach { case (p, len) =>
-        sb.append(segment.substring(last, p)).append(to)
-        last = p + len
-      }
-      sb.append(segment.substring(last)).toString
-    }
+  def renameQualifier(segment: String, from: String, to: String): String = {
+    val s = Scan(segment)
+    splice(segment, s.indices.collect {
+      // a qualifier, not itself a field access tail
+      case i if s.kw(i, from) && !s.quoted(i) && s.punct(i + 1, ".") &&
+          !s.punct(i - 1, ".") =>
+        (s.pos(i), s.pos(i) + s(i).text.length, to)
+    })
+  }
 }

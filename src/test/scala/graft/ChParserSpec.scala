@@ -339,6 +339,17 @@ class ChParserSpec extends AnyFunSuite {
     }
   }
 
+  test("scanners stop at the end of truncated text instead of throwing") {
+    assert(ChParser.splitPrewhere("SELECT a FROM t PREWHERE") === None)
+    assert(ChParser.dictFnCalls("SELECT dictGet('d', 'a',", "dictGet", 2) === Nil)
+  }
+
+  test("a string literal never stands in for punctuation: a trailing " +
+    "SETTINGS whose value is ';' is dropped") {
+    assert(ChParser.rewriteQueryTails(
+      "SELECT a FROM t SETTINGS format_csv_delimiter = ';'") === "SELECT a FROM t")
+  }
+
   test("rewriteDistinctOn and inTableRefs") {
     assert(ChParser.rewriteDistinctOn(
       "SELECT DISTINCT ON (a, b) a, b, c FROM t ORDER BY c") ===

@@ -1025,6 +1025,18 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(e.getMessage.contains("refuses to overwrite"))
   }
 
+  test("INTO OUTFILE: TSVWithNames writes a header line, then its rows") {
+    val g = new graft.exec.GraftSession(spark)
+    import spark.implicits._
+    Seq(("a", 1L), ("b", 2L)).toDF("k", "v").createOrReplaceTempView("of_tsv")
+    val out = java.nio.file.Files.createTempDirectory("graft_of_tsv")
+      .resolve("named.tsv")
+    g.sql(s"SELECT k, v FROM of_tsv ORDER BY k INTO OUTFILE '$out' " +
+      "FORMAT TSVWithNames")
+    assert(java.nio.file.Files.readString(out).split("\n").toSeq ===
+      Seq("k\tv", "a\t1", "b\t2"))
+  }
+
   test("normalized replay script keeps PRIMARY KEY, NOT NULL, and bucket layout") {
     g.sql("DROP TABLE IF EXISTS norm_b; DROP TABLE IF EXISTS norm_a")
     g.sql("CREATE TABLE norm_a(k Int64 PRIMARY KEY, v String NOT NULL, " +

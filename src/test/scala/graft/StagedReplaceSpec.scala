@@ -153,7 +153,7 @@ class StagedReplaceSpec extends AnyFunSuite {
       Seq("[1200,1200]"))
   }
 
-  test("a compaction OPTIMIZE of two fragmented partitions runs three " +
+  test("a compaction OPTIMIZE of two fragmented partitions runs two " +
     "Spark jobs") {
     // the witness is the retired files' footer total; a count() of the
     // bare scan would fold to the same footer sum (TrivialCount), so this
@@ -168,7 +168,7 @@ class StagedReplaceSpec extends AnyFunSuite {
     val jobs = ListenerDrain.jobsDuring(s.sparkContext)(
       g.sql("OPTIMIZE TABLE cj FINAL"))
     assert(parts(dir).values.map(_.size).toSeq === Seq(1, 1))
-    assert(jobs === 3)
+    assert(jobs === 2)
   }
 
   test("the catalog restore settles a rewrite that failed after its " +
