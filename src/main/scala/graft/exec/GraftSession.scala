@@ -2,7 +2,10 @@ package graft.exec
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,7 +18,7 @@ import graft.types.BqlType
   * and passes SELECTs through to Spark SQL.
   *
   * A `GraftSession` is one connection's handle: its SparkSession (current
-  * database, temp views, registered functions), its CH temporary tables
+  * database, registered functions), its CH temporary tables
   * and its processlist entry. What the catalog itself defines lives in the
   * [[GraftSession.EngineState]] of the SparkSession's `SharedState`, shared
   * by every `newSession()` of a server the way TensorBase opens one catalog
@@ -23,8 +26,10 @@ import graft.types.BqlType
   * dictionaries keyed by (database, name), restore errors, and the
   * direct-write, MV-subscription and Nested caches. The first handle on a
   * catalog replays `_graft_meta` into that state; every later DDL updates
-  * it in place, and a handle registers a view's temp view or a
-  * dictionary's lookup function on its own SparkSession the first time a
+  * it in place. A statement reads views, `system.*` tables and the
+  * relations its rewrites build through one resolver ([[select]]), which
+  * substitutes them into the parsed plan; a handle registers only a
+  * dictionary's lookup function on its own SparkSession, the first time a
   * statement needs it. Process-wide state (processes, query log, write
   * locks and write generations) stays in the companion.
   *
@@ -45,7 +50,7 @@ import graft.types.BqlType
   */
 class GraftSession(val spark: SparkSession) {
   import ChStatement._
-  import GraftSession.GraftTable
+  import GraftSession.{GraftTable, encodePropMap, propMap}
 
   // Register EVERY function pack before the catalog replay below: a
   // persisted materialized view's SELECT may call vec_dot / ngram_* /
@@ -88,10 +93,6 @@ class GraftSession(val spark: SparkSession) {
   private def tempDef(db: Option[String],
                       name: String): Option[ChStatement.CreateTable] =
     if (db.isEmpty) tempTables.get(name).map(_._1) else None
-
-  /** Temp views this handle registered for plain views (see
-    * [[refreshReferencedViews]]). */
-  private val viewTemps = scala.collection.mutable.Set.empty[String]
 
   /** Broadcast id each `__graft_dict_<name>` lookup function on this
     * handle's SparkSession is bound to (see [[bindDictFn]]). */
@@ -296,14 +297,6 @@ class GraftSession(val spark: SparkSession) {
           case Left(err) => throw new IllegalArgumentException(s"parse error: $err")
           case Right(stmt) =>
             catchUpWrites()
-            // CH plain-view semantics: reads substitute the stored query at
-            // query time — re-resolve any mentioned view before running
-            // (no-op when no views are defined; CreateView refreshes its own
-            // dependency closure itself)
-            stmt match {
-              case _: CreateView => ()
-              case _ => refreshReferencedViews(part)
-            }
             // any statement that can change a table's shape, engine,
             // constraints, partitioning, temp status or MV subscriptions
             // invalidates the cached direct-write recipes, and once it has
@@ -418,14 +411,12 @@ class GraftSession(val spark: SparkSession) {
     case ShowDatabases =>
       spark.sql("SHOW DATABASES").select(col("namespace").as("name"))
     case ShowTables(db, like, neg) =>
-      // the database's views come from the engine state, not from the
-      // temp views this handle happens to have registered
+      // the database's views come from the engine state
       val sdb = db.getOrElse(spark.catalog.currentDatabase)
       val views = state.views.keySet.asScala.collect { case (`sdb`, v) => v }
       val named = spark.sql(s"SHOW TABLES IN `$sdb`")
         .filter(!col("tableName").startsWith("graft_tmp_") &&
-          !col("tableName").startsWith("__proj_") &&
-          !col("tableName").isin(viewTemps.toSeq: _*))
+          !col("tableName").startsWith("__proj_"))
         .select(col("tableName").as("name"))
         .union(spark.createDataset(views.toSeq)(org.apache.spark.sql.Encoders.STRING)
           .toDF("name"))
@@ -637,13 +628,14 @@ class GraftSession(val spark: SparkSession) {
         Seq(Row(script)).asJava,
         StructType(Seq(StructField("statement", StringType))))
     case ExistsTable(db, name) =>
-      val yes = spark.catalog.tableExists(fullName(db, name).replace("`", ""))
+      val yes = viewKey(db, name).isDefined ||
+        spark.catalog.tableExists(fullName(db, name).replace("`", ""))
       spark.createDataFrame(
         Seq(Row(if (yes) 1 else 0)).asJava,
         StructType(Seq(StructField("result", IntegerType))))
     case DescSelect(sel) =>
       // schema-only analysis — nothing executes
-      val rows = spark.sql(rewriteSelect(sel)).schema.fields.toSeq.map(f =>
+      val rows = select(sel).schema.fields.toSeq.map(f =>
         Row(f.name, BqlType.fromSpark(f.dataType, f.nullable).chName))
       spark.createDataFrame(rows.asJava,
         StructType(Seq(StructField("name", StringType),
@@ -651,7 +643,7 @@ class GraftSession(val spark: SparkSession) {
     case ShowColumns(db, name) =>
       run(DescTable(db, name), "")
     case DescTable(db, name) if viewKey(db, name).isDefined =>
-      val rows = spark.table(s"`$name`").schema.fields.toSeq.map { f =>
+      val rows = viewPlan(viewKey(db, name).get, new Splices).schema.fields.toSeq.map { f =>
         Row(f.name, BqlType.fromSpark(f.dataType, f.nullable).chName)
       }
       spark.createDataFrame(rows.asJava,
@@ -675,12 +667,7 @@ class GraftSession(val spark: SparkSession) {
       // projections aggregated — rebuild (no-op for tables without any)
       rebuildProjectionsOf(db, name)
       emptyOk
-    case ShowDictionaries =>
-      val rows = state.dicts.values.asScala.toSeq.map(d =>
-        Row(d.cd.name, d.cd.source, d.cd.key))
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-        StructField("name", StringType), StructField("source", StringType),
-        StructField("key", StringType))))
+    case ShowDictionaries => systemTables("dictionaries")()
     case m: AlterMutate =>
       mutateTable(m); rebuildProjectionsOf(m.db, m.name); emptyOk
     case ac: AlterClearColumn =>
@@ -803,13 +790,13 @@ class GraftSession(val spark: SparkSession) {
         case "syntax" =>
           // the fully-rewritten SQL the dialect layer hands to Spark —
           // exactly what CH's EXPLAIN SYNTAX shows (ITS rewritten query)
-          rewriteSelect(sel)
+          rewriteSelect(sel)._1
         // the plan the SELECT would run: routed like runSelect
         case "pipeline" =>
-          org.apache.spark.sql.GraftSqlBridge.planSmall(spark.sql(rewriteSelect(sel)))
+          GraftSqlBridge.planSmall(select(sel))
             .queryExecution.explainString(org.apache.spark.sql.execution.CodegenMode)
         case _ =>
-          org.apache.spark.sql.GraftSqlBridge.planSmall(spark.sql(rewriteSelect(sel)))
+          GraftSqlBridge.planSmall(select(sel))
             .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
       }
       spark.createDataFrame(
@@ -833,8 +820,8 @@ class GraftSession(val spark: SparkSession) {
     ChParser.splitIntoOutfile(raw) match {
       case Some(p) => writeOutfile(p)
       case None =>
-        val df = spark.sql(rewriteSelect(raw))
-        org.apache.spark.sql.GraftSqlBridge.planSmall(
+        val df = select(raw)
+        GraftSqlBridge.planSmall(
           if (df.columns.contains(PtkCol)) df.drop(PtkCol) else df)
     }
 
@@ -861,7 +848,7 @@ class GraftSession(val spark: SparkSession) {
     * Returns a one-row summary (path, rows, format).
     */
   private def writeOutfile(p: ChParser.IntoOutfileParts): DataFrame = {
-    val df0 = spark.sql(rewriteSelect(p.core))
+    val df0 = select(p.core)
     val df1 = if (df0.columns.contains(PtkCol)) df0.drop(PtkCol) else df0
     val target = java.nio.file.Paths.get(p.path)
     require(!java.nio.file.Files.exists(target),
@@ -967,6 +954,86 @@ class GraftSession(val spark: SparkSession) {
       .load()
   }
 
+  /** The relations one statement splices into its text, each under a
+    * reserved placeholder name, and the views being expanded around it
+    * (the cycle guard). One per statement and never shared, so two
+    * statements running at once on one handle each read only their own.
+    */
+  private final class Splices(val openViews: Set[(String, String)] = Set.empty) {
+    private val plans = scala.collection.mutable.Map.empty[String, LogicalPlan]
+
+    /** Splice `df`; returns the placeholder the text reads it by. */
+    def add(df: DataFrame): String = {
+      val name = s"__graft_rel_${plans.size}"
+      plans(name) = df.queryExecution.analyzed
+      name
+    }
+
+    def get(name: String): Option[LogicalPlan] = plans.get(name)
+  }
+
+  /** A CH SELECT as a Dataset: the text rewritten ([[rewriteSelect]]),
+    * parsed by Spark, and every relation it splices in, and every engine
+    * view it reads, substituted into the parsed plan
+    * ([[resolveRelations]]). The one door by which engine relations enter
+    * Spark: nothing is registered on the session.
+    */
+  private def select(sql: String, sp: Splices = new Splices): DataFrame = {
+    val (text, rels) = rewriteSelect(sql, sp)
+    planOf(text, rels)
+  }
+
+  /** Spark SQL text with `sp`'s splices and engine views substituted. */
+  private def planOf(text: String, sp: Splices): DataFrame =
+    GraftSqlBridge.sqlPlan(spark, text)(resolveRelations(_, sp))
+
+  /** A SQL expression as a Column whose subqueries read views like any
+    * SELECT (a mutation's `WHERE k IN (SELECT … FROM v)`). */
+  private def exprOf(text: String): org.apache.spark.sql.Column =
+    GraftSqlBridge.column(spark.sessionState.sqlParser.parseExpression(text).transform {
+      case e: SubqueryExpression => e.withNewPlan(resolveRelations(e.plan, new Splices))
+    })
+
+  /** The relation a name in a FROM clause reads, through the resolver. */
+  private def relationDf(name: String, sp: Splices): DataFrame =
+    planOf(s"SELECT * FROM $name", sp)
+
+  /** `plan` with each one-part relation that names a splice of `sp`, or
+    * the engine view [[viewFor]] picks, replaced by that relation under
+    * its name, in subquery expressions too. A CTE in scope keeps its name.
+    */
+  private def resolveRelations(plan: LogicalPlan, sp: Splices,
+                               ctes: Set[String] = Set.empty): LogicalPlan = plan match {
+    case u @ UnresolvedRelation(Seq(name), _, _)
+        if !ctes.contains(name.toLowerCase(java.util.Locale.ROOT)) =>
+      sp.get(name).orElse(viewFor(name).map(v => viewPlan(v._1, sp)))
+        .fold[LogicalPlan](u)(SubqueryAlias(name, _))
+    case w: UnresolvedWith =>
+      // a definition sees the ones before it (itself too, when recursive)
+      val names = w.cteRelations.map(_._1.toLowerCase(java.util.Locale.ROOT))
+      val defs = w.cteRelations.zipWithIndex.map { case ((n, body, depth), i) =>
+        val seen = ctes ++ names.take(if (w.allowRecursion) i + 1 else i)
+        (n, body.copy(child = resolveRelations(body.child, sp, seen)), depth)
+      }
+      w.copy(child = resolveRelations(w.child, sp, ctes ++ names), cteRelations = defs)
+    case other =>
+      other.mapChildren(resolveRelations(_, sp, ctes)).transformExpressions {
+        case e: SubqueryExpression => e.withNewPlan(resolveRelations(e.plan, sp, ctes))
+      }
+  }
+
+  /** A view's plan: its body through the resolver, analyzed in the view's
+    * own database (CH substitutes the stored query at read time, so every
+    * read sees current data). `sp` carries the views already open around
+    * this one. */
+  private def viewPlan(key: (String, String), sp: Splices): LogicalPlan = {
+    require(!sp.openViews.contains(key), s"view ${key._1}.${key._2} reads itself")
+    val v = Option(state.views.get(key)).getOrElse(
+      throw new IllegalArgumentException(s"no view ${key._1}.${key._2}"))
+    inDatabase(key._1)(
+      select(v.selectSql, new Splices(sp.openViews + key)).queryExecution.analyzed)
+  }
+
   /** The CH-to-Spark text rewrites of a SELECT, applied top to bottom;
     * each scans the text it is handed afresh. The order matters where a
     * rewrite reads what an earlier one produced, or must see the text
@@ -981,17 +1048,20 @@ class GraftSession(val spark: SparkSession) {
     *     clause rewrites: WITH TIES and WITH FILL only match a statement
     *     that ends at their clause, and `LIMIT m, n BY` is left for LIMIT
     *     BY;
-    *   - dictionary calls become lookups and `system.*` references views;
+    *   - dictionary calls become lookups and `system.*` references splices;
     *   - FINAL and SAMPLE replace the FROM table in place, before any
     *     rewrite wraps the statement in a subquery;
     *   - DISTINCT ON becomes `LIMIT 1 BY`, ahead of the LIMIT BY rewrite;
     *   - IN-table, ARRAY JOIN, PREWHERE and WITH TOTALS rewrite clauses of
     *     the one SELECT; LIMIT BY, WITH TIES and WITH FILL then wrap the
     *     statement as a subquery of their own;
-    *   - table functions splice in views and subqueries, and ASOF JOIN,
-    *     last, replaces its two relations with the operator's view.
+    *   - table functions splice in relations and subqueries, and ASOF
+    *     JOIN, last, replaces its two relations with the operator's output.
+    * Returns the Spark text and `sp`, which now holds every relation the
+    * text reads by a placeholder name ([[Splices]]).
     */
-  private def rewriteSelect(sqlIn: String): String = Seq[String => String](
+  private def rewriteSelect(sqlIn: String,
+                            sp: Splices = new Splices): (String, Splices) = (Seq[String => String](
     rewriteNestedRefs,
     ChParser.rewriteScalarWith,
     ChParser.rewriteArrayLiterals,
@@ -999,20 +1069,20 @@ class GraftSession(val spark: SparkSession) {
     ChParser.rewriteQueryTails,
     ChParser.rewriteAnyJoin,
     rewriteDictFns,
-    spliceSystemViews,
+    spliceSystemViews(_, sp),
     rewriteFinal,
     rewriteSample,
     sql => ChParser.rewriteDistinctOn(sql).getOrElse(sql),
     rewriteInTable,
-    rewriteArrayJoin,
+    rewriteArrayJoin(_, sp),
     rewritePrewhere,
     rewriteWithTotals,
     rewriteLimitBy,
     rewriteLimitTies,
-    rewriteWithFill,
-    spliceTableFns,
-    rewriteAsofJoin
-  ).foldLeft(sqlIn)((sql, rewrite) => rewrite(sql))
+    rewriteWithFill(_, sp),
+    spliceTableFns(_, sp),
+    rewriteAsofJoin(_, sp)
+  ).foldLeft(sqlIn)((sql, rewrite) => rewrite(sql)), sp)
 
   /** CH SQL says `n.a`; the flattened Nested storage column is literally
     * named "n.a", which Spark only resolves backticked. Innermost rewrite
@@ -1043,17 +1113,17 @@ class GraftSession(val spark: SparkSession) {
   /** ClickHouse `[LEFT] ASOF JOIN` — the SQL door onto
     * [[graft.operators.AsofJoin]] (a01's single-shuffle union+window
     * shape; VERDICT r15 #2). `l la ASOF JOIN r ra ON la.k = ra.k AND
-    * la.t >= ra.t` splices into `FROM <asof-view> la`, where the view is
-    * the operator's output (left columns + right payload columns), and
-    * every `ra.` qualifier in the rest of the statement is re-pointed at
-    * `la` — the flattened view carries each output column once, so both
+    * la.t >= ra.t` splices into `FROM <asof-output> la`, where the
+    * spliced relation is the operator's output (left columns + right
+    * payload columns), and every `ra.` qualifier in the rest of the
+    * statement is re-pointed at `la` — the output carries each column once, so both
     * qualifiers denote the same relation. Plain `ASOF JOIN` is INNER
     * (unmatched left rows drop, CH semantics); `LEFT ASOF JOIN` keeps
     * them with null payloads. `>` is the strict form. An ASOF token in an
     * unsupported shape throws — never falls through to Spark, where it
     * would silently parse as a table alias.
     */
-  private def rewriteAsofJoin(sql: String): String =
+  private def rewriteAsofJoin(sql: String, sp: Splices): String =
     ChParser.splitAsofJoin(sql) match {
       case None => sql
       case Some(Left(why)) =>
@@ -1062,7 +1132,7 @@ class GraftSession(val spark: SparkSession) {
         def fail(why: String): Nothing =
           throw new IllegalArgumentException(s"ASOF JOIN: $why")
         def load(t: String): DataFrame = {
-          val df = spark.table(t)
+          val df = relationDf(t, sp)
           if (df.columns.contains(PtkCol)) df.drop(PtkCol) else df
         }
         val ldf = load(p.leftTable)
@@ -1126,16 +1196,13 @@ class GraftSession(val spark: SparkSession) {
         val out = (if (p.leftOuter) joined
                    else joined.filter(col(MatchCol).isNotNull))
           .drop(MatchCol, KeyCol)
-        val view = s"graft_asof_${java.security.MessageDigest.getInstance("MD5")
-          .digest(sql.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)}"
-        out.createOrReplaceTempView(view)
         val spliced =
           ChParser.renameQualifier(sql.substring(0, p.fromStart),
             p.rightAlias, p.leftAlias) +
-          s"$view AS `${p.leftAlias}` " +
+          s"${sp.add(out)} AS `${p.leftAlias}` " +
           ChParser.renameQualifier(sql.substring(p.onEnd),
             p.rightAlias, p.leftAlias)
-        rewriteAsofJoin(spliced) // a second ASOF JOIN would now be leftmost
+        rewriteAsofJoin(spliced, sp) // a second ASOF JOIN would now be leftmost
     }
 
   /** ClickHouse `FROM t FINAL` over a merging-engine table
@@ -1431,16 +1498,12 @@ class GraftSession(val spark: SparkSession) {
     *   - `remote('url', 'table'[, 'user', 'pwd'])` (reference fans out over
     *     the wire, crates/runtime/src/read.rs:151-228) → for `ch://`
     *     addresses a native-protocol shard fan-out ([[chRemoteDf]]), else a
-    *     JDBC scan; either registered as a temp view. Views are registered
-    *     BEFORE splicing (no side effects inside a replacement callback)
-    *     and the view name is an MD5 of url|table|user|pwd —
-    *     collision-resistant, so two calls differing only in credentials
-    *     (or any other arg) can never silently share a view the way a
-    *     32-bit hashCode could;
-    *   - `file(…)`, `merge(…)` and `generateRandom(…)` → a file view, a
-    *     UNION ALL over the matching tables, and a generated subquery.
+    *     JDBC scan; each call is a splice of its own ([[Splices]]);
+    *   - `file(…)`, `merge(…)` and `generateRandom(…)` → a spliced file
+    *     read, a UNION ALL over the matching tables, and a generated
+    *     subquery.
     */
-  private def spliceTableFns(sql: String): String = {
+  private def spliceTableFns(sql: String, sp: Splices): String = {
     val remotes = ChParser.tableFnCalls(sql, "remote")
       .filter(c => c._3.length == 2 || c._3.length == 4)
     val numbers = ChParser.tableFnCalls(sql, "numbers")
@@ -1459,22 +1522,15 @@ class GraftSession(val spark: SparkSession) {
     val wantsTable = ChParser.hasIdent(sql, "_table")
     val splices = remotes.map { case (from, to, args) =>
       val auth = if (args.length == 4) Some((args(2), args(3))) else None
-      val view = s"graft_remote_${java.security.MessageDigest.getInstance("MD5")
-        .digest(args.mkString("|").getBytes("UTF-8")).map("%02x".format(_)).mkString}"
-      val df =
+      (from, to, sp.add(
         if (args(0).startsWith("ch://")) chRemoteDf(args(0), args(1), auth)
-        else jdbcReader(args(0), args(1), auth).load()
-      df.createOrReplaceTempView(view)
-      (from, to, view)
+        else jdbcReader(args(0), args(1), auth).load()))
     } ++ numbers.map { case (from, to, args) =>
       (from, to, s"(SELECT id AS number FROM range(${args.head}))")
     } ++ files.map { case (from, to, args) =>
-      val view = s"graft_file_${java.security.MessageDigest.getInstance("MD5")
-        .digest(args.mkString("|").getBytes("UTF-8")).map("%02x".format(_)).mkString}"
-      fileDf(args(0), args(1), args.lift(2)).createOrReplaceTempView(view)
-      (from, to, view)
+      (from, to, sp.add(fileDf(args(0), args(1), args.lift(2))))
     } ++ merges.map { case (from, to, args) =>
-      (from, to, mergeSubquery(args(0), args(1), wantsTable))
+      (from, to, mergeSubquery(args(0), args(1), wantsTable, sp))
     } ++ gens.map { case (from, to, args) =>
       (from, to, generateRandomSubquery(args))
     }
@@ -1625,7 +1681,7 @@ class GraftSession(val spark: SparkSession) {
     * whatever the outer query does.
     */
   private def mergeSubquery(db: String, pattern: String,
-                            withTableCol: Boolean): String = {
+                            withTableCol: Boolean, sp: Splices): String = {
     val cat = spark.sessionState.catalog
     require(cat.databaseExists(db), s"merge(): no database $db")
     val re = java.util.regex.Pattern.compile(pattern)
@@ -1644,7 +1700,7 @@ class GraftSession(val spark: SparkSession) {
           tt == org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL))
       .sorted
     require(tables.nonEmpty, s"merge(): no tables in $db match '$pattern'")
-    val cols = spark.table(s"`$db`.`${tables.head}`").schema.fieldNames
+    val cols = relationDf(s"`$db`.`${tables.head}`", sp).schema.fieldNames
       .filterNot(_ == PtkCol).toSeq
     val colSql = cols.map(c => s"`$c`").mkString(", ")
     val branches = tables.map { t =>
@@ -1683,114 +1739,79 @@ class GraftSession(val spark: SparkSession) {
           p.outer.map(k => s" LIMIT $k").getOrElse("")
     }
 
-  /** ClickHouse `system.tables` / `system.columns` introspection: the
-    * references splice to temp views REFRESHED from the live catalog at
-    * query time, so a client's `SELECT name FROM system.tables` always
-    * sees the current state (the reference pre-creates the `system`
-    * database; CH fills it with virtual tables the same way).
+  /** ClickHouse `system.*` introspection: each reference splices the
+    * table's DataFrame, built from the live catalog when the statement is
+    * rewritten, so a client's `SELECT name FROM system.tables` always sees
+    * the current state (the reference pre-creates the `system` database;
+    * CH fills it with virtual tables the same way).
     */
-  private def spliceSystemViews(sql: String): String = {
-    val hits = ChParser.qualifiedRefs(sql, "system",
-      Set("tables", "columns", "restore_errors", "parts", "detached_parts",
-        "databases", "processes", "query_log", "dictionaries", "functions"))
-    if (hits.isEmpty) return sql
+  private def spliceSystemViews(sql: String, sp: Splices): String = {
+    val hits = ChParser.qualifiedRefs(sql, "system", systemTables.keySet)
+    if (hits.isEmpty) sql
+    else ChParser.splice(sql, hits.map { case (which, from, to) =>
+      (from, to, sp.add(systemTables(which)()) + " ")
+    })
+  }
+
+  /** Each `system.*` table by name, and the function that builds its
+    * DataFrame. */
+  private lazy val systemTables: Map[String, () => DataFrame] = {
     def userTables = GraftSession.userTables(spark.sessionState.catalog)
-    if (hits.exists(_._1 == "tables")) {
+    def table(fields: (String, DataType)*)(rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(rows.asJava,
+        StructType(fields.map { case (n, t) => StructField(n, t) }))
+    Map(
       // views are listed from the engine state, with CH's engine `View`
-      val rows = userTables.map { case (db, m) =>
+      "tables" -> (() => table("database" -> StringType, "name" -> StringType,
+          "engine" -> StringType)(userTables.map { case (db, m) =>
         Row(db, m.identifier.table, m.properties.getOrElse("graft.engine", "BaseStorage"))
-      } ++ state.views.keySet.asScala.toSeq.map { case (db, v) => Row(db, v, "View") }
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-          StructField("database", StringType), StructField("name", StringType),
-          StructField("engine", StringType))))
-        .createOrReplaceTempView("__graft_system_tables")
-    }
-    if (hits.exists(_._1 == "functions")) {
-      // the registered function surface (CH's system.functions): every
-      // name in this session's FunctionRegistry, the CH packs flagged
-      val chNames = graft.functions.GraftFunctions.registeredNames
-      val rows: Seq[Row] = spark.sessionState.functionRegistry.listFunction()
-        .map(_.funcName).distinct.sorted.map(n =>
-          Row(n, if (chNames.contains(
-            n.toLowerCase(java.util.Locale.ROOT))) 1 else 0)).toSeq
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-          StructField("name", StringType),
-          StructField("is_ch_pack", IntegerType))))
-        .createOrReplaceTempView("__graft_system_functions")
-    }
-    if (hits.exists(_._1 == "columns")) {
-      val rows = userTables.flatMap { case (db, m) =>
-        val declared = propMap(m, "graft.ch.types")
-        m.schema.fields.toSeq.filter(_.name != PtkCol).zipWithIndex.map {
-          case (f, i) =>
-            val ch = declared.getOrElse(f.name,
-              BqlType.fromSpark(f.dataType, f.nullable).chName)
-            Row(db, m.identifier.table, f.name, ch, (i + 1).toLong)
-        }
-      }
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-          StructField("database", StringType), StructField("table", StringType),
-          StructField("name", StringType), StructField("type", StringType),
-          StructField("position", LongType))))
-        .createOrReplaceTempView("__graft_system_columns")
-    }
-    if (hits.exists(_._1 == "parts")) SystemParts.register(spark)
-    if (hits.exists(_._1 == "detached_parts")) {
+      } ++ state.views.keySet.asScala.toSeq.map { case (db, v) => Row(db, v, "View") })),
+      // the registered function surface: every name in this session's
+      // FunctionRegistry, the CH packs flagged
+      "functions" -> (() => {
+        val chNames = graft.functions.GraftFunctions.registeredNames
+        table("name" -> StringType, "is_ch_pack" -> IntegerType)(
+          spark.sessionState.functionRegistry.listFunction()
+            .map(_.funcName).distinct.sorted.map(n => Row(n,
+              if (chNames.contains(n.toLowerCase(java.util.Locale.ROOT))) 1 else 0)))
+      }),
+      "columns" -> (() => table("database" -> StringType, "table" -> StringType,
+          "name" -> StringType, "type" -> StringType, "position" -> LongType)(
+        userTables.flatMap { case (db, m) =>
+          val declared = propMap(m, "graft.ch.types")
+          m.schema.fields.toSeq.filter(_.name != PtkCol).zipWithIndex.map {
+            case (f, i) =>
+              val ch = declared.getOrElse(f.name,
+                BqlType.fromSpark(f.dataType, f.nullable).chName)
+              Row(db, m.identifier.table, f.name, ch, (i + 1).toLong)
+          }
+        })),
+      "parts" -> (() =>
+        spark.baseRelationToDataFrame(new SystemParts(spark.sqlContext))),
       // parts moved under a table's `_graft_detached` directory
-      val rows = userTables.flatMap { case (db, m) =>
+      "detached_parts" -> (() => table("database" -> StringType,
+          "table" -> StringType, "partition" -> StringType, "name" -> StringType,
+          "bytes_on_disk" -> LongType)(userTables.flatMap { case (db, m) =>
         scala.util.Try(java.nio.file.Paths.get(m.location.getPath)).toOption.toSeq
           .flatMap(loc => SystemParts.partFiles(loc.resolve("_graft_detached")))
           .map { case (part, p, bytes, _) =>
             Row(db, m.identifier.table, part, p.getFileName.toString, bytes)
           }
-      }
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-          StructField("database", StringType), StructField("table", StringType),
-          StructField("partition", StringType), StructField("name", StringType),
-          StructField("bytes_on_disk", LongType))))
-        .createOrReplaceTempView("__graft_system_detached_parts")
-    }
-    if (hits.exists(_._1 == "databases")) {
-      val rows = spark.catalog.listDatabases().collect().toSeq
-        .map(d => Row(d.name))
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-          StructField("name", StringType))))
-        .createOrReplaceTempView("__graft_system_databases")
-    }
-    if (hits.exists(_._1 == "processes")) {
-      processesDf.createOrReplaceTempView("__graft_system_processes")
-    }
-    if (hits.exists(_._1 == "dictionaries")) {
-      val rows = state.dicts.values.asScala.toSeq.map(d =>
-        Row(d.cd.name, d.cd.source, d.cd.key))
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-          StructField("name", StringType), StructField("source", StringType),
-          StructField("key", StringType))))
-        .createOrReplaceTempView("__graft_system_dictionaries")
-    }
-    if (hits.exists(_._1 == "query_log")) {
-      import scala.jdk.CollectionConverters._
-      val rows = GraftSession.queryLog.iterator.asScala.toSeq.map { e =>
-        Row(e.qid, e.query, new java.sql.Timestamp(e.startMs), e.durSec)
-      }
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-          StructField("query_id", StringType), StructField("query", StringType),
-          StructField("event_time", org.apache.spark.sql.types.TimestampType),
-          StructField("duration", DoubleType))))
-        .createOrReplaceTempView("__graft_system_query_log")
-    }
-    if (hits.exists(_._1 == "restore_errors")) {
-      val rows = restoreErrors.map { case (db, t, kind, err) =>
-        Row(db, t, kind, err)
-      }
-      spark.createDataFrame(rows.asJava, StructType(Seq(
-          StructField("database", StringType), StructField("table", StringType),
-          StructField("kind", StringType), StructField("error", StringType))))
-        .createOrReplaceTempView("__graft_system_restore_errors")
-    }
-    ChParser.splice(sql, hits.map { case (which, from, to) =>
-      (from, to, s"__graft_system_$which ")
-    })
+      })),
+      "databases" -> (() => table("name" -> StringType)(
+        spark.catalog.listDatabases().collect().toSeq.map(d => Row(d.name)))),
+      "processes" -> (() => processesDf),
+      "dictionaries" -> (() => table("name" -> StringType,
+          "source" -> StringType, "key" -> StringType)(
+        state.dicts.values.asScala.toSeq.map(d => Row(d.cd.name, d.cd.source, d.cd.key)))),
+      "query_log" -> (() => table("query_id" -> StringType, "query" -> StringType,
+          "event_time" -> TimestampType, "duration" -> DoubleType)(
+        GraftSession.queryLog.iterator.asScala.toSeq.map { e =>
+          Row(e.qid, e.query, new java.sql.Timestamp(e.startMs), e.durSec)
+        })),
+      "restore_errors" -> (() => table("database" -> StringType,
+          "table" -> StringType, "kind" -> StringType, "error" -> StringType)(
+        restoreErrors.map { case (db, t, kind, err) => Row(db, t, kind, err) })))
   }
 
   /** ClickHouse table-set membership `x [GLOBAL] [NOT] IN t` → the ANSI
@@ -1825,7 +1846,7 @@ class GraftSession(val spark: SparkSession) {
     * inside whole-stage codegen — no shuffle, no state; row count scales
     * with array cardinality exactly like the data it models.
     */
-  private def rewriteArrayJoin(sql: String): String =
+  private def rewriteArrayJoin(sql: String, sp: Splices): String =
     ChParser.splitArrayJoin(sql) match {
       case None => sql
       case Some(p) =>
@@ -1836,7 +1857,7 @@ class GraftSession(val spark: SparkSession) {
         // (b) avoid an invalid empty `* EXCEPT` when the excluded set
         // covers EVERY source column (single-column source, bare item).
         val srcCols = scala.util.Try(
-          spark.sql(s"SELECT * FROM ${p.src}").schema.fieldNames.toSeq)
+          relationDf(p.src, sp).schema.fieldNames.toSeq)
           .getOrElse(Seq.empty[String])
         // `ARRAY JOIN n` where n is a Nested FAMILY (not a column itself)
         // expands to zipping every flattened member — CH's nested
@@ -1908,7 +1929,7 @@ class GraftSession(val spark: SparkSession) {
     * with the key range, never with the input; the join is a broadcast
     * of whichever side is small.
     */
-  private def rewriteWithFill(sql: String): String =
+  private def rewriteWithFill(sql: String, sp: Splices): String =
     ChParser.splitWithFill(sql) match {
       case None => sql
       case Some(p) =>
@@ -1925,7 +1946,7 @@ class GraftSession(val spark: SparkSession) {
         // would silently fall back to the USING-join shape that moves
         // the fill key to column 0 — the exact bug this projection
         // fixes. The schema-only analysis executes nothing.
-        val srcCols = spark.sql(spliceTableFns(p.core)).columns.toSeq
+        val srcCols = planOf(spliceTableFns(p.core, sp), sp).columns.toSeq
         p.interpolate.foreach { ic =>
           require(srcCols.exists(_.equalsIgnoreCase(ic)),
             s"INTERPOLATE: $ic is not a column of the query")
@@ -2015,7 +2036,7 @@ class GraftSession(val spark: SparkSession) {
     val (source, options) = chFileFormat(fi.format, what)
     val (_, target) = underFileRoot(fi.path)
     java.nio.file.Files.createDirectories(target.getParent)
-    val df = spark.sql(rewriteSelect(fi.selectSql))
+    val df = select(fi.selectSql)
     writeOneFile(df, fi.format, what) { produced =>
       if (java.nio.file.Files.exists(target)) {
         // append mode for text formats, CH's behavior on an existing file.
@@ -2073,7 +2094,7 @@ class GraftSession(val spark: SparkSession) {
         raw.select(target.fields.zipWithIndex.map { case (f, i) =>
           col(s"_c$i").cast(f.dataType).as(f.name)
         }.toIndexedSeq: _*)
-      case (None, Some(sel)) => spark.sql(rewriteSelect(sel))
+      case (None, Some(sel)) => select(sel)
       case _ => throw new IllegalArgumentException("remote INSERT needs VALUES or SELECT")
     }
     if (isCh) {
@@ -2330,25 +2351,10 @@ class GraftSession(val spark: SparkSession) {
 
   // ---- column DDL -----------------------------------------------------
 
-  /** A table property holding `key\u0002value` entries separated by
-    * `\u0001`, decoded in stored order ([[encodePropMap]] writes it).
-    */
-  private def propMap(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-                      prop: String): Map[String, String] =
-    meta.properties.get(prop).fold(Map.empty[String, String]) { enc =>
-      scala.collection.immutable.VectorMap.from(
-        enc.split("\u0001").filter(_.nonEmpty).map { kv =>
-          val Array(k, v) = kv.split("\u0002", 2); k -> v
-        })
-    }
-
   private def setProps(full: String, kvs: (String, String)*): Unit =
     spark.sql(s"ALTER TABLE $full SET TBLPROPERTIES (" + kvs.map {
       case (k, v) => s"'$k'='${v.replace("'", "''")}'"
     }.mkString(", ") + ")"): Unit
-
-  private def encodePropMap(m: Iterable[(String, String)]): String =
-    m.map { case (k, v) => k + "\u0002" + v }.mkString("\u0001")
 
   /** Shared preamble for column DDL: resolve (db, full, meta), and reject
     * touching sorting-key columns or columns the PARTITION BY expression
@@ -2841,7 +2847,7 @@ class GraftSession(val spark: SparkSession) {
     val loc = tableDir(meta)
     underWriteLock(rdb, m.name) {
       settleIntent(meta)
-      val cond = coalesce(expr(m.where), lit(false))
+      val cond = coalesce(exprOf(m.where), lit(false))
       // IN PARTITION scopes the file-locating scan (partition-pruned: it
       // reads one directory, not the table) AND the rewrite set
       require(m.partition.isEmpty || partitioned,
@@ -2974,7 +2980,7 @@ class GraftSession(val spark: SparkSession) {
     }
     val ct = ct0.asSelect match {
       case Some(sel) if ct0.cols.isEmpty =>
-        val schema = spark.sql(rewriteSelect(sel)).schema
+        val schema = select(sel).schema
         val cols = schema.fields.toSeq.map(f => ChStatement.ColDef(
           f.name, BqlType.fromSpark(f.dataType, f.nullable),
           primaryKey = false, notNull = !f.nullable, default = None))
@@ -3257,8 +3263,8 @@ class GraftSession(val spark: SparkSession) {
   //   graft.proj.list            = p1,p2
   //   graft.proj.<p>.table       = hidden table name
   //   graft.proj.<p>.select      = full SELECT (rebuilds + introspection)
-  //   graft.proj.<p>.map         = out\u0002kind\u0002src entries joined by
-  //                                \u0001, kind ∈ key|sum|min|max|count|countcol
+  //   graft.proj.<p>.map         = out -> kind\u0002src (encodePropMap,
+  //                                read by projEntries)
   // Mutations/OPTIMIZE FINAL/partition DDL on the parent rebuild the
   // projection in full (CH rebuilds projections for mutated parts).
 
@@ -3498,7 +3504,7 @@ class GraftSession(val spark: SparkSession) {
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 
     val fullSel = projSelectWithFrom(body, table)
-    val analyzed = spark.sql(rewriteSelect(fullSel)).queryExecution.analyzed
+    val analyzed = select(fullSel).queryExecution.analyzed
     val agg = analyzed.collectFirst { case a: Aggregate => a }.getOrElse(
       throw new IllegalArgumentException(
         "ADD PROJECTION: the body must be an aggregate " +
@@ -3518,22 +3524,22 @@ class GraftSession(val spark: SparkSession) {
       case ar: AttributeReference =>
         require(groupNames.contains(ar.name),
           s"ADD PROJECTION: non-aggregate output ${ar.name} is not a GROUP BY key")
-        s"${ar.name}\u0002key\u0002${ar.name}"
+        (ar.name, "key", ar.name)
       case al @ Alias(ar: AttributeReference, _) =>
         require(groupNames.contains(ar.name),
           s"ADD PROJECTION: non-aggregate output ${al.name} is not a GROUP BY key")
-        s"${al.name}\u0002key\u0002${ar.name}"
+        (al.name, "key", ar.name)
       case al @ Alias(ae: AggregateExpression, _) =>
         require(!ae.isDistinct && ae.filter.isEmpty,
           "ADD PROJECTION: aggregates must be plain (no DISTINCT / FILTER)")
         ae.aggregateFunction match {
-          case s: Sum => s"${al.name}\u0002sum\u0002${srcOf(s.child, "sum")}"
-          case m: Min => s"${al.name}\u0002min\u0002${srcOf(m.child, "min")}"
-          case m: Max => s"${al.name}\u0002max\u0002${srcOf(m.child, "max")}"
+          case s: Sum => (al.name, "sum", srcOf(s.child, "sum"))
+          case m: Min => (al.name, "min", srcOf(m.child, "min"))
+          case m: Max => (al.name, "max", srcOf(m.child, "max"))
           case c: Count => c.children match {
-            case Seq(CLit(_, _)) => s"${al.name}\u0002count\u0002"
+            case Seq(CLit(_, _)) => (al.name, "count", "")
             case Seq(ar: AttributeReference) =>
-              s"${al.name}\u0002countcol\u0002${ar.name}"
+              (al.name, "countcol", ar.name)
             case _ => throw new IllegalArgumentException(
               "ADD PROJECTION: count must be count() or count(column)")
           }
@@ -3544,9 +3550,7 @@ class GraftSession(val spark: SparkSession) {
       case other => throw new IllegalArgumentException(
         s"ADD PROJECTION: unsupported output ${other.sql}")
     }
-    val keySrcs = entries.collect {
-      case e if e.split("\u0002")(1) == "key" => e.split("\u0002")(2)
-    }
+    val keySrcs = entries.collect { case (_, "key", src) => src }
     require(groupNames.forall(keySrcs.contains),
       "ADD PROJECTION: every GROUP BY key must appear in the SELECT list")
 
@@ -3565,7 +3569,8 @@ class GraftSession(val spark: SparkSession) {
       s"'graft.proj.list'='$list', " +
       s"'graft.proj.$pname.table'='$hidden', " +
       s"'graft.proj.$pname.select'='${fullSel.replace("'", "''")}', " +
-      s"'graft.proj.$pname.map'='${entries.mkString("\u0001").replace("'", "''")}')")
+      s"'graft.proj.$pname.map'='${encodePropMap(entries.map { case (out, kind, src) =>
+        out -> s"$kind\u0002$src" }).replace("'", "''")}')")
     emptyOk
   }
 
@@ -3594,7 +3599,7 @@ class GraftSession(val spark: SparkSession) {
     graft.plans.ProjectionRoute.bypass.set(true)
     try
       // INSERT OVERWRITE, not drop/recreate: keeps the MV subscription props
-      spark.sql(rewriteSelect(sel)).write.mode("overwrite").insertInto(full)
+      select(sel).write.mode("overwrite").insertInto(full)
     finally graft.plans.ProjectionRoute.bypass.set(false)
   }
 
@@ -3654,17 +3659,15 @@ class GraftSession(val spark: SparkSession) {
           s"materialized view $via")
     }
     // validate now, like CH: a bad SELECT fails at CREATE, not first insert
-    spark.sql(rewriteSelect(mv.selectSql)).queryExecution.analyzed
+    select(mv.selectSql).queryExecution.analyzed
     spark.sql(s"ALTER TABLE ${fullName(Some(rdb), target)} SET TBLPROPERTIES (" +
       s"'graft.mv.src'='${s"$rdb.$srcTable".replace("'", "''")}', " +
       s"'graft.mv.select'='${mv.selectSql.replace("'", "''")}', " +
       s"'graft.mv.via'='${mv.name.replace("'", "''")}')")
     // reads of the view see the target's contents; the replay metaFile
     // carries the ORIGINAL MV script, so a restart re-runs this method.
-    // The wrapper's FROM is db-QUALIFIED: the wrapper is a temp view, so
-    // an unqualified name would re-resolve against whatever the CURRENT
-    // database is at read time (or at creation under a concurrent
-    // session's USE) — r18 parallel-suite runs caught exactly that.
+    // The wrapper's FROM is db-QUALIFIED, so no concurrent session's USE
+    // can move it to another database's table of that name.
     createView(CreateView(Some(rdb), mv.name,
       selectSql = s"SELECT * FROM `$rdb`.`$target`", orReplace = true,
       ifNotExists = false, createScript = mv.createScript))
@@ -3683,7 +3686,7 @@ class GraftSession(val spark: SparkSession) {
       throw new IllegalArgumentException(
         "MATERIALIZED VIEW: the SELECT must read FROM a table directly"))._1
     val srcTable = if (src.contains(".")) src.split("\\.", 2)(1) else src
-    val schemaDf = spark.sql(rewriteSelect(mv.selectSql))
+    val schemaDf = select(mv.selectSql)
     val ct = CreateTable(Some(rdb), mv.name,
       schemaDf.schema.fields.toSeq.map(f => ColDef(
         f.name, BqlType.fromSpark(f.dataType, f.nullable),
@@ -3704,11 +3707,11 @@ class GraftSession(val spark: SparkSession) {
 
   /** ClickHouse plain VIEW: store the query, substitute on every read.
     * Recorded in the engine state under (database, name) and under
-    * `_graft_meta` for restart replay, exactly like tables/MVs. Each
-    * handle reads it through a Spark temp view over the REWRITTEN SELECT
-    * (so CH dialect — FINAL, SAMPLE, PREWHERE, function packs — works
-    * inside a view body), registered by [[refreshReferencedViews]] before
-    * any statement that mentions it, so reads always see current data.
+    * `_graft_meta` for restart replay, exactly like tables/MVs. A read
+    * substitutes the view's plan, its SELECT through the same resolver
+    * ([[viewPlan]]: so CH dialect — FINAL, SAMPLE, PREWHERE, function
+    * packs — works inside a view body), into the statement's plan, so
+    * reads always see current data. Nothing is registered on a session.
     */
   private def createView(cv: CreateView): DataFrame = state.synchronized {
     val rdb = cv.db.getOrElse(spark.catalog.currentDatabase)
@@ -3720,10 +3723,9 @@ class GraftSession(val spark: SparkSession) {
       s"CREATE VIEW: view ${cv.name} already exists (use OR REPLACE)")
     if (!isOurs || !cv.ifNotExists) {
       // validate now, like CH: a view over a missing table/column fails at
-      // CREATE, not at first read. Dependencies must resolve first.
-      refreshReferencedViews(cv.selectSql,
-        scala.collection.mutable.Set(cv.name))
-      registerView(rdb, cv.name, cv.selectSql)
+      // CREATE, not at first read
+      inDatabase(rdb)(select(cv.selectSql, new Splices(Set((rdb, cv.name))))
+        .queryExecution.analyzed)
       state.views.put((rdb, cv.name),
         GraftSession.ViewDef(cv.selectSql, cv.createScript))
       val mf = metaFile(rdb, cv.name)
@@ -3733,34 +3735,26 @@ class GraftSession(val spark: SparkSession) {
     emptyOk
   }
 
-  /** (Re)register the temp view `name` on this handle over a view's
-    * SELECT, resolved in the view's own database. */
-  private def registerView(db: String, name: String, sel: String): Unit = {
-    inDatabase(db)(spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW `$name` AS " +
-      rewriteSelect(sel)))
-    viewTemps += name
-  }
-
-  private def dropViewTemp(name: String): Unit =
-    if (viewTemps.remove(name)) scala.util.Try(spark.catalog.dropTempView(name)): Unit
-
   /** The view a bare name reads on this handle: the current database's,
     * else one of that name in another database unless a table of the
     * current database takes the name. */
-  private def viewFor(name: String): Option[((String, String), GraftSession.ViewDef)] = {
-    val cur = spark.catalog.currentDatabase
-    Option(state.views.get((cur, name))).map((cur, name) -> _).orElse {
-      if (spark.sessionState.catalog.tableExists(
-          org.apache.spark.sql.catalyst.TableIdentifier(name, Some(cur)))) None
-      else state.views.asScala.toSeq.sortBy(_._1).find(_._1._2 == name)
+  private def viewFor(name: String): Option[((String, String), GraftSession.ViewDef)] =
+    if (state.views.isEmpty) None
+    else {
+      val cur = spark.catalog.currentDatabase
+      Option(state.views.get((cur, name))).map((cur, name) -> _).orElse {
+        val others = state.views.asScala.toSeq.filter(_._1._2 == name)
+        if (others.isEmpty || spark.sessionState.catalog.tableExists(
+            org.apache.spark.sql.catalyst.TableIdentifier(name, Some(cur)))) None
+        else Some(others.minBy(_._1))
+      }
     }
-  }
 
   private def viewKey(db: Option[String], name: String): Option[(String, String)] =
     db.fold(viewFor(name).map(_._1))(d => Some((d, name)).filter(state.views.containsKey))
 
-  /** DROP VIEW [IF EXISTS]: drop the view from the engine state, this
-    * handle's temp view and the replay metaFile. Errors on a base table
+  /** DROP VIEW [IF EXISTS]: drop the view from the engine state and the
+    * replay metaFile. Errors on a base table
     * (CH's kind check).
     */
   private def dropView(db: Option[String], name: String,
@@ -3778,7 +3772,6 @@ class GraftSession(val spark: SparkSession) {
         require(ifExists || hadMeta, s"DROP VIEW: view $name does not exist")
       case Some(key @ (vdb, _)) =>
         state.views.remove(key)
-        dropViewTemp(name)
         java.nio.file.Files.deleteIfExists(metaFile(vdb, name))
         // a TO-form materialized view's insert subscription lives on its
         // TARGET table (graft.mv.via names this view) — detach it, or the
@@ -3841,7 +3834,7 @@ class GraftSession(val spark: SparkSession) {
     val attrs = cd.cols.filter(_.name != cd.key)
     val maxRows = spark.conf.getOption("graft.dict.maxRows")
       .map(_.toInt).getOrElse(10000000)
-    val rows = inDatabase(key._1)(spark.table(cd.source)
+    val rows = inDatabase(key._1)(relationDf(cd.source, new Splices)
       .select((cd.key +: attrs.map(_.name)).map(c =>
         col(s"`$c`").cast(StringType).as(c)): _*)
       .limit(maxRows + 1).collect())
@@ -3981,41 +3974,6 @@ class GraftSession(val spark: SparkSession) {
     cur
   }
 
-  /** Re-register (dependencies first) every view the given SQL mentions
-    * as a temp view on this handle, so it re-resolves its sources against
-    * the CURRENT catalog state — the read-time query substitution CH's
-    * plain views are defined by — and drop this handle's temp view of a
-    * mentioned name that no longer names a view. Word-boundary mention
-    * detection can false-positive on a column named like a view; the only
-    * cost is a harmless re-registration (metadata-only, no data read).
-    */
-  private def refreshReferencedViews(sql: String,
-      seen: scala.collection.mutable.Set[String] =
-        scala.collection.mutable.Set.empty[String]): Unit =
-    (state.views.keySet.asScala.map(_._2) ++ viewTemps).foreach { name =>
-      if (!seen.contains(name) &&
-          java.util.regex.Pattern.compile(
-            "(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\b")
-            .matcher(sql).find()) {
-        seen += name
-        viewFor(name) match {
-          case Some(((db, _), v)) =>
-            refreshReferencedViews(v.selectSql, seen)
-            // fault-isolated per view: a stored view whose SOURCE has
-            // vanished must not poison an unrelated statement that merely
-            // MENTIONS its name — `DROP VIEW stale_v` itself used to die
-            // re-analyzing stale_v's SELECT over the dropped table (r18
-            // parallel-suite hunt). On failure the temp view is dropped so
-            // a statement that actually READS it fails loudly with "not
-            // found" instead of silently serving a stale definition — CH's
-            // read-time substitution errors there too.
-            try registerView(db, name, v.selectSql)
-            catch { case scala.util.control.NonFatal(_) => dropViewTemp(name) }
-          case None => dropViewTemp(name)
-        }
-      }
-    }
-
   /** Rebuild a table's replay script from its catalog state (declared CH
     * types, engine, partition expr, settings, defaults) and re-record it
     * — the normalization RENAME/ALTER need, same form CTAS records.
@@ -4121,8 +4079,9 @@ class GraftSession(val spark: SparkSession) {
     })
 
   /** Push one inserted block through every materialized view on the
-    * table: substitute a temp view of the block for the SELECT's source
-    * reference, run it, and land the result in the view's storage —
+    * table: splice the block in for the SELECT's source reference (a
+    * splice of the statement's own, so concurrent inserts never read each
+    * other's blocks), run it, and land the result in the view's storage —
     * recursively, so chained views work, with a cycle guard. A
     * `folded` block (rows already on the driver) collects each view's
     * result, which is bounded by the block's row count, and lands it
@@ -4136,30 +4095,25 @@ class GraftSession(val spark: SparkSession) {
     require(depth <= 8,
       s"materialized-view chain deeper than 8 at $rdb.$table — cycle?")
     mvs.foreach { case (mvName, sel) =>
-      // unique per insert: concurrent inserts on one SparkSession must
-      // not read each other's blocks
-      val viewName = s"__graft_mv_block_${GraftSession.blockViews.incrementAndGet()}"
-      block.createOrReplaceTempView(viewName)
-      try {
-        val substituted = ChParser.firstFromTable(sel) match {
-          case Some((_, from, to)) =>
-            sel.substring(0, from) + viewName + " " + sel.substring(to)
-          case None => throw new IllegalStateException(
-            s"materialized view $mvName lost its FROM reference")
-        }
-        val result = spark.sql(rewriteSelect(substituted))
-        val recipe = if (folded) directRecipeFor(rdb, mvName) else None
-        recipe match {
-          case Some(r) =>
-            val rows = org.apache.spark.sql.GraftSqlBridge.collectInternal(
-              org.apache.spark.sql.GraftSqlBridge.planSmall(castTo(result, r.dataSchema)))
-            if (!directAppend(rdb, mvName, rows, r.dataSchema, depth + 1))
-              appendToTable(Some(rdb), mvName, org.apache.spark.sql.GraftSqlBridge
-                .internalLocalDf(spark, r.dataSchema, rows), srcIsRaw = false, depth + 1)
-          case None =>
-            appendToTable(Some(rdb), mvName, result, srcIsRaw = false, depth + 1)
-        }
-      } finally spark.catalog.dropTempView(viewName): Unit
+      val sp = new Splices
+      val substituted = ChParser.firstFromTable(sel) match {
+        case Some((_, from, to)) =>
+          sel.substring(0, from) + sp.add(block) + " " + sel.substring(to)
+        case None => throw new IllegalStateException(
+          s"materialized view $mvName lost its FROM reference")
+      }
+      val result = select(substituted, sp)
+      val recipe = if (folded) directRecipeFor(rdb, mvName) else None
+      recipe match {
+        case Some(r) =>
+          val rows = GraftSqlBridge.collectInternal(
+            GraftSqlBridge.planSmall(castTo(result, r.dataSchema)))
+          if (!directAppend(rdb, mvName, rows, r.dataSchema, depth + 1))
+            appendToTable(Some(rdb), mvName, GraftSqlBridge
+              .internalLocalDf(spark, r.dataSchema, rows), srcIsRaw = false, depth + 1)
+        case None =>
+          appendToTable(Some(rdb), mvName, result, srcIsRaw = false, depth + 1)
+      }
     }
   }
 
@@ -4874,9 +4828,6 @@ object GraftSession {
     writeGen.set(g)
   }
 
-  /** Names the per-insert temp views a materialized view's SELECT reads. */
-  private[exec] val blockViews = new java.util.concurrent.atomic.AtomicLong()
-
   /** A direct part-write recipe, cached per "db.table" in
     * [[EngineState.directRecipes]] as Some(frozen facts) | None
     * (bucketed, temporary or missing: the appendToTable job path).
@@ -4975,6 +4926,31 @@ object GraftSession {
 
   /** Hidden partition-key column name. */
   private[graft] val PtkCol = "__ptk"
+
+  /** A table property holding `key\u0002value` entries separated by
+    * `\u0001`, decoded in stored order ([[encodePropMap]] writes it): the
+    * one decoder of the encoding.
+    */
+  private[graft] def propMap(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+                             prop: String): Map[String, String] =
+    meta.properties.get(prop).fold(Map.empty[String, String]) { enc =>
+      scala.collection.immutable.VectorMap.from(
+        enc.split("\u0001").filter(_.nonEmpty).map { kv =>
+          val Array(k, v) = kv.split("\u0002", 2); k -> v
+        })
+    }
+
+  private[graft] def encodePropMap(m: Iterable[(String, String)]): String =
+    m.map { case (k, v) => k + "\u0002" + v }.mkString("\u0001")
+
+  /** A projection's output map (`graft.proj.<p>.map`, an [[encodePropMap]]
+    * of output -> `kind\u0002source`): (output, kind, source column) per
+    * output, kind one of key|sum|min|max|count|countcol. */
+  private[graft] def projEntries(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+                                 proj: String): Seq[(String, String, String)] =
+    propMap(meta, s"graft.proj.$proj.map").toSeq.map { case (out, v) =>
+      val Array(kind, src) = v.split("\u0002", 2); (out, kind, src)
+    }
 
   /** What a graft table's CREATE recorded in its catalog properties. */
   private[graft] implicit class GraftTable(

@@ -3,7 +3,7 @@ package graft.exec
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{Row, SQLContext}
 import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, In, PrunedFilteredScan}
 import org.apache.spark.sql.types._
 
@@ -18,8 +18,8 @@ import org.apache.spark.sql.types._
   * and tables its pushed `database`/`table` equalities and IN lists pin
   * (every table when none does), and reads footers only when `rows` is
   * selected. Spark re-applies every filter, so any predicate stays exact.
-  * Registered once per SparkSession as the temp view `__graft_system_parts`
-  * ([[SystemParts.register]]).
+  * A statement that reads `system.parts` splices in a relation of its own
+  * (`GraftSession.spliceSystemViews`).
   */
 private[exec] final class SystemParts(val sqlContext: SQLContext)
     extends BaseRelation with PrunedFilteredScan {
@@ -62,19 +62,11 @@ private[exec] final class SystemParts(val sqlContext: SQLContext)
 }
 
 private[exec] object SystemParts {
-  val View = "__graft_system_parts"
-
   val Schema: StructType = StructType(Seq(
     StructField("database", StringType), StructField("table", StringType),
     StructField("partition", StringType), StructField("name", StringType),
     StructField("rows", LongType), StructField("bytes_on_disk", LongType),
     StructField("active", IntegerType)))
-
-  /** Registers `system.parts` on `spark` unless it already is. */
-  def register(spark: SparkSession): Unit =
-    if (spark.sessionState.catalog.getTempView(View).isEmpty)
-      spark.baseRelationToDataFrame(new SystemParts(spark.sqlContext))
-        .createOrReplaceTempView(View)
 
   /** The part files under `root` — (partition id, path, length, mtime) of
     * every `.parquet` file no hidden path component leads to, the files the

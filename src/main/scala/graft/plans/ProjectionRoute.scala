@@ -81,28 +81,23 @@ case class ProjectionRoute(spark: SparkSession) extends Rule[LogicalPlan] {
                               countStar: Option[String],
                               countCols: Map[String, String])
 
-  private def projMetas(rel: LogicalRelation): Seq[ProjMeta] = {
-    val props = rel.catalogTable.map(_.properties).getOrElse(Map.empty)
-    props.get("graft.proj.list").toSeq
-      .flatMap(_.split(",").filter(_.nonEmpty)).flatMap { p =>
-        for {
-          tbl <- props.get(s"graft.proj.$p.table")
-          map <- props.get(s"graft.proj.$p.map")
-        } yield {
-          val entries = map.split("").filter(_.nonEmpty).map { e =>
-            val parts = e.split("", -1)
-            (parts(0), parts(1), if (parts.length > 2) parts(2) else "")
-          }
-          def pick(kind: String) = entries.collect {
-            case (out, k, src) if k == kind =>
-              src.toLowerCase(Locale.ROOT) -> out
-          }.toMap
-          ProjMeta(p, tbl, pick("key"), pick("sum"), pick("min"), pick("max"),
-            entries.collectFirst { case (out, "count", _) => out },
-            pick("countcol"))
+  private def projMetas(rel: LogicalRelation): Seq[ProjMeta] =
+    rel.catalogTable.toSeq.flatMap { ct =>
+      ct.properties.get("graft.proj.list").toSeq
+        .flatMap(_.split(",").filter(_.nonEmpty)).flatMap { p =>
+          ct.properties.get(s"graft.proj.$p.table")
+            .filter(_ => ct.properties.contains(s"graft.proj.$p.map")).map { tbl =>
+              val entries = graft.exec.GraftSession.projEntries(ct, p)
+              def pick(kind: String) = entries.collect {
+                case (out, k, src) if k == kind =>
+                  src.toLowerCase(Locale.ROOT) -> out
+              }.toMap
+              ProjMeta(p, tbl, pick("key"), pick("sum"), pick("min"), pick("max"),
+                entries.collectFirst { case (out, "count", _) => out },
+                pick("countcol"))
+            }
         }
-      }
-  }
+    }
 
   private def route(agg: Aggregate): Option[LogicalPlan] = agg.child match {
     case ParentScan(cond, rel) if rel.catalogTable.exists(

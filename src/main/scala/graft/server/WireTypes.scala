@@ -3,7 +3,7 @@ package graft.server
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, ExprId, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Except, Intersect, Union}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
@@ -30,29 +30,25 @@ object WireTypes {
 
   private val ChTypesProp = "graft.ch.types"
 
-  /** Output positions of `df` that provably carry a declared-UInt64 table
-    * column (identity lineage only: aliases and projections, no computed
-    * expressions — an expression OVER a UInt64 is no longer a UInt64).
+  /** The declared CH type each output column of `df` carries by identity
+    * lineage (aliases and projections only: an expression OVER a declared
+    * column — a cast, arithmetic, an aggregate — is no longer of its
+    * type), from the `graft.ch.types` of every catalog-table scan in the
+    * analyzed plan. Set-operation outputs carry none.
     */
-  def uint64Positions(df: DataFrame): Set[Int] = {
+  private def declaredLineage(df: DataFrame): Seq[(Attribute, Option[String])] = {
     val plan = df.queryExecution.analyzed
 
     // exprId -> declared CH type, for every catalog-table scan in the plan
     val declared = mutable.Map.empty[ExprId, String]
     // set-op outputs reuse their first child's exprIds while merging rows
     // from BOTH children — a matching exprId no longer proves provenance,
-    // so poison them (conservative: such columns ship as String)
+    // so poison them (conservative: such columns carry no declared type)
     val poisoned = mutable.Set.empty[ExprId]
     plan.foreach {
       case lr: LogicalRelation =>
-        for {
-          ct <- lr.catalogTable
-          prop <- ct.properties.get(ChTypesProp)
-        } {
-          val types = prop.split("").filter(_.nonEmpty).map { kv =>
-            val Array(k, v) = kv.split("", 2)
-            k -> v
-          }.toMap
+        lr.catalogTable.foreach { ct =>
+          val types = graft.exec.GraftSession.propMap(ct, ChTypesProp)
           lr.output.foreach(a => types.get(a.name).foreach(declared(a.exprId) = _))
         }
       case u: Union => u.output.foreach(poisoned += _.exprId)
@@ -60,7 +56,7 @@ object WireTypes {
       case e: Except => e.output.foreach(poisoned += _.exprId)
       case _ => ()
     }
-    if (declared.isEmpty) return Set.empty
+    if (declared.isEmpty) return plan.output.map(_ -> None)
 
     // alias exprId -> aliased expression, across the whole plan
     val aliases = mutable.Map.empty[ExprId, Expression]
@@ -70,63 +66,8 @@ object WireTypes {
         case _ => ()
       })
     }
-
-    def resolvesToU64(e: Expression, depth: Int): Boolean = e match {
-      case _ if depth > 64 => false // alias cycles cannot happen, but cap anyway
-      case a: AttributeReference if poisoned.contains(a.exprId) => false
-      case a: AttributeReference =>
-        declared.get(a.exprId).contains("UInt64") ||
-          aliases.get(a.exprId).exists(resolvesToU64(_, depth + 1))
-      case al: Alias => resolvesToU64(al.child, depth + 1)
-      case _ => false // casts, arithmetic, aggregates: provenance broken
-    }
-
-    plan.output.zipWithIndex.collect {
-      case (a, i) if resolvesToU64(a, 0) => i
-    }.toSet
-  }
-
-  /** Declared Enum and LowCardinality types for query-result columns, by
-    * the same identity lineage as [[uint64Positions]] (aliases/projections
-    * only — an expression OVER such a column is a plain String again).
-    * Feeds the wire writer's `declared` hook so `SELECT enum_col FROM t`
-    * ships as Enum8/16('name' = code, ...) with int codes and
-    * `SELECT lc_col FROM t` ships with CH's dict-block framing — exactly
-    * what a real ClickHouse server sends for those declared types.
-    * Nullability comes from the OUTPUT attribute (an outer join can null
-    * a NOT NULL source column).
-    */
-  def declaredWireTypes(df: DataFrame): Int => Option[graft.types.BqlType] = {
-    val plan = df.queryExecution.analyzed
-    val declared = mutable.Map.empty[ExprId, String]
-    val poisoned = mutable.Set.empty[ExprId]
-    plan.foreach {
-      case lr: LogicalRelation =>
-        for {
-          ct <- lr.catalogTable
-          prop <- ct.properties.get(ChTypesProp)
-        } {
-          val types = prop.split("").filter(_.nonEmpty).map { kv =>
-            val Array(k, v) = kv.split("", 2)
-            k -> v
-          }.toMap
-          lr.output.foreach(a => types.get(a.name).foreach(declared(a.exprId) = _))
-        }
-      case u: Union => u.output.foreach(poisoned += _.exprId)
-      case i: Intersect => i.output.foreach(poisoned += _.exprId)
-      case e: Except => e.output.foreach(poisoned += _.exprId)
-      case _ => ()
-    }
-    if (declared.isEmpty) return _ => None
-    val aliases = mutable.Map.empty[ExprId, Expression]
-    plan.foreach { node =>
-      node.expressions.foreach(_.foreach {
-        case a: Alias => aliases(a.exprId) = a.child
-        case _ => ()
-      })
-    }
     def declaredOf(e: Expression, depth: Int): Option[String] = e match {
-      case _ if depth > 64 => None
+      case _ if depth > 64 => None // alias cycles cannot happen, but cap anyway
       case a: AttributeReference if poisoned.contains(a.exprId) => None
       case a: AttributeReference =>
         declared.get(a.exprId)
@@ -134,6 +75,24 @@ object WireTypes {
       case al: Alias => declaredOf(al.child, depth + 1)
       case _ => None
     }
+    plan.output.map(a => a -> declaredOf(a, 0))
+  }
+
+  /** Output positions of `df` that provably carry a declared-UInt64 table
+    * column ([[declaredLineage]]).
+    */
+  def uint64Positions(df: DataFrame): Set[Int] =
+    declaredLineage(df).zipWithIndex.collect { case ((_, Some("UInt64")), i) => i }.toSet
+
+  /** Declared Enum and LowCardinality types for query-result columns, by
+    * the same identity lineage as [[uint64Positions]]. Feeds the wire
+    * writer's `declared` hook so `SELECT enum_col FROM t` ships as
+    * Enum8/16('name' = code, ...) with int codes and `SELECT lc_col FROM t`
+    * ships with CH's dict-block framing — exactly what a real ClickHouse
+    * server sends for those declared types. Nullability comes from the
+    * OUTPUT attribute (an outer join can null a NOT NULL source column).
+    */
+  def declaredWireTypes(df: DataFrame): Int => Option[graft.types.BqlType] = {
     import graft.types.BqlType
     // Enum ships Nullable-wrapped when the output attribute is nullable;
     // LowCardinality instead wraps its INNER type (CH has no
@@ -151,9 +110,8 @@ object WireTypes {
       case _ => None
     }
     val byPos: Map[Int, BqlType] =
-      plan.output.zipWithIndex.flatMap { case (a, i) =>
-        declaredOf(a, 0)
-          .flatMap(BqlType.parse(_).toOption)
+      declaredLineage(df).zipWithIndex.flatMap { case ((a, t), i) =>
+        t.flatMap(BqlType.parse(_).toOption)
           .flatMap(wireOf(_, a.nullable))
           .map(i -> _)
       }.toMap

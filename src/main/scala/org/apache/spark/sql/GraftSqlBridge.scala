@@ -107,6 +107,23 @@ object GraftSqlBridge {
       qe.executedPlan.executeCollect().toSeq)
   }
 
+  /** `sqlText` parsed by the session's parser, `resolve` applied to the
+    * parsed plan, and the result analyzed as a Dataset: `spark.sql` with a
+    * step between parsing and analysis. Parsing and analysis are measured
+    * on the Dataset's planning tracker, as `spark.sql` measures them.
+    */
+  def sqlPlan(spark: SparkSession, sqlText: String)(
+      resolve: catalyst.plans.logical.LogicalPlan =>
+        catalyst.plans.logical.LogicalPlan): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.withActive {
+      val tracker = new catalyst.QueryPlanningTracker
+      val parsed = tracker.measurePhase(catalyst.QueryPlanningTracker.PARSING)(
+        s.sessionState.sqlParser.parsePlan(sqlText))
+      classic.Dataset.ofRows(s, resolve(parsed), tracker)
+    }
+  }
+
   /** `df` re-planned per statement by size: a statement whose input is
     * provably small plans as a single Spark job (see
     * [[execution.SmallStatementExecution]]), any other exactly as the

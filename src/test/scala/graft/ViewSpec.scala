@@ -9,9 +9,9 @@ import graft.exec.GraftSession
 /** ClickHouse plain (non-materialized) views: `CREATE [OR REPLACE] VIEW v
   * AS SELECT …` stores the QUERY, not data — every read substitutes the
   * stored SELECT against the CURRENT table state (CH docs,
-  * sql-reference/statements/create/view). The engine keeps each view as a
-  * freshly re-registered Spark temp view over the rewritten SELECT, with
-  * `_graft_meta` replay for restart durability like tables and MVs.
+  * sql-reference/statements/create/view). A read substitutes the view's
+  * rewritten SELECT into the statement's plan, and `_graft_meta` replay
+  * gives restart durability like tables and MVs.
   */
 class ViewSpec extends AnyFunSuite {
   import SparkTestSession.spark
@@ -117,6 +117,36 @@ class ViewSpec extends AnyFunSuite {
     assert(script.toLowerCase.startsWith("create view vw_d"))
     g.sql("DROP VIEW vw_d")
     g.sql("DROP TABLE vw_src6")
+  }
+
+  test("DESC db.v describes that database's view, not the current " +
+    "database's view of the same name") {
+    g.sql("DROP DATABASE IF EXISTS vw_da; DROP DATABASE IF EXISTS vw_db2")
+    g.sql("CREATE DATABASE vw_da; CREATE DATABASE vw_db2")
+    g.sql("CREATE TABLE vw_da.t(k Int64)")
+    g.sql("CREATE TABLE vw_db2.t(k Int64, s String)")
+    g.sql("CREATE VIEW vw_da.v AS SELECT k FROM vw_da.t")
+    g.sql("CREATE VIEW vw_db2.v AS SELECT k, s AS label FROM vw_db2.t")
+    val h = new GraftSession(spark.newSession())
+    h.sql("USE vw_da")
+    def names(sql: String) = h.sql(sql).collect().map(_.getString(0)).toSeq
+    assert(names("DESC vw_db2.v") === Seq("k", "label"))
+    assert(names("DESC v") === Seq("k"))
+    g.sql("DROP DATABASE vw_da; DROP DATABASE vw_db2")
+  }
+
+  test("EXISTS TABLE answers 1 for a view, qualified and bare") {
+    g.sql("DROP DATABASE IF EXISTS vw_ex")
+    g.sql("CREATE DATABASE vw_ex")
+    g.sql("CREATE TABLE vw_ex.t(k Int64)")
+    g.sql("CREATE VIEW vw_ex.v AS SELECT k FROM vw_ex.t")
+    val h = new GraftSession(spark.newSession())
+    h.sql("USE vw_ex")
+    def exists(name: String) = h.sql(s"EXISTS TABLE $name").collect()(0).getInt(0)
+    assert(exists("vw_ex.v") === 1)
+    assert(exists("v") === 1)
+    assert(exists("vw_ex.no_such_view") === 0)
+    g.sql("DROP DATABASE vw_ex")
   }
 
   test("views survive a restart: a new GraftSession on the same " +
