@@ -2,10 +2,11 @@ package graft.exec
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal, ScalarSubquery, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.util.toPrettySQL
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,7 +19,7 @@ import graft.types.BqlType
   * and passes SELECTs through to Spark SQL.
   *
   * A `GraftSession` is one connection's handle: its SparkSession (current
-  * database, registered functions), its CH temporary tables
+  * database, the engine's function packs), its CH temporary tables
   * and its processlist entry. What the catalog itself defines lives in the
   * [[GraftSession.EngineState]] of the SparkSession's `SharedState`, shared
   * by every `newSession()` of a server the way TensorBase opens one catalog
@@ -26,12 +27,12 @@ import graft.types.BqlType
   * dictionaries keyed by (database, name), restore errors, and the
   * direct-write, MV-subscription and Nested caches. The first handle on a
   * catalog replays `_graft_meta` into that state; every later DDL updates
-  * it in place. A statement reads views, `system.*` tables and the
-  * relations its rewrites build through one resolver ([[select]]), which
-  * substitutes them into the parsed plan; a handle registers only a
-  * dictionary's lookup function on its own SparkSession, the first time a
-  * statement needs it. Process-wide state (processes, query log, write
-  * locks and write generations) stays in the companion.
+  * it in place. A statement reads every engine-defined name — views,
+  * temporary tables, dictionaries, `system.*` tables and the relations its
+  * rewrites build — through one resolver ([[select]]), which substitutes
+  * them into the parsed plan, so a handle registers nothing on its
+  * SparkSession. Process-wide state (processes, query log, write locks and
+  * write generations) stays in the companion.
   *
   * Storage model (vs the reference's mmap CoPa part store,
   * crates/meta/src/store/parts.rs:17-46): managed parquet tables in the
@@ -80,23 +81,18 @@ class GraftSession(val spark: SparkSession) {
   def restoreErrors: Seq[(String, String, String, String)] =
     state.restoreErrors.asScala.toSeq
 
-  /** CH temporary tables — session-scoped, database-less, engine-less.
-    * Backed by an in-memory DataFrame re-registered as a temp view on
-    * every insert (checkpointed so lineage never stacks); they die with
-    * the session, shadow catalog names (Spark temp-view precedence, CH's
-    * rule), and on a shared SparkSession two GraftSessions share the
-    * namespace (HTTP sessions get their own SparkSession, so CH's
-    * per-session isolation holds where it matters).
+  /** CH temporary tables — this handle's own, database-less, engine-less.
+    * Each is an in-memory DataFrame, replaced on every insert
+    * (checkpointed so lineage never stacks). A statement reads one by
+    * its bare name through the resolver, which takes it before any view
+    * or catalog table of the name (CH's rule); it dies with the handle
+    * and no other handle sees it.
     */
   private val tempTables = scala.collection.mutable.LinkedHashMap
     .empty[String, (ChStatement.CreateTable, DataFrame)]
   private def tempDef(db: Option[String],
                       name: String): Option[ChStatement.CreateTable] =
     if (db.isEmpty) tempTables.get(name).map(_._1) else None
-
-  /** Broadcast id each `__graft_dict_<name>` lookup function on this
-    * handle's SparkSession is bound to (see [[bindDictFn]]). */
-  private val dictFns = scala.collection.mutable.Map.empty[String, Long]
 
   private def recordRestoreError(db: String, table: String, kind: String,
                                  e: Throwable): Unit = {
@@ -540,14 +536,12 @@ class GraftSession(val spark: SparkSession) {
       }
     case DropTable(db, name, _) if tempDef(db, name).isDefined =>
       tempTables.remove(name)
-      spark.catalog.dropTempView(name)
       emptyOk
     case TruncateTable(db, name, _) if tempDef(db, name).isDefined =>
       val ct = tempTables(name)._1
       val empty = spark.createDataFrame(
         java.util.Collections.emptyList[Row](), tempSchema(ct))
       tempTables(name) = (ct, empty)
-      empty.createOrReplaceTempView(name)
       emptyOk
     case DescTable(db, name) if tempDef(db, name).isDefined =>
       val rows = tempTables(name)._1.cols.map(c => Row(c.name, c.tpe.chName))
@@ -998,15 +992,19 @@ class GraftSession(val spark: SparkSession) {
   private def relationDf(name: String, sp: Splices): DataFrame =
     planOf(s"SELECT * FROM $name", sp)
 
-  /** `plan` with each one-part relation that names a splice of `sp`, or
-    * the engine view [[viewFor]] picks, replaced by that relation under
-    * its name, in subquery expressions too. A CTE in scope keeps its name.
+  /** `plan` with each one-part relation that names a splice of `sp`, this
+    * handle's CH temporary table, or the engine view [[viewFor]] picks,
+    * replaced by that relation under its name, and each dictionary call
+    * by its lookup ([[dictLookups]]), in subquery expressions and CTE
+    * bodies too. A CTE in scope keeps its name.
     */
   private def resolveRelations(plan: LogicalPlan, sp: Splices,
                                ctes: Set[String] = Set.empty): LogicalPlan = plan match {
     case u @ UnresolvedRelation(Seq(name), _, _)
         if !ctes.contains(name.toLowerCase(java.util.Locale.ROOT)) =>
-      sp.get(name).orElse(viewFor(name).map(v => viewPlan(v._1, sp)))
+      sp.get(name)
+        .orElse(tempTables.get(name).map(_._2.queryExecution.analyzed))
+        .orElse(viewFor(name).map(v => viewPlan(v._1, sp)))
         .fold[LogicalPlan](u)(SubqueryAlias(name, _))
     case w: UnresolvedWith =>
       // a definition sees the ones before it (itself too, when recursive)
@@ -1017,10 +1015,28 @@ class GraftSession(val spark: SparkSession) {
       }
       w.copy(child = resolveRelations(w.child, sp, ctes ++ names), cteRelations = defs)
     case other =>
-      other.mapChildren(resolveRelations(_, sp, ctes)).transformExpressions {
+      dictLookups(other.mapChildren(resolveRelations(_, sp, ctes)).transformExpressions {
         case e: SubqueryExpression => e.withNewPlan(resolveRelations(e.plan, sp, ctes))
-      }
+      })
   }
+
+  /** `node` with each dictionary call of its own expressions replaced by
+    * its [[dictLookup]], inner calls first. A call projected without an
+    * alias keeps the name Spark gives the call itself. */
+  private def dictLookups(node: LogicalPlan): LogicalPlan =
+    if (state.dicts.isEmpty) node
+    else {
+      def lookups(e: Expression): Expression = e.transformUp {
+        case f: UnresolvedFunction if f.nameParts.length == 1 =>
+          dictLookup(f.nameParts.head, f.arguments).getOrElse(f)
+      }
+      node.mapExpressions {
+        case a @ UnresolvedAlias(c, None) =>
+          val l = lookups(c)
+          if (l eq c) a else Alias(l, toPrettySQL(c))()
+        case e => lookups(e)
+      }
+    }
 
   /** A view's plan: its body through the resolver, analyzed in the view's
     * own database (CH substitutes the stored query at read time, so every
@@ -1048,7 +1064,7 @@ class GraftSession(val spark: SparkSession) {
     *     clause rewrites: WITH TIES and WITH FILL only match a statement
     *     that ends at their clause, and `LIMIT m, n BY` is left for LIMIT
     *     BY;
-    *   - dictionary calls become lookups and `system.*` references splices;
+    *   - `system.*` references become splices;
     *   - FINAL and SAMPLE replace the FROM table in place, before any
     *     rewrite wraps the statement in a subquery;
     *   - DISTINCT ON becomes `LIMIT 1 BY`, ahead of the LIMIT BY rewrite;
@@ -1068,7 +1084,6 @@ class GraftSession(val spark: SparkSession) {
     ChParser.rewriteQuantiles,
     ChParser.rewriteQueryTails,
     ChParser.rewriteAnyJoin,
-    rewriteDictFns,
     spliceSystemViews(_, sp),
     rewriteFinal,
     rewriteSample,
@@ -2670,7 +2685,8 @@ class GraftSession(val spark: SparkSession) {
     * partition no retired file sits in keep one slot. Files stay sorted
     * runs on the sorting key and keep the declared bloom filters: this
     * direct parquet write bypasses the catalog relation, so both are
-    * re-applied here.
+    * re-applied here. A bucketed table's rows are laid out by its bucket
+    * spec instead, one file per bucket and partition directory.
     *
     * Protocol — crash-safe without a lock on readers, via an INTENT
     * marker with ATTRIBUTABLE output and a commit witness:
@@ -2722,7 +2738,7 @@ class GraftSession(val spark: SparkSession) {
     try {
       failpoint("write")
       val partitioned = meta.partitionColumnNames.nonEmpty
-      val laid =
+      lazy val laid =
         if (!partitioned) df.repartition(filesNeeded(retired))
         else {
           // directory i owns the slots [off_i, off_i + nf_i), looked up
@@ -2746,10 +2762,21 @@ class GraftSession(val spark: SparkSession) {
             pmod(monotonically_increasing_id(),
               lookup(_._3, 1).cast(LongType)).cast(IntegerType))
         }
-      val w = sortedRuns(meta, laid, withPtk = partitioned).write
-      (if (partitioned) w.partitionBy(PtkCol) else w)
-        .options(bloomWriteOpts(meta)).mode("overwrite")
-        .parquet(staging.toString)
+      meta.bucketSpec match {
+        // a bucketed table's files are Spark's bucketed writer's: its
+        // bucket hashing and sort, and the bucket id in each file name
+        // that a bucketed scan reads; one write task per bucket
+        case Some(b) =>
+          GraftSqlBridge.writeBucketed(
+            df.repartition(b.numBuckets, b.bucketColumnNames.map(c => col(s"`$c`")): _*),
+            staging.toString, if (partitioned) Seq(PtkCol) else Nil, b,
+            bloomWriteOpts(meta))
+        case None =>
+          val w = sortedRuns(meta, laid, withPtk = partitioned).write
+          (if (partitioned) w.partitionBy(PtkCol) else w)
+            .options(bloomWriteOpts(meta)).mode("overwrite")
+            .parquet(staging.toString)
+      }
       stagedDataFiles(staging).foreach(publishStaged(loc, staging, tag, _))
     } catch {
       case t: Throwable => rollBack(meta, tag, retired); throw t
@@ -3825,10 +3852,9 @@ class GraftSession(val spark: SparkSession) {
   }
 
   /** (Re)load a dictionary into the engine state: snapshot the source
-    * table into a broadcast hash and bind the lookup function on this
-    * handle. The size guard is the broadcast contract — a dictionary is
-    * dimension-sized by definition; fact-sized lookups belong in a join,
-    * not a dictionary.
+    * table into a broadcast hash. The size guard is the broadcast
+    * contract — a dictionary is dimension-sized by definition;
+    * fact-sized lookups belong in a join, not a dictionary.
     */
   private def loadDictionary(key: (String, String), cd: CreateDictionary): Unit = {
     val attrs = cd.cols.filter(_.name != cd.key)
@@ -3849,129 +3875,92 @@ class GraftSession(val spark: SparkSession) {
       }
       Some(spark.sparkContext.broadcast(m))
     }
-    val d = GraftSession.Dict(cd, bc)
-    Option(state.dicts.put(key, d)).flatMap(_.bc).foreach(_.unpersist(false))
-    bindDictFn(d)
+    Option(state.dicts.put(key, GraftSession.Dict(cd, bc)))
+      .flatMap(_.bc).foreach(_.unpersist(false))
   }
 
-  /** Bind `__graft_dict_<name>` on this handle's SparkSession to the
-    * dictionary's current broadcast, unless it already is. */
-  private def bindDictFn(d: GraftSession.Dict): Unit = d.bc.foreach { bc =>
-    if (!dictFns.get(d.cd.name).contains(bc.id)) {
-      val idx = d.cd.cols.filter(_.name != d.cd.key).map(_.name).zipWithIndex.toMap
-      // Return encoding (ADVICE r15 #3): SQL-null = key missing; "\u0000"
-      // = key present, stored attribute NULL (must surface as NULL, not
-      // the DEFAULT); "\u0001"+value = present non-null. The rewrite
-      // peels the prefix with substring(nullif(x, sentinel), 2).
-      spark.udf.register(s"__graft_dict_${d.cd.name}",
-        (attr: String, key: String) => {
-          if (key == null) null
-          else {
-            val row = bc.value.get(key)
-            if (row == null) null
-            else if (attr == "__has") ""
-            else idx.get(attr) match {
-              case Some(i) =>
-                val v = row(i)
-                if (v == null) "\u0000" else "\u0001" + v
-              case None => null
-            }
-          }
-        }): Unit
-      dictFns(d.cd.name) = bc.id
-    }
-  }
-
-  /** dictGet / dictGetOrDefault / dictHas → the broadcast-hash lookup
-    * function, typed back to the attribute's declared type. A missing
-    * key yields the attribute's DEFAULT, else the CH type-zero (0 / ''),
-    * else NULL — dictGetOrDefault's fourth argument wins over both.
-    * Iterates to fix nested calls (a dictGet key computed by another
-    * dictGet).
+  /** A dictionary call as the expression that answers it, or None when
+    * `fn(args)` is not one: `dictGet(dict, attr, key)`,
+    * `dictGetOrDefault(dict, attr, key, default)` or `dictHas(dict, key)`
+    * with string-literal dictionary and attribute arguments, the
+    * dictionary named `'db.name'` or by bare name ([[dictKey]]). The value
+    * is typed back to the attribute's declared type. A missing key yields
+    * the attribute's DEFAULT, else the CH type-zero (0 / ''), else NULL —
+    * dictGetOrDefault's own default wins over both; a key present with a
+    * stored NULL yields NULL.
+    *
+    * Both arms encode a lookup the same way: NULL for a missing key, chr(0)
+    * for a stored NULL, else chr(1) and the value. A broadcast dictionary
+    * is read by its [[GraftSession.Dict.lookup]] UDF; an oversized one by
+    * a correlated `max()` subquery over its source, read in the
+    * dictionary's own database, which Catalyst rewrites into ONE
+    * aggregated left equi-join per call.
     */
-  private def rewriteDictFns(sql: String): String = {
-    if (state.dicts.isEmpty) return sql
-    def build(kind: String, lits: Seq[String], raws: Seq[String]): String = {
-      val d = state.dicts.get(dictKey(None, lits.head).get)
-      bindDictFn(d)
+  private[graft] def dictLookup(fn: String, args: Seq[Expression]): Option[Expression] = {
+    val kind = fn.toLowerCase(java.util.Locale.ROOT)
+    val nLit = kind match {
+      case "dictget" | "dictgetordefault" => 2
+      case "dicthas" => 1
+      case _ => return None
+    }
+    val lits = args.take(nLit).collect {
+      case Literal(v: org.apache.spark.unsafe.types.UTF8String, _: StringType) => v.toString
+    }
+    val found = if (lits.length < nLit || args.length == nLit) None
+      else (lits.head.split('.') match {
+        case Array(db, name) => dictKey(Some(db), name)
+        case _ => dictKey(None, lits.head)
+      }).flatMap(k => Option(state.dicts.get(k)).map(k._1 -> _))
+    def ex(c: Column) = GraftSqlBridge.catalystExpression(spark, c)
+    found.map { case (db, d) =>
       val cd = d.cd
-      val joinArm = d.bc.isEmpty
-      // join-arm probe: a correlated scalar subquery on the key — Catalyst
-      // rewrites it into ONE aggregated left equi-join per distinct call
-      // (max() makes the subquery provably single-row); same sentinel
-      // encoding as the UDF, so the peel/fallback logic below is shared
-      def probe(sel: String): String =
-        s"(SELECT max($sel) FROM ${cd.source} WHERE " +
-          s"CAST(`${cd.key}` AS STRING) = CAST((${raws.head}) AS STRING))"
-      if (kind == "has") {
-        require(raws.length == 1, "dictHas expects (dict, key)")
-        val call =
-          if (joinArm) probe("chr(1)")
-          else s"`__graft_dict_${cd.name}`('__has', " +
-            s"CAST((${raws.head}) AS STRING))"
-        s"($call IS NOT NULL)"
-      } else {
-        val a = lits(1)
-        val cdef = cd.cols.find(_.name == a).getOrElse(
-          throw new IllegalArgumentException(
-            s"dictGet: no attribute $a in dictionary ${cd.name}"))
+      val key = GraftSqlBridge.column(args(nLit)).cast(StringType)
+      val attr = lits.lift(1).map { a =>
         require(a != cd.key, s"dictGet: $a is the dictionary KEY, not an attribute")
-        require(raws.nonEmpty, "dictGet expects a key expression")
-        val t = cdef.tpe.sparkType.sql
-        // the UDF sentinel-encodes (see loadDictionary): SQL-null means
-        // the KEY is missing (-> DEFAULT/type-zero), chr(0) means the key
-        // is present with a stored NULL (-> NULL, never the default;
-        // ADVICE r15 #3), otherwise a chr(1) prefix precedes the value
-        val callTxt =
-          if (joinArm) probe(s"CASE WHEN `$a` IS NULL THEN chr(0) ELSE " +
-            s"concat(chr(1), CAST(`$a` AS STRING)) END")
-          else s"`__graft_dict_${cd.name}`('$a', " +
-            s"CAST((${raws.head}) AS STRING))"
-        val value = s"CAST(substring(nullif($callTxt, chr(0)), 2) AS $t)"
+        cd.cols.find(_.name == a).getOrElse(throw new IllegalArgumentException(
+          s"dictGet: no attribute $a in dictionary ${cd.name}"))
+      }
+      val encoded = d.lookup match {
+        case Some(f) => f(lit(attr.fold(-1)(a => d.attrs.indexOf(a.name))), key)
+        case None =>
+          // the source's columns are renamed apart, behind an alias that
+          // stops Spark from reaching under it for missing columns, so
+          // the key expression binds to the reading query's columns only
+          val source = inDatabase(db)(relationDf(cd.source, new Splices).select(
+            col(s"`${cd.key}`").cast(StringType).as("__graft_dict_key"),
+            attr.fold(lit("")) { a =>
+              val v = col(s"`${a.name}`")
+              when(v.isNull, lit("\u0000")).otherwise(concat(lit("\u0001"), v.cast(StringType)))
+            }.as("__graft_dict_value"))).queryExecution.analyzed
+          GraftSqlBridge.column(ScalarSubquery(Aggregate(Nil,
+            Seq(Alias(ex(max(col("__graft_dict_value"))), "v")()),
+            Filter(ex(col("__graft_dict_key") === key), SubqueryAlias(cd.name, source)))))
+      }
+      ex(attr.fold {
+        require(args.length == 2, "dictHas expects (dict, key)")
+        encoded.isNotNull
+      } { a =>
+        val t = a.tpe.sparkType
+        def peel(c: Column) = substr(nullif(c, lit("\u0000")), lit(2)).cast(t)
         val fallback =
-          if (kind == "getOr") {
-            require(raws.length == 2,
-              "dictGetOrDefault expects (dict, attr, key, default)")
-            Some(s"(${raws(1)})")
-          } else cdef.default.map(d => s"CAST($d AS $t)").orElse {
-            cdef.tpe.sparkType match {
-              case _: org.apache.spark.sql.types.NumericType =>
-                Some(s"CAST(0 AS $t)")
-              case org.apache.spark.sql.types.StringType => Some("''")
-              case _ => None
-            }
-          }
-        fallback.fold(value) { f =>
-          if (joinArm)
-            // the subquery must appear exactly ONCE (each occurrence is a
-            // join after Catalyst's rewrite): missing-key folds into the
-            // same prefix encoding via a chr(2)-tagged default
-            s"CAST(substring(nullif(coalesce($callTxt, " +
-              s"concat(chr(2), CAST($f AS STRING))), chr(0)), 2) AS $t)"
-          else s"(CASE WHEN $callTxt IS NULL THEN $f ELSE $value END)"
+          if (kind == "dictgetordefault") {
+            require(args.length == 4, "dictGetOrDefault expects (dict, attr, key, default)")
+            Some(GraftSqlBridge.column(args(3)))
+          } else a.default.map(expr(_).cast(t)).orElse(t match {
+            case _: NumericType => Some(lit(0).cast(t))
+            case StringType => Some(lit(""))
+            case _ => None
+          })
+        fallback.fold(peel(encoded)) { f =>
+          // the join arm's subquery must appear exactly ONCE (each
+          // occurrence is a join after Catalyst's rewrite): a missing key
+          // folds into the same encoding as a chr(2)-tagged default
+          if (d.lookup.isEmpty)
+            peel(coalesce(encoded, concat(lit("\u0002"), f.cast(StringType))))
+          else when(encoded.isNull, f).otherwise(peel(encoded))
         }
-      }
+      })
     }
-    var cur = sql
-    var changed = true
-    var guard = 0
-    while (changed && guard < 8) {
-      changed = false; guard += 1
-      val calls =
-        ChParser.dictFnCalls(cur, "dictGet", 2).map(("get", _)) ++
-          ChParser.dictFnCalls(cur, "dictGetOrDefault", 2).map(("getOr", _)) ++
-          ChParser.dictFnCalls(cur, "dictHas", 1).map(("has", _))
-      val valid = calls.filter { case (_, (_, _, lits, _)) =>
-        dictKey(None, lits.head).isDefined }
-      if (valid.nonEmpty) {
-        changed = true
-        cur = valid.sortBy(-_._2._1).foldLeft(cur) {
-          case (acc, (kind, (from, to, lits, raws))) =>
-            acc.substring(0, from) + build(kind, lits, raws) + acc.substring(to)
-        }
-      }
-    }
-    cur
   }
 
   /** Rebuild a table's replay script from its catalog state (declared CH
@@ -4146,31 +4135,34 @@ class GraftSession(val spark: SparkSession) {
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[Row](), tempSchema(ct))
     tempTables(ct.name) = (ct, empty)
-    empty.createOrReplaceTempView(ct.name)
     emptyOk
   }
 
   /** Insert into a temporary table: same literal coercion as the engine
-    * path, then an eager-checkpointed union re-registered as the view.
+    * path, then an eager-checkpointed union as the table's new rows.
     */
   private def appendTempTable(name: String, src: DataFrame,
                               srcIsRaw: Boolean): Unit = {
     val (ct, cur) = tempTables(name)
-    val dataCols = tempSchema(ct).fields
+    val typed = typedRows(src, tempSchema(ct).fields.toIndexedSeq,
+      ct.cols.map(c => c.name -> c.tpe).toMap, srcIsRaw)
+    tempTables(name) = (ct, cur.unionByName(typed).localCheckpoint(eager = true))
+  }
+
+  /** `src` renamed onto `dataCols` and typed column by column: raw
+    * literal values are coerced to their declared CH type, anything else
+    * cast to the column's type. */
+  private def typedRows(src: DataFrame, dataCols: Seq[StructField],
+                        declared: Map[String, BqlType], srcIsRaw: Boolean): DataFrame = {
     require(src.columns.length == dataCols.length,
       s"INSERT column count ${src.columns.length} != table arity ${dataCols.length}")
-    val renamed = src.toDF(dataCols.map(_.name).toIndexedSeq: _*)
-    val typed = renamed.select(dataCols.toIndexedSeq.map { f =>
-      val declared = ct.cols.find(_.name == f.name).map(_.tpe)
+    src.toDF(dataCols.map(_.name): _*).select(dataCols.map { f =>
       val c = col(s"`${f.name}`")
-      (declared match {
+      (declared.get(f.name) match {
         case Some(bt) if srcIsRaw => coerce(c, bt)
         case _ => c.cast(f.dataType)
       }).as(f.name)
     }: _*)
-    val next = cur.unionByName(typed).localCheckpoint(eager = true)
-    tempTables(name) = (ct, next)
-    next.createOrReplaceTempView(name)
   }
 
   /** Align a DataFrame of source values (any types) to the table's declared
@@ -4183,18 +4175,8 @@ class GraftSession(val spark: SparkSession) {
     if (tempDef(db, name).isDefined) { appendTempTable(name, src, srcIsRaw); return }
     val (schema, types, ptkExpr) = tableMeta(db, name)
     val dataCols = schema.fields.filter(_.name != PtkCol)
-    require(src.columns.length == dataCols.length,
-      s"INSERT column count ${src.columns.length} != table arity ${dataCols.length}")
-    val renamed = src.toDF(dataCols.map(_.name): _*)
-    val typed = renamed.select(dataCols.map { f =>
-      val declared = types.get(f.name).flatMap(s => BqlType.parse(s).toOption)
-      val c = col(s"`${f.name}`")
-      val coerced = declared match {
-        case Some(bt) if srcIsRaw => coerce(c, bt)
-        case _ => c.cast(f.dataType)
-      }
-      coerced.as(f.name)
-    }: _*)
+    val typed = typedRows(src, dataCols.toIndexedSeq,
+      types.flatMap { case (c, t) => BqlType.parse(t).toOption.map(c -> _) }, srcIsRaw)
     val rdbName = db.getOrElse(spark.sessionState.catalog.getCurrentDatabase)
     // Driver-resident blocks (INSERT ... VALUES / FORMAT payloads: the
     // optimizer folds the typed projection into the LocalRelation) take
@@ -4421,8 +4403,8 @@ class GraftSession(val spark: SparkSession) {
                           rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
                           schema: StructType): Unit = {
     val rdb = db.getOrElse(spark.sessionState.catalog.getCurrentDatabase)
-    if (!directAppend(rdb, name, rows, schema))
-      appendToTable(Some(rdb), name, org.apache.spark.sql.GraftSqlBridge
+    if (tempDef(db, name).isDefined || !directAppend(rdb, name, rows, schema))
+      appendToTable(db, name, org.apache.spark.sql.GraftSqlBridge
         .internalLocalDf(spark, schema, rows), srcIsRaw = false)
   }
 
@@ -4637,7 +4619,8 @@ class GraftSession(val spark: SparkSession) {
     */
   def lowCardinalityWireTypes(db: Option[String], name: String): Int => Option[BqlType] = {
     val schema = dataSchema(db, name)
-    val types = chTypes(db, name)
+    val types = tempDef(db, name).fold(chTypes(db, name))(
+      _.cols.map(c => c.name -> c.tpe.chName).toMap)
     val byPos: Vector[Option[BqlType]] = schema.fields.toVector.map { f =>
       types.get(f.name).flatMap(s => BqlType.parse(s).toOption).collect {
         case lc: BqlType.LowCardinality => lc
@@ -4657,7 +4640,8 @@ class GraftSession(val spark: SparkSession) {
     * what a wire client's INSERT header block advertises.
     */
   def dataSchema(db: Option[String], name: String): StructType =
-    StructType(spark.table(fullName(db, name)).schema.fields.filter(_.name != PtkCol))
+    tempDef(db, name).fold(StructType(spark.table(fullName(db, name)).schema.fields
+      .filter(_.name != PtkCol)))(tempSchema)
 
   /** Declared DEFAULT literals per column (bql.pest column_constraint). */
   private def defaults(db: Option[String], name: String): Map[String, String] =
@@ -4846,19 +4830,40 @@ object GraftSession {
   /** A plain view: its CH SELECT and full create script. */
   private[exec] final case class ViewDef(selectSql: String, createScript: String)
 
-  /** A loaded dictionary: its definition and the broadcast hash behind
-    * `__graft_dict_<name>`, None when the source exceeds the broadcast
-    * guard — dictGet over it degrades to a correlated scalar subquery that
-    * Catalyst rewrites into an aggregated equi-JOIN against the source
-    * (ClickHouse's `direct` layout semantics) instead of erroring
-    * (VERDICT r15 #6). CH's execution model exactly otherwise: an
-    * in-memory hash replicated to every node, so dictGet never shuffles.
-    * Loaded at CREATE (validating eagerly, like CH) and refreshed only by
-    * SYSTEM RELOAD DICTIONARY — LIFETIME is accepted and ignored.
+  /** A loaded dictionary: its definition and the broadcast hash of its
+    * source (key to attribute values, as strings), None when the source
+    * exceeds the broadcast guard — dictGet over it degrades to a
+    * correlated scalar subquery that Catalyst rewrites into an aggregated
+    * equi-JOIN against the source (ClickHouse's `direct` layout
+    * semantics) instead of erroring (VERDICT r15 #6). CH's execution model
+    * exactly otherwise: an in-memory hash replicated to every node, so
+    * dictGet never shuffles. Loaded at CREATE (validating eagerly, like
+    * CH) and refreshed only by SYSTEM RELOAD DICTIONARY — LIFETIME is
+    * accepted and ignored. A statement reads it through the lookup its
+    * dictGet/dictHas calls resolve to (`GraftSession.dictLookup`).
     */
   private[exec] final case class Dict(cd: ChStatement.CreateDictionary,
       bc: Option[org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[String, Array[String]]]])
+        java.util.HashMap[String, Array[String]]]]) {
+    /** The attribute names, in the order of a broadcast row's values. */
+    val attrs: Seq[String] = cd.cols.map(_.name).filter(_ != cd.key)
+
+    /** The broadcast lookup: (attribute index, key as a string) to NULL
+      * when the key is missing, chr(0) when the attribute is stored NULL,
+      * else chr(1) and the value; index -1 asks only whether the key is
+      * present (""). One UDF per load, so two calls of one attribute are
+      * the same expression (a GROUP BY on a dictGet matches its SELECT).
+      */
+    lazy val lookup: Option[org.apache.spark.sql.expressions.UserDefinedFunction] =
+      bc.map { b =>
+        org.apache.spark.sql.functions.udf((i: Int, key: String) =>
+          if (key == null) null
+          else b.value.get(key) match {
+            case null => null
+            case row => if (i < 0) "" else if (row(i) == null) "\u0000" else "\u0001" + row(i)
+          })
+      }
+  }
 
   /** What one Spark catalog defines beyond its tables, shared by every
     * handle on it: restored from `_graft_meta` once ([[restoreOnce]]) and

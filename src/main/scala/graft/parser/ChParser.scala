@@ -1780,44 +1780,6 @@ object ChParser {
     out.toSeq
   }
 
-  /** Lexical occurrences of `fn('lit', …, expr, …)`: the first `nLit`
-    * arguments must be string literals (dictionary and attribute names);
-    * the remaining arguments are RAW balanced text slices split on
-    * top-level commas (arbitrary expressions — a dictGet key can be any
-    * computation). Token-located like [[tableFnCalls]], so literals and
-    * comments never match. Returns (start, endExclusive, litArgs, rawArgs).
-    */
-  def dictFnCalls(sql: String, fn: String,
-                  nLit: Int): Seq[(Int, Int, Seq[String], Seq[String])] = {
-    val s = Scan(sql)
-    val out = ArrayBuffer.empty[(Int, Int, Seq[String], Seq[String])]
-    var i = 0
-    while (i < s.length) {
-      if (s.kw(i, fn) && s.punct(i + 1, "(")) {
-        var j = i + 2
-        val lits = ArrayBuffer.empty[String]
-        while (lits.length < nLit && s.str(j).isDefined && s.punct(j + 1, ",")) {
-          lits += s.str(j).get; j += 2
-        }
-        s.close(i + 1).filter(_ => lits.length == nLit).foreach { end =>
-          // the raw arguments split on the call's own commas
-          val cuts = (j until end).filter(k =>
-            s.depth(k) == s.depth(i + 1) + 1 && s.punct(k, ","))
-          val raws = (s.pos(j) +: cuts.map(s.pos(_) + 1)).zip(
-            cuts.map(s.pos) :+ s.pos(end)).map { case (a, b) =>
-            sql.substring(a, b).trim
-          }
-          if (raws.forall(_.nonEmpty)) {
-            out += ((s.pos(i), s.pos(end) + 1, lits.toSeq, raws))
-            i = end
-          }
-        }
-      }
-      i += 1
-    }
-    out.toSeq
-  }
-
   /** CH query-surface normalizations that don't change results, so a
     * clickhouse-client-authored SELECT runs unmodified:
     *   - a trailing `FORMAT name` (output formatting is the wire layer's

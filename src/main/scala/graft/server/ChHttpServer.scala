@@ -38,8 +38,8 @@ import graft.types.BqlType
   *     streamed path — CH's own contract); gzip in both directions behind
   *     `enable_http_compression=1` / `Content-Encoding: gzip`.
   *   - `?session_id=` gives the request CH's HTTP-session state (its own
-  *     current database via USE, its own temp views) — isolated through
-  *     a per-session SparkSession, LRU-bounded.
+  *     current database via USE, its own temporary tables) — isolated
+  *     through a per-session SparkSession and handle, LRU-bounded.
   *
   * Sessionless requests share one GraftSession; statements execute under
   * a lock.
@@ -54,8 +54,8 @@ final class ChHttpServer(spark: SparkSession, port: Int = 0) {
   private val http = HttpServer.create(new InetSocketAddress(port), 0)
 
   /** `?session_id=` sessions: each gets its OWN SparkSession (so USE —
-    * which sets the Spark session's current database — and temp views
-    * are isolated per session, CH's HTTP-session contract), created
+    * which sets the Spark session's current database — and temporary
+    * tables are isolated per session, CH's HTTP-session contract), created
     * lazily and evicted LRU past a small cap. Every session shares the
     * catalog's engine state (views, dictionaries, restore errors), which
     * the default GraftSession restored at server start. Sessionless

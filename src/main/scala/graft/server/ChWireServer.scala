@@ -65,7 +65,8 @@ final class ChWireServer(spark: SparkSession, port: Int = 0) {
     val in = new BufferedInputStream(conn.getInputStream)
     val out = new BufferedOutputStream(conn.getOutputStream)
     // one isolated Spark session per connection (shared context/catalog,
-    // private current-database and temp views): `USE db` is per-connection
+    // private current database) and one handle, which holds the
+    // connection's temporary tables: `USE db` is per-connection
     // state like the reference's ConnCtx, and must not leak into other
     // connections or the host session
     val session = new GraftSession(spark.newSession())

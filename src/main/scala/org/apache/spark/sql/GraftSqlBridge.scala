@@ -14,6 +14,14 @@ object GraftSqlBridge {
   def column(e: Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** `c` converted the way `spark`'s Dataset API converts a Column: to
+    * plain Catalyst expressions (unresolved where `c` names columns or
+    * functions), which can stand in a parsed plan. [[expression]] instead
+    * defers the conversion to the Dataset that consumes it.
+    */
+  def catalystExpression(spark: SparkSession, c: Column): Expression =
+    spark.asInstanceOf[classic.SparkSession].expression(c)
+
   /** A typed Aggregator applied to raw child Expressions, as the
     * AggregateExpression a FunctionRegistry builder must return. The
     * udaf()->Column route produces a lazy ColumnNodeExpression that only
@@ -122,6 +130,21 @@ object GraftSqlBridge {
         s.sessionState.sqlParser.parsePlan(sqlText))
       classic.Dataset.ofRows(s, resolve(parsed), tracker)
     }
+  }
+
+  /** `df` written as parquet into `path` (replacing it) by Spark's file
+    * writer with `bucket`'s hashing, sort and bucket-numbered file names:
+    * the bucketed write `DataFrameWriter` offers only through
+    * `saveAsTable`, here with no catalog entry.
+    */
+  def writeBucketed(df: DataFrame, path: String, partitionBy: Seq[String],
+                    bucket: catalyst.catalog.BucketSpec,
+                    options: Map[String, String]): Unit = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val source = execution.datasources.DataSource(s, "parquet", Seq(path),
+      partitionColumns = partitionBy, bucketSpec = Some(bucket), options = options)
+    s.withActive(classic.Dataset.ofRows(s,
+      source.planForWriting(SaveMode.Overwrite, df.queryExecution.analyzed))): Unit
   }
 
   /** `df` re-planned per statement by size: a statement whose input is

@@ -341,7 +341,6 @@ class ChParserSpec extends AnyFunSuite {
 
   test("scanners stop at the end of truncated text instead of throwing") {
     assert(ChParser.splitPrewhere("SELECT a FROM t PREWHERE") === None)
-    assert(ChParser.dictFnCalls("SELECT dictGet('d', 'a',", "dictGet", 2) === Nil)
   }
 
   test("a string literal never stands in for punctuation: a trailing " +

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.GraftRestart
+import org.apache.spark.sql.{GraftRestart, GraftSqlBridge}
 
 import graft.exec.GraftSession
 
@@ -89,6 +89,60 @@ class DictionarySpec extends AnyFunSuite {
     g2.sql("DROP TABLE dx_dim")
   }
 
+  test("a dictionary named 'db.name' is that database's: two same-named " +
+    "dictionaries in one statement, an unaliased call named as Spark " +
+    "names the call, and a GROUP BY on a dictGet") {
+    val g = new GraftSession(spark.newSession())
+    for ((db, v) <- Seq("dxq1" -> "a", "dxq2" -> "b")) {
+      g.sql(s"DROP DATABASE IF EXISTS $db")
+      g.sql(s"CREATE DATABASE $db")
+      g.sql(s"CREATE TABLE $db.src(k Int64, v String)")
+      g.sql(s"INSERT INTO $db.src VALUES (1, '$v'), (2, '$v$v')")
+      g.sql(s"CREATE DICTIONARY $db.dq(k Int64, v String) PRIMARY KEY k " +
+        "SOURCE(CLICKHOUSE(TABLE 'src'))")
+    }
+    val df = g.sql("SELECT dictGet('dxq1.dq', 'v', 1) AS a, " +
+      "dictGet('dxq2.dq', 'v', 1) AS b, dictGet('dxq2.dq', 'v', 2)")
+    assert(df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .toSeq === Seq(("a", "b", "bb")))
+    assert(df.columns.last === "dictGet(dxq2.dq, v, 2)")
+    val grouped = g.sql("SELECT dictGet('dxq2.dq', 'v', k) AS v, count() AS n " +
+      "FROM dxq1.src GROUP BY dictGet('dxq2.dq', 'v', k) ORDER BY v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(grouped === Seq(("b", 1L), ("bb", 1L)))
+    g.sql("DROP DATABASE dxq1")
+    g.sql("DROP DATABASE dxq2")
+  }
+
+  test("both arms read a dictionary's source in the dictionary's own " +
+    "database, whatever the reader's current one, and bind the key to the " +
+    "reader's columns") {
+    val g = new GraftSession(spark.newSession())
+    for ((db, v) <- Seq("dxo1" -> "one", "dxo2" -> "uno")) {
+      g.sql(s"DROP DATABASE IF EXISTS $db")
+      g.sql(s"CREATE DATABASE $db")
+      g.sql(s"CREATE TABLE $db.src(k Int64, v String)")
+      g.sql(s"INSERT INTO $db.src VALUES (1, '$v'), (2, 'two')")
+    }
+    g.sql("USE dxo1")
+    g.sql("CREATE DICTIONARY dxo_b(k Int64, v String) PRIMARY KEY k " +
+      "SOURCE(CLICKHOUSE(TABLE 'src'))")
+    g.spark.conf.set("graft.dict.maxRows", "0")
+    g.sql("CREATE DICTIONARY dxo_j(k Int64, v String) PRIMARY KEY k " +
+      "SOURCE(CLICKHOUSE(TABLE 'src'))")
+    g.spark.conf.unset("graft.dict.maxRows")
+    g.sql("USE dxo2")
+    // the reading query's key column is named like the source's key
+    val r = g.sql("SELECT dictGet('dxo_b', 'v', k) AS b, " +
+      "dictGet('dxo_j', 'v', k) AS j, dictHas('dxo_j', k) AS h " +
+      "FROM (SELECT explode(array(1, 5)) AS k) ORDER BY k").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSeq
+    assert(r === Seq(("one", "one", true), ("", "", false)))
+    g.sql("USE default")
+    g.sql("DROP DATABASE dxo1")
+    g.sql("DROP DATABASE dxo2")
+  }
+
   test("SHOW DICTIONARIES and system.dictionaries list the registry") {
     mkDim()
     val shown = g.sql("SHOW DICTIONARIES").collect()
@@ -111,24 +165,25 @@ class DictionarySpec extends AnyFunSuite {
     spark.range(0, 100).selectExpr("id AS k", "(id % 5) AS dk")
       .write.mode("overwrite").parquet(dir.toString)
     val schema = spark.read.parquet(dir.toString).schema
+    // the lookup `dictGet('dx', 'nm', dk)` resolves to
+    val nm = GraftSqlBridge.column(g.dictLookup("dictGet",
+      Seq(lit("dx"), lit("nm"), col("dk")).map(GraftSqlBridge.catalystExpression(spark, _)))
+      .get).as("nm")
     val enriched = spark.readStream.schema(schema).parquet(dir.toString)
-      .selectExpr("k", "`__graft_dict_dx`('nm', CAST(dk AS STRING)) AS nm")
+      .select(col("k"), nm)
     val q = enriched.writeStream.format("memory").queryName("dict_stream")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val streaming = spark.table("dict_stream")
       .groupBy("nm").count().orderBy("nm").collect()
       .map(r => (Option(r.getString(0)).getOrElse("∅"), r.getLong(1))).toSeq
-    val batch = spark.read.parquet(dir.toString)
-      .selectExpr("`__graft_dict_dx`('nm', CAST(dk AS STRING)) AS nm")
+    val batch = spark.read.parquet(dir.toString).select(nm)
       .groupBy("nm").count().orderBy("nm").collect()
       .map(r => (Option(r.getString(0)).getOrElse("∅"), r.getLong(1))).toSeq
     assert(streaming === batch)
     // dk ∈ {0..4}; dict has keys 1..3 → 60 hits across three names,
-    // 40 misses (the UDF's null — the SQL-level DEFAULT wrap is the
-    // rewrite's concern, exercised in the batch tests)
-    assert(streaming.map(_._2).sum === 100L)
-    assert(streaming.count(_._1 != "∅") === 3)
+    // 40 misses reading the declared DEFAULT
+    assert(streaming === Seq(("none", 40L), ("one", 20L), ("three", 20L), ("two", 20L)))
     g.sql("DROP DICTIONARY dx")
     g.sql("DROP TABLE dx_dim")
   }

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A scan of the engine's sources for two per-call Hadoop fixed costs.
+/** A scan of the engine's sources for two per-call Hadoop fixed costs,
+  * and of `graft/exec` for registrations on a SparkSession.
   *
   *   - A fresh Hadoop `Configuration` (`new Configuration()`, `new
   *     Configuration(true)`, `ParquetReadOptions.builder()`, `new
@@ -18,6 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - `ParquetFileReader.open` without read options builds such a conf for
   *     every footer it opens. A call passes when an argument names
   *     `ReadOptions`, as `graft.sources.ParquetFooters` does.
+  *   - `createOrReplaceTempView`, `dropTempView` or `udf.register` in
+  *     `graft/exec`: a statement reads engine relations and dictionaries
+  *     through its plan resolver, so a `GraftSession` registers nothing on
+  *     its SparkSession.
   *
   * Comments and string literals are blanked before matching.
   */
@@ -85,10 +90,11 @@ object HadoopConfScan {
     code.substring(open + 1)
   }
 
+  private def lineOf(src: String, at: Int): Int = src.substring(0, at).count(_ == '\n') + 1
+
   /** The offences in one source file's text. */
   def offences(file: String, src: String): Seq[Offence] = {
     val c = code(src)
-    def lineOf(at: Int): Int = src.substring(0, at).count(_ == '\n') + 1
     // renamed imports: import org.apache.hadoop.conf.{Configuration => HConf}
     val aliases = "import\\s+org\\.apache\\.hadoop\\.conf\\.\\{[^}]*\\bConfiguration\\s*=>\\s*(\\w+)"
       .r.findAllMatchIn(c)
@@ -99,20 +105,27 @@ object HadoopConfScan {
     val fromConf = freshConf.findAllMatchIn(c).flatMap { m =>
       val a = if (m.group(1) == null) "" else args(c, m.end - 1).trim
       if (a.isEmpty || a == "true" || a.matches("loadDefaults\\s*=\\s*true"))
-        Some(Offence(file, lineOf(m.start), "fresh Hadoop Configuration"))
+        Some(Offence(file, lineOf(src, m.start), "fresh Hadoop Configuration"))
       else None
     }
     val fromParquet =
       "\\b(?:ParquetReadOptions\\s*\\.\\s*builder|new\\s+HadoopParquetConfiguration)\\s*\\(\\s*\\)".r
         .findAllMatchIn(c)
-        .map(m => Offence(file, lineOf(m.start), "fresh Hadoop Configuration (parquet)"))
+        .map(m => Offence(file, lineOf(src, m.start), "fresh Hadoop Configuration (parquet)"))
     val opens = "\\bParquetFileReader\\s*\\.\\s*open\\s*\\(".r.findAllMatchIn(c).flatMap { m =>
       val a = args(c, m.end - 1)
       if (a.contains("ReadOptions")) None
-      else Some(Offence(file, lineOf(m.start), "ParquetFileReader.open without read options"))
+      else Some(Offence(file, lineOf(src, m.start), "ParquetFileReader.open without read options"))
     }
     (fromConf ++ fromParquet ++ opens).toSeq.sortBy(_.line)
   }
+
+  /** The session registrations in one source file's text. */
+  def registrations(file: String, src: String): Seq[Offence] =
+    "\\b(createOrReplaceTempView|dropTempView|udf\\s*\\.\\s*register)\\b".r
+      .findAllMatchIn(code(src))
+      .map(m => Offence(file, lineOf(src, m.start), s"session registration ${m.group(1)}"))
+      .toSeq
 
   /** The Scala and Java files under `root`. */
   def sources(root: Path): Seq[Path] = {
@@ -124,9 +137,10 @@ object HadoopConfScan {
     finally w.close()
   }
 
-  def scan(root: Path): Seq[Offence] =
+  def scan(root: Path,
+           rule: (String, String) => Seq[Offence] = offences): Seq[Offence] =
     sources(root).flatMap(p =>
-      offences(root.relativize(p).toString, new String(Files.readAllBytes(p), "UTF-8")))
+      rule(root.relativize(p).toString, new String(Files.readAllBytes(p), "UTF-8")))
 }
 
 class HadoopConfScanSpec extends AnyFunSuite {
@@ -171,5 +185,29 @@ class HadoopConfScanSpec extends AnyFunSuite {
         |}
         |""".stripMargin
     assert(offences("B.scala", good).isEmpty)
+  }
+
+  test("graft/exec registers no temp view and no function on a SparkSession") {
+    val root = Paths.get("src/main/scala/graft/exec")
+    assert(sources(root).nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    val found = scan(root, registrations)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the registration scan catches each form and skips comments and " +
+    "literals") {
+    val src =
+      """object C {
+        |  df.createOrReplaceTempView("v")
+        |  spark.catalog.dropTempView("v")
+        |  spark.udf.register("f", g)
+        |  spark.udf
+        |    .register("f", g)
+        |  // df.createOrReplaceTempView("v")
+        |  val s = "spark.udf.register"
+        |  df.createOrReplaceTempViewLater("v")
+        |}
+        |""".stripMargin
+    assert(registrations("C.scala", src).map(_.line) === Seq(2, 3, 4, 5))
   }
 }

@@ -5,11 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.exec.GraftSession
 import graft.server.{ChNativeClient, ChWireServer}
 
-/** One resolver between CH text and Spark: views, `system.*` tables, ASOF
-  * JOIN output, `file()`/`remote()` reads and a materialized view's
-  * inserted block are substituted into the statement's parsed plan, so no
-  * statement registers anything on the session, and two statements
-  * running at once on one handle each read only their own relations.
+/** One resolver between CH text and Spark: views, CH temporary tables,
+  * dictionary calls, `system.*` tables, ASOF JOIN output,
+  * `file()`/`remote()` reads and a materialized view's inserted block are
+  * substituted into the statement's parsed plan, so no statement
+  * registers anything on the session, and two statements running at once
+  * on one handle each read only their own relations.
   */
 class PlanResolverSpec extends AnyFunSuite {
   import SparkTestSession.spark
@@ -33,7 +34,6 @@ class PlanResolverSpec extends AnyFunSuite {
       g.sql("DROP DATABASE IF EXISTS rsv")
       g.sql("CREATE DATABASE rsv")
       g.sql("USE rsv")
-      val before = temps(s)
       g.sql("CREATE TABLE src(k Int64, t DateTime, v Int64)")
       g.sql("CREATE TABLE px(k Int64, pt DateTime, price Float64)")
       g.sql("CREATE TABLE tot(k Int64, sv Int64) ENGINE = MergeTree ORDER BY k")
@@ -55,10 +55,20 @@ class PlanResolverSpec extends AnyFunSuite {
       val url = s"ch://127.0.0.1:${server.boundPort}"
       assert(g.sql(s"SELECT sum(v) AS s FROM remote('$url', 'rsv.src')")
         .collect()(0).getLong(0) === 55L)
+      g.sql("CREATE TEMPORARY TABLE rsv_tt(k Int64)")
+      g.sql("INSERT INTO rsv_tt VALUES (2)")
+      g.sql("CREATE DICTIONARY rsv_d(k Int64, v Int64) PRIMARY KEY k " +
+        "SOURCE(CLICKHOUSE(TABLE 'src'))")
+      assert(g.sql("SELECT dictGet('rsv_d', 'v', k) AS v FROM rsv_tt")
+        .collect()(0).getLong(0) === 50L)
 
-      assert(temps(s) === before)
+      assert(temps(s).isEmpty)
+      assert(s.catalog.listFunctions().collect()
+        .filter(_.name.startsWith("__graft_dict_")).isEmpty)
       assert(g.sql("SHOW TABLES").collect().map(_.getString(0)).toSet ===
         Set("src", "px", "tot", "mv", "big"))
+      assert(!g.sql("SHOW TABLES FROM default").collect().map(_.getString(0))
+        .contains("rsv_tt"))
       g.sql("DROP DATABASE rsv")
     } finally {
       ChNativeClient.clearPool()

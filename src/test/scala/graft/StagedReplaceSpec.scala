@@ -190,4 +190,27 @@ class StagedReplaceSpec extends AnyFunSuite {
     assert(rows(g2, "SELECT CAST(sum(k) AS BIGINT) FROM rs") === Seq("[60]"))
     assert(g2.restoreErrors.isEmpty)
   }
+  test("a bucketed table's mutation, column rewrite and MATERIALIZE INDEX " +
+    "publish bucket files that a bucketed join still reads") {
+    val (s, g) = session()
+    g.sql("CREATE TABLE bk_orders(ok Int64 PRIMARY KEY, ck Int64, " +
+      "tag String) SETTINGS buckets=4")
+    g.sql("CREATE TABLE bk_cust(ok Int64 PRIMARY KEY, name String) SETTINGS buckets=4")
+    g.sql("INSERT INTO bk_orders SELECT number AS ok, number * 10 AS ck, " +
+      "'t' AS tag FROM numbers(1000)")
+    g.sql("INSERT INTO bk_cust SELECT number AS ok, 'c' AS name FROM numbers(1000)")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def joined(): Seq[String] = rows(g, "SELECT count() AS n, " +
+      "CAST(sum(a.ck) AS BIGINT) AS s FROM bk_orders a JOIN bk_cust b ON a.ok = b.ok")
+    def bucketIds(): Set[Option[Int]] = parts(tableDir(s, "bk_orders")).values.flatten
+      .map(p => org.apache.spark.sql.execution.datasources.BucketingUtils
+        .getBucketId(p.getFileName.toString)).toSet
+    g.sql("ALTER TABLE bk_orders DELETE WHERE ok = 2")
+    assert(joined() === Seq("[999,4994980]"))
+    g.sql("ALTER TABLE bk_orders RENAME COLUMN tag TO label")
+    g.sql("ALTER TABLE bk_orders ADD INDEX lb label TYPE bloom_filter GRANULARITY 1")
+    g.sql("ALTER TABLE bk_orders MATERIALIZE INDEX lb")
+    assert(joined() === Seq("[999,4994980]"))
+    assert(bucketIds() === (0 until 4).map(Some(_)).toSet)
+  }
 }

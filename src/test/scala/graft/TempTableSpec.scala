@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.exec.GraftSession
 
 /** CH temporary tables: session-scoped, database-less, shadowing catalog
-  * names (Spark temp-view precedence = CH's rule), full INSERT surface
+  * names (read before any view or table of the name, CH's rule), full
+  * INSERT surface
   * (VALUES with literal coercion, column lists with DEFAULTs, SELECT),
   * TRUNCATE/DESC/SHOW CREATE/EXISTS, and per-session isolation.
   */
@@ -69,5 +70,27 @@ class TempTableSpec extends AnyFunSuite {
     assert(g1.sql("SELECT count() AS n FROM tt_iso").collect()(0)
       .getLong(0) === 1L)
     intercept[Exception] { g2.sql("SELECT count() FROM tt_iso").collect() }
+  }
+
+  test("a client-streamed wire INSERT lands in the connection's temporary " +
+    "table, whose header advertises the declared columns") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val server = new graft.server.ChWireServer(spark).start()
+    val client = new WireTestClient(server.boundPort)
+    try {
+      client.hello()
+      client.query("CREATE TEMPORARY TABLE tt_wire(a Int32, s String)")
+      val schema = StructType(Seq(
+        StructField("a", IntegerType), StructField("s", StringType)))
+      client.insertStream("INSERT INTO tt_wire FORMAT Native", schema,
+        Seq(Seq(Row(1, "x"), Row(2, "y"))))
+      val got = client.rows("SELECT a, s FROM tt_wire ORDER BY a")
+      assert(got(0).values === Vector(1, 2))
+      assert(got(1).values === Vector("x", "y"))
+    } finally {
+      client.close()
+      server.stop()
+    }
   }
 }
